@@ -553,8 +553,8 @@ def ab_metric_cuped_adjustment(spark, sf_dir):
     description="Incremental CUPED readout: the experiment metric state "
     "— per-(user, arm) exact decimal covariate/metric sums — is "
     "maintained across span-derived weekly event batches by the shared "
-    "ledgered sum-merge (streaming/sketch_maintenance.ledgered_sum_"
-    "merge_batched: sum-merge is NOT idempotent, so exactly-once lives in the "
+    "ledgered sum-merge (streaming/sketch_maintenance.merge_state: "
+    "sum-merge is NOT idempotent, so exactly-once lives in the "
     "applied-batch ledger committed atomically with the state — the "
     "same design point as the CMS sketch, fourth member of the merge-"
     "algebra family), then the CUPED readout runs on the MAINTAINED "
@@ -578,7 +578,8 @@ def streaming_ab_moments_maintenance(spark, sf_dir):
         _weekly_bounds,
     )
     from datalakes_and_data_integration_spark.streaming.sketch_maintenance import (
-        ledgered_sum_merge_batched,
+        BID,
+        merge_state,
     )
 
     ev = T(spark, sf_dir, "events")
@@ -600,18 +601,15 @@ def streaming_ab_moments_maintenance(spark, sf_dir):
     # single transition equals the per-week fold (guide §2.4 /
     # VERDICT r9 #1: the fold paid the collect+write job rounds 5x).
     inc = _ab_per_user(
-        ev.withColumn("__bid", _week_bid(weeks)),
-        exp_start,
-        extra=("__bid",),
+        ev.withColumn(BID, _week_bid(weeks)), exp_start, extra=(BID,)
     )
-    merged = ledgered_sum_merge_batched(
+    merged = merge_state(
         spark,
         state,
         inc,
         batch_ids=list(range(len(weeks) - 1)),
         key_cols=["user_id", "arm"],
-        sum_cols=["x", "y"],
-        collect_note="O(users) narrow metric-state rows",
+        aggs={"x": "sum", "y": "sum"},
     )
     # merge widened the decimals (sum(DECIMAL(18,6)) -> (28,6)); restore
     # the per-user schema the readout's moment casts expect
@@ -1949,7 +1947,7 @@ def ab_ratio_metric_delta_method(spark, sf_dir):
     "week state — (first experiment-period event week, first "
     "qualifying-purchase week, last event week) — is maintained across "
     "span-derived weekly event batches by the IDEMPOTENT min/max merge "
-    "(streaming/sketch_maintenance.ledgered_minmax_merge_batched — fifth "
+    "(streaming/sketch_maintenance.merge_state with min/min/max — fifth "
     "member of the merge-algebra family, and the first where replay is "
     "a no-op BY ALGEBRA, not by ledger: min/min/max are idempotent, so "
     "the applied-batch ledger is a skip-work optimization; pinned by a "
@@ -1972,7 +1970,8 @@ def streaming_ab_msprt_maintenance(spark, sf_dir):
         _weekly_bounds,
     )
     from datalakes_and_data_integration_spark.streaming.sketch_maintenance import (
-        ledgered_minmax_merge_batched,
+        BID,
+        merge_state,
     )
 
     ev = T(spark, sf_dir, "events")
@@ -1994,19 +1993,15 @@ def streaming_ab_msprt_maintenance(spark, sf_dir):
     # associative AND idempotent, so the single transition equals the
     # per-week fold by algebra (guide §2.4 / VERDICT r9 #1).
     inc = _msprt_per_user(
-        ev.withColumn("__bid", _week_bid(weeks)),
-        exp_start,
-        extra=("__bid",),
+        ev.withColumn(BID, _week_bid(weeks)), exp_start, extra=(BID,)
     )
-    merged = ledgered_minmax_merge_batched(
+    merged = merge_state(
         spark,
         state,
         inc,
         batch_ids=list(range(len(weeks) - 1)),
         key_cols=["user_id", "arm"],
-        min_cols=["enroll_week", "conv_week"],
-        max_cols=["last_week"],
-        collect_note="O(users) narrow week-state rows",
+        aggs={"enroll_week": "min", "conv_week": "min", "last_week": "max"},
     )
     return _msprt_readout(spark, merged)
 

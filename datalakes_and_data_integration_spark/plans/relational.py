@@ -2498,7 +2498,10 @@ def er_quality_threshold_sweep(spark, sf_dir):
         .persist()  # scale-ok: bounded (score, ok, cand) grid
     )
     per_score = grid.filter(F.col("cand")).select("score", "ok", "c")
-    total = grid.agg(F.sum("c").cast("long").alias("n_true"))
+    # coalesce: an empty grid has n_true = 0, not NULL (sum over no rows)
+    total = grid.agg(
+        F.coalesce(F.sum("c"), F.lit(0)).cast("long").alias("n_true")
+    )
     probes = spark.createDataFrame(
         [(t,) for t in _ER_SWEEP_TS], "threshold long"
     )

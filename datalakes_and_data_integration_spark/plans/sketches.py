@@ -890,10 +890,16 @@ def bitmap_popcount_report(words, group_name: str):
     per = words.groupBy(F.col("grp").alias(group_name)).agg(
         F.expr("CAST(sum(bit_count(bits)) AS BIGINT)").alias("n_users")
     )
+    # coalesce: an empty word file still reports __all__ = 0, as the
+    # oracle's ungrouped count(DISTINCT) does (sum over no rows is NULL)
     merged = (
         words.groupBy("w")
         .agg(F.expr("bit_or(bits)").alias("bits"))
-        .agg(F.expr("CAST(sum(bit_count(bits)) AS BIGINT)").alias("n_users"))
+        .agg(
+            F.expr("CAST(coalesce(sum(bit_count(bits)), 0) AS BIGINT)").alias(
+                "n_users"
+            )
+        )
         .select(F.lit("__all__").alias(group_name), "n_users")
     )
     return per.unionByName(merged)

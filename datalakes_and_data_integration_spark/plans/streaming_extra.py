@@ -888,7 +888,7 @@ def _stream_cms_oracle() -> str:
     "streaming_heavy_hitters_cms",
     oracle=_stream_cms_oracle(),
     description="Streaming heavy-hitter maintenance (streaming/"
-    "sketch_maintenance.py cms_rows/ledgered_sum_merge_batched): the "
+    "sketch_maintenance.py cms_rows/merge_state): the "
     "events table "
     "is applied as weekly CMS batches (bounds derived from its own ts "
     "span, so coverage is total at any fixture; all weekly increments "
@@ -913,9 +913,10 @@ def _stream_cms_oracle() -> str:
 def streaming_heavy_hitters_cms(spark, sf_dir):
     from datalakes_and_data_integration_spark.plans._util import T
     from datalakes_and_data_integration_spark.streaming.sketch_maintenance import (
+        BID,
         cms_lookup,
         cms_rows,
-        ledgered_sum_merge_batched,
+        merge_state,
     )
 
     ev = T(spark, sf_dir, "events").select("user_id", "ts")
@@ -929,20 +930,17 @@ def streaming_heavy_hitters_cms(spark, sf_dir):
     # through the shared cms_rows), sum-merged into the ledgered sketch
     # in ONE state transition — bucket-wise sums are associative, so
     # the single transition equals the per-week fold (guide §2.4 /
-    # VERDICT r9 #1); the merge keys/cols are merge_cms_state's.
+    # VERDICT r9 #1). State is O(d x w) rows (<= 4096) forever.
     inc = cms_rows(
-        ev.withColumn("__bid", _week_bid(weeks)),
-        "user_id",
-        extra=("__bid",),
+        ev.withColumn(BID, _week_bid(weeks)), "user_id", extra=(BID,)
     )
-    sketch = ledgered_sum_merge_batched(
+    sketch = merge_state(
         spark,
         state,
         inc,
         batch_ids=list(range(len(weeks) - 1)),
         key_cols=["seed", "bucket"],
-        sum_cols=["total"],
-        collect_note="O(d x w) sketch rows (<= 4096)",
+        aggs={"total": "sum"},
     )
     top = (
         ev.groupBy("user_id")
@@ -968,10 +966,10 @@ def streaming_heavy_hitters_cms(spark, sf_dir):
     """,
     description="Exact-distinct bitmap maintenance (plans/sketches."
     "bitmap_word_rows + streaming/sketch_maintenance.py "
-    "merge_bitmap_state_batched): the events "
+    "merge_state): the events "
     "table applied as span-derived weekly word-file batches — built in "
-    "one batch-labeled scan, bit_or-merged in one state transition "
-    "(fold-identical by OR idempotence) — "
+    "one batch-labeled scan, bit_or-merged in one staged-commit state "
+    "transition (fold-identical by OR idempotence) — "
     "bit_or-merged into "
     "persisted per-(type, word) state, then bitmap_distinct_rollup's "
     "report (per-type + OR-merged __all__) served from the MAINTAINED "
@@ -979,7 +977,8 @@ def streaming_heavy_hitters_cms(spark, sf_dir):
     "Completes the merge-algebra triptych: HLL max (idempotent, "
     "approximate), CMS sum (exact-once only behind a ledger), bitmap "
     "OR (idempotent AND exact — redelivery is a no-op by algebra, "
-    "pinned by test, no ledger needed). The exact-distinct state costs "
+    "pinned by test; the ledger only skips work). The exact-distinct "
+    "state costs "
     "|key domain|/63 rows per group where HLL costs 64 — the tradeoff "
     "a pipeline owner prices per metric.",
     tags=("streaming", "sketch", "bitmap", "distinct", "incremental"),
@@ -990,13 +989,12 @@ def streaming_bitmap_distinct_maintenance(spark, sf_dir):
         bitmap_word_rows,
     )
     from datalakes_and_data_integration_spark.streaming.sketch_maintenance import (
-        merge_bitmap_state_batched,
+        BID,
+        merge_state,
     )
 
-    import os
-
     ev = T(spark, sf_dir, "events").select("event_type", "user_id", "ts")
-    state = os.path.join(state_tmp("bitmap_maint_q"), "words")
+    state = state_tmp("bitmap_maint_q")
     weeks = _weekly_bounds(ev)
     if not weeks:  # empty events table -> zero batches; the oracle's
         # ungrouped count(DISTINCT) still emits the __all__ row with 0
@@ -1005,17 +1003,24 @@ def streaming_bitmap_distinct_maintenance(spark, sf_dir):
         )
     # Every weekly word-file increment in ONE scan (batch-labeled
     # grouping through the shared bitmap_word_rows); the single
-    # merge_bitmap_state_batched call re-ORs across the weekly labels —
-    # bit_or is associative AND idempotent, so one state transition
-    # equals the per-week fold by algebra (guide §2.4 / VERDICT r9 #1;
-    # no ledger, as before).
+    # merge_state call re-ORs across the weekly labels — bit_or is
+    # associative AND idempotent, so one state transition equals the
+    # per-week fold by algebra (guide §2.4 / VERDICT r9 #1), and the
+    # labels feed the ledger's skip-work record.
     inc = bitmap_word_rows(
-        ev.withColumn("__bid", _week_bid(weeks)),
+        ev.withColumn(BID, _week_bid(weeks)),
         "event_type",
         "user_id",
-        extra=("__bid",),
+        extra=(BID,),
     )
-    words = merge_bitmap_state_batched(spark, state, inc.drop("__bid"))
+    words = merge_state(
+        spark,
+        state,
+        inc,
+        batch_ids=list(range(len(weeks) - 1)),
+        key_cols=["grp", "w"],
+        aggs={"bits": "bit_or"},
+    )
     from datalakes_and_data_integration_spark.plans.sketches import (
         bitmap_popcount_report,
     )
@@ -1095,7 +1100,8 @@ def _sqm_oracle() -> str:
     description="Incremental quantile estimation: a fixed-grid "
     f"128-bucket count histogram over events.value (width {_SQM_WIDTH}, "
     "clamped tails) is maintained across span-derived weekly batches by "
-    "the shared ledgered sum-merge (bucket counts are PURE ADDITION — "
+    "the shared ledgered sum-merge (streaming/sketch_maintenance."
+    "merge_state; bucket counts are PURE ADDITION — "
     "the mergeable-partial property t-digest/KLL monetize; sum is not "
     "idempotent, so exactly-once lives in the atomic sketch+ledger "
     "commit), then p50/p90/p99 are read from the MAINTAINED state by "
@@ -1114,7 +1120,8 @@ def _sqm_oracle() -> str:
 def streaming_quantile_maintenance(spark, sf_dir):
     from datalakes_and_data_integration_spark.plans._util import T
     from datalakes_and_data_integration_spark.streaming.sketch_maintenance import (
-        ledgered_sum_merge_batched,
+        BID,
+        merge_state,
     )
 
     ev = T(spark, sf_dir, "events").select("value", "ts")
@@ -1132,18 +1139,17 @@ def streaming_quantile_maintenance(spark, sf_dir):
     inc = (
         ev.filter(F.col("value").isNotNull())
         .groupBy(
-            _week_bid(weeks).alias("__bid"), F.expr(_SQM_BUCKET).alias("b")
+            _week_bid(weeks).alias(BID), F.expr(_SQM_BUCKET).alias("b")
         )
         .agg(F.count("*").cast("long").alias("cnt"))
     )
-    hist = ledgered_sum_merge_batched(
+    hist = merge_state(
         spark,
         state,
         inc,
         batch_ids=list(range(len(weeks) - 1)),
         key_cols=["b"],
-        sum_cols=["cnt"],
-        collect_note="<= 128 histogram buckets",
+        aggs={"cnt": "sum"},
     )
     return _sqm_readout(spark, hist)
 

@@ -1,19 +1,35 @@
-"""Streaming sketch maintenance: HLL register files merged per batch.
+"""Streaming sketch maintenance: one staged-commit merge for all state.
 
 The point of a mergeable sketch (plans/sketches.py) is that INCREMENTAL
 maintenance is the same operation as distributed aggregation: each
-micro-batch produces a 64-row register file, and merging it into the
-persisted state is a per-register max — no rescan of history, state size
-O(groups x 64) forever. This is the streaming twin of
-``distinct_count_hll``: after any number of batches, the maintained
-registers are IDENTICAL to the batch-built registers over the union of
-the data (max is associative/commutative/idempotent — redelivered
-batches are no-ops).
+micro-batch produces a small increment (an HLL register file, CMS
+bucket totals, bitmap words, per-key metric rows), and folding it into
+the persisted state is one ``groupBy(keys).agg(merge)`` over state ∪
+increment — no rescan of history, state size bounded by the sketch.
+
+Every family goes through ONE transition, ``merge_state``. Increments
+carry a batch label in the ``__bid`` column (a per-batch call is one
+label); the transition applies every label the ledger has not seen in
+one re-aggregation and commits the new state and the applied ids
+together. What the ledger means depends on the merge algebra:
+
+| algebra | state | redelivered batch | ledger is |
+|---|---|---|---|
+| sum | CMS buckets, A/B metric sums, histograms, daily sums | double-counts | required for exactly-once |
+| max | HLL registers | no-op by algebra | a skip-work record |
+| min / max | per-key first/last weeks | no-op by algebra | a skip-work record |
+| bit_or | exact-distinct bitmap words | no-op by algebra | a skip-work record |
+
+The staged commit matters for every algebra: a torn write of the only
+copy of the state would corrupt it whatever the algebra, so the new
+state is always written to a fresh directory and only then made live.
 """
 
 from __future__ import annotations
 
+import json
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -27,6 +43,80 @@ from datalakes_and_data_integration_spark.functions.hashing import (
 # is itself imported at decoration time by streaming_extra's oracle
 # builders — a module-level import here would reorder the registry tail
 # relative to the order plans/__init__.py declares (code-review r7 s6).
+
+BID = "__bid"  # batch-label column every increment frame carries
+
+
+def merge_state(
+    spark: SparkSession,
+    state_dir: str,
+    increments: DataFrame,
+    batch_ids: list[int],
+    key_cols: list[str],
+    aggs: dict[str, str],
+) -> DataFrame:
+    """Apply every unapplied batch of ``increments`` to the state in
+    ``state_dir`` in ONE transition and return the new state.
+
+    ``increments`` holds the key-grouped increment rows of every batch,
+    labeled by ``BID`` (one label per entry of ``batch_ids``; a batch
+    with no rows is still recorded as applied). ``aggs`` maps each
+    state column to its merge function (``sum``, ``min``, ``max``,
+    ``bit_or``); the merged column keeps its name.
+
+    1. Read ``COMMIT.json``: the active ``sketch-*`` dir and the
+       applied-batch ids.
+    2. Remove every ``sketch-*`` dir it does not name. A crash between
+       the staged write and the commit leaves one behind, and a retry
+       under another id stages another name, so orphans would pile up.
+    3. Skip ids already applied (replay keeps exactly-once for sum).
+    4. ``groupBy(keys).agg(aggs)`` over state ∪ unapplied increments —
+       equal to the per-batch fold because every merge function is
+       associative and commutative.
+    5. Write the result into a fresh ``sketch-*`` dir, which never
+       aliases the dir being read.
+    6. Flip the state pointer and the applied ids together with one
+       ``os.replace`` of ``COMMIT.json``, then drop the superseded dir.
+
+    A crash anywhere before step 6 leaves the previous consistent
+    (state, ledger) pair on disk, and replay re-merges every id the
+    ledger never recorded."""
+    os.makedirs(state_dir, exist_ok=True)
+    commit_path = os.path.join(state_dir, "COMMIT.json")
+    applied: set[str] = set()
+    cur_name = None
+    if os.path.exists(commit_path):
+        with open(commit_path) as fh:
+            commit = json.load(fh)
+        applied, cur_name = set(commit["applied"]), commit["sketch"]
+    for entry in os.listdir(state_dir):
+        if entry.startswith("sketch-") and entry != cur_name:
+            shutil.rmtree(os.path.join(state_dir, entry), ignore_errors=True)
+    cur_dir = os.path.join(state_dir, cur_name) if cur_name else None
+    new_ids = [b for b in batch_ids if str(b) not in applied]
+    if not new_ids:
+        return spark.read.parquet(cur_dir)
+    rows = increments.filter(F.col(BID).isin(new_ids)).drop(BID)
+    if cur_dir is not None:
+        rows = spark.read.parquet(cur_dir).unionByName(rows)
+    new_name = f"sketch-{len(applied):06d}-{max(new_ids)}"
+    new_dir = os.path.join(state_dir, new_name)
+    rows.groupBy(*key_cols).agg(
+        *[F.expr(f"{fn}({c})").alias(c) for c, fn in aggs.items()]
+    ).write.mode("overwrite").parquet(new_dir)
+    tmp = commit_path + ".staged"
+    with open(tmp, "w") as fh:
+        json.dump(
+            {
+                "applied": sorted(applied | {str(b) for b in new_ids}),
+                "sketch": new_name,
+            },
+            fh,
+        )
+    os.replace(tmp, commit_path)  # the atomic commit point
+    if cur_dir is not None:  # superseded generation, post-commit GC
+        shutil.rmtree(cur_dir, ignore_errors=True)
+    return spark.read.parquet(new_dir)
 
 
 def hll_registers(df: DataFrame, group_col: str, key_col: str) -> DataFrame:
@@ -51,29 +141,6 @@ def hll_registers(df: DataFrame, group_col: str, key_col: str) -> DataFrame:
     )
 
 
-def merge_hll_state(
-    spark: SparkSession, state_dir: str, batch_regs: DataFrame
-) -> DataFrame:
-    """Merge a batch register file into the persisted state: per-(grp,
-    reg) max over old + new, rewritten atomically-enough for a single
-    writer (stage + swap is operators/upsert's job; state here is tiny).
-    Returns the merged registers."""
-    if os.path.isdir(state_dir):
-        old = spark.read.parquet(state_dir)
-        merged = (
-            old.unionByName(batch_regs)
-            .groupBy("grp", "reg")
-            .agg(F.max("mrho").alias("mrho"))
-        )
-    else:
-        merged = batch_regs
-    rows = merged.collect()  # scale-ok: O(groups x 64) register rows
-    spark.createDataFrame(rows, merged.schema).write.mode(
-        "overwrite"
-    ).parquet(state_dir)
-    return spark.read.parquet(state_dir)
-
-
 def hll_estimate(regs: DataFrame) -> DataFrame:
     """(grp, hll_est) corrected estimates from a register file — routed
     through plans/sketches' hll_sum_aggs/hll_corrected_col so the
@@ -91,13 +158,10 @@ def hll_estimate(regs: DataFrame) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Count-min sketch maintenance. Unlike HLL (max-merge: idempotent, a
-# redelivered batch is a no-op by algebra), CMS merge is bucket-wise SUM —
-# re-applying a batch double-counts. Exactly-once therefore needs an
-# explicit applied-batch ledger next to the state: the merge is a no-op
-# for a batch id the ledger has seen. This is the real design difference
-# between the two sketch families' streaming maintenance, and the reason
-# Structured Streaming's own state store tracks batch ids.
+# Count-min sketch maintenance. CMS merge is bucket-wise SUM, so unlike
+# HLL (max) a redelivered batch would double-count: exactly-once rests
+# on merge_state's applied-batch ledger, the same contract Structured
+# Streaming's state store keeps through batch ids.
 # --------------------------------------------------------------------------
 
 _CMS_MAINT_D = 4
@@ -154,303 +218,6 @@ def cms_rows(
     )
 
 
-def ledgered_sum_merge(
-    spark: SparkSession,
-    state_dir: str,
-    batch: DataFrame,
-    batch_id: int,
-    key_cols: list[str],
-    sum_cols: list[str],
-    collect_note: str = "bounded state rows",
-) -> DataFrame:
-    """Generic exactly-once SUM-merge of a batch frame into persisted
-    state. Sum-merge is NOT idempotent (unlike HLL's max / bitmap's
-    OR), so exactly-once lives in an applied-batch ledger — and the
-    state parquet and that ledger COMMIT TOGETHER: the merged state
-    stages into a fresh versioned directory and one atomic
-    ``os.replace`` of the commit file flips the active-state pointer
-    and the applied set in the same step. A crash anywhere leaves the
-    previous consistent (state, ledger) pair on disk and replay simply
-    re-merges the batch — no window where state already contains a
-    batch the ledger hasn't recorded (the double-count crash window of
-    the two-step write; ADVICE r7). A replayed id returns the state
-    untouched (pinned by tests for both consumers: the CMS sketch and
-    the A/B per-user metric state)."""
-    return _ledgered_merge(
-        spark,
-        state_dir,
-        batch,
-        batch_id,
-        key_cols,
-        [F.sum(c).alias(c) for c in sum_cols],
-        collect_note,
-    )
-
-
-def ledgered_minmax_merge(
-    spark: SparkSession,
-    state_dir: str,
-    batch: DataFrame,
-    batch_id: int,
-    key_cols: list[str],
-    min_cols: list[str],
-    max_cols: list[str],
-    collect_note: str = "bounded state rows",
-) -> DataFrame:
-    """Min/max-merge a batch frame into persisted state — the
-    IDEMPOTENT member of the merge-algebra family (HLL max, bitmap OR,
-    CMS/metric sum, and now per-key min/max): min and max are
-    associative, commutative AND idempotent, so a redelivered batch is
-    a no-op BY ALGEBRA — the applied-batch ledger this shares with
-    ``ledgered_sum_merge`` is a skip-work optimization and an
-    observability record, not a correctness requirement (pinned by a
-    test that force-remerges a batch past the ledger and gets
-    byte-identical state). The staged-commit atomicity still matters:
-    a torn write of the state parquet itself would corrupt state
-    regardless of algebra, so the same one-``os.replace`` commit flip
-    applies."""
-    return _ledgered_merge(
-        spark,
-        state_dir,
-        batch,
-        batch_id,
-        key_cols,
-        [F.min(c).alias(c) for c in min_cols]
-        + [F.max(c).alias(c) for c in max_cols],
-        collect_note,
-    )
-
-
-def ledgered_sum_merge_batched(
-    spark: SparkSession,
-    state_dir: str,
-    increments: DataFrame,
-    batch_ids: list[int],
-    key_cols: list[str],
-    sum_cols: list[str],
-    bid_col: str = "__bid",
-    collect_note: str = "bounded state rows",
-) -> DataFrame:
-    """Apply MANY sum-merge batches in ONE state transition.
-
-    ``increments`` carries every batch's key-grouped increment rows,
-    labeled by ``bid_col`` (one label per entry of ``batch_ids``; a
-    batch with no rows is still recorded as applied — exactly like
-    sequentially merging its empty frame). Equivalence to the
-    sequential ``ledgered_sum_merge`` fold is algebra, not luck: SUM
-    over exact decimals/longs is associative and commutative, so
-    `groupBy(keys).sum` over (state ∪ all unapplied increments) lands
-    on the identical state the per-batch fold reaches — pinned
-    value-identical by tests/test_r10_opt.py. Already-applied ids are
-    filtered OUT before the merge (replay keeps exactly-once), and the
-    commit records every newly applied id atomically with the state,
-    same staged-commit machinery as the per-batch form. The point
-    (guide §2.4, VERDICT r9 #1): the per-batch fold pays the fixed
-    job-round floor (collect + parquet write + read) once PER BATCH;
-    this pays it once per replay point."""
-    return _ledgered_merge_batched(
-        spark,
-        state_dir,
-        increments,
-        batch_ids,
-        key_cols,
-        [F.sum(c).alias(c) for c in sum_cols],
-        bid_col,
-        collect_note,
-    )
-
-
-def ledgered_minmax_merge_batched(
-    spark: SparkSession,
-    state_dir: str,
-    increments: DataFrame,
-    batch_ids: list[int],
-    key_cols: list[str],
-    min_cols: list[str],
-    max_cols: list[str],
-    bid_col: str = "__bid",
-    collect_note: str = "bounded state rows",
-) -> DataFrame:
-    """Batched twin of ``ledgered_minmax_merge`` — min/max are
-    associative, commutative AND idempotent, so the one-transition
-    merge is equal to the per-batch fold by even stronger algebra
-    than the sum case (duplicate delivery inside ``increments`` would
-    not even matter)."""
-    return _ledgered_merge_batched(
-        spark,
-        state_dir,
-        increments,
-        batch_ids,
-        key_cols,
-        [F.min(c).alias(c) for c in min_cols]
-        + [F.max(c).alias(c) for c in max_cols],
-        bid_col,
-        collect_note,
-    )
-
-
-def _ledgered_merge_batched(
-    spark: SparkSession,
-    state_dir: str,
-    increments: DataFrame,
-    batch_ids: list[int],
-    key_cols: list[str],
-    agg_exprs: list,
-    bid_col: str,
-    collect_note: str,
-) -> DataFrame:
-    """One staged-commit state transition applying every unapplied id
-    in ``batch_ids``: filter ``increments`` to the unapplied labels,
-    union with the current state, ONE groupBy(keys) re-aggregate, ONE
-    collect/write/commit. The commit flips the active-state pointer
-    and the whole newly-applied id set in a single ``os.replace`` —
-    the same crash-consistency contract as ``_ledgered_merge`` (a
-    crash before the flip leaves the previous (state, ledger) pair;
-    replay re-merges ALL the ids it never recorded)."""
-    import json
-    import shutil
-
-    os.makedirs(state_dir, exist_ok=True)
-    commit_path = os.path.join(state_dir, "COMMIT.json")
-    applied: set[str] = set()
-    cur_name = None
-    if os.path.exists(commit_path):
-        with open(commit_path) as fh:
-            commit = json.load(fh)
-        applied = set(commit["applied"])
-        cur_name = commit["sketch"]
-    cur_dir = os.path.join(state_dir, cur_name) if cur_name else None
-    for entry in os.listdir(state_dir):  # entry GC, as in _ledgered_merge
-        if entry.startswith("sketch-") and entry != cur_name:
-            shutil.rmtree(
-                os.path.join(state_dir, entry), ignore_errors=True
-            )
-    new_ids = [b for b in batch_ids if str(b) not in applied]
-    if not new_ids:
-        return spark.read.parquet(cur_dir)
-    inc = increments.filter(
-        F.col(bid_col).isin([*new_ids])
-    ).drop(bid_col)
-    if cur_dir is not None:
-        merged = (
-            spark.read.parquet(cur_dir)
-            .unionByName(inc)
-            .groupBy(*key_cols)
-            .agg(*agg_exprs)
-        )
-    else:
-        merged = inc.groupBy(*key_cols).agg(*agg_exprs)
-    rows = merged.collect()  # scale-ok: see collect_note per consumer
-    _ = collect_note
-    new_name = f"sketch-{len(applied):06d}-{max(new_ids)}"
-    new_dir = os.path.join(state_dir, new_name)
-    spark.createDataFrame(rows, merged.schema).write.mode(
-        "overwrite"
-    ).parquet(new_dir)
-    tmp = commit_path + ".staged"
-    with open(tmp, "w") as fh:
-        json.dump(
-            {
-                "applied": sorted(
-                    applied | {str(b) for b in new_ids}
-                ),
-                "sketch": new_name,
-            },
-            fh,
-        )
-    os.replace(tmp, commit_path)  # the atomic commit point
-    if cur_dir is not None:  # superseded generation, post-commit GC
-        shutil.rmtree(cur_dir, ignore_errors=True)
-    return spark.read.parquet(new_dir)
-
-
-def _ledgered_merge(
-    spark: SparkSession,
-    state_dir: str,
-    batch: DataFrame,
-    batch_id: int,
-    key_cols: list[str],
-    agg_exprs: list,
-    collect_note: str = "bounded state rows",
-) -> DataFrame:
-    """Shared staging/commit machinery for the ledgered merges: one
-    versioned state directory, one COMMIT.json flipped by a single
-    ``os.replace`` carrying both the active-state pointer and the
-    applied-batch set, entry GC of uncommitted stage dirs."""
-    import json
-    import shutil
-
-    os.makedirs(state_dir, exist_ok=True)
-    commit_path = os.path.join(state_dir, "COMMIT.json")
-    applied: set[str] = set()
-    cur_name = None
-    if os.path.exists(commit_path):
-        with open(commit_path) as fh:
-            commit = json.load(fh)
-        applied = set(commit["applied"])
-        cur_name = commit["sketch"]
-    cur_dir = os.path.join(state_dir, cur_name) if cur_name else None
-    # Entry GC (ADVICE r8): a crash between the staged parquet write and
-    # the os.replace commit leaves an orphaned sketch-* dir, and a retry
-    # under a DIFFERENT batch id stages a different name — so orphans
-    # would accumulate across crash/replay cycles. Anything not named by
-    # COMMIT.json is by definition uncommitted garbage; removing it here
-    # restores the bounded-state-dir invariant before we stage anew.
-    for entry in os.listdir(state_dir):
-        if entry.startswith("sketch-") and entry != cur_name:
-            shutil.rmtree(
-                os.path.join(state_dir, entry), ignore_errors=True
-            )
-    if str(batch_id) in applied:
-        return spark.read.parquet(cur_dir)
-    if cur_dir is not None:
-        merged = (
-            spark.read.parquet(cur_dir)
-            .unionByName(batch)
-            .groupBy(*key_cols)
-            .agg(*agg_exprs)
-        )
-    else:
-        merged = batch
-    rows = merged.collect()  # scale-ok: see collect_note per consumer
-    _ = collect_note
-    new_name = f"sketch-{len(applied):06d}-{batch_id}"
-    new_dir = os.path.join(state_dir, new_name)
-    spark.createDataFrame(rows, merged.schema).write.mode(
-        "overwrite"
-    ).parquet(new_dir)
-    tmp = commit_path + ".staged"
-    with open(tmp, "w") as fh:
-        json.dump(
-            {
-                "applied": sorted(applied | {str(batch_id)}),
-                "sketch": new_name,
-            },
-            fh,
-        )
-    os.replace(tmp, commit_path)  # the atomic commit point
-    if cur_dir is not None:  # superseded generation, post-commit GC
-        shutil.rmtree(cur_dir, ignore_errors=True)
-    return spark.read.parquet(new_dir)
-
-
-def merge_cms_state(
-    spark: SparkSession, state_dir: str, batch: DataFrame, batch_id: int
-) -> DataFrame:
-    """Sum-merge a batch's CMS rows into the persisted sketch, exactly
-    once, via the shared staged-commit ledger (ledgered_sum_merge).
-    State is O(d x w) rows (<= 4096) forever."""
-    return ledgered_sum_merge(
-        spark,
-        state_dir,
-        batch,
-        batch_id,
-        key_cols=["seed", "bucket"],
-        sum_cols=["total"],
-        collect_note="O(d x w) sketch rows (<= 4096)",
-    )
-
-
 def cms_lookup(keys: DataFrame, sketch: DataFrame, key_col: str) -> DataFrame:
     """min-over-d-rows CMS estimates for ``keys``: one equi-join on
     (seed, bucket) probes all d rows per key (the heavy_hitters_cms
@@ -484,11 +251,9 @@ def cms_lookup(keys: DataFrame, sketch: DataFrame, key_col: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Exact-distinct bitmap maintenance — the third merge algebra next to HLL
-# (max: idempotent, approximate) and CMS (sum: NOT idempotent, needs the
-# ledger): bit_or is idempotent AND exact. Redelivered batches are no-ops
-# by algebra, no ledger required — the triptych is the whole design space
-# of streaming sketch maintenance.
+# Exact-distinct bitmap maintenance: bit_or is idempotent like HLL's max
+# and exact like CMS's sum — the third point of the merge-algebra
+# design space. State is O(groups x |key domain|/63) word rows.
 # --------------------------------------------------------------------------
 
 
@@ -501,47 +266,3 @@ def bitmap_words(df: DataFrame, group_col: str, key_col: str) -> DataFrame:
     )
 
     return bitmap_word_rows(df, group_col, key_col)
-
-
-def merge_bitmap_state_batched(
-    spark: SparkSession, state_dir: str, increments: DataFrame
-) -> DataFrame:
-    """bit_or-merge MANY batch word files (one frame holding every
-    increment's rows — several rows per (grp, w) are expected) into
-    the persisted state in ONE transition. Unlike the per-batch
-    ``merge_bitmap_state`` — whose no-prior-state path can adopt the
-    already-grouped batch as-is — this ALWAYS re-ORs, because the
-    combined increments are not a grouped word file. bit_or is
-    associative and idempotent, so one transition equals the
-    per-batch fold by algebra (guide §2.4 / VERDICT r9 #1)."""
-    inc = increments
-    if os.path.isdir(state_dir):
-        inc = spark.read.parquet(state_dir).unionByName(inc)
-    merged = inc.groupBy("grp", "w").agg(F.expr("bit_or(bits)").alias("bits"))
-    rows = merged.collect()  # scale-ok: word-compressed state (63 keys/row)
-    spark.createDataFrame(rows, merged.schema).write.mode(
-        "overwrite"
-    ).parquet(state_dir)
-    return spark.read.parquet(state_dir)
-
-
-def merge_bitmap_state(
-    spark: SparkSession, state_dir: str, batch: DataFrame
-) -> DataFrame:
-    """bit_or-merge a batch word file into the persisted state. No
-    ledger: OR is idempotent, a redelivered batch changes nothing
-    (pinned by test). State is O(groups x |key domain|/63) rows."""
-    if os.path.isdir(state_dir):
-        merged = (
-            spark.read.parquet(state_dir)
-            .unionByName(batch)
-            .groupBy("grp", "w")
-            .agg(F.expr("bit_or(bits)").alias("bits"))
-        )
-    else:
-        merged = batch
-    rows = merged.collect()  # scale-ok: word-compressed state (63 keys/row)
-    spark.createDataFrame(rows, merged.schema).write.mode(
-        "overwrite"
-    ).parquet(state_dir)
-    return spark.read.parquet(state_dir)

@@ -1,7 +1,9 @@
 """Round-9 ADVICE regression: an EMPTY events table must yield empty
 maintained state and an oracle-matching (mostly empty) report from all
 three span-derived weekly maintenance queries — not an AttributeError
-from None.date() inside _weekly_bounds."""
+from None.date() inside _weekly_bounds. Also holds the empty-input
+oracle pins of the batch queries whose ungrouped sums used to come out
+NULL where the oracle has 0."""
 
 from __future__ import annotations
 
@@ -48,3 +50,64 @@ def test_maintenance_queries_survive_empty_events(spark, tmp_path):
     assert streaming_heavy_hitters_cms(spark, sf).collect() == []
     rows = streaming_bitmap_distinct_maintenance(spark, sf).collect()
     assert [(r.event_type, r.n_users) for r in rows] == [("__all__", 0)]
+
+
+def _mk_empty_table(tmpdir: str, table: str) -> str:
+    """``table`` with the sf0.001 schema and no rows."""
+    con = duckdb.connect()
+    con.execute(
+        f"""
+        COPY (
+          SELECT * FROM read_parquet('/root/testdata/sf0.001/{table}.parquet')
+          WHERE FALSE
+        ) TO '{tmpdir}/{table}.parquet' (FORMAT PARQUET)
+        """
+    )
+    con.close()
+    return tmpdir
+
+
+def _oracle_match(spark, name: str, sf: str):
+    from datalakes_and_data_integration_spark.plans import all_queries
+    from tools.check_correctness import compare, duck_connect
+
+    con = duck_connect(sf)
+    try:
+        return compare(name, all_queries()[name](spark, sf), con)
+    finally:
+        con.close()
+
+
+def test_bitmap_report_on_empty_words_counts_zero(spark, tmp_path):
+    """An empty events frame builds an empty word file; the OR-merged
+    __all__ row must read 0 (the oracle's count(DISTINCT) over no
+    rows), not NULL — on the helper and on the registry query."""
+    from datalakes_and_data_integration_spark.plans._util import T
+    from datalakes_and_data_integration_spark.plans.sketches import (
+        bitmap_popcount_report,
+        bitmap_word_rows,
+    )
+
+    sf = _mk_empty_events(str(tmp_path))
+    words = bitmap_word_rows(T(spark, sf, "events"), "event_type", "user_id")
+    rows = bitmap_popcount_report(words, "event_type").collect()
+    assert [(r.event_type, r.n_users) for r in rows] == [("__all__", 0)]
+    ok, msg = _oracle_match(spark, "bitmap_distinct_rollup", sf)
+    assert ok, msg
+
+
+def test_er_threshold_sweep_on_empty_grid_matches_oracle(spark, tmp_path):
+    """No customers -> an empty ER grid: every threshold row must carry
+    n_true = 0, so fn = 0 and recall = 0.0 (not NULL), as the oracle."""
+    from datalakes_and_data_integration_spark.plans.relational import (
+        er_quality_threshold_sweep,
+    )
+
+    sf = _mk_empty_table(str(tmp_path), "customer")
+    rows = er_quality_threshold_sweep(spark, sf).collect()
+    assert rows and all(
+        (r.fn, r.recall, r.precision, r.f1) == (0, 0.0, 0.0, 0.0)
+        for r in rows
+    )
+    ok, msg = _oracle_match(spark, "er_quality_threshold_sweep", sf)
+    assert ok, msg

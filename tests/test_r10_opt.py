@@ -6,9 +6,10 @@ guide §2.4): all weekly increments are built in one batch-labeled scan
 and merged once. These tests pin the two claims that make that an
 optimization and not a semantics change:
 
-1. the batched merge lands on the IDENTICAL state the sequential
-   per-batch fold reaches (sum associativity / minmax idempotence),
-   including when some ids were already applied (replay filters them);
+1. one ``merge_state`` transition over every label lands on the
+   IDENTICAL state the sequential fold of one-label transitions reaches
+   (sum associativity / minmax idempotence), including when some ids
+   were already applied (replay filters them);
 2. the batch-label column (`_week_bid`) partitions rows exactly like
    the sequential `[lo, hi)` weekly filter loop.
 """
@@ -31,14 +32,26 @@ def _state_map(df):
     }
 
 
+def _merge1(spark, state, batch, batch_id, key_cols, aggs):
+    """One-label transition: ``batch`` applied under ``batch_id``."""
+    from datalakes_and_data_integration_spark.streaming.sketch_maintenance import (
+        BID,
+        merge_state,
+    )
+
+    return merge_state(
+        spark, state, batch.withColumn(BID, F.lit(batch_id)), [batch_id],
+        key_cols, aggs,
+    )
+
+
 def test_sum_merge_batched_equals_sequential_fold(spark, tmp_path):
     """Three per-user value-sum batches: the sequential ledgered fold
     and the one-transition batched merge must land on identical state
     values, and the batched commit must record every id (replayed ids
     are no-ops afterwards, both per-batch and batched)."""
     from datalakes_and_data_integration_spark.streaming.sketch_maintenance import (
-        ledgered_sum_merge,
-        ledgered_sum_merge_batched,
+        merge_state,
     )
 
     ev = _events(spark).filter(F.col("value").isNotNull())
@@ -52,34 +65,28 @@ def test_sum_merge_batched_equals_sequential_fold(spark, tmp_path):
     seq_state = str(tmp_path / "seq")
     merged = None
     for i, b in enumerate(parts):
-        merged = ledgered_sum_merge(
-            spark, seq_state, b, batch_id=i, key_cols=["user_id"],
-            sum_cols=["v"],
-        )
+        merged = _merge1(spark, seq_state, b, i, ["user_id"], {"v": "sum"})
     seq = {r.user_id: r.v for r in merged.collect()}
 
     inc = ev.groupBy(
         (F.col("user_id") % 3).cast("int").alias("__bid"), "user_id"
     ).agg(F.sum(F.col("value").cast("decimal(18,6)")).alias("v"))
     bat_state = str(tmp_path / "bat")
-    bat = ledgered_sum_merge_batched(
+    bat = merge_state(
         spark, bat_state, inc, batch_ids=[0, 1, 2],
-        key_cols=["user_id"], sum_cols=["v"],
+        key_cols=["user_id"], aggs={"v": "sum"},
     )
     got = {r.user_id: r.v for r in bat.collect()}
     assert got == seq
 
     # replay the whole id set: no-op (ledger short-circuits, no new job)
-    again = ledgered_sum_merge_batched(
+    again = merge_state(
         spark, bat_state, inc, batch_ids=[0, 1, 2],
-        key_cols=["user_id"], sum_cols=["v"],
+        key_cols=["user_id"], aggs={"v": "sum"},
     )
     assert {r.user_id: r.v for r in again.collect()} == seq
-    # replay ONE id through the per-batch form: also a no-op
-    one = ledgered_sum_merge(
-        spark, bat_state, parts[1], batch_id=1, key_cols=["user_id"],
-        sum_cols=["v"],
-    )
+    # replay ONE id as a one-label transition: also a no-op
+    one = _merge1(spark, bat_state, parts[1], 1, ["user_id"], {"v": "sum"})
     assert {r.user_id: r.v for r in one.collect()} == seq
 
 
@@ -88,8 +95,7 @@ def test_sum_merge_batched_applies_only_unapplied_ids(spark, tmp_path):
     call covering ids [0, 1, 2]: batch 0's increment must NOT be
     double-counted, and the result equals the full sequential fold."""
     from datalakes_and_data_integration_spark.streaming.sketch_maintenance import (
-        ledgered_sum_merge,
-        ledgered_sum_merge_batched,
+        merge_state,
     )
 
     ev = _events(spark).filter(F.col("value").isNotNull())
@@ -102,31 +108,26 @@ def test_sum_merge_batched_applies_only_unapplied_ids(spark, tmp_path):
     seq_state = str(tmp_path / "seq")
     merged = None
     for i, b in enumerate(parts):
-        merged = ledgered_sum_merge(
-            spark, seq_state, b, batch_id=i, key_cols=["user_id"],
-            sum_cols=["cnt"],
+        merged = _merge1(
+            spark, seq_state, b, i, ["user_id"], {"cnt": "sum"}
         )
     seq = {r.user_id: r.cnt for r in merged.collect()}
 
     mix_state = str(tmp_path / "mix")
-    ledgered_sum_merge(
-        spark, mix_state, parts[0], batch_id=0, key_cols=["user_id"],
-        sum_cols=["cnt"],
-    )
+    _merge1(spark, mix_state, parts[0], 0, ["user_id"], {"cnt": "sum"})
     inc = ev.groupBy(
         (F.col("user_id") % 3).cast("int").alias("__bid"), "user_id"
     ).agg(F.count("*").alias("cnt"))
-    mixed = ledgered_sum_merge_batched(
+    mixed = merge_state(
         spark, mix_state, inc, batch_ids=[0, 1, 2],
-        key_cols=["user_id"], sum_cols=["cnt"],
+        key_cols=["user_id"], aggs={"cnt": "sum"},
     )
     assert {r.user_id: r.cnt for r in mixed.collect()} == seq
 
 
 def test_minmax_merge_batched_equals_sequential_fold(spark, tmp_path):
     from datalakes_and_data_integration_spark.streaming.sketch_maintenance import (
-        ledgered_minmax_merge,
-        ledgered_minmax_merge_batched,
+        merge_state,
     )
 
     rows = [
@@ -142,22 +143,19 @@ def test_minmax_merge_batched_equals_sequential_fold(spark, tmp_path):
     inc = spark.createDataFrame(rows, schema)
     kw = dict(
         key_cols=["user_id", "arm"],
-        min_cols=["enroll_week", "conv_week"],
-        max_cols=["last_week"],
+        aggs={"enroll_week": "min", "conv_week": "min", "last_week": "max"},
     )
     seq_state = str(tmp_path / "seq")
     merged = None
     for i in range(3):
-        merged = ledgered_minmax_merge(
+        merged = _merge1(
             spark, seq_state, inc.filter(F.col("__bid") == i).drop("__bid"),
-            batch_id=i, **kw,
+            i, **kw,
         )
     seq = sorted(map(tuple, merged.collect()))
 
     bat_state = str(tmp_path / "bat")
-    bat = ledgered_minmax_merge_batched(
-        spark, bat_state, inc, batch_ids=[0, 1, 2], **kw
-    )
+    bat = merge_state(spark, bat_state, inc, batch_ids=[0, 1, 2], **kw)
     assert sorted(map(tuple, bat.collect())) == seq
 
 

@@ -242,7 +242,8 @@ def test_streaming_ab_state_replay_is_ledger_noop(spark, tmp_path):
         ab_metric_cuped_adjustment,
     )
     from datalakes_and_data_integration_spark.streaming.sketch_maintenance import (
-        ledgered_sum_merge,
+        BID,
+        merge_state,
     )
 
     ev = T(spark, SF, "events")
@@ -251,14 +252,14 @@ def test_streaming_ab_state_replay_is_ledger_noop(spark, tmp_path):
     b1 = ev.filter(F.col("event_id") % 2 == 0)
     b2 = ev.filter(F.col("event_id") % 2 == 1)
     for i, b in enumerate((b1, b2)):
-        merged = ledgered_sum_merge(
-            spark, state, _ab_per_user(b, exp_start), i,
-            key_cols=["user_id", "arm"], sum_cols=["x", "y"],
+        merged = merge_state(
+            spark, state, _ab_per_user(b, exp_start).withColumn(BID, F.lit(i)),
+            [i], key_cols=["user_id", "arm"], aggs={"x": "sum", "y": "sum"},
         )
     before = sorted(map(tuple, merged.collect()))
-    replay = ledgered_sum_merge(
-        spark, state, _ab_per_user(b1, exp_start), 0,
-        key_cols=["user_id", "arm"], sum_cols=["x", "y"],
+    replay = merge_state(
+        spark, state, _ab_per_user(b1, exp_start).withColumn(BID, F.lit(0)),
+        [0], key_cols=["user_id", "arm"], aggs={"x": "sum", "y": "sum"},
     )
     assert sorted(map(tuple, replay.collect())) == before
 

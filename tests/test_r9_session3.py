@@ -227,7 +227,8 @@ def test_quantile_state_batching_invariant(spark, tmp_path):
         _weekly_bounds,
     )
     from datalakes_and_data_integration_spark.streaming.sketch_maintenance import (
-        ledgered_sum_merge,
+        BID,
+        merge_state,
     )
 
     ev = T(spark, SF, "events").select("value", "ts")
@@ -244,13 +245,15 @@ def test_quantile_state_batching_invariant(spark, tmp_path):
     weeks = _weekly_bounds(ev)
     assert len(weeks) >= 3  # the fixture really spans multiple weeks
     for i, (lo, hi) in enumerate(zip(weeks, weeks[1:])):
-        hist = ledgered_sum_merge(
+        hist = merge_state(
             spark,
             weekly_state,
-            hist_batch(ev.filter((F.col("ts") >= lo) & (F.col("ts") < hi))),
-            batch_id=i,
+            hist_batch(
+                ev.filter((F.col("ts") >= lo) & (F.col("ts") < hi))
+            ).withColumn(BID, F.lit(i)),
+            batch_ids=[i],
             key_cols=["b"],
-            sum_cols=["cnt"],
+            aggs={"cnt": "sum"},
         )
     weekly = {
         r.q: (r.n, r.est_value)
@@ -258,13 +261,13 @@ def test_quantile_state_batching_invariant(spark, tmp_path):
     }
 
     single_state = str(tmp_path / "single")
-    single_hist = ledgered_sum_merge(
+    single_hist = merge_state(
         spark,
         single_state,
-        hist_batch(ev),
-        batch_id=0,
+        hist_batch(ev).withColumn(BID, F.lit(0)),
+        batch_ids=[0],
         key_cols=["b"],
-        sum_cols=["cnt"],
+        aggs={"cnt": "sum"},
     )
     single = {
         r.q: (r.n, r.est_value)
@@ -273,13 +276,14 @@ def test_quantile_state_batching_invariant(spark, tmp_path):
     assert weekly == single and set(weekly) == {0.5, 0.9, 0.99}
 
     # replayed batch id: state (and readout) untouched
-    replayed = ledgered_sum_merge(
+    replayed = merge_state(
         spark,
         weekly_state,
-        hist_batch(ev),  # would double-count if the ledger failed
-        batch_id=0,
+        # would double-count if the ledger failed
+        hist_batch(ev).withColumn(BID, F.lit(0)),
+        batch_ids=[0],
         key_cols=["b"],
-        sum_cols=["cnt"],
+        aggs={"cnt": "sum"},
     )
     after = {
         r.q: (r.n, r.est_value)
@@ -909,7 +913,8 @@ def test_ccf_maintained_state_is_batching_invariant(spark, tmp_path):
         daily_cross_correlation,
     )
     from datalakes_and_data_integration_spark.streaming.sketch_maintenance import (
-        ledgered_sum_merge,
+        BID,
+        merge_state,
     )
 
     ev = T(spark, SF, "events").select("event_type", "value", "ts")
@@ -918,15 +923,15 @@ def test_ccf_maintained_state_is_batching_invariant(spark, tmp_path):
     for i, (lo, hi) in enumerate(
         zip(_weekly_bounds(ev), _weekly_bounds(ev)[1:])
     ):
-        daily = ledgered_sum_merge(
+        daily = merge_state(
             spark,
             weekly_state,
             _ccf_daily_dec(
                 ev.filter((F.col("ts") >= lo) & (F.col("ts") < hi))
-            ),
-            batch_id=i,
+            ).withColumn(BID, F.lit(i)),
+            batch_ids=[i],
             key_cols=["di"],
-            sum_cols=["x", "y"],
+            aggs={"x": "sum", "y": "sum"},
         )
     weekly = {
         r.lag: (r.n_days, r.ccf_r)
@@ -938,13 +943,14 @@ def test_ccf_maintained_state_is_batching_invariant(spark, tmp_path):
     }
     assert weekly == batch and len(weekly) == 15
 
-    replayed = ledgered_sum_merge(
+    replayed = merge_state(
         spark,
         weekly_state,
-        _ccf_daily_dec(ev),  # would double every day if the ledger failed
-        batch_id=0,
+        # would double every day if the ledger failed
+        _ccf_daily_dec(ev).withColumn(BID, F.lit(0)),
+        batch_ids=[0],
         key_cols=["di"],
-        sum_cols=["x", "y"],
+        aggs={"x": "sum", "y": "sum"},
     )
     after = {
         r.lag: (r.n_days, r.ccf_r)

@@ -1,16 +1,18 @@
-"""Round-10 probe: time + job/stage-count the streaming maintenance
-family (and any --only list) with the bench methodology (noop sink,
-cold pass + min of 3 warm), plus the Spark status tracker's job/stage
-deltas per pass — the robust_scaling_mad treatment's measuring stick.
+"""Time and job-count the streaming maintenance family (or any --only
+list) with the bench methodology: noop sink, one cold pass, then warm
+passes, with the Spark status tracker's job count recorded for every
+(query, pass).
 
 Usage: python tools/maint_probe.py [--only a,b] [--sf DIR] [--rounds N]
-Prints one line per (query, pass) and a summary table.
+Prints one line per (query, pass), a per-query table with the job count
+of every round, and a family total (sum of warm medians, jobs per round).
 """
 
 from __future__ import annotations
 
 import argparse
 import os
+import statistics
 import sys
 import time
 
@@ -45,32 +47,48 @@ def main() -> None:
     tracker = sc.statusTracker()
     spark.read.parquet(os.path.join(args.sf, "events.parquet")).count()
 
-    results: dict[str, dict] = {}
+    # name -> {"secs": [per round], "jobs": [per round]}; round 0 is cold
+    results: dict[str, dict] = {n: {"secs": [], "jobs": []} for n in names}
     for rnd in range(args.rounds):
         for name in names:
-            q = plans.QUERIES[name]
-            jobs0 = len(tracker.getJobIdsForGroup(None) or [])
-            sc.setJobGroup(f"probe:{name}:{rnd}", name)
+            group = f"probe:{name}:{rnd}"
+            sc.setJobGroup(group, name)
             t0 = time.time()
-            df = q.spark(spark, args.sf)
-            df.write.format("noop").mode("overwrite").save()
+            plans.QUERIES[name].spark(spark, args.sf).write.format(
+                "noop"
+            ).mode("overwrite").save()
             dt = round(time.time() - t0, 3)
-            njobs = len(tracker.getJobIdsForGroup(f"probe:{name}:{rnd}") or [])
+            njobs = len(tracker.getJobIdsForGroup(group) or [])
             sc.setJobGroup(None, None)
-            r = results.setdefault(name, {"cold": None, "warm": [], "jobs": njobs})
-            if rnd == 0:
-                r["cold"] = dt
-            else:
-                r["warm"].append(dt)
-            r["jobs"] = njobs
+            results[name]["secs"].append(dt)
+            results[name]["jobs"].append(njobs)
             print(f"pass {rnd} {name}: {dt}s jobs={njobs}", flush=True)
-            _ = jobs0
 
-    print("\n| query | cold s | warm min s | jobs/run |")
-    print("|---|---|---|---|")
+    def warm(r: dict) -> list[float]:
+        return r["secs"][1:]
+
+    print(f"\ncpus={os.cpu_count()} sf={args.sf} rounds={args.rounds}")
+    print("| query | cold s | warm min s | warm median s | jobs per round |")
+    print("|---|---|---|---|---|")
     for name, r in results.items():
-        wm = min(r["warm"]) if r["warm"] else -1
-        print(f"| {name} | {r['cold']} | {wm} | {r['jobs']} |")
+        w = warm(r)
+        wmin = min(w) if w else -1
+        wmed = round(statistics.median(w), 3) if w else -1
+        print(
+            f"| {name} | {r['secs'][0]} | {wmin} | {wmed} | "
+            f"{', '.join(map(str, r['jobs']))} |"
+        )
+    if args.rounds > 1:
+        fam = sum(statistics.median(warm(r)) for r in results.values())
+        per_round = [
+            sum(r["jobs"][i] for r in results.values())
+            for i in range(args.rounds)
+        ]
+        print(
+            f"| family | {round(sum(r['secs'][0] for r in results.values()), 3)}"
+            f" | {round(sum(min(warm(r)) for r in results.values()), 3)}"
+            f" | {round(fam, 3)} | {', '.join(map(str, per_round))} |"
+        )
 
 
 if __name__ == "__main__":
