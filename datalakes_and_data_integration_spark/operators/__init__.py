@@ -27,6 +27,7 @@ from datalakes_and_data_integration_spark.operators.impute import (
 from datalakes_and_data_integration_spark.operators.convert import (
     horizontal_sum,
     map_convert,
+    unit_factor,
 )
 from datalakes_and_data_integration_spark.operators.windows import (
     bfill_rev,
@@ -49,6 +50,7 @@ __all__ = [
     "mean_exprs",
     "horizontal_sum",
     "map_convert",
+    "unit_factor",
     "bfill_rev",
     "ffill",
     "lag_diff",

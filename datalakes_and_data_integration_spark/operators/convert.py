@@ -21,6 +21,20 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
+def unit_factor(key_col: str, factors: Mapping[str, float]) -> Column:
+    """``factors[key_col]`` as a column; unmapped key -> null (reference
+    F4). Shared by ``map_convert`` and the gold conversion projection."""
+    factor: Column = F.lit(None).cast("double")
+    # Build when-chain in deterministic (sorted) key order.
+    chain = None
+    for k in sorted(factors):
+        cond = F.col(key_col) == k
+        chain = F.when(cond, F.lit(factors[k])) if chain is None else chain.when(
+            cond, F.lit(factors[k])
+        )
+    return chain.otherwise(factor) if chain is not None else factor
+
+
 def map_convert(
     df: DataFrame,
     value_col: str,
@@ -29,16 +43,7 @@ def map_convert(
     out_col: str,
 ) -> DataFrame:
     """``out = value * factors[key]``; unmapped key -> null (reference F4)."""
-    expr: Column = F.lit(None).cast("double")
-    # Build when-chain in deterministic (sorted) key order.
-    chain = None
-    for k in sorted(factors):
-        cond = F.col(key_col) == k
-        chain = F.when(cond, F.lit(factors[k])) if chain is None else chain.when(
-            cond, F.lit(factors[k])
-        )
-    factor = chain.otherwise(expr) if chain is not None else expr
-    return df.withColumn(out_col, F.col(value_col) * factor)
+    return df.withColumn(out_col, F.col(value_col) * unit_factor(key_col, factors))
 
 
 def horizontal_sum(cols: Sequence[str | Column]) -> Column:

@@ -38,6 +38,7 @@ from datalakes_and_data_integration_spark.operators import (
     lag_pct_change,
     mean_exprs,
     prefix_columns,
+    unit_factor,
 )
 from datalakes_and_data_integration_spark.operators.windows import (
     bfill_rev,
@@ -53,21 +54,6 @@ from datalakes_and_data_integration_spark.sources.sinks import write_partitioned
 
 KEYS = ["code_site", "date_de_debut"]
 TOTAL = "total_valeur_particule_g_par_L"
-
-
-def _unit_factor_col(unit_col):
-    """Unit -> g/L factor; unmapped -> null (reference F4,
-    process_to_curated.py:35-39). Accepts a column name or Column
-    expression (the fused gold projection passes the filled-unit
-    expression directly)."""
-    ucol = F.col(unit_col) if isinstance(unit_col, str) else unit_col
-    expr = F.lit(None).cast("double")
-    chain = None
-    for unit in sorted(UNIT_FACTORS):
-        cond = ucol == unit
-        lit = F.lit(UNIT_FACTORS[unit])
-        chain = F.when(cond, lit) if chain is None else chain.when(cond, lit)
-    return chain.otherwise(expr)
 
 
 def build_gold(
@@ -187,7 +173,7 @@ def build_gold(
     conversions = []
     for c in unit_cols:
         prefix = c[: -len("_unite_de_mesure")]
-        factor = _unit_factor_col(c)
+        factor = unit_factor(c, UNIT_FACTORS)
         for vc in (f"{prefix}_valeur", f"{prefix}_valeur_brute"):
             if vc in wide.columns:
                 out = f"{vc}_g_par_L"

@@ -65,6 +65,25 @@ def drop_empty_rows(df: DataFrame, data_cols: list[str]) -> DataFrame:
     return df.filter(any_filled)
 
 
+def _clean_bronze(bronze: DataFrame) -> tuple[DataFrame, list]:
+    """Normalize -> drop empty rows -> typed cast -> full-row dedup, plus
+    the first-writer-wins tiebreak for the PK dedup.
+
+    The reference keeps whichever row S3 happened to list first
+    (unspecified order, SURVEY.md §7.4); the tiebreak keeps the
+    lexicographically smallest row — earliest ingest file first, then
+    every remaining column, which IS a total order."""
+    df = normalize_columns(bronze)
+    data_cols = [c for c in df.columns if c not in ("pollutant_code", "ingest_date")]
+    df = dedup_full_row(typed_cast(drop_empty_rows(df, data_cols)))
+    tiebreak = [F.col("ingest_date").asc_nulls_last()] + [
+        F.col(c).asc_nulls_last()
+        for c in sorted(df.columns)
+        if c != "ingest_date"
+    ]
+    return df, tiebreak
+
+
 def build_silver(
     spark: SparkSession, bronze_dir: str, silver_dir: str
 ) -> DataFrame:
@@ -81,20 +100,7 @@ def build_silver(
         ]
     )
     bronze = spark.read.schema(bronze_schema).parquet(bronze_dir)
-    df = normalize_columns(bronze)
-    data_cols = [c for c in df.columns if c not in ("pollutant_code", "ingest_date")]
-    df = drop_empty_rows(df, data_cols)
-    df = typed_cast(df)
-    df = dedup_full_row(df)
-    # Deterministic first-writer-wins: the reference keeps whichever row S3
-    # happened to list first (unspecified order, SURVEY.md §7.4); we keep the
-    # lexicographically smallest row — earliest ingest file first, then every
-    # remaining column as tiebreak, which IS a total order.
-    tiebreak = [F.col("ingest_date").asc_nulls_last()] + [
-        F.col(c).asc_nulls_last()
-        for c in sorted(df.columns)
-        if c != "ingest_date"
-    ]
+    df, tiebreak = _clean_bronze(bronze)
     df = dedup_keep_first(df, keys=["pollutant_code", *PK], order_by=tiebreak)
     write_partitioned(
         df,
@@ -129,16 +135,7 @@ def build_silver_incremental(
     bronze = spark.read.parquet(bronze_dir)
     if ingest_dates:
         bronze = bronze.filter(F.col("ingest_date").isin(ingest_dates))
-    df = normalize_columns(bronze)
-    data_cols = [c for c in df.columns if c not in ("pollutant_code", "ingest_date")]
-    df = drop_empty_rows(df, data_cols)
-    df = typed_cast(df)
-    df = dedup_full_row(df)
-    tiebreak = [F.col("ingest_date").asc_nulls_last()] + [
-        F.col(c).asc_nulls_last()
-        for c in sorted(df.columns)
-        if c != "ingest_date"
-    ]
+    df, tiebreak = _clean_bronze(bronze)
     return upsert_parquet(
         spark,
         silver_dir,

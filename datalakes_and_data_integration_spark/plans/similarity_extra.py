@@ -8,6 +8,11 @@ from datalakes_and_data_integration_spark.plans._util import T
 from datalakes_and_data_integration_spark.plans.registry import register
 from datalakes_and_data_integration_spark.plans.similarity import (
     TRAIN_SAMPLE_PRED,
+    _chunk_broadcasts,
+    _margin_keep,
+    _n_chunks,
+    _scan,
+    _seq_dot,
     train_sample,
 )
 
@@ -1001,45 +1006,24 @@ def _exact_rerank(unit, shortlist, topk: int):
 #   - the shortlist is selected in-kernel by the exact oracle order
 #     (adc_dist, n_id) via a stable lexsort — same rows as the
 #     row_number window it replaces;
-#   - the exact re-rank runs in-kernel on unit vectors with the SQL
-#     expression's sequential left-fold (bit-identical doubles), and
-#     candidates within _MARGIN of the raw kth best go back to Spark for
-#     the authoritative codegen re-score + rounded ranking (the
-#     ann_topk_bruteforce_hybrid margin argument, verbatim).
-# Chunking: one corpus chunk (<= _NP_CHUNK_ROWS) is the whole pipeline
-# in-kernel. With multiple chunks a per-chunk GLOBAL shortlist cut would
-# be wrong (a chunk-local shortlist is a superset of the global
-# shortlist's members in that chunk, but re-ranking the superset could
-# admit a high-cosine vector the true pipeline never shortlists), so the
-# multi-chunk path emits per-chunk shortlist rows WITH adc_dist and
-# Spark takes the exact global cut + _exact_rerank — correct at any
-# scale, engaged past ~250k vectors (pinned equal to the single-chunk
-# result by tests/test_adc_kernel_chunked.py).
+#   - the exact re-rank runs in-kernel on unit vectors through the scan
+#     core's _seq_dot and _margin_keep (see the core comment in
+#     plans/similarity.py): candidates within _MARGIN of the raw kth best
+#     go back to Spark for the authoritative codegen re-score + rounded
+#     ranking (_exact_rerank).
+# Chunking: the core's _chunk_broadcasts and _scan. One corpus chunk
+# (<= similarity._CORPUS_CHUNK_ROWS) is the whole pipeline in-kernel.
+# With multiple chunks a per-chunk GLOBAL shortlist cut would be wrong (a
+# chunk-local shortlist is a superset of the global shortlist's members in
+# that chunk, but re-ranking the superset could admit a high-cosine vector
+# the true pipeline never shortlists), so the multi-chunk path emits
+# per-chunk shortlist rows WITH adc_dist and Spark takes the exact global
+# cut + _exact_rerank — correct at any scale, engaged past ~250k vectors
+# (pinned equal to the single-chunk result by
+# tests/test_adc_kernel_chunked.py).
 # ---------------------------------------------------------------------------
 
-_NP_CHUNK_ROWS = 250_000  # corpus rows per broadcast chunk (~140 MB)
 _ADC_QBLOCK = 64  # query rows per in-kernel ADC block (~10 MB at 20k)
-
-
-def _np_chunk_count(n: int) -> int:
-    return max(1, -(-n // _NP_CHUNK_ROWS))
-
-
-def _np_chunks(spark, df, build, n_chunks: int):
-    """Broadcast ``build(rows)`` for each pmod(vec_id) chunk of ``df`` —
-    the similarity._corpus_chunk_broadcasts discipline: driver heap is
-    bounded by ONE chunk; broadcast payloads live in the block manager."""
-    from pyspark.sql import functions as F
-
-    for ci in range(n_chunks):
-        chunk = (
-            df
-            if n_chunks == 1
-            else df.filter(F.pmod(F.col("vec_id"), F.lit(n_chunks)) == ci)
-        )
-        rows = chunk.collect()  # scale-ok: bounded by _NP_CHUNK_ROWS
-        if rows:
-            yield spark.sparkContext.broadcast(build(rows))
 
 
 def _np_emit(single_chunk, out):
@@ -1060,10 +1044,6 @@ def _shortlist_then_rerank(
     shortlist rows with their int64 ADC scores."""
     import numpy as np
 
-    from datalakes_and_data_integration_spark.plans.similarity import (
-        _MARGIN,
-    )
-
     if cand.size == 0:
         return
     order = np.lexsort((ids[cand], vals))[: min(shortlist_n, cand.size)]
@@ -1074,17 +1054,9 @@ def _shortlist_then_rerank(
         out_n.extend(ids[sl].tolist())
         out_d.extend(vals[order].tolist())
         return
-    # Exact cosine of the shortlist pairs: unit-vector dot in the SQL
-    # expression's sequential left-fold order (bit-identical doubles).
-    Us = U[sl]
-    acc = np.zeros(sl.size)
-    for d_i in range(U.shape[1]):
-        acc += qarr[d_i] * Us[:, d_i]
-    k = min(_PQ_TOPK, acc.size)
-    kth = np.partition(acc, -k)[-k]
-    keep = np.nonzero(acc >= kth - _MARGIN)[0]
+    keep = sl[_margin_keep(_seq_dot(qarr, U[sl]), _PQ_TOPK)]
     out_q.extend([q_id] * keep.size)
-    out_n.extend(ids[sl[keep]].tolist())
+    out_n.extend(ids[keep].tolist())
 
 
 def _mk_adc_scan(bc, shortlist_n: int, single_chunk: bool, masked: bool):
@@ -1249,13 +1221,15 @@ def _adc_scan_pipeline(
     from pyspark.sql import functions as F
 
     shortlist_n = _pq_shortlist(n_corpus)
-    n_chunks = _np_chunk_count(n_corpus)
+    n_chunks = _n_chunks(n_corpus)
     single = n_chunks == 1
     schema = "q_id long, n_id long" + ("" if single else ", adc_dist long")
-    cand = None
-    for bc in _np_chunks(spark, corpus_df, build, n_chunks):
-        part = qin.mapInPandas(mk_kernel(bc, shortlist_n, single), schema)
-        cand = part if cand is None else cand.unionAll(part)
+    cand = _scan(
+        qin,
+        _chunk_broadcasts(spark, corpus_df, build, n_chunks),
+        lambda bc: mk_kernel(bc, shortlist_n, single),
+        schema,
+    )
     if not single:
         w = Window.partitionBy("q_id").orderBy("adc_dist", "n_id")
         cand = (
@@ -1317,7 +1291,7 @@ def ann_topk_pq(spark, sf_dir):
     # broadcastable face of the corpus) and each query block scores the
     # chunk with 8 int64 gather-adds; shortlist cut and the
     # margin-guarded exact re-rank happen in-kernel (see the section
-    # comment above _np_chunk_count for the exactness argument).
+    # comment above _ADC_QBLOCK for the exactness argument).
     corpus_df = codes_piv.select(
         F.col("n_id").alias("vec_id"), "ncodes"
     ).join(unit, "vec_id")
@@ -1482,7 +1456,7 @@ def ann_topk_ivfadc(spark, sf_dir):
     # broadcast chunk — the explode/join/distinct candidate generation
     # collapses into the mask, and the ADC gather-sum scores exactly the
     # masked rows (same int64 totals as the unrolled lookup expression
-    # it replaces; see the section comment above _np_chunk_count).
+    # it replaces; see the section comment above _ADC_QBLOCK).
     corpus_df = lists.select("vec_id", "arr", "rep_lists").join(
         codes_piv.select(F.col("n_id").alias("vec_id"), "ncodes"), "vec_id"
     )

@@ -22,23 +22,24 @@ def _rows(df):
 
 
 @pytest.mark.parametrize(
-    "query,module,const",
+    "query,module",
     [
         # flat-PQ: _mk_adc_scan unmasked + multi-chunk Spark shortlist cut
-        ("ann_topk_pq", se, "_NP_CHUNK_ROWS"),
+        ("ann_topk_pq", se),
+        # IVFADC: _mk_adc_scan masked + multi-chunk Spark shortlist cut
+        ("ann_topk_ivfadc", se),
         # residual: _mk_res_scan + multi-chunk Spark shortlist cut
-        ("ann_topk_ivfadc_residual", se, "_NP_CHUNK_ROWS"),
+        ("ann_topk_ivfadc_residual", se),
         # IVF: margin-only kernel (no shortlist), chunked union re-rank
-        ("ann_topk_ivf", sim, "_CORPUS_CHUNK_ROWS"),
+        ("ann_topk_ivf", sim),
     ],
 )
-def test_chunked_scan_matches_single_chunk(
-    spark, monkeypatch, query, module, const
-):
+def test_chunked_scan_matches_single_chunk(spark, monkeypatch, query, module):
     fn = getattr(module, query)
     base = _rows(fn(spark, SF))
     assert len(base) > 0
-    # Force >= 3 chunks at the ~500-vector sf0.001 corpus.
-    monkeypatch.setattr(module, const, 200)
+    # Force >= 3 chunks at the ~500-vector sf0.001 corpus; every kernel
+    # chunks through the one scan-core constant.
+    monkeypatch.setattr(sim, "_CORPUS_CHUNK_ROWS", 200)
     chunked = _rows(fn(spark, SF))
     assert chunked == base

@@ -3,11 +3,13 @@ maintained state and an oracle-matching (mostly empty) report from all
 three span-derived weekly maintenance queries — not an AttributeError
 from None.date() inside _weekly_bounds. Also holds the empty-input
 oracle pins of the batch queries whose ungrouped sums used to come out
-NULL where the oracle has 0."""
+NULL where the oracle has 0, and of the hybrid similarity kernels, which
+used to fail on a corpus with no chunk to scan."""
 
 from __future__ import annotations
 
 import duckdb
+import pytest
 
 
 def _mk_empty_events(tmpdir: str) -> str:
@@ -110,4 +112,17 @@ def test_er_threshold_sweep_on_empty_grid_matches_oracle(spark, tmp_path):
         for r in rows
     )
     ok, msg = _oracle_match(spark, "er_quality_threshold_sweep", sf)
+    assert ok, msg
+
+
+@pytest.mark.parametrize(
+    "name", ["ann_topk_bruteforce_hybrid", "embedding_near_dup_hybrid"]
+)
+def test_hybrid_similarity_on_empty_embeddings_matches_oracle(
+    spark, tmp_path, name
+):
+    """An empty corpus broadcasts no chunk; the scan must still yield an
+    empty candidate frame, so the query returns the oracle's 0 rows."""
+    sf = _mk_empty_table(str(tmp_path), "embeddings")
+    ok, msg = _oracle_match(spark, name, sf)
     assert ok, msg

@@ -4,11 +4,18 @@ The hybrid kernels must never materialize the whole corpus on the driver
 (VERDICT r1 "What's wrong #4"): they pull bounded pmod-sliced chunks and
 broadcast each. At gate scale one chunk suffices, so these tests force a
 tiny chunk size to exercise the multi-chunk union path and assert the
-result is bit-identical to the exact brute-force twin.
+result is bit-identical to the exact brute-force twin. Inside a chunk
+the kernels score PROBE_BLOCK x CORPUS_BLOCK tiles; the tile test pins
+their reassembly against the SQL expression's left-fold order.
 """
 
 from __future__ import annotations
 
+import math
+from types import SimpleNamespace
+
+import numpy as np
+import pandas as pd
 import pytest
 
 import datalakes_and_data_integration_spark.plans.similarity as sim
@@ -34,3 +41,43 @@ def test_near_dup_hybrid_multi_chunk_matches_single(spark, tiny_chunks, monkeypa
     monkeypatch.setattr(sim, "_CORPUS_CHUNK_ROWS", 250_000)
     single = sorted(map(tuple, sim.embedding_near_dup_hybrid(spark, SF).collect()))
     assert multi == single
+
+
+def test_cos_tiles_reassemble_to_sequential_fold(monkeypatch):
+    # Tiny tiles so one batch spans several probe and corpus blocks.
+    monkeypatch.setattr(sim, "_PROBE_BLOCK", 3)
+    monkeypatch.setattr(sim, "_CORPUS_BLOCK", 5)
+    rng = np.random.default_rng(7)
+    vecs = rng.uniform(-0.6, 0.6, size=(13, sim._DIM)).astype(np.float32)
+    rows = [
+        SimpleNamespace(vec_id=100 + i, embedding=v) for i, v in enumerate(vecs)
+    ]
+    ids, C, nb = sim._corpus_arrays(rows)
+    batches = [
+        pd.DataFrame({"vec_id": ids[:8], "embedding": list(vecs[:8])}),
+        pd.DataFrame({"vec_id": ids[8:], "embedding": list(vecs[8:])}),
+    ]
+    got = {}
+    for q_ids, n_ids, cos in sim._cos_tiles(
+        iter(batches), SimpleNamespace(value=(ids, C, nb))
+    ):
+        assert cos.shape[0] <= 3 and cos.shape[1] <= 5
+        for i, q in enumerate(q_ids):
+            for j, n in enumerate(n_ids):
+                assert (q, n) not in got
+                got[(q, n)] = cos[i, j]
+
+    def fold(a, b):  # _dot_spark's operation order, in Python doubles
+        acc = 0.0
+        for x, y in zip(a, b):
+            acc += float(x) * float(y)
+        return acc
+
+    want = {
+        (ids[i], ids[j]): fold(vecs[i], vecs[j])
+        / math.sqrt(fold(vecs[i], vecs[i]))
+        / math.sqrt(fold(vecs[j], vecs[j]))
+        for i in range(len(ids))
+        for j in range(len(ids))
+    }
+    assert got == want
