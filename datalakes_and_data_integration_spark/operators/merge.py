@@ -13,10 +13,11 @@ pivot-based queries in plans/relational.py.
 
 from __future__ import annotations
 
+import operator
 from collections.abc import Sequence
 from functools import reduce
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -31,6 +32,16 @@ def prefix_columns(df: DataFrame, prefix: str, keys: Sequence[str]) -> DataFrame
     return df.select(
         *[F.col(k) for k in keys],
         *[F.col(c).alias(f"{prefix}_{c}") for c in df.columns if c not in keys],
+    )
+
+
+def keys_match(left: str, right: str, keys: Sequence[str]) -> Column:
+    """``left.k <=> right.k`` for every key, ANDed (``left``/``right`` are
+    DataFrame aliases): the NULL-safe key equality shared by gold's outer
+    merge and silver's MERGE (operators.upsert.merge_new_only)."""
+    return reduce(
+        operator.and_,
+        [F.col(f"{left}.{k}").eqNullSafe(F.col(f"{right}.{k}")) for k in keys],
     )
 
 
@@ -55,12 +66,7 @@ def full_outer_merge(dfs: Sequence[DataFrame], keys: Sequence[str]) -> DataFrame
 
     def step(left: DataFrame, right: DataFrame) -> DataFrame:
         la, rb = left.alias("l"), right.alias("r")
-        cond = reduce(
-            lambda acc, k: acc & F.col(f"l.{k}").eqNullSafe(F.col(f"r.{k}")),
-            keys[1:],
-            F.col(f"l.{keys[0]}").eqNullSafe(F.col(f"r.{keys[0]}")),
-        )
-        joined = la.join(rb, cond, "full")
+        joined = la.join(rb, keys_match("l", "r", keys), "full")
         return joined.select(
             *[
                 F.coalesce(F.col(f"l.{k}"), F.col(f"r.{k}")).alias(k)

@@ -6,13 +6,18 @@ The LWT gives first-writer-wins per primary key: a row whose
 ``(code_site, date_de_debut)`` already exists is silently dropped. The
 Spark-native equivalents:
 
-- ``merge_new_only(existing, updates, keys)``: a left anti join — the
-  incoming batch minus keys already present — appended to the table. This
-  IS ``MERGE INTO t USING u ON pk WHEN NOT MATCHED THEN INSERT`` on an
-  engine without Delta's transaction log.
-- ``upsert_parquet``: the same, against a parquet directory, rewritten
-  atomically (write to a staging dir then swap). On a Delta/Iceberg table
-  the swap is replaced by a real MERGE; the dataflow is identical.
+- ``merge_new_only(existing, updates, keys)``: a NULL-safe left anti join
+  — the incoming batch minus keys already present — appended to the
+  table. This IS ``MERGE INTO t USING u ON pk WHEN NOT MATCHED THEN
+  INSERT`` on an engine without Delta's transaction log. The keys match
+  with ``<=>``: a key cell that failed to parse (a NULL date) still names
+  one row, so re-delivering it is a no-op, as in the LWT.
+- ``upsert_parquet``: the same, against a parquet directory, written
+  through ``sources.sinks.write_staged`` (stage, then swap into place).
+  On a Delta/Iceberg table the swap is replaced by a real MERGE; the
+  dataflow is identical. The silver zone (pipeline/silver.py) is this
+  MERGE over a pollutant-partitioned table: there is one build, and a
+  from-scratch rebuild is a MERGE into an empty dir.
 
 Scale: the anti join shuffles on the PK unless the table layout already
 co-locates it (bucket both sides by key and the join is shuffle-free); the
@@ -23,42 +28,32 @@ the table) keeps the table scan local.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from datalakes_and_data_integration_spark.operators.dedup import (
     dedup_keep_first,
 )
+from datalakes_and_data_integration_spark.operators.merge import keys_match
+from datalakes_and_data_integration_spark.sources.sinks import (  # noqa: F401
+    swap_dir,
+    write_staged,
+)
 
 
-def swap_dir(staged: str, table_dir: str) -> None:
-    """Replace ``table_dir`` with ``staged`` via a tombstone rename.
-
-    ``rmtree(table) ; move(staged, table)`` has a window where a crash
-    loses the table entirely. Instead: rename the live dir aside (atomic
-    on one filesystem), move the staged dir into place, then delete the
-    tombstone — a crash at any step leaves either the old or the new data
-    recoverable on disk. True multi-reader atomicity needs a table format
-    (Delta/Iceberg log); this is the strongest contract a bare directory
-    supports.
-    """
-    tomb = table_dir.rstrip("/") + ".tombstone"
-    if os.path.isdir(tomb):  # leftover from a previous crash
-        shutil.rmtree(tomb)
-    had_old = os.path.isdir(table_dir)
-    if had_old:
-        os.rename(table_dir, tomb)
-    try:
-        shutil.move(staged, table_dir)
-    except BaseException:
-        if had_old and not os.path.isdir(table_dir):
-            os.rename(tomb, table_dir)  # roll back
-        raise
-    if had_old:
-        shutil.rmtree(tomb)
+def read_table(
+    spark: SparkSession, table_dir: str, schema: StructType
+) -> DataFrame | None:
+    """The live table read with the incoming batch's ``schema``, or None
+    when ``table_dir`` does not exist yet. The schema'd read turns a table
+    that holds only ``_SUCCESS`` (an empty day's write) into an empty
+    frame instead of a schema-inference error."""
+    if not os.path.isdir(table_dir):
+        return None
+    return spark.read.schema(schema).parquet(table_dir)
 
 
 def merge_new_only(
@@ -68,18 +63,22 @@ def merge_new_only(
     order_by: Sequence | None = None,
 ) -> DataFrame:
     """Rows of ``updates`` whose key is absent from ``existing`` (appended to
-    existing), with first-writer-wins inside the batch.
+    existing), with first-writer-wins inside the batch. Keys compare
+    NULL-safe, like the in-batch dedup's window partition and
+    ``full_outer_merge``, so the result's key is unique on every path.
 
     ``order_by`` makes the within-batch winner deterministic (the reference's
     winner was S3 listing order — unspecified; SURVEY.md §7.4).
     """
     if order_by is None:
         order_by = [c for c in updates.columns]  # total order over all cols
-    fresh = dedup_keep_first(updates, keys=list(keys), order_by=order_by)
+    keys = list(keys)
+    fresh = dedup_keep_first(updates, keys=keys, order_by=order_by)
     if existing is None:
         return fresh
-    fresh = fresh.join(
-        existing.select(*keys), on=list(keys), how="left_anti"
+    old_keys = existing.select(*keys).alias("o")
+    fresh = fresh.alias("n").join(
+        old_keys, keys_match("n", "o", keys), "left_anti"
     )
     return existing.unionByName(fresh)
 
@@ -92,17 +91,10 @@ def upsert_parquet(
     order_by: Sequence | None = None,
 ) -> DataFrame:
     """MERGE-new-only into a parquet directory, atomically (stage + swap)."""
-    existing = (
-        spark.read.parquet(table_dir) if os.path.isdir(table_dir) else None
+    existing = read_table(spark, table_dir, updates.schema)
+    write_staged(
+        merge_new_only(existing, updates, keys, order_by=order_by), table_dir
     )
-    merged = merge_new_only(existing, updates, keys, order_by=order_by)
-    staging = tempfile.mkdtemp(
-        prefix=".upsert_", dir=os.path.dirname(table_dir) or "."
-    )
-    out = os.path.join(staging, "data")
-    merged.write.mode("overwrite").parquet(out)
-    swap_dir(out, table_dir)
-    shutil.rmtree(staging, ignore_errors=True)
     return spark.read.parquet(table_dir)
 
 
@@ -123,8 +115,6 @@ def merge_additive(
     table is bucketed by key so the shuffle only moves the (small) update
     batch.
     """
-    from pyspark.sql import functions as F
-
     keys = list(keys)
     sums = list(sums)
     both = updates if existing is None else existing.unionByName(updates)
@@ -142,17 +132,8 @@ def upsert_parquet_additive(
 ) -> DataFrame:
     """merge_additive against a parquet directory (stage + swap, like
     upsert_parquet)."""
-    existing = (
-        spark.read.parquet(table_dir) if os.path.isdir(table_dir) else None
-    )
-    merged = merge_additive(existing, updates, keys, sums)
-    staging = tempfile.mkdtemp(
-        prefix=".upsert_", dir=os.path.dirname(table_dir) or "."
-    )
-    out = os.path.join(staging, "data")
-    merged.write.mode("overwrite").parquet(out)
-    swap_dir(out, table_dir)
-    shutil.rmtree(staging, ignore_errors=True)
+    existing = read_table(spark, table_dir, updates.schema)
+    write_staged(merge_additive(existing, updates, keys, sums), table_dir)
     return spark.read.parquet(table_dir)
 
 
@@ -176,8 +157,6 @@ def scd2_merge(
     semantics without a table format). One shuffle on the key; history
     tables should be bucketed by key so only the update batch moves.
     """
-    from pyspark.sql import functions as F
-
     attrs = list(attrs)
     upd = updates.select(
         F.col(key),

@@ -122,45 +122,16 @@ def build_gold(
     # alone re-computes all 12 conversion CASE chains) — measured 2x gold
     # wall-clock (5.5 -> 10.3 s cold, 3.9 -> 7.5 s warm on the reference
     # corpus). Chained projections are the cheap form here.
-    # The merge leaves one row per (site, date) EXCEPT in the null-date
-    # group: NULL keys never match in a full outer join, so several
-    # (site, NULL) rows can coexist — and with two independent window
-    # orders (forward ffill, reversed bfill_rev) tie resolution inside
-    # that group could diverge between the fills. A stable row id
-    # appended to BOTH specs (flipped with the order) makes them the
-    # same total order walked in both directions; for the unique
-    # non-null rows it is inert. The id is ORDERING-DERIVED from row
-    # content (two independently-seeded hashes over every merged
-    # column), not monotonically_increasing_id(): the latter is
-    # partition-layout-dependent, deterministic under the pinned
-    # full-refresh pipeline but not under a repartitioned or
-    # incremental input (VERDICT r7 watch 3c; pinned by
-    # tests/test_pipeline.py's repartitioned-input twin). Rows
-    # identical in BOTH hashes are identical in content with
-    # overwhelming probability, and content-identical rows fill to the
-    # same values in either direction, so residual ties are inert.
-    _all_cols = [F.col(c) for c in wide.columns]
-    wide = wide.withColumn(
-        "__fill_ord", F.xxhash64(*_all_cols)
-    ).withColumn("__fill_ord2", F.xxhash64(F.lit(0x5EED), *_all_cols))
-    w = ordered_window(
-        ["code_site"],
-        [
-            F.col("date_de_debut").asc_nulls_last(),
-            F.col("__fill_ord").asc(),
-            F.col("__fill_ord2").asc(),
-        ],
-    )
+    # Silver's key is unique (a NULL-safe MERGE) and the outer merge is
+    # NULL-safe, so (code_site, date_de_debut) is unique here: the window
+    # order below is total, and the forward and reversed specs walk the
+    # same rows in opposite directions.
+    w = ordered_window(["code_site"], [F.col("date_de_debut").asc_nulls_last()])
     # bfill_rev takes the exact reverse spec (desc_nulls_first) so it runs as
     # a running accumulator, not Spark's per-row-rescan unbounded-
     # following frame.
     w_rev = ordered_window(
-        ["code_site"],
-        [
-            F.col("date_de_debut").desc_nulls_first(),
-            F.col("__fill_ord").desc(),
-            F.col("__fill_ord2").desc(),
-        ],
+        ["code_site"], [F.col("date_de_debut").desc_nulls_first()]
     )
     unit_cols = [c for c in wide.columns if c.endswith("_unite_de_mesure")]
     filled_units = {
@@ -201,10 +172,9 @@ def build_gold(
 
     # Clustering sort matches the window stage's order INCLUDING the null
     # direction (asc_nulls_last) so RemoveRedundantSorts elides the
-    # SortExec — the rows leave the lag window in (code_site, date,
-    # __fill_ord) order, of which this sort is a satisfied prefix.
+    # SortExec — the rows leave the lag window in (code_site, date) order.
     write_partitioned(
-        wide.drop("__fill_ord", "__fill_ord2"),
+        wide,
         gold_dir,
         sort_within=[
             F.col("code_site").asc(),  # window partition key: nulls_first
@@ -218,7 +188,9 @@ def run_pipeline(
     spark: SparkSession, landing_dir: str, work_dir: str
 ) -> DataFrame:
     """Full bronze -> silver -> gold run (the reference DAG's three tasks,
-    dags/datalake_pipeline.py:54: unpack >> preprocess >> process)."""
+    dags/datalake_pipeline.py:54: unpack >> preprocess >> process). On a
+    work dir that already holds silver, silver MERGEs the new keys in;
+    gold is always rebuilt in full."""
     from datalakes_and_data_integration_spark.pipeline.bronze import build_bronze
     from datalakes_and_data_integration_spark.pipeline.silver import build_silver
 

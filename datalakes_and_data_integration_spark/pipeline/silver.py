@@ -11,11 +11,17 @@ Reference behaviors reproduced (SURVEY.md §2.2/§2.4):
 - A2 PK dedup on (code_site, date_de_debut) — the reference's LWT
   first-writer-wins (:140) made deterministic with an explicit
   (ingest_date, source_order) tiebreak (SURVEY.md §7.4).
+- S15 staging contract: every run MERGEs-new-only into the silver table
+  (``INSERT ... IF NOT EXISTS``, SURVEY.md §2.8). A key already in silver
+  — including an undated one — keeps its first-written row; a re-fetched
+  day with changed values changes nothing.
 
-One shuffle per dedup; both dedup stages key on the same columns, so Spark
-reuses the exchange. Output partitioned by pollutant (the per-pollutant
-Cassandra tables) and sorted within partitions by (code_site,
-date_de_debut) — the clustering order (:107-108).
+There is one build. A from-scratch rebuild is the same MERGE into an
+empty (or absent) silver dir. One shuffle per dedup; both dedup stages key
+on the same columns, so Spark reuses the exchange. Output partitioned by
+pollutant (the per-pollutant Cassandra tables) and sorted within
+partitions by (code_site, date_de_debut) — the clustering order
+(:107-108) — written to a staging dir and swapped into place.
 """
 
 from __future__ import annotations
@@ -25,10 +31,13 @@ from pyspark.sql import functions as F
 
 from datalakes_and_data_integration_spark.operators import (
     dedup_full_row,
-    dedup_keep_first,
     normalize_columns,
 )
-from datalakes_and_data_integration_spark.sources.sinks import write_partitioned
+from datalakes_and_data_integration_spark.operators.upsert import (
+    merge_new_only,
+    read_table,
+)
+from datalakes_and_data_integration_spark.sources.sinks import write_staged
 
 TIMESTAMP_COLS = ["date_de_debut", "date_de_fin"]
 FLOAT_COLS = ["valeur", "valeur_brute", "taux_de_saisie"]
@@ -67,7 +76,7 @@ def drop_empty_rows(df: DataFrame, data_cols: list[str]) -> DataFrame:
 
 def _clean_bronze(bronze: DataFrame) -> tuple[DataFrame, list]:
     """Normalize -> drop empty rows -> typed cast -> full-row dedup, plus
-    the first-writer-wins tiebreak for the PK dedup.
+    the first-writer-wins tiebreak for the in-batch PK dedup.
 
     The reference keeps whichever row S3 happened to list first
     (unspecified order, SURVEY.md §7.4); the tiebreak keeps the
@@ -87,6 +96,7 @@ def _clean_bronze(bronze: DataFrame) -> tuple[DataFrame, list]:
 def build_silver(
     spark: SparkSession, bronze_dir: str, silver_dir: str
 ) -> DataFrame:
+    """Clean the bronze zone and MERGE its new keys into silver."""
     from datalakes_and_data_integration_spark.sources.csv_landing import (
         RAW_SCHEMA,
     )
@@ -101,45 +111,13 @@ def build_silver(
     )
     bronze = spark.read.schema(bronze_schema).parquet(bronze_dir)
     df, tiebreak = _clean_bronze(bronze)
-    df = dedup_keep_first(df, keys=["pollutant_code", *PK], order_by=tiebreak)
-    write_partitioned(
-        df,
-        silver_dir,
-        partition_by=["pollutant_code"],
-        sort_within=PK,
-    )
-    return spark.read.schema(df.schema).parquet(silver_dir)
-
-
-def build_silver_incremental(
-    spark: SparkSession,
-    bronze_dir: str,
-    silver_dir: str,
-    ingest_dates: list[str] | None = None,
-) -> DataFrame:
-    """Incremental silver: process only the given bronze ``ingest_date``
-    partitions and MERGE them into the existing silver table.
-
-    This is the reference's actual operating mode (SURVEY.md §2.8): every
-    day re-fetch the last 3 days, re-process the overlap, and let
-    first-writer-wins drop rows whose PK already landed — an *updated*
-    value for an existing (code_site, date_de_debut) is dropped, not
-    upserted, exactly like the Cassandra LWT. Here the overlap never
-    leaves the bronze scan (partition pruning on ingest_date) and the
-    MERGE is operators.upsert.merge_new_only.
-    """
-    from datalakes_and_data_integration_spark.operators.upsert import (
-        upsert_parquet,
-    )
-
-    bronze = spark.read.parquet(bronze_dir)
-    if ingest_dates:
-        bronze = bronze.filter(F.col("ingest_date").isin(ingest_dates))
-    df, tiebreak = _clean_bronze(bronze)
-    return upsert_parquet(
-        spark,
-        silver_dir,
+    merged = merge_new_only(
+        read_table(spark, silver_dir, df.schema),
         df,
         keys=["pollutant_code", *PK],
         order_by=tiebreak,
     )
+    write_staged(
+        merged, silver_dir, partition_by=["pollutant_code"], sort_within=PK
+    )
+    return spark.read.schema(df.schema).parquet(silver_dir)

@@ -107,8 +107,8 @@ def _bands_cte_sql() -> str:
 def minhash_sigs(shingled):
     """(doc_id, sh) -> (doc_id, s0..s{K-1}): the Kirsch-Mitzenmacher
     double-hashed MinHash signatures — ONE definition shared by the LSH
-    tier, the incremental-dedup stream module (which re-states it over
-    text batches), and the estimator audit in plans/curation7.py."""
+    tier, the calibration query, the incremental-dedup stream module, and
+    the estimator audit in plans/curation7.py."""
     exploded = shingled.select("doc_id", F.explode("sh").alias("x")).select(
         "doc_id",
         F.expr(hash60_sql_spark("x", seed=0)).alias("h1"),
@@ -756,26 +756,8 @@ def minhash_jaccard_calibration(spark, sf_dir):
     shingled = tok_df.select("doc_id", F.expr(shing).alias("sh")).filter(
         F.size("sh") > 0
     ).persist()
-    exploded = shingled.select("doc_id", F.explode("sh").alias("x")).select(
-        "doc_id",
-        F.expr(hash60_sql_spark("x", seed=0)).alias("h1"),
-        F.expr(hash60_sql_spark("x", seed=1)).alias("h2"),
-    )
-    sigs = exploded.groupBy("doc_id").agg(
-        *[
-            F.min(
-                (F.col("h1") + F.lit(k) * F.col("h2")).bitwiseAND(F.lit(_MASK))
-            ).alias(f"s{k}")
-            for k in range(_K)
-        ]
-    ).persist()
-    band_array = F.array(
-        *[
-            F.concat_ws(",", f"s{2 * b}", f"s{2 * b + 1}")
-            for b in range(_BANDS)
-        ]
-    )
-    bands = sigs.select("doc_id", F.posexplode(band_array).alias("band", "bv"))
+    sigs = minhash_sigs(shingled).persist()
+    bands = minhash_band_rows(sigs)
     a = bands.alias("a")
     b = bands.alias("b")
     cand = (

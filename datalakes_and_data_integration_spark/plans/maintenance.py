@@ -15,7 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from datalakes_and_data_integration_spark.plans._util import T, dec
+from datalakes_and_data_integration_spark.plans._util import T, dec, state_tmp
 from datalakes_and_data_integration_spark.plans.registry import register
 
 # Daily-rollup maintenance scenario over the 2024-01-01..30 events table:
@@ -58,7 +58,6 @@ _HIGH_WATER = "2024-01-28"  # rollup covers ts < this after maintenance
 )
 def continuous_aggregate_daily(spark, sf_dir):
     import os
-    import tempfile
 
     from datalakes_and_data_integration_spark.operators.rollup import (
         finalize_rollup,
@@ -71,7 +70,7 @@ def continuous_aggregate_daily(spark, sf_dir):
     bucket = F.col("ts").cast("date")
     keys = ["event_type"]
 
-    root = tempfile.mkdtemp(prefix="contagg_")
+    root = state_tmp("contagg")
     gen = os.path.join(root, "gen0")
     write_rollup(
         partial_rollup(e.filter(F.col("ts") < _HISTORY_END), bucket, keys),

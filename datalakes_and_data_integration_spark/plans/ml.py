@@ -1363,16 +1363,6 @@ def _kfold_oracle() -> str:
     )
 
 
-def _spark_fold_chain(w: list[list[float]], b: list[float], f: int) -> str:
-    return _assoc_chain(
-        f"{b[f]!r}D",
-        [
-            f"{w[f][j]!r}D * CAST(embedding[{j}] AS DOUBLE)"
-            for j in range(_DIM)
-        ],
-    )
-
-
 _NCHUNKS = _DIM // _CHUNK
 # _hof_z folds exactly _NCHUNKS full chunks; a partial final chunk would
 # be silently DROPPED from z (ADVICE r9) — unlike _assoc_chain, which

@@ -22,7 +22,7 @@ from datalakes_and_data_integration_spark.operators.quality import (
     ExpectationSuite,
     union_reports,
 )
-from datalakes_and_data_integration_spark.plans._util import T
+from datalakes_and_data_integration_spark.plans._util import T, state_tmp
 from datalakes_and_data_integration_spark.plans.registry import register
 
 _EVENT_TYPES = ("click", "error", "purchase", "signup", "view")
@@ -271,8 +271,6 @@ def quarantine_audit(spark, sf_dir):
     tags=("quality", "streaming", "incremental", "audit"),
 )
 def streaming_quality_report(spark, sf_dir):
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from datalakes_and_data_integration_spark.streaming import (
@@ -280,7 +278,7 @@ def streaming_quality_report(spark, sf_dir):
     )
 
     e = T(spark, sf_dir, "events")
-    src = tempfile.mkdtemp(prefix="quality_stream_src_")
+    src = state_tmp("quality_stream_src")
     e.repartition(8).write.mode("overwrite").parquet(src)
     stream = (
         spark.readStream.schema(e.schema)

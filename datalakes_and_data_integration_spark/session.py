@@ -21,7 +21,6 @@ def get_spark(
     app_name: str = "datalakes_and_data_integration_spark",
     cores: int | None = None,
     shuffle_partitions: int | None = None,
-    extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or get) the session.
 
@@ -98,8 +97,6 @@ def get_spark(
         # files.maxPartitionBytes default 128m is right for the 100 TB design
         # point; do not shrink it for tiny local files (AQE coalesces instead).
     }
-    if extra_conf:
-        conf.update(extra_conf)
     for k, v in conf.items():
         builder = builder.config(k, v)
 

@@ -9,6 +9,9 @@ sink; the container has no database server).
 
 from __future__ import annotations
 
+import os
+import shutil
+import tempfile
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
@@ -19,7 +22,6 @@ def write_partitioned(
     path: str,
     partition_by: Sequence[str] = (),
     sort_within: Sequence = (),
-    mode: str = "overwrite",
 ) -> None:
     """Partitioned parquet write; optional within-partition sort to mirror
     Cassandra's clustering order (reference preprocess_to_staging.py:107-108
@@ -35,10 +37,59 @@ def write_partitioned(
     nulls_last forces a redundant O(n log n) pass)."""
     if sort_within:
         df = df.sortWithinPartitions(*sort_within)
-    writer = df.write.mode(mode)
+    writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
+
+
+def swap_dir(staged: str, table_dir: str) -> None:
+    """Replace ``table_dir`` with ``staged`` via a tombstone rename.
+
+    ``rmtree(table) ; move(staged, table)`` has a window where a crash
+    loses the table entirely. Instead: rename the live dir aside (atomic
+    on one filesystem), move the staged dir into place, then delete the
+    tombstone — a crash at any step leaves either the old or the new data
+    recoverable on disk. True multi-reader atomicity needs a table format
+    (Delta/Iceberg log); this is the strongest contract a bare directory
+    supports.
+    """
+    tomb = table_dir.rstrip("/") + ".tombstone"
+    if os.path.isdir(tomb):  # leftover from a previous crash
+        shutil.rmtree(tomb)
+    had_old = os.path.isdir(table_dir)
+    if had_old:
+        os.rename(table_dir, tomb)
+    try:
+        shutil.move(staged, table_dir)
+    except BaseException:
+        if had_old and not os.path.isdir(table_dir):
+            os.rename(tomb, table_dir)  # roll back
+        raise
+    if had_old:
+        shutil.rmtree(tomb)
+
+
+def write_staged(
+    df: DataFrame,
+    table_dir: str,
+    partition_by: Sequence[str] = (),
+    sort_within: Sequence = (),
+) -> None:
+    """``write_partitioned`` into a staging dir beside ``table_dir``, then
+    ``swap_dir`` it into place — the one write path for a table that the
+    write itself reads (a MERGE over the live table, a compaction). Spark
+    cannot overwrite a parquet dir it is still scanning, and the swap
+    keeps the old or the new table on disk whatever step a crash hits."""
+    parent = os.path.dirname(table_dir.rstrip("/")) or "."
+    os.makedirs(parent, exist_ok=True)
+    staging = tempfile.mkdtemp(prefix=".staged_", dir=parent)
+    try:
+        out = os.path.join(staging, "data")
+        write_partitioned(df, out, partition_by, sort_within)
+        swap_dir(out, table_dir)
+    finally:
+        shutil.rmtree(staging, ignore_errors=True)
 
 
 def write_jdbc_overwrite(
@@ -176,14 +227,9 @@ def compact_parquet(
     Small files are the silent killer of 100 TB scans — every file costs a
     task, a footer read, and an object-store request; streaming and
     incremental writers produce them constantly. Returns the new file
-    count. Crash-safe via the upsert sinks' tombstone swap.
+    count. Crash-safe via ``write_staged``'s tombstone swap.
     """
     import math
-    import os
-    import shutil
-    import tempfile
-
-    from datalakes_and_data_integration_spark.operators.upsert import swap_dir
 
     total = sum(
         os.path.getsize(os.path.join(root, f))
@@ -192,17 +238,8 @@ def compact_parquet(
         if f.endswith(".parquet")
     )
     n_files = max(1, math.ceil(total / target_file_bytes))
-    df = spark.read.parquet(table_dir)
-    out = df.repartition(n_files)
-    if sort_within:
-        out = out.sortWithinPartitions(*sort_within)
-    staging = tempfile.mkdtemp(
-        prefix=".compact_", dir=os.path.dirname(table_dir) or "."
-    )
-    tmp = os.path.join(staging, "data")
-    out.write.mode("overwrite").parquet(tmp)
-    swap_dir(tmp, table_dir)
-    shutil.rmtree(staging, ignore_errors=True)
+    out = spark.read.parquet(table_dir).repartition(n_files)
+    write_staged(out, table_dir, sort_within=sort_within)
     return len(
         [f for f in os.listdir(table_dir) if f.endswith(".parquet")]
     )
@@ -262,8 +299,6 @@ def compact_selected(spark, table_dir: str, batch: list[str]) -> str:
     commit (Delta/Iceberg); this is the raw-parquet-directory best case,
     same trade as the reference's raw zone.
     """
-    import os
-    import shutil
     import uuid
 
     staging = os.path.join(table_dir, f".compact-{uuid.uuid4().hex}")

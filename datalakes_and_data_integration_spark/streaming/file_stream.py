@@ -13,12 +13,11 @@ backfill); watermark 2h bounds state growth for continuous runs.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from datalakes_and_data_integration_spark.plans._util import T, dec
+from datalakes_and_data_integration_spark.plans._util import T, dec, state_tmp
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -69,8 +68,10 @@ def run_available_now(
     output_mode: str = "complete",
 ) -> DataFrame:
     """Run the streaming query to completion (AvailableNow) into a memory
-    sink and return the result as a batch DataFrame."""
-    checkpoint = tempfile.mkdtemp(prefix="ckpt_")
+    sink and return the result as a batch DataFrame. The checkpoint is
+    keyed by the sink ``name`` and wiped on entry (``state_tmp``), so
+    every run starts from empty state and reruns reuse one dir."""
+    checkpoint = state_tmp(f"ckpt_{name}")
     q = (
         agg.writeStream.format("memory")
         .queryName(name)

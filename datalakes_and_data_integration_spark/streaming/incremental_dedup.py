@@ -5,9 +5,9 @@ The batch query (plans/dedup.py) compares the corpus against itself; a
 BAND INDEX as the persisted state — (band, bv) keys of every accepted
 document — and each micro-batch:
 
-1. computes MinHash band signatures for the incoming docs (same
-   signature family as the batch query: the _K/_BANDS/_MASK constants
-   are imported, so batch and incremental agree on what "near-dup" is);
+1. computes MinHash band signatures for the incoming docs with the
+   batch query's own ``minhash_sigs``/``minhash_band_rows``, so batch
+   and incremental agree on what "near-dup" is;
 2. drops docs colliding with the index (cross-batch near-dups);
 3. greedily drops in-batch collisions (later doc_id loses — the
    arrival-order analogue of the batch keeper rule);
@@ -26,17 +26,13 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from datalakes_and_data_integration_spark.functions.hashing import (
-    hash60_sql_spark,
-)
 from datalakes_and_data_integration_spark.functions.text import (
     shingles_expr_spark,
 )
 from datalakes_and_data_integration_spark.plans.dedup import (
-    _BANDS,
-    _K,
-    _MASK,
     _TOK_SPARK,
+    minhash_band_rows,
+    minhash_sigs,
 )
 
 
@@ -48,25 +44,7 @@ def minhash_bands(docs: DataFrame) -> DataFrame:
     shingled = tok.select("doc_id", F.expr(shing).alias("sh")).filter(
         F.size("sh") > 0
     )
-    exploded = shingled.select("doc_id", F.explode("sh").alias("x")).select(
-        "doc_id",
-        F.expr(hash60_sql_spark("x", seed=0)).alias("h1"),
-        F.expr(hash60_sql_spark("x", seed=1)).alias("h2"),
-    )
-    sigs = exploded.groupBy("doc_id").agg(
-        *[
-            F.min(
-                (F.col("h1") + F.lit(k) * F.col("h2")).bitwiseAND(F.lit(_MASK))
-            ).alias(f"s{k}")
-            for k in range(_K)
-        ]
-    )
-    band_array = F.array(
-        *[F.concat_ws(",", f"s{2 * b}", f"s{2 * b + 1}") for b in range(_BANDS)]
-    )
-    return sigs.select(
-        "doc_id", F.posexplode(band_array).alias("band", "bv")
-    )
+    return minhash_band_rows(minhash_sigs(shingled))
 
 
 def incremental_minhash_dedup(

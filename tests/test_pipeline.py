@@ -162,39 +162,46 @@ def test_gold_impute_before_convert(zones):
 
 def test_silver_incremental_idempotent(spark, tmp_path):
     """Re-ingesting an overlapping window must not duplicate or update rows
-    (the reference's LWT idempotency, SURVEY.md §2.8)."""
-    from datalakes_and_data_integration_spark.pipeline.silver import (
-        build_silver_incremental,
-    )
-
+    (the reference's LWT idempotency, SURVEY.md §2.8). Each run's landing
+    zone holds only the files still in the re-fetch window, so day 1 must
+    survive in silver from its own MERGE; an undated row is a key like any
+    other, so its re-fetch is dropped too and gold holds one undated row
+    per site."""
     landing = tmp_path / "landing"
     landing.mkdir()
+    dated, undated = "date_de_debut IS NOT NULL", "date_de_debut IS NULL"
+
+    def bad_date(value):
+        return _row("FR001", 20, "SO2", value, "µg-m3").replace(
+            "2025/03/07 20:00:00", "not-a-date", 1
+        )
+
     day1 = [HEADER] + [_row("FR001", h, "SO2", float(h + 1), "µg-m3") for h in range(4)]
     (landing / "polluant-01_2025-03-07.csv").write_text(
-        "\n".join(day1), encoding="utf-8"
+        "\n".join(day1 + [bad_date(55.0)]), encoding="utf-8"
     )
     work = tmp_path / "zones"
     build_bronze(spark, str(landing), f"{work}/bronze")
-    s1 = build_silver_incremental(
-        spark, f"{work}/bronze", f"{work}/silver", ingest_dates=["2025-03-07"]
-    )
-    assert s1.count() == 4
+    s1 = build_silver(spark, f"{work}/bronze", f"{work}/silver")
+    assert s1.filter(dated).count() == 4
+    assert s1.filter(undated).count() == 1
 
     # Day 2 re-fetches day 1 (values CHANGED upstream -> must be dropped,
-    # first-writer-wins) plus new day-2 rows.
+    # first-writer-wins) plus new day-2 rows; day 1's own file has left
+    # the landing window.
+    (landing / "polluant-01_2025-03-07.csv").unlink()
     day1_again = [HEADER] + [
         _row("FR001", h, "SO2", 999.0, "µg-m3") for h in range(4)
     ]
     day2 = [_row("FR001", h, "SO2", float(100 + h), "µg-m3", date="2025/03/08")
             for h in range(3)]
     (landing / "polluant-01_2025-03-08.csv").write_text(
-        "\n".join(day1_again + day2), encoding="utf-8"
+        "\n".join(day1_again + day2 + [bad_date(999.0)]), encoding="utf-8"
     )
     build_bronze(spark, str(landing), f"{work}/bronze")
-    s2 = build_silver_incremental(
-        spark, f"{work}/bronze", f"{work}/silver", ingest_dates=["2025-03-08"]
-    )
-    assert s2.count() == 7  # 4 original + 3 new; the 4 re-fetched dropped
+    s2 = build_silver(spark, f"{work}/bronze", f"{work}/silver")
+    # 4 original + 3 new; the 4 re-fetched dropped
+    assert s2.filter(dated).count() == 7
     vals = {
         (str(r.date_de_debut), r.valeur)
         for r in s2.filter("code_site = 'FR001'").collect()
@@ -202,6 +209,13 @@ def test_silver_incremental_idempotent(spark, tmp_path):
     assert ("2025-03-07 00:00:00", 1.0) in vals  # first write kept
     assert not any(v == 999.0 for _, v in vals)  # clobber attempt dropped
     assert ("2025-03-08 02:00:00", 102.0) in vals  # new day landed
+    assert ("None", 55.0) in vals  # the undated first write kept
+    assert s2.filter(undated).count() == 1
+
+    gold = build_gold(spark, f"{work}/silver", f"{work}/gold")
+    per_site = gold.filter(undated).groupBy("code_site").count().collect()
+    assert [(r.code_site, r["count"]) for r in per_site] == [("FR001", 1)]
+    assert gold.count() == 8
 
 
 def test_orchestration_tasks_run_pipeline(spark, tmp_path):
@@ -237,15 +251,19 @@ def test_empty_landing_zone_is_graceful(spark, tmp_path):
     assert bronze.count() == 0
     silver = build_silver(spark, f"{work}/bronze", f"{work}/silver")
     assert silver.count() == 0
+    # The next empty day MERGEs into a silver that holds only _SUCCESS.
+    silver = build_silver(spark, f"{work}/bronze", f"{work}/silver")
+    assert silver.count() == 0
 
 
 def test_gold_deterministic_under_repartitioned_silver(zones, spark, tmp_path):
-    """The null-date fill tie-break must be ordering-derived, not
-    partition-derived (VERDICT r7 watch 3c): rewriting every silver
-    table with a different partition count and rebuilding gold must
-    produce value-identical output. monotonically_increasing_id() fails
-    this — its ids follow partition layout — which is why the tie-break
-    is a pair of content hashes."""
+    """Gold must not depend on silver's file layout (VERDICT r7 watch 3c):
+    rewriting every silver table with a different partition count and
+    rebuilding gold must produce value-identical output. It holds
+    because the key is unique — silver's MERGE and gold's outer merge
+    both match NULL-safe — so the fill and lag window order
+    (code_site; date_de_debut) is total and no row order is left to the
+    layout."""
     import os
 
     from datalakes_and_data_integration_spark.sources.catalog import (
