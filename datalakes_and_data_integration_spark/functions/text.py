@@ -22,6 +22,10 @@ def tokens(col: str = "text") -> Column:
     return F.filter(F.split(F.lower(F.col(col)), r"\s+"), lambda t: t != "")
 
 
+def tokens_sql_spark(col: str = "text") -> str:
+    return f"filter(split(lower({col}), '\\\\s+'), t -> t <> '')"
+
+
 def tokens_sql_duck(col: str = "text") -> str:
     return f"list_filter(regexp_split_to_array(lower({col}), '\\s+'), t -> t <> '')"
 

@@ -27,10 +27,13 @@ average: averages don't merge; (sum, n) pairs do. Same decomposition
 extends to var/stddev (add sum-of-squares) — see
 ``plans/relational.py``'s winsorized stats for the s1/s2 form.
 
-Scale: the rollup table is partitioned by the grain bucket, so a daily
-increment touches one partition; the merge shuffles partials hashed on
-(bucket, key) with map-side combine. Nothing here reads more raw data
-than the increment itself.
+Persistence is ``streaming.sketch_maintenance.merge_state`` under
+``ROLLUP_AGGS``: every increment carries a batch label, one transition
+folds the unapplied ones into the stored partials and commits state and
+applied-batch ledger together. Each transition rewrites the whole
+rollup into a fresh dir, O(|buckets × keys|) rows; the merge shuffles
+partials hashed on (bucket, key) with map-side combine. Nothing here
+reads more raw data than the increment itself.
 """
 
 from __future__ import annotations
@@ -38,8 +41,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-#: partial-aggregate columns, in schema order
-PARTIAL_COLS = ("n", "sum_v", "min_v", "max_v")
+#: partial-aggregate column -> its merge function, in schema order
+ROLLUP_AGGS = {"n": "sum", "sum_v": "sum", "min_v": "min", "max_v": "max"}
+PARTIAL_COLS = tuple(ROLLUP_AGGS)
 
 
 def partial_rollup(
@@ -80,10 +84,7 @@ def merge_rollups(*rollups: DataFrame) -> DataFrame:
         out = out.unionByName(r)
     keys = [c for c in out.columns if c not in PARTIAL_COLS]
     return out.groupBy(*keys).agg(
-        F.sum("n").alias("n"),
-        F.sum("sum_v").alias("sum_v"),
-        F.min("min_v").alias("min_v"),
-        F.max("max_v").alias("max_v"),
+        *[F.expr(f"{fn}({c})").alias(c) for c, fn in ROLLUP_AGGS.items()]
     )
 
 
@@ -108,20 +109,3 @@ def finalize_rollup(rollup: DataFrame) -> DataFrame:
         F.col("max_v").alias("max_value"),
     )
 
-
-def write_rollup(rollup: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Persist partials partitioned by bucket — a daily merge rewrites only
-    the buckets it touched when paired with dynamic partition overwrite.
-
-    The pre-write ``repartition("bucket")`` aligns shuffle partitions with
-    directory partitions: one file per bucket instead of (shuffle
-    partitions × buckets) small files — the classic partitioned-write
-    small-file explosion.
-    """
-    (
-        rollup.repartition("bucket")
-        .write.mode(mode)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket")
-        .parquet(path)
-    )

@@ -19,6 +19,13 @@ Spark-native equivalents:
   MERGE over a pollutant-partitioned table: there is one build, and a
   from-scratch rebuild is a MERGE into an empty dir.
 
+Tables kept under other merge rules commit through ``merge_state`` or
+the same staged write. An additive MERGE (measures that sum, min or max on key collision) is
+``streaming.sketch_maintenance.merge_state``, whose ledger also makes a
+redelivered batch a no-op. The SCD2 dimension is
+``streaming.incremental_scd2.scd2_apply_batch``, a keyed rewrite through
+``read_table`` and ``write_staged``.
+
 Scale: the anti join shuffles on the PK unless the table layout already
 co-locates it (bucket both sides by key and the join is shuffle-free); the
 incoming batch is typically << the table, so broadcast of the BATCH (not
@@ -31,7 +38,6 @@ import os
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from datalakes_and_data_integration_spark.operators.dedup import (
@@ -97,130 +103,3 @@ def upsert_parquet(
     )
     return spark.read.parquet(table_dir)
 
-
-def merge_additive(
-    existing: DataFrame | None,
-    updates: DataFrame,
-    keys: Sequence[str],
-    sums: Sequence[str],
-) -> DataFrame:
-    """Additive MERGE for partial aggregates: on key collision the measure
-    columns ADD instead of first-writer-wins — the maintenance rule for an
-    incrementally materialized aggregate (counts/sums are mergeable;
-    avg = sum/count at read time; min/max via a GREATEST/LEAST variant).
-
-    ``MERGE INTO t USING u ON pk WHEN MATCHED THEN UPDATE SET x = t.x + u.x
-    WHEN NOT MATCHED THEN INSERT`` without a table format's transaction log:
-    union the frames and re-aggregate on the key. One shuffle; at scale the
-    table is bucketed by key so the shuffle only moves the (small) update
-    batch.
-    """
-    keys = list(keys)
-    sums = list(sums)
-    both = updates if existing is None else existing.unionByName(updates)
-    return both.groupBy(*keys).agg(
-        *[F.sum(c).alias(c) for c in sums]
-    )
-
-
-def upsert_parquet_additive(
-    spark: SparkSession,
-    table_dir: str,
-    updates: DataFrame,
-    keys: Sequence[str],
-    sums: Sequence[str],
-) -> DataFrame:
-    """merge_additive against a parquet directory (stage + swap, like
-    upsert_parquet)."""
-    existing = read_table(spark, table_dir, updates.schema)
-    write_staged(merge_additive(existing, updates, keys, sums), table_dir)
-    return spark.read.parquet(table_dir)
-
-
-def scd2_merge(
-    existing: DataFrame | None,
-    updates: DataFrame,
-    key: str,
-    attrs: Sequence[str],
-    effective_ts: str,
-    end_of_time: str = "9999-12-31 00:00:00",
-) -> DataFrame:
-    """Slowly-changing-dimension type 2: keep full attribute history.
-
-    ``existing`` carries ``(key, attrs..., valid_from, valid_to,
-    is_current)``; ``updates`` carries ``(key, attrs..., effective_ts)``.
-    A changed attribute set closes the current version (valid_to =
-    effective_ts, is_current = false) and opens a new one; an unchanged
-    row is a no-op; a new key opens its first version.
-
-    Expressed as two joins + a union (MERGE WHEN MATCHED AND <changed>
-    semantics without a table format). One shuffle on the key; history
-    tables should be bucketed by key so only the update batch moves.
-    """
-    attrs = list(attrs)
-    upd = updates.select(
-        F.col(key),
-        *[F.col(a) for a in attrs],
-        F.col(effective_ts).alias("__eff"),
-    )
-    # One update row per key per batch, or the full join below fans out
-    # (multiple closed copies of the current version, multiple simultaneous
-    # is_current rows). Keep the LATEST effective_ts per key; ties break on
-    # the attribute values for determinism.
-    upd = dedup_keep_first(
-        upd,
-        keys=[key],
-        order_by=[F.col("__eff").desc(), *[F.col(a) for a in attrs]],
-    )
-    if existing is None:
-        return upd.select(
-            key,
-            *attrs,
-            F.col("__eff").alias("valid_from"),
-            F.lit(end_of_time).cast("timestamp").alias("valid_to"),
-            F.lit(True).alias("is_current"),
-        )
-
-    cur = existing.filter(F.col("is_current"))
-    hist = existing.filter(~F.col("is_current"))
-    changed_cond = " OR ".join(
-        f"NOT (cur.{a} <=> upd.{a})" for a in attrs
-    )
-    joined = cur.alias("cur").join(
-        upd.alias("upd"), F.col(f"cur.{key}") == F.col(f"upd.{key}"), "full"
-    )
-    # 1. untouched current rows (no update, or update identical)
-    untouched = joined.filter(
-        F.col(f"upd.{key}").isNull()
-        | (F.col(f"cur.{key}").isNotNull() & ~F.expr(changed_cond))
-    ).select("cur.*")
-    # 2. closed versions: current rows whose update differs
-    closed = (
-        joined.filter(
-            F.col(f"cur.{key}").isNotNull()
-            & F.col(f"upd.{key}").isNotNull()
-            & F.expr(changed_cond)
-        )
-        .select(
-            F.col(f"cur.{key}").alias(key),
-            *[F.col(f"cur.{a}").alias(a) for a in attrs],
-            F.col("cur.valid_from").alias("valid_from"),
-            F.col("upd.__eff").alias("valid_to"),
-            F.lit(False).alias("is_current"),
-        )
-    )
-    # 3. opened versions: changed updates + brand-new keys
-    opened = (
-        joined.filter(
-            F.col(f"upd.{key}").isNotNull()
-            & (F.col(f"cur.{key}").isNull() | F.expr(changed_cond))
-        )
-        .select(
-            F.col(f"upd.{key}").alias(key),
-            *[F.col(f"upd.{a}").alias(a) for a in attrs],
-            F.col("upd.__eff").alias("valid_from"),
-            F.lit(end_of_time).cast("timestamp").alias("valid_to"),
-            F.lit(True).alias("is_current"),
-        )
-    )
-    return hist.unionByName(untouched).unionByName(closed).unionByName(opened)

@@ -38,11 +38,12 @@ from datalakes_and_data_integration_spark.functions.text import (
     shingles_expr_spark,
     shingles_sql_duck,
     tokens_sql_duck,
+    tokens_sql_spark,
 )
 from datalakes_and_data_integration_spark.plans._util import T, spread
 from datalakes_and_data_integration_spark.plans.registry import QUERIES, register
 
-_TOK_SPARK = "filter(split(lower(text), '\\\\s+'), t -> t <> '')"
+_TOK_SPARK = tokens_sql_spark("text")
 _TOK_DUCK = tokens_sql_duck("text")
 
 # ---------------------------------------------------------------------------

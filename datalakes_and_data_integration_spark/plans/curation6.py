@@ -525,6 +525,9 @@ def _split_docs_spark(spark, sf_dir):
     from datalakes_and_data_integration_spark.functions.hashing import (
         hash60_sql_spark,
     )
+    from datalakes_and_data_integration_spark.functions.text import (
+        tokens_sql_spark,
+    )
     from datalakes_and_data_integration_spark.plans._util import T, spread
 
     d = spread(T(spark, sf_dir, "documents"), spark)
@@ -532,9 +535,7 @@ def _split_docs_spark(spark, sf_dir):
     return d.select(
         "doc_id",
         F.when(bucket < 80, "train").otherwise("eval").alias("split"),
-        F.expr("filter(split(lower(text), '\\\\s+'), t -> t <> '')").alias(
-            "toks"
-        ),
+        F.expr(tokens_sql_spark()).alias("toks"),
     )
 
 

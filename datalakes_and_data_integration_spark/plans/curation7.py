@@ -60,11 +60,12 @@ from datalakes_and_data_integration_spark.functions.text import (
     shingles_expr_spark,
     shingles_sql_duck,
     tokens_sql_duck,
+    tokens_sql_spark,
 )
 from datalakes_and_data_integration_spark.plans._util import T, spread
 from datalakes_and_data_integration_spark.plans.registry import register
 
-_TOK_SPARK = "filter(split(lower(text), '\\\\s+'), t -> t <> '')"
+_TOK_SPARK = tokens_sql_spark("text")
 _TOK_DUCK = tokens_sql_duck("text")
 
 # ---------------------------------------------------------------------------
@@ -781,14 +782,13 @@ def _estimate_audit_oracle() -> str:
 def minhash_estimate_audit(spark, sf_dir):
     from datalakes_and_data_integration_spark.plans.dedup import (
         _K,
-        _TOK_SPARK as _DTOK,
         minhash_band_rows,
         minhash_sigs,
     )
 
     d = T(spark, sf_dir, "documents")
     tok_df = spread(
-        d.select("doc_id", F.expr(_DTOK).alias("toks")), spark
+        d.select("doc_id", F.expr(_TOK_SPARK).alias("toks")), spark
     )
     shingled = (
         tok_df.select(
@@ -962,13 +962,12 @@ def _band_tradeoff_oracle() -> str:
 )
 def lsh_band_tradeoff_report(spark, sf_dir):
     from datalakes_and_data_integration_spark.plans.dedup import (
-        _TOK_SPARK as _DTOK,
         minhash_sigs,
     )
 
     d = T(spark, sf_dir, "documents")
     tok_df = spread(
-        d.select("doc_id", F.expr(_DTOK).alias("toks")), spark
+        d.select("doc_id", F.expr(_TOK_SPARK).alias("toks")), spark
     )
     shingled = (
         tok_df.select(

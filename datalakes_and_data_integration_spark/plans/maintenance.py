@@ -19,9 +19,9 @@ from datalakes_and_data_integration_spark.plans._util import T, dec, state_tmp
 from datalakes_and_data_integration_spark.plans.registry import register
 
 # Daily-rollup maintenance scenario over the 2024-01-01..30 events table:
-# history is rolled up once, three daily increments are merged in one at a
-# time (the nightly job), and reads serve closed days from the rollup plus
-# the still-open tail straight from raw — proving rollup ∪ tail == full
+# history is rolled up once, three daily increments are merged in (the
+# nightly job), and reads serve closed days from the rollup plus the
+# still-open tail straight from raw — proving rollup ∪ tail == full
 # recompute (the oracle).
 _HISTORY_END = "2024-01-25"  # history rollup covers ts < this
 _INCREMENT_DAYS = ("2024-01-25", "2024-01-26", "2024-01-27")
@@ -46,57 +46,52 @@ _HIGH_WATER = "2024-01-28"  # rollup covers ts < this after maintenance
     """,
     description="Continuous-aggregate maintenance (operators/rollup.py): "
     "daily (day x event_type) partials — count / exact-decimal sum / min "
-    "/ max, all mergeable — built once over history, then three daily "
-    "increments merged in generation-swapped parquet (the nightly job), "
+    "/ max, all mergeable — for the history and three daily increments "
+    "(the nightly job), each a batch label of one labelled scan, folded "
+    "into the stored rollup by one ledgered state transition "
+    "(streaming/sketch_maintenance.merge_state under rollup.ROLLUP_AGGS), "
     "then served merge-on-read: closed days from the rollup, the open "
     "tail folded in from raw at the partial level. Equals a full "
     "recompute (the oracle) while the maintenance path only ever reads "
     "each increment once. Scale shape: merges shuffle O(days x types) "
-    "partial rows with map-side combine, never raw history; the rollup "
-    "table is partitioned by day so an increment rewrites one partition.",
+    "partial rows with map-side combine, never raw history; a transition "
+    "rewrites the whole rollup (O(days x types) rows) into a fresh dir "
+    "and commits it with the applied-batch ledger.",
     tags=("maintenance", "rollup", "incremental", "timeseries"),
 )
 def continuous_aggregate_daily(spark, sf_dir):
-    import os
-
     from datalakes_and_data_integration_spark.operators.rollup import (
+        ROLLUP_AGGS,
         finalize_rollup,
         merge_rollups,
         partial_rollup,
-        write_rollup,
+    )
+    from datalakes_and_data_integration_spark.streaming.sketch_maintenance import (
+        BID,
+        merge_state,
     )
 
     e = T(spark, sf_dir, "events")
     bucket = F.col("ts").cast("date")
     keys = ["event_type"]
 
-    root = state_tmp("contagg")
-    gen = os.path.join(root, "gen0")
-    write_rollup(
-        partial_rollup(e.filter(F.col("ts") < _HISTORY_END), bucket, keys),
-        gen,
-    )
-    # Nightly maintenance: merge one day's partials per generation. A new
-    # generation dir per merge because parquet can't be overwritten while
-    # it is the read side (operators/upsert.py uses the same staged-swap
-    # idea with tombstones for in-place tables).
-    days = [*_INCREMENT_DAYS, _HIGH_WATER]
-    for i, (day, nxt) in enumerate(zip(days, days[1:] + [None])):
-        if nxt is None:
-            break
-        inc = e.filter((F.col("ts") >= day) & (F.col("ts") < nxt))
-        merged = merge_rollups(
-            spark.read.parquet(gen).withColumn(
-                "bucket", F.col("bucket").cast("date")
-            ),
-            partial_rollup(inc, bucket, keys),
-        )
-        gen_next = os.path.join(root, f"gen{i + 1}")
-        write_rollup(merged, gen_next)
-        gen = gen_next
-
-    rolled = spark.read.parquet(gen).withColumn(
-        "bucket", F.col("bucket").cast("date")
+    # Label 0 is the history, label i the i-th nightly increment: every
+    # maintained partial comes out of one scan, and one transition folds
+    # them all into the rollup (the merge algebra is order-free).
+    label = F.when(F.col("ts") < _HISTORY_END, 0)
+    for i, nxt in enumerate((*_INCREMENT_DAYS[1:], _HIGH_WATER), start=1):
+        label = label.when(F.col("ts") < nxt, i)
+    rolled = merge_state(
+        spark,
+        state_tmp("contagg"),
+        partial_rollup(
+            e.filter(F.col("ts") < _HIGH_WATER).withColumn(BID, label),
+            bucket,
+            [BID, *keys],
+        ),
+        batch_ids=list(range(len(_INCREMENT_DAYS) + 1)),
+        key_cols=["bucket", *keys],
+        aggs=ROLLUP_AGGS,
     )
     # Merge-on-read: the open tail (not yet maintained) at partial level.
     tail = partial_rollup(

@@ -657,12 +657,13 @@ def _scd2_oracle() -> str:
     "versions ONLY for the user_ids the batch touched, from their full "
     "logged history — so late arrivals retroactively split versions "
     "correctly, which append-side version extension cannot — and (c) "
-    "swaps those users' rows into a new dimension snapshot (the atomic "
-    "MERGE a table format provides at scale; versioned parquet here). "
+    "swaps those users' rows into the one dimension table, staged and "
+    "swapped into place (the atomic MERGE a table format provides at "
+    "scale). "
     "Per-batch cost is O(touched history + batch), never O(log): the "
     "rebuild-vs-increment split scd2_dimension_build documents, made "
     "real. Every batch containing a key recomputes that key from its "
-    "complete history so far, so the final snapshot equals the batch "
+    "complete history so far, so the final dimension equals the batch "
     "rebuild for ANY batching/arrival order — the oracle is literally "
     "scd2_dimension_build's SQL, and the shared plans/temporal."
     "scd2_versions definition makes drift between the two paths "
@@ -681,26 +682,21 @@ def streaming_scd2_upsert(spark, sf_dir):
     src = state_tmp("scd2_stream_src")
     parsed.repartition(6).write.mode("overwrite").parquet(src)
     log_dir = state_tmp("scd2_log")
-    dim_root = state_tmp("scd2_dim")
+    dim_dir = state_tmp("scd2_dim")
     ckpt = state_tmp("scd2_ckpt")
-    state: dict[str, str | None] = {"dim": None}
-
-    def upsert(batch, batch_id):
-        state["dim"] = scd2_apply_batch(
-            spark, log_dir, dim_root, state["dim"], batch, batch_id
-        )
-
     q = (
         spark.readStream.schema(parsed.schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
-        .writeStream.foreachBatch(upsert)
+        .writeStream.foreachBatch(
+            lambda batch, _: scd2_apply_batch(spark, log_dir, dim_dir, batch)
+        )
         .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
-    return spark.read.parquet(state["dim"])
+    return spark.read.parquet(dim_dir)
 
 
 def _ivf_ingest_oracle() -> str:

@@ -24,33 +24,39 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-# The 23 raw columns, in CSV order, with their raw French headers
-# (reference DDL preprocess_to_staging.py:82-110 / FIXTURES.md §1).
-RAW_COLUMNS: list[str] = [
-    "date_de_debut",
-    "date_de_fin",
-    "organisme",
-    "code_zas",
-    "zas",
-    "code_site",
-    "nom_site",
-    "type_d_implantation",
-    "polluant",
-    "type_d_influence",
+from datalakes_and_data_integration_spark.operators.normalize import (
+    normalize_column_name,
+)
+
+# The 23 raw French headers, in CSV order (reference DDL
+# preprocess_to_staging.py:82-110 / FIXTURES.md §1), and the column
+# names they normalize to.
+RAW_HEADERS: list[str] = [
+    "Date de début",
+    "Date de fin",
+    "Organisme",
+    "code zas",
+    "Zas",
+    "code site",
+    "nom site",
+    "type d'implantation",
+    "Polluant",
+    "type d'influence",
     "discriminant",
-    "reglementaire",
-    "type_d_evaluation",
-    "procedure_de_mesure",
-    "type_de_valeur",
+    "Réglementaire",
+    "type d'évaluation",
+    "procédure de mesure",
+    "type de valeur",
     "valeur",
-    "valeur_brute",
-    "unite_de_mesure",
-    "taux_de_saisie",
-    "couverture_temporelle",
-    "couverture_de_donnees",
-    "code_qualite",
-    "validite",
+    "valeur brute",
+    "unité de mesure",
+    "taux de saisie",
+    "couverture temporelle",
+    "couverture de données",
+    "code qualité",
+    "validité",
 ]
+RAW_COLUMNS: list[str] = [normalize_column_name(h) for h in RAW_HEADERS]
 
 RAW_SCHEMA = T.StructType(
     [T.StructField(c, T.StringType(), True) for c in RAW_COLUMNS]
@@ -71,21 +77,27 @@ def read_landing_csv(
     """Read raw measurement CSVs with landing-path metadata columns.
 
     All 23 columns land as strings (typing happens in silver, mirroring the
-    reference's parse-then-convert split). The header row is skipped by name
-    count — the explicit schema makes header drift a visible null-row, the
-    P4 analogue of skip-with-warning.
+    reference's parse-then-convert split). The read schema carries the raw
+    headers, so Spark's header check passes on a conforming file and warns
+    on a drifted one — the P4 analogue of skip-with-warning; the columns
+    are then renamed to ``RAW_COLUMNS``.
     """
     glob = (
         f"polluant-{pollutant_code}_*.csv" if pollutant_code else _FILE_GLOB
     )
     df = (
-        spark.read.schema(RAW_SCHEMA)
+        spark.read.schema(
+            T.StructType(
+                [T.StructField(h, T.StringType(), True) for h in RAW_HEADERS]
+            )
+        )
         .option("sep", ";")
         .option("header", True)  # consumes the (BOM-carrying) header line
         .option("encoding", "UTF-8")
         .option("pathGlobFilter", glob)
         .option("recursiveFileLookup", True)
         .csv(landing_dir)
+        .toDF(*RAW_COLUMNS)
     )
     fname = F.input_file_name()
     return df.withColumn(

@@ -513,9 +513,10 @@ def decontamination_gate_stream(
     )
     from datalakes_and_data_integration_spark.functions.text import (
         shingles_expr_spark,
+        tokens_sql_spark,
     )
 
-    _tok = "filter(split(lower(text), '\\\\s+'), t -> t <> '')"
+    _tok = tokens_sql_spark()
     bucket = (
         F.expr(hash60_sql_spark("CAST(doc_id AS STRING)", seed=7)) % 100
     )

@@ -28,9 +28,9 @@ from pyspark.sql import functions as F
 
 from datalakes_and_data_integration_spark.functions.text import (
     shingles_expr_spark,
+    tokens_sql_spark,
 )
 from datalakes_and_data_integration_spark.plans.dedup import (
-    _TOK_SPARK,
     minhash_band_rows,
     minhash_sigs,
 )
@@ -39,7 +39,7 @@ from datalakes_and_data_integration_spark.plans.dedup import (
 def minhash_bands(docs: DataFrame) -> DataFrame:
     """(doc_id, text) -> (doc_id, band, bv): the LSH band signatures,
     identical family to plans/dedup.dedup_minhash_lsh."""
-    tok = docs.select("doc_id", F.expr(_TOK_SPARK).alias("toks"))
+    tok = docs.select("doc_id", F.expr(tokens_sql_spark()).alias("toks"))
     shing = shingles_expr_spark("toks", 3)
     shingled = tok.select("doc_id", F.expr(shing).alias("sh")).filter(
         F.size("sh") > 0

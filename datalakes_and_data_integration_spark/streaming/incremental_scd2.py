@@ -11,10 +11,10 @@ the delta-scoped recompute every MERGE-based pipeline runs:
    reading those keys' full history back from the log — so late or
    out-of-order arrivals retro-actively split/merge versions correctly,
    which pure append-side version extension cannot do;
-3. swap the touched keys' rows into the dimension snapshot (write a new
-   snapshot referencing the untouched rows plus the recomputed ones —
-   the atomic-swap a table format's MERGE provides at scale; plain
-   versioned parquet directories here).
+3. rewrite the one dimension table as its untouched keys' rows plus the
+   recomputed ones, staged and swapped into place
+   (``sources.sinks.write_staged``, the keyed upsert's write path; a
+   table format's MERGE at scale).
 
 Per-batch cost is O(touched keys' history + batch), not O(log): at
 scale the bronze log is bucketed by the entity key so step 2's read is
@@ -31,10 +31,12 @@ the incremental path cannot drift from the batch definition.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
+from datalakes_and_data_integration_spark.operators.upsert import (
+    read_table,
+    write_staged,
+)
 from datalakes_and_data_integration_spark.plans.temporal import (
     scd2_versions,
 )
@@ -43,33 +45,27 @@ from datalakes_and_data_integration_spark.plans.temporal import (
 def scd2_apply_batch(
     spark: SparkSession,
     log_dir: str,
-    dim_root: str,
-    prev_dim: str | None,
+    dim_dir: str,
     batch: DataFrame,
-    batch_id: int,
-) -> str:
+) -> None:
     """Apply one micro-batch of (user_id, ts, event_id, attr) change rows.
 
     Appends the batch to the bronze log, recomputes versions for the
-    touched user_ids from their full logged history, swaps those users'
-    rows into a NEW dimension snapshot ``dim_root/v{batch_id}``, and
-    returns the new snapshot path. Deterministic given (log content,
-    batch content) — arrival order inside the batch is irrelevant
-    because the recompute sorts by (ts, event_id).
+    touched user_ids from their full logged history, and rewrites the
+    dimension in ``dim_dir`` with those users' rows swapped in.
+    Deterministic given (log content, batch content) — arrival order
+    inside the batch is irrelevant because the recompute sorts by
+    (ts, event_id).
     """
     batch.persist()
     batch.write.mode("append").parquet(log_dir)
     touched = batch.select("user_id").distinct()
     history = spark.read.parquet(log_dir).join(touched, "user_id")
-    recomputed = scd2_versions(history)
-    if prev_dim is not None:
-        kept = spark.read.parquet(prev_dim).join(
-            touched, "user_id", "left_anti"
+    new_dim = scd2_versions(history)
+    kept = read_table(spark, dim_dir, new_dim.schema)
+    if kept is not None:
+        new_dim = kept.join(touched, "user_id", "left_anti").unionByName(
+            new_dim
         )
-        new_dim = kept.unionByName(recomputed)
-    else:
-        new_dim = recomputed
-    out = os.path.join(dim_root, f"v{batch_id}")
-    new_dim.write.mode("overwrite").parquet(out)
+    write_staged(new_dim, dim_dir)
     batch.unpersist()
-    return out

@@ -19,6 +19,7 @@ together. What the ledger means depends on the merge algebra:
 | max | HLL registers | no-op by algebra | a skip-work record |
 | min / max | per-key first/last weeks | no-op by algebra | a skip-work record |
 | bit_or | exact-distinct bitmap words | no-op by algebra | a skip-work record |
+| sum + min / max | daily rollup partials (``operators.rollup.ROLLUP_AGGS``) | double-counts n and sum_v | required for exactly-once |
 
 The staged commit matters for every algebra: a torn write of the only
 copy of the state would corrupt it whatever the algebra, so the new

@@ -126,3 +126,13 @@ def test_hybrid_similarity_on_empty_embeddings_matches_oracle(
     sf = _mk_empty_table(str(tmp_path), "embeddings")
     ok, msg = _oracle_match(spark, name, sf)
     assert ok, msg
+
+
+def test_continuous_aggregate_on_empty_events_matches_oracle(spark, tmp_path):
+    """An empty events table leaves an empty rollup; the stored state must
+    still read back with its schema (a partitioned write of no rows leaves
+    only ``_SUCCESS``, which has none), so the query returns the oracle's
+    0 rows."""
+    sf = _mk_empty_table(str(tmp_path), "events")
+    ok, msg = _oracle_match(spark, "continuous_aggregate_daily", sf)
+    assert ok, msg

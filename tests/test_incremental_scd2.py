@@ -42,16 +42,17 @@ def test_out_of_order_arrival_splits_versions_retroactively(
     )
 
     log_dir = str(tmp_path / "log")
-    dim_root = str(tmp_path / "dim")
+    dim_dir = str(tmp_path / "dim")
     b0 = _mkdf(spark, [(1, 1, 10, 0), (1, 3, 30, 0), (2, 1, 11, 5)])
     b1 = _mkdf(spark, [(1, 2, 20, 1)])  # the late, version-splitting row
-    p0 = scd2_apply_batch(spark, log_dir, dim_root, None, b0, 0)
+    scd2_apply_batch(spark, log_dir, dim_dir, b0)
     after0 = {
-        (r.user_id, r.version): r for r in spark.read.parquet(p0).collect()
+        (r.user_id, r.version): r
+        for r in spark.read.parquet(dim_dir).collect()
     }
     assert len([k for k in after0 if k[0] == 1]) == 1  # one A version
-    p1 = scd2_apply_batch(spark, log_dir, dim_root, p0, b1, 1)
-    got = spark.read.parquet(p1).collect()
+    scd2_apply_batch(spark, log_dir, dim_dir, b1)
+    got = spark.read.parquet(dim_dir).collect()
     u1 = sorted(
         [r for r in got if r.user_id == 1], key=lambda r: r.version
     )

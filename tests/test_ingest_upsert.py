@@ -108,77 +108,6 @@ def test_upsert_parquet_roundtrip(spark, tmp_path):
     assert rows == {("k1", "v1"), ("k2", "v2"), ("k3", "v3")}
 
 
-def test_scd2_merge_versions_history(spark):
-    import datetime as dt
-
-    from datalakes_and_data_integration_spark.operators.upsert import (
-        scd2_merge,
-    )
-
-    t1 = dt.datetime(2024, 1, 1)
-    t2 = dt.datetime(2024, 6, 1)
-
-    # Initial load: two customers.
-    b1 = spark.createDataFrame(
-        [(1, "BUILDING", t1), (2, "MACHINERY", t1)],
-        ["custkey", "segment", "eff"],
-    )
-    dim = scd2_merge(None, b1, "custkey", ["segment"], "eff")
-    assert dim.count() == 2 and dim.filter("is_current").count() == 2
-
-    # Batch 2: customer 1 changes segment, customer 2 unchanged, 3 is new.
-    b2 = spark.createDataFrame(
-        [(1, "AUTOMOBILE", t2), (2, "MACHINERY", t2), (3, "HOUSEHOLD", t2)],
-        ["custkey", "segment", "eff"],
-    )
-    dim2 = scd2_merge(dim, b2, "custkey", ["segment"], "eff")
-    rows = {
-        (r.custkey, r.segment, r.is_current): (r.valid_from, r.valid_to)
-        for r in dim2.collect()
-    }
-    assert len(rows) == 4  # 1-old, 1-new, 2 (untouched), 3 (new key)
-    assert rows[(1, "BUILDING", False)] == (t1, t2)  # closed at change time
-    assert rows[(1, "AUTOMOBILE", True)][0] == t2
-    assert (2, "MACHINERY", True) in rows  # unchanged row untouched
-    assert rows[(2, "MACHINERY", True)][0] == t1  # original valid_from kept
-    assert (3, "HOUSEHOLD", True) in rows
-
-
-def test_scd2_merge_duplicate_keys_in_batch(spark):
-    """A batch with several rows per key must not fan the full join out
-    (multiple closed copies / multiple is_current rows): the latest
-    effective_ts per key wins."""
-    import datetime as dt
-
-    from datalakes_and_data_integration_spark.operators.upsert import (
-        scd2_merge,
-    )
-
-    t1, t2, t3 = (
-        dt.datetime(2024, 1, 1),
-        dt.datetime(2024, 6, 1),
-        dt.datetime(2024, 9, 1),
-    )
-    dim = scd2_merge(
-        None,
-        spark.createDataFrame([(1, "BUILDING", t1)], ["custkey", "segment", "eff"]),
-        "custkey",
-        ["segment"],
-        "eff",
-    )
-    batch = spark.createDataFrame(
-        [(1, "AUTOMOBILE", t2), (1, "HOUSEHOLD", t3)],  # two updates, one key
-        ["custkey", "segment", "eff"],
-    )
-    out = scd2_merge(dim, batch, "custkey", ["segment"], "eff").collect()
-    current = [r for r in out if r.is_current]
-    assert len(current) == 1  # exactly one open version
-    assert current[0].segment == "HOUSEHOLD"  # the later update won
-    closed = [r for r in out if not r.is_current]
-    assert len(closed) == 1  # exactly one closed copy of BUILDING
-    assert closed[0].valid_to == t3
-
-
 def test_swap_dir_tombstone_rollback(spark, tmp_path):
     import os
 

@@ -3,14 +3,12 @@
 The correctness of incremental maintenance rests on the partials forming
 a commutative monoid under merge: any split of the input into increments,
 merged in any order or tree shape, must equal the single-shot rollup.
-The end-to-end maintenance scenario (generation-swapped parquet, tail
-merge-on-read) is oracle-checked by `continuous_aggregate_daily`.
+The end-to-end maintenance scenario (history and nightly increments
+folded by one ledgered ``merge_state`` transition under ``ROLLUP_AGGS``,
+tail merge-on-read) is oracle-checked by `continuous_aggregate_daily`.
 """
 
 from __future__ import annotations
-
-import os
-import tempfile
 
 from pyspark.sql import functions as F
 
@@ -70,22 +68,3 @@ def test_merge_identity_and_empty_increment(spark):
     )
     assert _rows(merge_rollups(full, empty)) == _rows(full)
 
-
-def test_write_rollup_one_file_per_bucket(spark):
-    from datalakes_and_data_integration_spark.operators.rollup import (
-        partial_rollup,
-        write_rollup,
-    )
-
-    e = _events(spark)
-    path = os.path.join(tempfile.mkdtemp(prefix="rollup_"), "t")
-    write_rollup(partial_rollup(e, F.col("ts").cast("date"), []), path)
-    buckets = [d for d in os.listdir(path) if d.startswith("bucket=")]
-    assert buckets, "partitioned layout expected"
-    for d in buckets:
-        files = [
-            f
-            for f in os.listdir(os.path.join(path, d))
-            if f.endswith(".parquet")
-        ]
-        assert len(files) == 1, f"{d}: small-file explosion ({len(files)})"
