@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from datalakes_and_data_integration_spark.sources.csv_landing import (
+    BRONZE_SCHEMA,
     read_landing_csv,
 )
 from datalakes_and_data_integration_spark.sources.sinks import write_partitioned
@@ -28,4 +29,4 @@ def build_bronze(
     # Schema-specified read-back: an empty landing zone writes only
     # _SUCCESS, and schema inference on that raises — a no-new-files day
     # must yield an empty frame, not an error.
-    return spark.read.schema(raw.schema).parquet(bronze_dir)
+    return spark.read.schema(BRONZE_SCHEMA).parquet(bronze_dir)

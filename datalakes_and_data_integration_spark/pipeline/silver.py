@@ -1,8 +1,8 @@
-"""Silver zone: normalize -> type -> filter -> dedup (reference staging).
+"""Silver zone: filter -> type -> dedup (reference staging).
 
 Reference behaviors reproduced (SURVEY.md §2.2/§2.4):
-- P1 name normalization (headers arrive normalized from the bronze schema;
-  the function is still applied for schema drift).
+- P1 name normalization: bronze is read with ``BRONZE_SCHEMA``, whose
+  names are already normalized, so no rename happens here.
 - P2 typed casts, null-on-error: two-format timestamp parse
   (preprocess_to_staging.py:43-53), float parse (:56-61), empty-string ->
   null (:39-40).
@@ -17,10 +17,13 @@ Reference behaviors reproduced (SURVEY.md §2.2/§2.4):
   day with changed values changes nothing.
 
 There is one build. A from-scratch rebuild is the same MERGE into an
-empty (or absent) silver dir. One shuffle per dedup; both dedup stages key
-on the same columns, so Spark reuses the exchange. Output partitioned by
-pollutant (the per-pollutant Cassandra tables) and sorted within
-partitions by (code_site, date_de_debut) — the clustering order
+empty (or absent) silver dir. Each dedup costs one exchange: the full-row
+DISTINCT hashes all 25 columns, the PK dedup the 3 key columns. The
+DISTINCT stays although the PK dedup alone keeps the same number of rows:
+its grouping normalizes signed zeros, so a ``-0.0`` value comes out
+``0.0``, and silver's and gold's contents depend on that. Output is
+partitioned by pollutant (the per-pollutant Cassandra tables) and sorted
+within partitions by (code_site, date_de_debut) — the clustering order
 (:107-108) — written to a staging dir and swapped into place.
 """
 
@@ -29,13 +32,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from datalakes_and_data_integration_spark.operators import (
-    dedup_full_row,
-    normalize_columns,
-)
+from datalakes_and_data_integration_spark.operators import dedup_full_row
 from datalakes_and_data_integration_spark.operators.upsert import (
     merge_new_only,
     read_table,
+)
+from datalakes_and_data_integration_spark.sources.csv_landing import (
+    BRONZE_SCHEMA,
 )
 from datalakes_and_data_integration_spark.sources.sinks import write_staged
 
@@ -75,16 +78,17 @@ def drop_empty_rows(df: DataFrame, data_cols: list[str]) -> DataFrame:
 
 
 def _clean_bronze(bronze: DataFrame) -> tuple[DataFrame, list]:
-    """Normalize -> drop empty rows -> typed cast -> full-row dedup, plus
+    """Drop empty rows -> typed cast -> full-row dedup, plus
     the first-writer-wins tiebreak for the in-batch PK dedup.
 
     The reference keeps whichever row S3 happened to list first
     (unspecified order, SURVEY.md §7.4); the tiebreak keeps the
     lexicographically smallest row — earliest ingest file first, then
     every remaining column, which IS a total order."""
-    df = normalize_columns(bronze)
-    data_cols = [c for c in df.columns if c not in ("pollutant_code", "ingest_date")]
-    df = dedup_full_row(typed_cast(drop_empty_rows(df, data_cols)))
+    data_cols = [
+        c for c in bronze.columns if c not in ("pollutant_code", "ingest_date")
+    ]
+    df = dedup_full_row(typed_cast(drop_empty_rows(bronze, data_cols)))
     tiebreak = [F.col("ingest_date").asc_nulls_last()] + [
         F.col(c).asc_nulls_last()
         for c in sorted(df.columns)
@@ -97,19 +101,7 @@ def build_silver(
     spark: SparkSession, bronze_dir: str, silver_dir: str
 ) -> DataFrame:
     """Clean the bronze zone and MERGE its new keys into silver."""
-    from datalakes_and_data_integration_spark.sources.csv_landing import (
-        RAW_SCHEMA,
-    )
-    from pyspark.sql import types as T_
-
-    bronze_schema = T_.StructType(
-        list(RAW_SCHEMA.fields)
-        + [
-            T_.StructField("pollutant_code", T_.StringType(), True),
-            T_.StructField("ingest_date", T_.StringType(), True),
-        ]
-    )
-    bronze = spark.read.schema(bronze_schema).parquet(bronze_dir)
+    bronze = spark.read.schema(BRONZE_SCHEMA).parquet(bronze_dir)
     df, tiebreak = _clean_bronze(bronze)
     merged = merge_new_only(
         read_table(spark, silver_dir, df.schema),

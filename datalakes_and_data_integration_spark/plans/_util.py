@@ -144,6 +144,17 @@ def dec(col, p: int = 12, s: int = 2):
     return c.cast(f"decimal({p},{s})")
 
 
+def msum(e: str, name: str):
+    """Order-independent sum of the SQL expression ``e``: summed as
+    DECIMAL(27,12), rounded to 6 places, cast to double, aliased ``name``
+    (see module docstring)."""
+    return (
+        F.round(F.sum(F.expr(f"CAST({e} AS DECIMAL(27,12))")), 6)
+        .cast("double")
+        .alias(name)
+    )
+
+
 PRICE = (12, 2)  # covers 999,999,999.99
 QTY = (12, 2)
 RATE = (8, 6)  # discount / tax in [0, 1], up to 6 significant decimals

@@ -33,7 +33,15 @@ from datalakes_and_data_integration_spark.functions.text import (
     tokens_sql_spark,
 )
 from datalakes_and_data_integration_spark.plans._util import T, spread
+from datalakes_and_data_integration_spark.plans.ml import (
+    _split_pred_duck,
+    _split_pred_spark,
+)
 from datalakes_and_data_integration_spark.plans.registry import register
+from datalakes_and_data_integration_spark.plans.similarity_extra import (
+    _FX_C,
+    _fx_term,
+)
 
 _TOK_SPARK = tokens_sql_spark("text")
 _TOK_DUCK = tokens_sql_duck("text")
@@ -391,37 +399,8 @@ def bpe_encode_token_stats(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def _ncc_split_duck() -> tuple[str, str]:
-    from datalakes_and_data_integration_spark.functions.hashing import (
-        hash60_sql_duck,
-    )
-
-    bucket = f"({hash60_sql_duck('CAST(vec_id AS VARCHAR)', seed=7)} % 100)"
-    return f"{bucket} < 80", f"{bucket} >= 90"
-
-
-def _ncc_split_spark() -> tuple[str, str]:
-    from datalakes_and_data_integration_spark.functions.hashing import (
-        hash60_sql_spark,
-    )
-
-    bucket = f"({hash60_sql_spark('CAST(vec_id AS STRING)', seed=7)} % 100)"
-    return f"{bucket} < 80", f"{bucket} >= 90"
-
-
-_NCC_FXC = "1e9"
-
-
-def _ncc_fx_term(x: str, ms: str) -> str:
-    """Identical text on both engines: int64 squared-difference term."""
-    return (
-        f"CAST(floor(({x} - CAST({ms} AS DOUBLE)/{_NCC_FXC}) "
-        f"* ({x} - CAST({ms} AS DOUBLE)/{_NCC_FXC}) * 1e12) AS BIGINT)"
-    )
-
-
 def _ncc_oracle() -> str:
-    train_pred, test_pred = _ncc_split_duck()
+    train_pred, test_pred = _split_pred_duck()
     return f"""
     WITH dims AS MATERIALIZED (
       SELECT vec_id, label, d.i AS i, CAST(embedding[d.i] AS DOUBLE) AS x
@@ -429,7 +408,7 @@ def _ncc_oracle() -> str:
     ),
     cent AS MATERIALIZED (
       SELECT label AS label_pred, i,
-             CAST(floor(CAST(sum(CAST(floor(x * {_NCC_FXC}) AS BIGINT))
+             CAST(floor(CAST(sum(CAST(floor(x * {_FX_C}) AS BIGINT))
                              AS DOUBLE) / count(*)) AS BIGINT) AS ms
       FROM dims WHERE {train_pred}
       GROUP BY label, i
@@ -440,7 +419,7 @@ def _ncc_oracle() -> str:
     ),
     dist AS (
       SELECT t.vec_id, t.label_true, c.label_pred,
-             sum({_ncc_fx_term('t.x', 'c.ms')}) AS d2
+             sum({_fx_term('t.x', 'c.ms')}) AS d2
       FROM test t JOIN cent c ON c.i = t.i
       GROUP BY t.vec_id, t.label_true, c.label_pred
     ),
@@ -471,7 +450,7 @@ def _ncc_oracle() -> str:
     tags=("ml", "embedding", "classifier", "evaluation", "llm-pipeline"),
 )
 def centroid_classifier_eval(spark, sf_dir):
-    train_pred, test_pred = _ncc_split_spark()
+    train_pred, test_pred = _split_pred_spark()
     e = T(spark, sf_dir, "embeddings")
     dims = e.select(
         "vec_id",
@@ -485,7 +464,7 @@ def centroid_classifier_eval(spark, sf_dir):
         .groupBy(F.col("label").alias("label_pred"), "i")
         .agg(
             F.expr(
-                f"CAST(floor(CAST(sum(CAST(floor(x * {_NCC_FXC}) AS "
+                f"CAST(floor(CAST(sum(CAST(floor(x * {_FX_C}) AS "
                 f"BIGINT)) AS DOUBLE) / count(*)) AS BIGINT)"
             ).alias("ms")
         )
@@ -496,7 +475,7 @@ def centroid_classifier_eval(spark, sf_dir):
     dist = (
         test.join(F.broadcast(cent), "i")
         .groupBy("vec_id", "label_true", "label_pred")
-        .agg(F.sum(F.expr(_ncc_fx_term("x", "ms"))).alias("d2"))
+        .agg(F.sum(F.expr(_fx_term("x", "ms"))).alias("d2"))
     )
     w = Window.partitionBy("vec_id").orderBy("d2", "label_pred")
     return (

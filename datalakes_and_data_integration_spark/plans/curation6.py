@@ -65,8 +65,8 @@ from datalakes_and_data_integration_spark.plans.similarity_extra import (
     _IVFADC_ITERS,
     _coarse_cte_blocks,
     _coarse_lists,
+    _fx_dist2,
     _fx_term,
-    _fx_term_sql,
     _pq_prelude_sql,
     _train_sample,
     _unit_vectors,
@@ -89,7 +89,7 @@ def _primary_assign_sql() -> str:
     trap)."""
     return f"""
     cdist0 AS MATERIALIZED (
-      SELECT v.vec_id, c.cluster, sum({_fx_term_sql('v.x', 'c.ms')}) AS dist
+      SELECT v.vec_id, c.cluster, sum({_fx_term('v.x', 'c.ms')}) AS dist
       FROM sdims v JOIN cc{_IVFADC_ITERS} c ON c.i = v.i
       GROUP BY v.vec_id, c.cluster
     ),
@@ -119,16 +119,7 @@ def _primary_assign_spark(unit, cents):
     the trained centroid literals. Same argmin tiebreak as the oracle's
     ORDER BY dist, cluster (array_position returns the FIRST index
     achieving the min)."""
-    term = _fx_term("x", "c")
-
-    def dist2(mvec):
-        lits = ", ".join(f"{v}L" for v in mvec)
-        return F.expr(
-            f"aggregate(zip_with(arr, array({lits}), "
-            f"(x, c) -> {term}), CAST(0 AS BIGINT), (a, v) -> a + v)"
-        )
-
-    dists = F.array(*[dist2(c) for c in cents])
+    dists = F.array(*[_fx_dist2(c) for c in cents])
     return unit.withColumn("d", dists).select(
         "vec_id",
         "arr",

@@ -373,7 +373,8 @@ def _zorder_oracle() -> str:
     "exists in the plan; the oracle is the naive one-window ROW_NUMBER, "
     "and the driver hash match proves the two-pass form equal. At 100 TB "
     "the physical rewrite is repartitionByRange(z) + sortWithinPartitions "
-    "(sinks.write_clustered); this query is its planning/audit half.",
+    "(operators.layout.zorder_layout); this query is its planning/audit "
+    "half.",
     tags=("layout", "maintenance", "zorder", "scale"),
 )
 def zorder_layout_plan(spark, sf_dir):

@@ -19,6 +19,7 @@ Determinism rules used throughout (see SURVEY.md §7.4):
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -365,8 +366,22 @@ def _ordered_names() -> list[str]:
     return pri + rest
 
 
+def _fresh_cache(fn: SparkQuery) -> SparkQuery:
+    """``fn`` run on an empty cache: the frames the previous query
+    persisted are released when the next one starts, instead of staying
+    cached for the session and being asked to cache again by a query
+    that builds the same frame."""
+
+    @functools.wraps(fn)
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        spark.catalog.clearCache()
+        return fn(spark, sf_dir)
+
+    return run
+
+
 def all_queries() -> dict[str, SparkQuery]:
-    return {n: QUERIES[n].spark for n in _ordered_names()}
+    return {n: _fresh_cache(QUERIES[n].spark) for n in _ordered_names()}
 
 
 def all_oracle_sql() -> dict[str, str]:

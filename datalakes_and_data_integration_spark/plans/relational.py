@@ -16,7 +16,12 @@ from datalakes_and_data_integration_spark.operators import (
     outer_merge_pivot,
     prefix_columns,
 )
-from datalakes_and_data_integration_spark.plans._util import PRICE, T, dec
+from datalakes_and_data_integration_spark.plans._util import (
+    PRICE,
+    T,
+    dec,
+    msum,
+)
 from datalakes_and_data_integration_spark.plans.registry import register
 
 EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
@@ -1531,13 +1536,6 @@ def discount_quantity_correlation(spark, sf_dir):
         F.col("l_quantity").cast("double").alias("y"),
     )
 
-    def msum(e, name):
-        return (
-            F.round(F.sum(F.expr(f"CAST({e} AS DECIMAL(27,12))")), 6)
-            .cast("double")
-            .alias(name)
-        )
-
     sums = xy.groupBy("brand").agg(
         F.count("*").alias("n"),
         msum("x", "sx"),
@@ -1633,13 +1631,6 @@ def _corr_matrix_oracle() -> str:
 def lineitem_correlation_matrix(spark, sf_dir):
     li = T(spark, sf_dir, "lineitem")
     cols = _CORR_COLS
-
-    def msum(e, name):
-        return (
-            F.round(F.sum(F.expr(f"CAST({e} AS DECIMAL(27,12))")), 6)
-            .cast("double")
-            .alias(name)
-        )
 
     aggs = [F.count("*").alias("n")]
     for i, c in enumerate(cols):

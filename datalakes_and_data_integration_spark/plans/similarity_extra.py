@@ -371,11 +371,24 @@ _FX_D = "1e12"
 
 
 def _fx_term(x: str, ms: str) -> str:
-    """One fixed-point squared-difference term (identical text on both
-    engines up to column names): floor((x - ms/1e9)^2 * 1e12) as int64."""
+    """One fixed-point squared-difference term, the same SQL text for Spark
+    and the DuckDB oracles: floor((x - ms/1e9)^2 * 1e12) as int64."""
     return (
         f"CAST(floor(({x} - CAST({ms} AS DOUBLE)/{_FX_C}) "
         f"* ({x} - CAST({ms} AS DOUBLE)/{_FX_C}) * {_FX_D}) AS BIGINT)"
+    )
+
+
+def _fx_dist2(mvec: list[int]):
+    """Fixed-point squared L2 from the row's ``arr`` to one centroid given
+    as fixed-point integer literals: the sum of ``_fx_term`` as int64."""
+    from pyspark.sql import functions as F
+
+    lits = ", ".join(f"{v}L" for v in mvec)
+    term = _fx_term("x", "c")
+    return F.expr(
+        f"aggregate(zip_with(arr, array({lits}), "
+        f"(x, c) -> {term}), CAST(0 AS BIGINT), (a, v) -> a + v)"
     )
 
 
@@ -477,14 +490,6 @@ def label_cov_moments(spark, sf_dir):
     )
 
 
-def _fx_term_sql(x: str, ms: str) -> str:
-    """DuckDB text of the same fixed-point term (identical arithmetic)."""
-    return (
-        f"CAST(floor(({x} - CAST({ms} AS DOUBLE)/{_FX_C}) "
-        f"* ({x} - CAST({ms} AS DOUBLE)/{_FX_C}) * {_FX_D}) AS BIGINT)"
-    )
-
-
 # _train_sample's oracle twin — one shared constant pair (similarity.py's
 # TRAIN_SAMPLE_CAP/_TS_SCALE) feeds every Spark filter and SQL predicate,
 # so the sampling rate cannot be edited out of lockstep (ADVICE r5).
@@ -549,7 +554,7 @@ def _pq_oracle_blocks(dims: str = "sdims", prefix: str = "") -> str:
                                 ORDER BY dist, code) AS rn
       FROM (
         SELECT v.vec_id, v.m, c.code,
-               sum({_fx_term_sql('v.x', 'c.ms')}) AS dist
+               sum({_fx_term('v.x', 'c.ms')}) AS dist
         FROM {rel} v JOIN {cb} c ON c.m = v.m AND c.i = v.i
         GROUP BY v.vec_id, v.m, c.code
       )
@@ -656,7 +661,7 @@ def _coarse_cte_blocks() -> list[str]:
                                 ORDER BY dist, cluster) AS rn
       FROM (
         SELECT v.vec_id, c.cluster,
-               sum({_fx_term_sql('v.x', 'c.ms')}) AS dist
+               sum({_fx_term('v.x', 'c.ms')}) AS dist
         FROM {rel} v JOIN {cents} c ON c.i = v.i
         GROUP BY v.vec_id, c.cluster
       )
@@ -1345,15 +1350,6 @@ def _coarse_lists(unit, probe: int = _IVFADC_PROBE, train=None):
 
     import math
 
-    term = _fx_term("x", "c")
-
-    def dist2(mvec):
-        lits = ", ".join(f"{v}L" for v in mvec)
-        return F.expr(
-            f"aggregate(zip_with(arr, array({lits}), "
-            f"(x, c) -> {term}), CAST(0 AS BIGINT), (a, v) -> a + v)"
-        )
-
     cscale = float(_FX_C)
     if train is None:
         train = unit
@@ -1370,7 +1366,7 @@ def _coarse_lists(unit, probe: int = _IVFADC_PROBE, train=None):
     ]
 
     def assign(df):
-        dists = F.array(*[dist2(c) for c in centroids])
+        dists = F.array(*[_fx_dist2(c) for c in centroids])
         ranked = f"array_sort(arrays_zip(d, sequence(0, {_IVFADC_K - 1})))"
         return (
             df.withColumn("d", dists)
@@ -1712,7 +1708,7 @@ def _ivfadc_residual_oracle() -> str:
     ),
     qtab AS MATERIALIZED (
       SELECT d.q_id, d.cluster, d.m, c.code,
-             sum({_fx_term_sql('d.x', 'c.ms')}) AS d2
+             sum({_fx_term('d.x', 'c.ms')}) AS d2
       FROM qrdims d
       JOIN rcb{_PQ_ITERS} c ON c.m = d.m AND c.i = d.i
       GROUP BY d.q_id, d.cluster, d.m, c.code

@@ -26,7 +26,12 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from datalakes_and_data_integration_spark.plans._util import T, VALUE, dec
+from datalakes_and_data_integration_spark.plans._util import (
+    T,
+    VALUE,
+    dec,
+    msum,
+)
 from datalakes_and_data_integration_spark.plans.registry import register
 
 # ---------------------------------------------------------------------------
@@ -1288,13 +1293,6 @@ def value_autocorrelation_lag1(spark, sf_dir):
         F.col("value").alias("y"),
         F.lag("value").over(w).alias("x"),
     ).filter(F.col("x").isNotNull())
-
-    def msum(e, name):
-        return (
-            F.round(F.sum(F.expr(f"CAST({e} AS DECIMAL(27,12))")), 6)
-            .cast("double")
-            .alias(name)
-        )
 
     sums = pairs.groupBy("event_type").agg(
         F.count("*").alias("n"),

@@ -8,6 +8,7 @@ managed by the catalog, TimescaleDB sink -> JDBC/parquet writers.
 from datalakes_and_data_integration_spark.sources.csv_landing import (
     RAW_COLUMNS,
     read_landing_csv,
+    stream_landing_csv,
 )
 from datalakes_and_data_integration_spark.sources.catalog import (
     ACTIVE_POLLUTANTS,
@@ -22,6 +23,7 @@ from datalakes_and_data_integration_spark.sources.sinks import (
 __all__ = [
     "RAW_COLUMNS",
     "read_landing_csv",
+    "stream_landing_csv",
     "ACTIVE_POLLUTANTS",
     "UNIT_FACTORS",
     "list_tables",

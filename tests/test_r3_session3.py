@@ -186,13 +186,13 @@ def test_centroid_classifier_covers_test_split(spark):
     from pyspark.sql import functions as F
 
     from datalakes_and_data_integration_spark.plans._util import T
-    from datalakes_and_data_integration_spark.plans.curation4 import (
-        _ncc_split_spark,
+    from datalakes_and_data_integration_spark.plans.ml import (
+        _split_pred_spark,
     )
 
     rows = _q("centroid_classifier_eval")(spark, SF).collect()
     total = sum(r.n for r in rows)
-    _, test_pred = _ncc_split_spark()
+    _, test_pred = _split_pred_spark()
     want = T(spark, SF, "embeddings").where(test_pred).count()
     assert total == want
 
