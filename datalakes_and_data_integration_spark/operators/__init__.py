@@ -7,7 +7,6 @@ all of them (no UDFs on the parity surface, SURVEY.md §2.9).
 
 from datalakes_and_data_integration_spark.operators.normalize import (
     normalize_column_name,
-    normalize_columns,
 )
 from datalakes_and_data_integration_spark.operators.dedup import (
     dedup_full_row,
@@ -38,7 +37,6 @@ from datalakes_and_data_integration_spark.operators.windows import (
 
 __all__ = [
     "normalize_column_name",
-    "normalize_columns",
     "dedup_full_row",
     "dedup_keep_first",
     "drop_columns",

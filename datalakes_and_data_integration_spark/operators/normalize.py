@@ -20,8 +20,6 @@ from __future__ import annotations
 import re
 import unicodedata
 
-from pyspark.sql import DataFrame
-
 
 def normalize_column_name(name: str) -> str:
     """ASCII-fold + snake-case a raw header cell."""
@@ -33,8 +31,3 @@ def normalize_column_name(name: str) -> str:
     if text and text[0].isdigit():
         text = "_" + text
     return text
-
-
-def normalize_columns(df: DataFrame) -> DataFrame:
-    """Rename every column through :func:`normalize_column_name`."""
-    return df.toDF(*[normalize_column_name(c) for c in df.columns])

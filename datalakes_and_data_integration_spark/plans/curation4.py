@@ -38,7 +38,7 @@ from datalakes_and_data_integration_spark.plans.ml import (
     _split_pred_spark,
 )
 from datalakes_and_data_integration_spark.plans.registry import register
-from datalakes_and_data_integration_spark.plans.similarity_extra import (
+from datalakes_and_data_integration_spark.plans.similarity import (
     _FX_C,
     _fx_term,
 )

@@ -20,7 +20,7 @@ coarse quantizer the ANN tier already trains.
   the largest cluster.
 
 Both compose the REGISTERED coarse quantizer (`similarity_extra.
-_coarse_lists` — deterministic md5-seeded init, corpus-capped md5
+_coarse_cents` — deterministic md5-seeded init, corpus-capped md5
 training sample, int64 fixed-point Lloyd steps), so the full pipeline
 INCLUDING training is exactly reproducible in SQL and hash-checked:
 cluster ids, fixed-point centroid distances, ranks, and booleans only —
@@ -60,15 +60,15 @@ from datalakes_and_data_integration_spark.plans.registry import register
 from datalakes_and_data_integration_spark.plans.similarity import (
     _dot_duck,
     _dot_spark,
+    _fx_assign,
+    _fx_term,
+    train_sample,
 )
 from datalakes_and_data_integration_spark.plans.similarity_extra import (
     _IVFADC_ITERS,
+    _coarse_cents,
     _coarse_cte_blocks,
-    _coarse_lists,
-    _fx_dist2,
-    _fx_term,
     _pq_prelude_sql,
-    _train_sample,
     _unit_vectors,
 )
 
@@ -116,17 +116,10 @@ def _chain_prefix_sql() -> str:
 
 def _primary_assign_spark(unit, cents):
     """Spark twin of ``prim``: primary cluster + fixed-point distance from
-    the trained centroid literals. Same argmin tiebreak as the oracle's
-    ORDER BY dist, cluster (array_position returns the FIRST index
-    achieving the min)."""
-    dists = F.array(*[_fx_dist2(c) for c in cents])
-    return unit.withColumn("d", dists).select(
-        "vec_id",
-        "arr",
-        F.expr("CAST(array_position(d, array_min(d)) - 1 AS INT)").alias(
-            "cluster"
-        ),
-        F.expr("array_min(d)").alias("dist"),
+    the trained centroid literals, with the oracle's ORDER BY dist,
+    cluster tiebreak."""
+    return _fx_assign(unit, "arr", [cents], "cluster").select(
+        "vec_id", "arr", "cluster", F.expr("array_min(d)").alias("dist")
     )
 
 
@@ -135,8 +128,7 @@ def _trained_primary(spark, sf_dir):
     ANN tier's exact chain) -> per-vector (vec_id, arr, cluster, dist)."""
     unit = _unit_vectors(spark, sf_dir).persist()
     n = unit.count()  # scale-ok: 1 scalar count (sample-threshold literal)
-    _, cents = _coarse_lists(unit, train=_train_sample(unit, n))
-    return _primary_assign_spark(unit, cents)
+    return _primary_assign_spark(unit, _coarse_cents(train_sample(unit, n)))
 
 
 @register(

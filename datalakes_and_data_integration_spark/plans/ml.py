@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 
 from datalakes_and_data_integration_spark.plans._util import T, spread
 from datalakes_and_data_integration_spark.plans.registry import register
+from datalakes_and_data_integration_spark.plans.similarity import _fx_term
 
 _DIM = 64
 _ITERS = 3
@@ -1568,21 +1569,14 @@ def logreg_kfold_cv(spark, sf_dir):
 # '85; the "select maximally spread exemplars" step of data-curation
 # pipelines, distinct from the MMR rerank which diversifies a per-query
 # shortlist). Every distance is the established fixed-point int64 form
-# floor((x - q/1e9)^2 * 1e12) summed over dims — selection argmaxes
-# compare exact integers, so the greedy trajectory is bit-identical
-# cross-engine; center coordinates are quantized to int64 nanos by the
-# SAME floor(x * 1e9) both sides.
+# floor((x - q/1e9)^2 * 1e12) (similarity._fx_term) summed over dims —
+# selection argmaxes compare exact integers, so the greedy trajectory is
+# bit-identical cross-engine; center coordinates are quantized to int64
+# nanos by the SAME floor(x * 1e9) both sides.
 # ---------------------------------------------------------------------------
 
 _KC_K = 5
 _KC_SEED = 91
-
-
-def _kc_term(elem: str, q: int | str) -> str:
-    return (
-        f"CAST(floor(({elem} - CAST({q} AS DOUBLE)/1e9) "
-        f"* ({elem} - CAST({q} AS DOUBLE)/1e9) * 1e12) AS BIGINT)"
-    )
 
 
 def _kcenter_oracle() -> str:
@@ -1602,7 +1596,7 @@ def _kcenter_oracle() -> str:
     p1 AS (SELECT {qcols} FROM c1),
     d1 AS (
       SELECT r.vec_id, r.emb,
-             {_assoc_chain("CAST(0 AS BIGINT)", [_kc_term(f"CAST(r.emb[{j + 1}] AS DOUBLE)", f"p.q{j}") for j in range(_DIM)])} AS dmin
+             {_assoc_chain("CAST(0 AS BIGINT)", [_fx_term(f"CAST(r.emb[{j + 1}] AS DOUBLE)", f"p.q{j}") for j in range(_DIM)])} AS dmin
       FROM rows r CROSS JOIN p1 p
     )"""
     ]
@@ -1611,7 +1605,7 @@ def _kcenter_oracle() -> str:
         chain = _assoc_chain(
             "CAST(0 AS BIGINT)",
             [
-                _kc_term(f"CAST(d.emb[{j + 1}] AS DOUBLE)", f"p.q{j}")
+                _fx_term(f"CAST(d.emb[{j + 1}] AS DOUBLE)", f"p.q{j}")
                 for j in range(_DIM)
             ],
         )
@@ -1684,14 +1678,22 @@ def coreset_kcenter_selection(spark, sf_dir):
         .select("vec_id", "embedding")
         .persist()  # k greedy passes share the scan
     )
-    first = (
+    head = (
         e.orderBy(
             hash60_seeded(F.col("vec_id").cast("string"), _KC_SEED),
             "vec_id",
         )
         .limit(1)
-        .collect()[0]  # scale-ok: 1 selected exemplar row per greedy step
+        .collect()  # scale-ok: 1 selected exemplar row per greedy step
     )
+    if not head:
+        # Empty corpus: the oracle's scalar-subquery start pick is NULL,
+        # its later picks are empty and its radius max() is NULL.
+        return spark.createDataFrame(
+            [(1, None, 0, None)],
+            "step int, vec_id long, sep_d2 long, coverage_radius_d2 long",
+        )
+    first = head[0]
     picks = [(1, first.vec_id, 0)]
 
     def _quant(emb) -> list[int]:
@@ -1701,7 +1703,7 @@ def coreset_kcenter_selection(spark, sf_dir):
     chain = _assoc_chain(
         "CAST(0 AS BIGINT)",
         [
-            _kc_term(f"CAST(embedding[{j}] AS DOUBLE)", q[j])
+            _fx_term(f"CAST(embedding[{j}] AS DOUBLE)", q[j])
             for j in range(_DIM)
         ],
     )
@@ -1717,7 +1719,7 @@ def coreset_kcenter_selection(spark, sf_dir):
         chain = _assoc_chain(
             "CAST(0 AS BIGINT)",
             [
-                _kc_term(f"CAST(embedding[{j}] AS DOUBLE)", q[j])
+                _fx_term(f"CAST(embedding[{j}] AS DOUBLE)", q[j])
                 for j in range(_DIM)
             ],
         )

@@ -16,6 +16,7 @@
 
 from __future__ import annotations
 
+import math
 from functools import reduce
 
 import numpy as np
@@ -258,6 +259,195 @@ def _rescore_topk(cand, normed):
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= _TOPK)
         .select("vec_id", "neighbor_id", "cos_sim", "rank")
+    )
+
+
+# --- fixed-point k-means (the one trainer of every ANN quantizer) --------
+#
+# The IVF coarse lists (here and in the IVFADC family of similarity_extra),
+# the PQ codebooks and the residual codebooks all train with one
+# deterministic Lloyd k-means in fixed-point arithmetic, which makes every
+# step EXACTLY cross-engine reproducible (the reason the trained queries
+# carry full DuckDB oracles although float Lloyd iteration is "not SQL-
+# expressible"):
+# - the k training vectors with the smallest md5(vec_id) seed the
+#   centroids (ties -> smaller vec_id);
+# - centroid coordinates live as integers ms = floor(mean * 1e9) (floor of
+#   an exact-int ratio: per-cluster SUM(floor(x*1e9)) // count, every step
+#   exact in int64 on both engines); an empty cluster keeps its centroid;
+# - squared distances are SUM(floor(diff^2 * 1e12)) in int64 — the fold is
+#   exact, so argmin/probe ranking (ties -> smaller cluster id) is
+#   deterministic and engine-independent.
+# Value ranges (embeddings in [-0.6, 0.6], n <= 25k at gate scales) keep
+# every intermediate far below 2^53, so the double->int quantization itself
+# is exact; the 1e-9 centroid / 1e-12 distance granularity is ~1e6x finer
+# than the distance gaps that matter, so recall is unchanged
+# (tests/test_ivf_recall.py still pins >= 0.9).
+_FX_C = "1e9"  # centroid fixed-point scale
+_FX_D = "1e12"  # squared-distance fixed-point scale
+
+
+def _fx_term(x: str, ms: str) -> str:
+    """One fixed-point squared-difference term, the same SQL text for Spark
+    and the DuckDB oracles: floor((x - ms/1e9)^2 * 1e12) as int64."""
+    return (
+        f"CAST(floor(({x} - CAST({ms} AS DOUBLE)/{_FX_C}) "
+        f"* ({x} - CAST({ms} AS DOUBLE)/{_FX_C}) * {_FX_D}) AS BIGINT)"
+    )
+
+
+def _subspace_rows(frame, vec: str, subspaces: int):
+    """(vec_id, m, sub): one row per vector per subspace, `vec` cut into
+    ``subspaces`` equal slices."""
+    sub = _DIM // subspaces
+    return frame.select(
+        "vec_id",
+        F.posexplode(
+            F.expr(
+                f"transform(sequence(0, {subspaces - 1}), "
+                f"m -> slice({vec}, m * {sub} + 1, {sub}))"
+            )
+        ).alias("m", "sub"),
+    )
+
+
+def _fx_assign(df, vec: str, books, out: str):
+    """Nearest-centroid assignment of `vec`: adds ``d``, the fixed-point
+    squared L2 to every centroid, and ``out``, its argmin (ties -> the
+    smaller id). ``books`` holds one codebook per subspace; with several,
+    each row's ``m`` picks its codebook in an m-branched CASE, so all
+    subspaces assign in one pass.
+
+    Each distance is an interpreted higher-order aggregate over a centroid
+    array literal — deliberately NOT unrolled: it runs over n rows (not
+    n^2 pairs), so execution is cheap, while K unrolled 64-term
+    expressions per assignment dominated ann_topk_ivf with Janino compile
+    time (measured ~4s of the ~13s gate cost). The term casts `x` because
+    IVF assigns the FLOAT ``embedding`` column.
+
+    No training rows leave no centroid, and then nothing is assigned: the
+    frame keeps its schema and loses its rows, as the oracles' join
+    against an empty centroid table does."""
+    term = _fx_term("CAST(x AS DOUBLE)", "c")
+
+    def dist(cent):
+        lits = ", ".join(f"{v}L" for v in cent)
+        return (
+            f"aggregate(zip_with({vec}, array({lits}), (x, c) -> {term}), "
+            f"CAST(0 AS BIGINT), (a, v) -> a + v)"
+        )
+
+    if len(books) == 1:
+        cells = [dist(c) for c in books[0]]
+    else:
+        cells = [
+            "CASE m "
+            + " ".join(f"WHEN {m} THEN {dist(b[k])}" for m, b in enumerate(books))
+            + " END"
+            for k in range(len(books[0]))
+        ]
+    d = f"array({', '.join(cells)})"
+    if not cells:
+        df, d = df.where(F.lit(False)), "CAST(array() AS ARRAY<BIGINT>)"
+    return df.withColumn("d", F.expr(d)).withColumn(
+        out, F.expr("CAST(array_position(d, array_min(d)) - 1 AS INT)")
+    )
+
+
+def _fx_kmeans(train, vec: str, k: int, iters: int, subspaces: int = 1):
+    """Fixed-point Lloyd k-means over ``train``'s (vec_id, `vec`) rows:
+    ``iters`` iterations from the k smallest-md5 seeds. Returns one
+    codebook per subspace, each up to k centroids as floor(c * 1e9) int64
+    lists; with several subspaces `vec` is cut into equal slices that all
+    train in one Spark job per iteration.
+
+    The update step is a distributed per-cluster sum with only the
+    subspaces x k centroid rows collected — the standard Spark k-means
+    shape: tiny driver state, big data stays distributed."""
+    seeds = (
+        train.select(
+            "vec_id",
+            F.col(vec).alias("v"),
+            F.md5(F.col("vec_id").cast("string")).alias("h"),
+        )
+        .orderBy("h", "vec_id")
+        .limit(k)
+        .collect()  # scale-ok: k seed rows
+    )
+    sub = _DIM // subspaces
+    cscale = float(_FX_C)
+    books = [
+        [
+            [math.floor(float(x) * cscale) for x in r.v[m * sub : (m + 1) * sub]]
+            for r in seeds
+        ]
+        for m in range(subspaces)
+    ]
+    if subspaces == 1:
+        rows, col, keys = train, vec, ["cluster"]
+    else:
+        rows = _subspace_rows(train, vec, subspaces).persist()
+        col, keys = "sub", ["m", "cluster"]
+    for _ in range(iters):
+        means = (
+            _fx_assign(rows, col, books, "cluster")
+            .groupBy(*keys)
+            .agg(
+                F.count("*").alias("n"),
+                *[
+                    F.sum(
+                        F.expr(
+                            f"CAST(floor(CAST({col}[{i}] AS DOUBLE) "
+                            f"* {_FX_C}) AS BIGINT)"
+                        )
+                    ).alias(f"s{i}")
+                    for i in range(sub)
+                ],
+            )
+            .collect()  # scale-ok: subspaces x k centroid rows per Lloyd iteration
+        )
+        # Python // floors like the oracles' floor(sum/count); both exact
+        # (cluster sums stay far below 2^53).
+        new = {
+            (r.m if subspaces > 1 else 0, r.cluster): [
+                r[f"s{i}"] // r.n for i in range(sub)
+            ]
+            for r in means
+        }
+        books = [
+            [new.get((m, c), cent) for c, cent in enumerate(book)]
+            for m, book in enumerate(books)
+        ]
+    # The exploded training rows are never read again: the codebooks are
+    # Python literals from here on.
+    if rows is not train:
+        rows.unpersist()
+    return books
+
+
+def _ivf_lists(df, vec: str, cents, probe: int, rep: int):
+    """IVF list membership from one distance array: ``cluster`` (the
+    primary list), ``probe_lists`` (the `probe` nearest, the query side)
+    and ``rep_lists`` (the `rep` nearest, the corpus multi-assignment),
+    nearest first, ties -> smaller id."""
+    ranked = f"array_sort(arrays_zip(d, sequence(0, {len(cents) - 1})))"
+    return (
+        _fx_assign(df, vec, [cents], "cluster")
+        .withColumn(
+            "probe_lists",
+            F.expr(
+                f"transform(slice({ranked}, 1, {probe}), "
+                f"x -> CAST(x['1'] AS INT))"
+            ),
+        )
+        .withColumn(
+            "rep_lists",
+            F.expr(
+                f"transform(slice({ranked}, 1, {rep}), "
+                f"x -> CAST(x['1'] AS INT))"
+            ),
+        )
+        .drop("d")
     )
 
 
@@ -516,41 +706,6 @@ _IVF_ITERS = 5  # Lloyd iterations
 _IVF_PROBE = 6  # lists probed per query
 _IVF_REP = 3  # lists each corpus vector is assigned to (multi-assignment)
 
-# Fixed-point quantization that makes the k-means EXACTLY cross-engine
-# reproducible (the reason ann_topk_ivf can carry a full DuckDB oracle even
-# though Lloyd iteration is "not SQL-expressible" in float arithmetic):
-# - centroid coordinates live as integers ms = floor(mean * 1e9) (floor of
-#   an exact-int ratio: per-cluster SUM(floor(x*1e9)) // count, every step
-#   exact in int64 on both engines);
-# - squared distances are SUM(floor(diff^2 * 1e12)) in int64 — the fold is
-#   exact, so argmin/probe ranking (ties -> smaller cluster id) is
-#   deterministic and engine-independent.
-# Value ranges (embeddings in [-0.6, 0.6], n <= 25k at gate scales) keep
-# every intermediate far below 2^53, so the double->int quantization itself
-# is exact; the 1e-9 centroid / 1e-12 distance granularity is ~1e6x finer
-# than the distance gaps that matter, so recall is unchanged
-# (tests/test_ivf_recall.py still pins >= 0.9).
-_IVF_CSCALE = "1e9"  # centroid fixed-point scale
-_IVF_DSCALE = "1e12"  # squared-distance fixed-point scale
-
-
-def _dist2_to_centroid(mvec: list[int]) -> "F.Column":
-    """Fixed-point squared L2 distance from `embedding` to a centroid given
-    as floor(c*1e9) integer literals, as a higher-order aggregate over an
-    array literal. Interpreted per element — deliberately NOT unrolled: the
-    distance runs over n rows (not n^2 pairs), so execution is cheap, while
-    K unrolled 64-term expressions per assignment dominated the query with
-    Janino compile time (measured ~4s of the ~13s gate cost)."""
-    lits = ", ".join(f"{m}L" for m in mvec)
-    s = _IVF_CSCALE
-    return F.expr(
-        f"aggregate(zip_with(embedding, array({lits}), "
-        f"(x, m) -> CAST(floor((CAST(x AS DOUBLE) - CAST(m AS DOUBLE)/{s}) "
-        f"* (CAST(x AS DOUBLE) - CAST(m AS DOUBLE)/{s}) * {_IVF_DSCALE}) "
-        f"AS BIGINT)), "
-        f"CAST(0 AS BIGINT), (a, v) -> a + v)"
-    )
-
 
 def _ivf_core_blocks() -> list[str]:
     """DuckDB replica of the IVF training chain: md5-seeded init,
@@ -561,7 +716,7 @@ def _ivf_core_blocks() -> list[str]:
     over the deterministic corpus-capped md5 sample (``tdims`` — the
     Spark side's training frame); only the final ``af`` assignment scans
     the corpus. Shared by _ivf_oracle and the nprobe recall curve."""
-    cs, ds = _IVF_CSCALE, _IVF_DSCALE
+    cs, ds = _FX_C, _FX_D
     samp = TRAIN_SAMPLE_PRED
 
     def assign(name: str, cents: str, rel: str = "dims") -> str:
@@ -717,85 +872,10 @@ def _ivf_topk_multi(spark, sf_dir, probes=(_IVF_PROBE,), queries=None):
     # — both derive from the same cap/scale constants, so the engines
     # cannot drift.
     n_corpus = normed.count()  # scale-ok: 1 scalar count (threshold literal)
-    train = train_sample(normed, n_corpus)
-
-    # Deterministic init: the K training vectors with the smallest
-    # md5(vec_id).
-    import math
-
-    seeds = (
-        train.select(
-            "vec_id", "embedding", F.md5(F.col("vec_id").cast("string")).alias("h")
-        )
-        .orderBy("h", "vec_id")
-        .limit(_IVF_K)
-        .collect()  # scale-ok: K seed rows
+    (cents,) = _fx_kmeans(
+        train_sample(normed, n_corpus), "embedding", _IVF_K, _IVF_ITERS
     )
-    cscale = float(_IVF_CSCALE)
-    centroids = [
-        [math.floor(float(x) * cscale) for x in r.embedding] for r in seeds
-    ]
-
-    def assign(df):
-        """Nearest centroid by squared L2 (ties -> smallest centroid id),
-        the PROBE nearest lists (query side) and the REP nearest lists
-        (corpus multi-assignment), all from one distance-array column."""
-        dists = F.array(*[_dist2_to_centroid(c) for c in centroids])
-        ranked = (
-            f"array_sort(arrays_zip(d, sequence(0, {_IVF_K - 1})))"
-        )
-        return (
-            df.withColumn("d", dists)
-            .withColumn(
-                "cluster",
-                F.expr("CAST(array_position(d, array_min(d)) - 1 AS INT)"),
-            )
-            .withColumn(
-                "probe_lists",
-                F.expr(
-                    f"transform(slice({ranked}, 1, {max_p}), "
-                    f"x -> CAST(x['1'] AS INT))"
-                ),
-            )
-            .withColumn(
-                "rep_lists",
-                F.expr(
-                    f"transform(slice({ranked}, 1, {_IVF_REP}), "
-                    f"x -> CAST(x['1'] AS INT))"
-                ),
-            )
-            .drop("d")
-        )
-
-    for _ in range(_IVF_ITERS):
-        # Update step: per-cluster mean over the TRAINING sample
-        # (distributed agg, K rows collected — the standard Spark k-means
-        # shape: tiny driver state, big data stays distributed).
-        means = (
-            assign(train)
-            .groupBy("cluster")
-            .agg(
-                F.count("*").alias("n"),
-                *[
-                    F.sum(
-                        F.expr(
-                            f"CAST(floor(CAST(embedding[{i}] AS DOUBLE) "
-                            f"* {_IVF_CSCALE}) AS BIGINT)"
-                        )
-                    ).alias(f"s{i}")
-                    for i in range(_DIM)
-                ],
-            )
-            .collect()  # scale-ok: K centroid rows per Lloyd iteration
-        )
-        # Python // floors like the oracle's floor(sum/count); both exact
-        # (cluster sums stay far below 2^53).
-        by_id = {
-            r.cluster: [r[f"s{i}"] // r.n for i in range(_DIM)] for r in means
-        }
-        centroids = [by_id.get(k, centroids[k]) for k in range(_IVF_K)]
-
-    final = assign(normed).persist()
+    final = _ivf_lists(normed, "embedding", cents, max_p, _IVF_REP).persist()
     # Candidate generation + exact scoring in a vectorized kernel
     # (round 7, VERDICT r6 #2 — at the 20k decade the explode/join/
     # distinct candidate stream plus the per-pair codegen scoring ran

@@ -7,12 +7,18 @@ from __future__ import annotations
 from datalakes_and_data_integration_spark.plans._util import T
 from datalakes_and_data_integration_spark.plans.registry import register
 from datalakes_and_data_integration_spark.plans.similarity import (
+    _FX_C,
     TRAIN_SAMPLE_PRED,
     _chunk_broadcasts,
+    _fx_assign,
+    _fx_kmeans,
+    _fx_term,
+    _ivf_lists,
     _margin_keep,
     _n_chunks,
     _scan,
     _seq_dot,
+    _subspace_rows,
     train_sample,
 )
 
@@ -360,56 +366,6 @@ def _pq_shortlist(n: int) -> int:
     )
 
 
-# Fixed-point quantization scales shared with ann_topk_ivf (see
-# plans/similarity.py): centroids/codewords live as floor(c * 1e9) int64,
-# squared distances as SUM(floor(diff^2 * 1e12)) int64 — every Lloyd step
-# and every ADC score is then EXACTLY cross-engine reproducible, which is
-# what lets the two iterative-k-means queries below carry full DuckDB
-# oracles instead of rows-only checks.
-_FX_C = "1e9"
-_FX_D = "1e12"
-
-
-def _fx_term(x: str, ms: str) -> str:
-    """One fixed-point squared-difference term, the same SQL text for Spark
-    and the DuckDB oracles: floor((x - ms/1e9)^2 * 1e12) as int64."""
-    return (
-        f"CAST(floor(({x} - CAST({ms} AS DOUBLE)/{_FX_C}) "
-        f"* ({x} - CAST({ms} AS DOUBLE)/{_FX_C}) * {_FX_D}) AS BIGINT)"
-    )
-
-
-def _fx_dist2(mvec: list[int]):
-    """Fixed-point squared L2 from the row's ``arr`` to one centroid given
-    as fixed-point integer literals: the sum of ``_fx_term`` as int64."""
-    from pyspark.sql import functions as F
-
-    lits = ", ".join(f"{v}L" for v in mvec)
-    term = _fx_term("x", "c")
-    return F.expr(
-        f"aggregate(zip_with(arr, array({lits}), "
-        f"(x, c) -> {term}), CAST(0 AS BIGINT), (a, v) -> a + v)"
-    )
-
-
-def _pq_dist_expr(centroids: list[list[list[int]]], k: int) -> str:
-    """Fixed-point squared L2 from the row's subvector `sub` to codeword k
-    of its own subspace m — an m-branched CASE so all subspaces assign in
-    one pass. Interpreted higher-order aggregate, not unrolled (the IVF
-    lesson: Janino compile time dominates otherwise)."""
-    term = _fx_term("x", "c")
-    branches = " ".join(
-        "WHEN {m} THEN aggregate(zip_with(sub, array({lits}), "
-        "(x, c) -> {term}), CAST(0 AS BIGINT), (a, v) -> a + v)".format(
-            m=m,
-            lits=", ".join(f"{v}L" for v in centroids[m][k]),
-            term=term,
-        )
-        for m in range(_PQ_M)
-    )
-    return f"CASE m {branches} END"
-
-
 _COV_DIM = 64
 
 
@@ -490,7 +446,7 @@ def label_cov_moments(spark, sf_dir):
     )
 
 
-# _train_sample's oracle twin — one shared constant pair (similarity.py's
+# similarity.train_sample's oracle twin — one shared constant pair (similarity.py's
 # TRAIN_SAMPLE_CAP/_TS_SCALE) feeds every Spark filter and SQL predicate,
 # so the sampling rate cannot be edited out of lockstep (ADVICE r5).
 _SAMPLE_PRED = TRAIN_SAMPLE_PRED
@@ -499,7 +455,7 @@ _SAMPLE_PRED = TRAIN_SAMPLE_PRED
 def _pq_prelude_sql() -> str:
     """The shared oracle prelude: unit-normalized vectors, global subspace
     dims relation, and the md5 seed ranking (seeds rank inside the
-    deterministic corpus-capped training sample — _train_sample's predicate)."""
+    deterministic corpus-capped training sample — similarity.train_sample's predicate)."""
     from datalakes_and_data_integration_spark.plans.similarity import (
         _norm2_duck,
     )
@@ -649,7 +605,7 @@ def _coarse_cte_blocks() -> list[str]:
     oracle. ``caf`` is the final per-(vec, cluster) assignment relation
     (rn = 1 is the primary list) and ``cc{_IVFADC_ITERS}`` the final
     centroid table. Seed ranking and the Lloyd assignments ca1..caN run
-    over the deterministic corpus-capped sample (``tsdims`` — _coarse_lists's
+    over the deterministic corpus-capped sample (``tsdims`` — _coarse_cents's
     ``train`` twin); only the final ``caf`` assignment scans the
     corpus."""
 
@@ -760,23 +716,7 @@ def _unit_vectors(spark, sf_dir):
     )
 
 
-def _subspace_rows(vecframe, arr_col: str = "arr", extra: tuple = ()):
-    """(vec_id, *extra, m, sub): one row per vector per subspace."""
-    from pyspark.sql import functions as F
-
-    return vecframe.select(
-        "vec_id",
-        *extra,
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(0, {_PQ_M - 1}), "
-                f"m -> slice({arr_col}, m * {_PQ_SUBDIM} + 1, {_PQ_SUBDIM}))"
-            )
-        ).alias("m", "sub"),
-    )
-
-
-def _pq_train(vecframe, arr_col: str = "arr", train=None):
+def _pq_train(vecframe, train, arr_col: str = "arr"):
     """Train the PQ codebooks on ``train``'s (vec_id, <arr_col>)
     subvectors — raw unit vectors for PQ/IVFADC, primary-centroid
     residuals for the residual variant. Returns ``(subrows, assign)``:
@@ -785,122 +725,27 @@ def _pq_train(vecframe, arr_col: str = "arr", train=None):
     the trained codebooks (adds ``d``, the K-element fixed-point
     distance array, and ``code``, its argmin).
 
-    ``train`` (default: all of ``vecframe``) is the frame seed selection
-    and the Lloyd iterations run over. The registered queries pass the
-    deterministic corpus-capped md5 sample (_train_sample) — the 100 TB shape:
+    The registered queries pass the deterministic corpus-capped md5
+    sample (similarity.train_sample) as ``train`` — the 100 TB shape:
     faiss trains codebooks on ~100k vectors regardless of corpus size,
     so training cost is O(sample), not O(corpus), and only the final
     code assignment scans the corpus. The sample is content-addressed,
     so the DuckDB oracles reproduce it with a WHERE clause; recall
     premise pinned by tests/test_sampled_training.py."""
-    import math
+    subrows = _subspace_rows(vecframe, arr_col, _PQ_M).persist()
+    books = _fx_kmeans(train, arr_col, _PQ_K, _PQ_ITERS, _PQ_M)
 
-    from pyspark.sql import functions as F
+    def assign(df):
+        return _fx_assign(df, "sub", books, "code")
 
-    subrows = _subspace_rows(vecframe, arr_col).persist()
-    if train is None:
-        train = vecframe
-        tsub = subrows
-    else:
-        tsub = _subspace_rows(train, arr_col).persist()
-
-    # Deterministic init: the K smallest-md5 training vectors seed every
-    # subspace with their own subvectors (fixed-point quantized).
-    cscale = float(_FX_C)
-    seeds = (
-        train.select(
-            "vec_id",
-            F.col(arr_col).alias("arr"),
-            F.md5(F.col("vec_id").cast("string")).alias("h"),
-        )
-        .orderBy("h", "vec_id")
-        .limit(_PQ_K)
-        .collect()  # scale-ok: K seed rows
-    )
-    centroids = [
-        [
-            [
-                math.floor(float(x) * cscale)
-                for x in r.arr[m * _PQ_SUBDIM : (m + 1) * _PQ_SUBDIM]
-            ]
-            for r in seeds
-        ]
-        for m in range(_PQ_M)
-    ]
-
-    def mk_assign(cents):
-        def assign(df):
-            dists = F.array(
-                *[F.expr(_pq_dist_expr(cents, k)) for k in range(_PQ_K)]
-            )
-            return df.withColumn("d", dists).withColumn(
-                "code",
-                F.expr("CAST(array_position(d, array_min(d)) - 1 AS INT)"),
-            )
-
-        # expose the trained codebooks: the residual kernel recomputes
-        # the per-(query, probed-list) ADC tables in numpy from these
-        # exact int64 literals (round 8)
-        assign.centroids = cents
-        return assign
-
-    for _ in range(_PQ_ITERS):
-        means = (
-            mk_assign(centroids)(tsub)
-            .groupBy("m", "code")
-            .agg(
-                F.count("*").alias("n"),
-                *[
-                    F.sum(
-                        F.expr(
-                            f"CAST(floor(sub[{i}] * {_FX_C}) AS BIGINT)"
-                        )
-                    ).alias(f"c{i}")
-                    for i in range(_PQ_SUBDIM)
-                ],
-            )
-            .collect()  # scale-ok: M x K codebook rows per Lloyd iteration
-        )
-        # Python // floors like the oracle's floor(sum/count); both exact.
-        by_key = {
-            (r.m, r.code): [r[f"c{i}"] // r.n for i in range(_PQ_SUBDIM)]
-            for r in means
-        }
-        centroids = [
-            [by_key.get((m, k), centroids[m][k]) for k in range(_PQ_K)]
-            for m in range(_PQ_M)
-        ]
-
-    # Training is done — tsub's cached partitions are never read again
-    # (codebooks are Python literals from here on). Without this, every
-    # invocation in a long-lived session leaks a cached training frame
-    # (two ANN queries call _pq_train per run). subrows stays persisted:
-    # it IS the returned coding frame.
-    if tsub is not subrows:
-        tsub.unpersist()
-
-    return subrows, mk_assign(centroids)
+    # expose the trained codebooks: the residual kernel recomputes the
+    # per-(query, probed-list) ADC tables in numpy from these exact
+    # int64 literals (round 8)
+    assign.centroids = books
+    return subrows, assign
 
 
-def _train_sample(vecframe, n):
-    """The deterministic corpus-capped training sample shared by every
-    k-means stage (coarse lists and PQ codebooks) —
-    similarity.train_sample: md5(vec_id) hex below a threshold derived
-    from n (rate = min(1/4, TRAIN_SAMPLE_CAP / n)). Content-addressed,
-    so the DuckDB oracles reproduce it with the same WHERE predicate
-    (_SAMPLE_PRED, same shared constants — its scalar subquery computes
-    the identical threshold from count(*)); recall premise pinned by
-    tests/test_sampled_training.py, threshold parity by
-    tests/test_train_sample_cap.py.
-
-    This IS the faiss shape: past n = 4*CAP the training set holds at
-    ~TRAIN_SAMPLE_CAP vectors regardless of corpus size, so training
-    cost stops being O(corpus) — see README "Cluster deployment
-    deltas"."""
-    return train_sample(vecframe, n)
-
-
-def _pq_tables(unit, train=None):
+def _pq_tables(unit, train):
     """Train the codebooks and emit (codes, qdist): the corpus code table
     and the per-query ADC distance tables. Shared by ann_topk_pq (codes
     scored against the whole corpus) and ann_topk_ivfadc (codes scored
@@ -927,7 +772,7 @@ def _pq_tables(unit, train=None):
     return codes, qdist
 
 
-def _pq_tables_piv(unit, train=None):
+def _pq_tables_piv(unit, train):
     """Array form of _pq_tables (the residual variant's round-4 ADC
     restructure, ported here per the round-5 recipe): the per-query ADC
     table pivoted to ONE (M*K)-slot array (idx = m*K + code; the table is
@@ -1286,7 +1131,7 @@ def ann_topk_pq(spark, sf_dir):
     unit = _unit_vectors(spark, sf_dir).persist()
     n_corpus = T(spark, sf_dir, "embeddings").count()  # scale-ok: 1 scalar count
     codes_piv, qtab_piv, _ = _pq_tables_piv(
-        unit, train=_train_sample(unit, n_corpus)
+        unit, train=train_sample(unit, n_corpus)
     )
     # Flat-PQ scan (the declared whole-corpus baseline — at retrieval
     # scale PQ nests inside IVF lists, see ann_topk_ivfadc), scored by
@@ -1333,86 +1178,23 @@ _IVFADC_PROBE = 6  # lists probed per query
 _IVFADC_REP = 3  # lists each corpus vector is assigned to
 
 
-def _coarse_lists(unit, probe: int = _IVFADC_PROBE, train=None):
-    """Deterministic k-means over the unit vectors; returns a frame with
-    per-vector probe_lists (query side) and rep_lists (corpus side) —
-    the ann_topk_ivf shape, re-expressed over the normalized `arr`.
+def _coarse_cents(train):
+    """The registered coarse quantizer: _IVFADC_K fixed-point k-means
+    centroids over the unit vectors of ``train``. The registered queries
+    pass the deterministic corpus-capped md5 sample
+    (similarity.train_sample) — the 100 TB shape: faiss trains coarse
+    quantizers on ~100k vectors regardless of corpus size — so only the
+    final assignment scans the corpus. The sample is content-addressed,
+    so the oracles unroll the exact same computation with a WHERE
+    clause; recall premise pinned by tests/test_sampled_training.py."""
+    return _fx_kmeans(train, "arr", _IVFADC_K, _IVFADC_ITERS)[0]
 
-    ``train`` (default: the full corpus) is the frame the Lloyd
-    iterations and seed selection run over. The registered queries pass
-    the deterministic corpus-capped md5 sample (_train_sample) — the 100 TB
-    shape: faiss trains coarse quantizers on ~100k vectors regardless
-    of corpus size — so only the FINAL assignment scans the corpus.
-    The sample is content-addressed, so the oracles unroll the exact
-    same computation with a WHERE clause; recall premise pinned by
-    tests/test_sampled_training.py."""
-    from pyspark.sql import functions as F
 
-    import math
-
-    cscale = float(_FX_C)
-    if train is None:
-        train = unit
-    seeds = (
-        train.select(
-            "vec_id", "arr", F.md5(F.col("vec_id").cast("string")).alias("h")
-        )
-        .orderBy("h", "vec_id")
-        .limit(_IVFADC_K)
-        .collect()  # scale-ok: K seed rows
-    )
-    centroids = [
-        [math.floor(float(x) * cscale) for x in r.arr] for r in seeds
-    ]
-
-    def assign(df):
-        dists = F.array(*[_fx_dist2(c) for c in centroids])
-        ranked = f"array_sort(arrays_zip(d, sequence(0, {_IVFADC_K - 1})))"
-        return (
-            df.withColumn("d", dists)
-            .withColumn(
-                "cluster",
-                F.expr("CAST(array_position(d, array_min(d)) - 1 AS INT)"),
-            )
-            .withColumn(
-                "probe_lists",
-                F.expr(
-                    f"transform(slice({ranked}, 1, {probe}), "
-                    f"x -> CAST(x['1'] AS INT))"
-                ),
-            )
-            .withColumn(
-                "rep_lists",
-                F.expr(
-                    f"transform(slice({ranked}, 1, {_IVFADC_REP}), "
-                    f"x -> CAST(x['1'] AS INT))"
-                ),
-            )
-            .drop("d")
-        )
-
-    for _ in range(_IVFADC_ITERS):
-        means = (
-            assign(train)
-            .groupBy("cluster")
-            .agg(
-                F.count("*").alias("n"),
-                *[
-                    F.sum(
-                        F.expr(f"CAST(floor(arr[{i}] * {_FX_C}) AS BIGINT)")
-                    ).alias(f"m{i}")
-                    for i in range(64)
-                ],
-            )
-            .collect()  # scale-ok: K centroid rows per Lloyd iteration
-        )
-        by_id = {
-            r.cluster: [r[f"m{i}"] // r.n for i in range(64)] for r in means
-        }
-        centroids = [
-            by_id.get(k, centroids[k]) for k in range(_IVFADC_K)
-        ]
-    return assign(unit), centroids
+def _coarse_lists(unit, cents, probe: int = _IVFADC_PROBE):
+    """Per-vector probe_lists (query side) and rep_lists (corpus side)
+    of the unit vectors against the coarse centroids — the ann_topk_ivf
+    shape, re-expressed over the normalized `arr`."""
+    return _ivf_lists(unit, "arr", cents, probe, _IVFADC_REP)
 
 
 @register(
@@ -1443,8 +1225,8 @@ def ann_topk_ivfadc(spark, sf_dir):
 
     unit = _unit_vectors(spark, sf_dir).persist()
     n_corpus = T(spark, sf_dir, "embeddings").count()  # scale-ok: 1 scalar count
-    tsamp = _train_sample(unit, n_corpus)
-    lists = _coarse_lists(unit, train=tsamp)[0].persist()
+    tsamp = train_sample(unit, n_corpus)
+    lists = _coarse_lists(unit, _coarse_cents(tsamp)).persist()
     codes_piv, qtab_piv, _ = _pq_tables_piv(unit, train=tsamp)
     # Candidates AND scoring in the vectorized ADC kernel: with K <= 64
     # coarse lists the probe/rep membership is one int64 bitmask per
@@ -1576,8 +1358,8 @@ def ann_index_health_report(spark, sf_dir):
 
     unit = _unit_vectors(spark, sf_dir).persist()
     n_corpus = T(spark, sf_dir, "embeddings").count()  # scale-ok: 1 scalar count
-    tsamp = _train_sample(unit, n_corpus)
-    lists = _coarse_lists(unit, train=tsamp)[0]
+    tsamp = train_sample(unit, n_corpus)
+    lists = _coarse_lists(unit, _coarse_cents(tsamp))
     subrows, assign = _pq_train(unit, train=tsamp)
 
     lspine = spark.createDataFrame(
@@ -1602,8 +1384,12 @@ def ann_index_health_report(spark, sf_dir):
             "idx",
             F.coalesce("np", F.lit(0)).cast("long").alias("n_a"),
             F.coalesce("nr", F.lit(0)).cast("long").alias("n_b"),
+            # NULL over an empty corpus, as the oracle's division by zero,
+            # also in an ANSI session
             F.round(
-                F.coalesce("np", F.lit(0)).cast("double") / F.lit(n_corpus),
+                F.try_divide(
+                    F.coalesce("np", F.lit(0)).cast("double"), F.lit(n_corpus)
+                ),
                 6,
             ).alias("share"),
             F.lit(None).cast("long").alias("err_fixed"),
@@ -1667,13 +1453,16 @@ _RES_PROBE = 10  # probed lists per query (single-assignment corpus needs
 
 
 def _cent_case_expr(centroids: list[list[int]], col: str) -> str:
-    """CASE <cluster> -> fixed-point centroid array literal."""
+    """CASE <cluster> -> fixed-point centroid array literal (a typed NULL
+    when no training row left a centroid)."""
     branches = " ".join(
         "WHEN {k} THEN array({lits})".format(
             k=k, lits=", ".join(f"{v}L" for v in centroids[k])
         )
         for k in range(len(centroids))
     )
+    if not branches:
+        return "CAST(NULL AS ARRAY<BIGINT>)"
     return f"CASE {col} {branches} END"
 
 
@@ -1761,10 +1550,8 @@ def ann_topk_ivfadc_residual(spark, sf_dir):
 
     unit = _unit_vectors(spark, sf_dir).persist()
     n_corpus = T(spark, sf_dir, "embeddings").count()  # scale-ok: 1 scalar count
-    lists, ccents = _coarse_lists(
-        unit, probe=_RES_PROBE, train=_train_sample(unit, n_corpus)
-    )
-    lists = lists.persist()
+    ccents = _coarse_cents(train_sample(unit, n_corpus))
+    lists = _coarse_lists(unit, ccents, _RES_PROBE).persist()
 
     def residual(df, cluster_col):
         cent = _cent_case_expr(ccents, cluster_col)
@@ -1778,7 +1565,7 @@ def ann_topk_ivfadc_residual(spark, sf_dir):
         "vec_id", "cluster", residual(lists, "cluster").alias("res")
     )
     subrows, assign = _pq_train(
-        res, arr_col="res", train=_train_sample(res, n_corpus)
+        res, train=train_sample(res, n_corpus), arr_col="res"
     )
     codes = (
         assign(subrows)
@@ -2171,6 +1958,12 @@ _MRL_Q_PRED_DUCK = (
 )
 
 
+def _recall_permille(hits: int, n_q: int):
+    """recall@5 in permille over n_q queries; None with no query, as the
+    oracles' integer division by zero is NULL."""
+    return (1000 * hits) // (5 * n_q) if n_q else None
+
+
 def _dot_spark_d(a: str, b: str, d: int) -> str:
     return " + ".join(
         f"CAST({a}[{i}] AS DOUBLE) * CAST({b}[{i}] AS DOUBLE)"
@@ -2314,7 +2107,7 @@ def ann_dim_truncation_report(spark, sf_dir):
     for d in _MRL_DIMS:
         hits = top(d).join(truth, ["vec_id", "neighbor_id"]).count()
         # scale-ok: the loop is 3 fixed tiers; counts are scalars
-        reports.append((d, n_q, hits, (1000 * hits) // (5 * n_q)))
+        reports.append((d, n_q, hits, _recall_permille(hits, n_q)))
     return spark.createDataFrame(
         reports, "dim int, n_queries bigint, hits bigint, recall_permille bigint"
     )
@@ -2481,7 +2274,7 @@ def ann_nprobe_recall_curve(spark, sf_dir):
             .join(truth, ["vec_id", "neighbor_id"])
             .count()
         )  # scale-ok: fixed 4-tier loop; counts are scalars
-        reports.append((p, n_q, hits, (1000 * hits) // (5 * n_q)))
+        reports.append((p, n_q, hits, _recall_permille(hits, n_q)))
     return spark.createDataFrame(
         reports,
         "nprobe int, n_queries bigint, hits bigint, recall_permille bigint",

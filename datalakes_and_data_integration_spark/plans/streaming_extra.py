@@ -735,10 +735,10 @@ def streaming_ivf_ingest(spark, sf_dir):
     )
     from datalakes_and_data_integration_spark.plans.similarity import (
         _norm2_spark,
+        train_sample,
     )
     from datalakes_and_data_integration_spark.plans.similarity_extra import (
-        _coarse_lists,
-        _train_sample,
+        _coarse_cents,
         _unit_vectors,
     )
     from datalakes_and_data_integration_spark.streaming import (
@@ -747,7 +747,7 @@ def streaming_ivf_ingest(spark, sf_dir):
 
     unit = _unit_vectors(spark, sf_dir).persist()
     n = unit.count()  # scale-ok: 1 scalar count (sample-threshold literal)
-    _, cents = _coarse_lists(unit, train=_train_sample(unit, n))
+    cents = _coarse_cents(train_sample(unit, n))
     e = T(spark, sf_dir, "embeddings")
     src = state_tmp("ivf_ingest_src")
     e.repartition(4).write.mode("overwrite").parquet(src)

@@ -262,11 +262,27 @@ def doc_fingerprint(spark, sf_dir):
     tags=("text", "aggregate", "cube"),
 )
 def doc_stats_cube(spark, sf_dir):
-    d = T(spark, sf_dir, "documents")
-    return d.cube("lang", "source").agg(
-        F.count("*").alias("n_docs"),
-        F.sum("n_chars").alias("total_chars"),
-        F.countDistinct("source").alias("n_sources"),
+    d = T(spark, sf_dir, "documents").select(
+        "lang", "source", "n_chars", F.lit(1).alias("doc")
+    )
+    # Spark's cube expands nothing from no input row, so over an empty
+    # table it would lose the grand-total row that the oracle's CUBE keeps
+    # (SQL's ungrouped aggregate over no rows). One all-NULL row that no
+    # aggregate counts is unioned in; the groups only it makes are dropped.
+    nil = spark.range(1).select(
+        *[F.lit(None).cast(f.dataType).alias(f.name) for f in d.schema]
+    )
+    return (
+        d.unionByName(nil)
+        .cube("lang", "source")
+        .agg(
+            F.count("doc").alias("n_docs"),
+            F.sum("n_chars").alias("total_chars"),
+            F.countDistinct("source").alias("n_sources"),
+            F.grouping_id().alias("gid"),
+        )
+        .where((F.col("n_docs") > 0) | (F.col("gid") == 3))
+        .drop("gid")
     )
 
 

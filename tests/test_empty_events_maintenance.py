@@ -3,8 +3,9 @@ maintained state and an oracle-matching (mostly empty) report from all
 three span-derived weekly maintenance queries — not an AttributeError
 from None.date() inside _weekly_bounds. Also holds the empty-input
 oracle pins of the batch queries whose ungrouped sums used to come out
-NULL where the oracle has 0, and of the hybrid similarity kernels, which
-used to fail on a corpus with no chunk to scan."""
+NULL where the oracle has 0, of the hybrid similarity kernels, which
+used to fail on a corpus with no chunk to scan, and of the ANN tier's
+trained queries, which used to fail with no training row."""
 
 from __future__ import annotations
 
@@ -125,6 +126,61 @@ def test_hybrid_similarity_on_empty_embeddings_matches_oracle(
     empty candidate frame, so the query returns the oracle's 0 rows."""
     sf = _mk_empty_table(str(tmp_path), "embeddings")
     ok, msg = _oracle_match(spark, name, sf)
+    assert ok, msg
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        # compose on the fixed-point k-means trainer
+        "ann_topk_ivf",
+        "ann_topk_pq",
+        "ann_topk_ivfadc",
+        "ann_topk_ivfadc_residual",
+        "ann_index_health_report",
+        "ann_nprobe_recall_curve",
+        "semantic_dedup_assignment",
+        "prototypicality_pruning",
+        "embedding_corpus_manifest",
+        "cluster_label_purity",
+        "streaming_ivf_ingest",
+        # recall over no query, greedy picks from no vector
+        "ann_dim_truncation_report",
+        "coreset_kcenter_selection",
+    ],
+)
+def test_ann_tier_on_empty_embeddings_matches_oracle(spark, tmp_path, name):
+    """No training row leaves no centroid: nothing is assigned, so the
+    trained queries return the oracle's empty (or zero-count) reports
+    instead of failing on a NULL-typed distance array or an empty
+    codebook; the two eval reports divide by no query and pick from no
+    vector the way the oracles do."""
+    sf = _mk_empty_table(str(tmp_path), "embeddings")
+    ok, msg = _oracle_match(spark, name, sf)
+    assert ok, msg
+
+
+def test_index_health_on_empty_embeddings_matches_oracle_under_ansi(
+    spark, tmp_path
+):
+    """The occupancy share divides by the corpus size: over an empty
+    corpus it is the oracle's NULL also in an ANSI session (Spark 4's
+    default), not a DIVIDE_BY_ZERO error."""
+    sf = _mk_empty_table(str(tmp_path), "embeddings")
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        ok, msg = _oracle_match(spark, "ann_index_health_report", sf)
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+    assert ok, msg
+
+
+def test_doc_stats_cube_on_empty_documents_matches_oracle(spark, tmp_path):
+    """The CUBE's grand-total row survives an empty table, as in SQL:
+    (NULL, NULL, 0 docs, NULL chars, 0 sources)."""
+    sf = _mk_empty_table(str(tmp_path), "documents")
+    ok, msg = _oracle_match(spark, "doc_stats_cube", sf)
     assert ok, msg
 
 

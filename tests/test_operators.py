@@ -18,7 +18,6 @@ from datalakes_and_data_integration_spark.operators import (
     lag_pct_change,
     map_convert,
     normalize_column_name,
-    normalize_columns,
     prefix_columns,
 )
 from datalakes_and_data_integration_spark.operators.windows import ordered_window
@@ -32,6 +31,7 @@ class TestNormalize:
         assert normalize_column_name("type d'implantation") == "type_d_implantation"
         assert normalize_column_name("Réglementaire") == "reglementaire"
         assert normalize_column_name("unité de mesure") == "unite_de_mesure"
+        assert normalize_column_name("Valeur") == "valeur"
 
     def test_bom_and_digits(self):
         assert normalize_column_name("﻿Date de début") == "date_de_debut"
@@ -45,10 +45,6 @@ class TestNormalize:
         assert normalize_column_name("pm2.5!") == "pm2_5_"
         assert normalize_column_name("--x--") == "_x_"
         assert normalize_column_name("!2x") == "_2x"
-
-    def test_dataframe_rename(self, spark):
-        df = spark.createDataFrame([(1, 2)], ["Date de début", "Valeur"])
-        assert normalize_columns(df).columns == ["date_de_debut", "valeur"]
 
 
 class TestDedup:

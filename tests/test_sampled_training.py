@@ -30,6 +30,7 @@ def recalls(spark):
         ann_topk_bruteforce,
     )
     from datalakes_and_data_integration_spark.plans.similarity_extra import (
+        _coarse_cents,
         _coarse_lists,
         _exact_rerank,
         _unit_vectors,
@@ -46,7 +47,9 @@ def recalls(spark):
     )
 
     def ivf_pairs(train):
-        lists = _coarse_lists(unit, train=train)[0]
+        lists = _coarse_lists(
+            unit, _coarse_cents(unit if train is None else train)
+        )
         qside = lists.select(
             F.col("vec_id").alias("q_id"),
             F.explode("probe_lists").alias("cluster"),
