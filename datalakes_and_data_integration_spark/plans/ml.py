@@ -4,19 +4,22 @@ The last step of a curation pipeline is often a lightweight model ON the
 lake (a quality classifier over embeddings — the fastText/logreg stage of
 CCNet-style pipelines). Full-batch gradient descent maps exactly onto the
 engine's strengths: each iteration is ONE map-side-combined aggregation
-over the fact table producing a dim-sized gradient (65 values here), the
-driver updates the weight vector (model parameters are dim-sized by
-definition — a scale-ok collect), and the next iteration's plan is rebuilt
-from literals, so lineage stays flat (the IVF k-means pattern, not the
-CC-loop pattern — see NOTES.md lineage hazard).
+over the fact table producing a dim-sized gradient (65 values per model),
+the driver updates the weight vector (model parameters are dim-sized by
+definition — a scale-ok collect), and the next iteration's plan reads the
+weights from one array literal, so lineage stays flat (the IVF k-means
+pattern, not the CC-loop pattern — see NOTES.md lineage hazard). Every GD
+query trains through the one trainer ``_gd``: K models (heads) cost one
+scan per iteration.
 
 Cross-engine EXACT determinism (the interesting part):
 
 - the per-row logit z = b + w_0·x_0 + ... + w_63·x_63 is a FIXED-ORDER
-  left-associated double chain in both engines (Spark inlines the
-  weights as literals; the oracle reads them through scalar subqueries)
-  — SQL engines do not reassociate floating-point addition, so the
-  chains are bit-identical;
+  left-associated double chain in both engines (Spark folds the
+  products of one weight array literal in the chain's order, ``_hof_z``;
+  the oracle reads the weights through scalar subqueries) — SQL engines
+  do not reassociate floating-point addition, so the chains are
+  bit-identical;
 - σ(z) = 1/(1+exp(-z)) in double: exp on bit-identical inputs (the same
   empirical contract as ln in source_lang_entropy);
 - sums ACROSS rows (the gradient reduction, where partition order would
@@ -30,7 +33,7 @@ Cross-engine EXACT determinism (the interesting part):
   ROUND(DECIMAL, 6) recipe, so a 1-ulp transcendental wobble sits ten
   orders below the rounding grid.
 
-At 100 TB: the per-iteration cost is one scan + a 65-column partial
+At 100 TB: the per-iteration cost is one scan + a (dim x heads) partial
 aggregate — no row ever shuffles; only the reduced gradient state moves.
 Swap full-batch for mini-batch sampling or L-BFGS when iterations get
 expensive; the aggregation shape is unchanged.
@@ -146,60 +149,201 @@ def _logreg_oracle() -> str:
     )
 
 
-def _spark_z_chain(w: list[float], b: float) -> str:
-    """The same chunk-associated chain with inlined literal weights.
+_NCHUNKS = _DIM // _CHUNK
+# _hof_z folds exactly _NCHUNKS full chunks; a partial final chunk would
+# be silently DROPPED from z (ADVICE r9) — unlike _assoc_chain, which
+# handles a remainder. Fail loudly if either constant ever changes.
+assert _DIM % _CHUNK == 0, "_hof_z requires _DIM to be a multiple of _CHUNK"
 
-    Spark's `embedding[j]` is 0-based (DuckDB's emb[j+1]); float repr
+
+def _warr_sql(wf: list[float]) -> str:
+    """A weight vector as ONE array literal expression; float repr
     round-trips, so the literals parse to the identical doubles the
-    oracle's pivoted weight row carries.
-    """
-    return _assoc_chain(
-        f"{b!r}D",
-        [f"{w[j]!r}D * CAST(embedding[{j}] AS DOUBLE)" for j in range(_DIM)],
+    oracle's pivoted weight row carries."""
+    return "array(" + ", ".join(f"{v!r}D" for v in wf) + ")"
+
+
+def _hof_terms(warr: str) -> str:
+    """``w_j * x_j`` terms array — the same per-term double product as
+    the oracle's chain, with weights read from an array expression.
+    Spark's ``embedding`` is 0-based where DuckDB's ``emb[j+1]`` is not."""
+    return f"zip_with({warr}, embedding, (wt, x) -> wt * CAST(x AS DOUBLE))"
+
+
+def _hof_z(tcol: str, bias: str) -> str:
+    """Bit-identical higher-order twin of ``_assoc_chain`` over a terms
+    column: the same ``((b + c0) + c1) + ...`` two-level left fold,
+    where chunk ``c_i`` left-folds ``t[8i+1..]`` seeded from ``t[8i]``
+    (seeding from the first term, NOT from 0.0, reproduces the
+    parenthesized chunk exactly — no extra IEEE add).
+
+    The Spark side's one logit form, for training and scoring alike.
+    Inlining 64 weight literals per model instead puts every weight into
+    the generated Java source, which is new each GD iteration, so every
+    iteration paid a large Janino compile (OPTIMIZATION_r09.md: ~3.5 s
+    per iteration for a 0.6 s aggregation at 5 models); the folded
+    array literal is one object the generated code references."""
+    chunks = (
+        f"transform(sequence(0, {_NCHUNKS - 1}), i -> "
+        f"aggregate(slice({tcol}, {_CHUNK} * i + 2, {_CHUNK - 1}), "
+        f"{tcol}[{_CHUNK} * i], (a, v) -> a + v))"
+    )
+    return f"aggregate({chunks}, {bias}, (acc, c) -> acc + c)"
+
+
+def _with_z(df, models):
+    """``df`` plus the logit ``z{h}`` of each head's model; NULL for a
+    head with no model, as the oracles' NULL weight row makes their chain
+    NULL."""
+    t = df.selectExpr(
+        "*",
+        *[
+            f"{_hof_terms(_warr_sql(m[0]))} AS t{h}"
+            for h, m in enumerate(models)
+            if m
+        ],
+    )
+    return t.selectExpr(
+        *df.columns,
+        *[
+            (_hof_z(f"t{h}", f"{m[1]!r}D") if m else "CAST(NULL AS DOUBLE)")
+            + f" AS z{h}"
+            for h, m in enumerate(models)
+        ],
     )
 
 
-def _train(spark, sf_dir, where: str | None = None):
-    """Run the GD loop; returns (labeled frame, weights, bias).
+def _gd(rows, heads):
+    """Train one logistic model per head: ``_ITERS`` full-batch GD
+    iterations of all heads in ONE scan each.
 
-    ``where``: optional SQL predicate restricting the training rows (the
-    held-out split) — it lands directly on the scan as a pushed filter."""
-    e = T(spark, sf_dir, "embeddings")
-    if where is not None:
-        e = e.where(where)
-    e = e.select(
-        "vec_id",
-        "embedding",
-        (F.col("label") == _POS_LABEL).cast("int").alias("y"),
-    )
-    n = e.count()  # scale-ok: 1 scalar (training-set size)
-    w = [0.0] * _DIM
-    b = 0.0
-    for _ in range(_ITERS):
-        sig = e.select(
+    A head is ``(label, mask)``, two SQL predicates over ``rows``: the
+    head's y is ``CAST(label AS INT)`` and it trains on the rows where
+    ``mask`` holds. Each iteration is one aggregate over the exploded
+    embedding grouped by dim, with every head's gradient sum masked in
+    its column; regrouping the identical decimal addends by dim cannot
+    change an exact SUM. The head's row count n is the count(*) of its
+    rows, which rides the first aggregate: ``posexplode_outer`` gives a
+    NULL or empty embedding one (NULL dim) row, so it counts as in the
+    oracles.
+
+    Returns ``(models, n)``: per head ``(w, b)``, or None when the head
+    has no model — no training row, or NULL gradient sums (every
+    embedding NULL). The oracles' SQL NULL arithmetic keeps such a model
+    NULL through the later iterations; each readout maps None onto what
+    its oracle returns."""
+    # a small file scans as ONE partition, which would run the sigmoid
+    # folds, the explode and the partial aggregate on one core; spread is
+    # a no-op where the scan already has a split per core
+    d = (
+        spread(rows, rows.sparkSession, by="vec_id")
+        .selectExpr(
             "embedding",
-            "y",
-            F.expr(f"1.0D / (1.0D + exp(-({_spark_z_chain(w, b)})))").alias(
-                "sig"
-            ),
+            *[f"CAST({lab} AS INT) AS y{h}" for h, (lab, _) in enumerate(heads)],
+            *[f"({mask}) AS m{h}" for h, (_, mask) in enumerate(heads)],
         )
-        grads = sig.agg(
-            *[
-                F.expr(
-                    f"sum(CAST(((CASE WHEN y = 1 THEN {_POS_WEIGHT!r} ELSE 1.0 END)"
-                    f" * (sig - CAST(y AS DOUBLE))) "
-                    f"* CAST(embedding[{j}] AS DOUBLE) AS DECIMAL(38,18)))"
-                ).alias(f"g{j}")
-                for j in range(_DIM)
-            ],
-            F.expr(
-                f"sum(CAST((CASE WHEN y = 1 THEN {_POS_WEIGHT!r} ELSE 1.0 END)"
-                f" * (sig - CAST(y AS DOUBLE)) AS DECIMAL(38,18)))"
-            ).alias("gb"),
-        ).collect()[0]  # scale-ok: one dim-sized gradient row per iteration
-        w = [w[j] - _LR * (float(grads[f"g{j}"]) / n) for j in range(_DIM)]
-        b = b - _LR * (float(grads["gb"]) / n)
-    return e, w, b
+        .persist()  # the iterations share the spread scan
+    )
+    hs = range(len(heads))
+    models = [([0.0] * _DIM, 0.0) for _ in hs]
+    n: list[int] | None = None
+    for _ in range(_ITERS):
+        if not any(models):
+            break
+        agg = (
+            _with_z(d, models)
+            .selectExpr(
+                "embedding",
+                *[f"m{h}" for h in hs],
+                *[
+                    f"((CASE WHEN y{h} = 1 THEN {_POS_WEIGHT!r} ELSE 1.0 END)"
+                    f" * (1.0D / (1.0D + exp(-z{h})) - CAST(y{h} AS DOUBLE)))"
+                    f" AS c{h}"
+                    for h in hs
+                ],
+            )
+            .selectExpr(
+                *[f"m{h}" for h in hs],
+                *[f"c{h}" for h in hs],
+                "posexplode_outer(embedding) AS (dim, x)",
+            )
+            .groupBy("dim")
+            .agg(
+                *[
+                    F.expr(
+                        f"sum(CASE WHEN m{h} THEN CAST(c{h} * CAST(x AS DOUBLE)"
+                        f" AS DECIMAL(38,18)) END)"
+                    ).alias(f"g{h}")
+                    for h in hs
+                ],
+                # one exploded row per input row: dim 0, or the NULL dim
+                # of a NULL or empty embedding
+                *[
+                    F.expr(
+                        f"sum(CASE WHEN m{h} AND dim = 0 THEN"
+                        f" CAST(c{h} AS DECIMAL(38,18)) END)"
+                    ).alias(f"gb{h}")
+                    for h in hs
+                ],
+                *[
+                    F.expr(
+                        f"count(CASE WHEN m{h} AND coalesce(dim, 0) = 0"
+                        f" THEN 1 END)"
+                    ).alias(f"n{h}")
+                    for h in (hs if n is None else ())
+                ],
+            )
+            .collect()  # scale-ok: dim x heads gradient rows per iteration
+        )
+        byd = {r["dim"]: r for r in agg}
+        if n is None:
+            n = [sum(r[f"n{h}"] for r in agg) for h in hs]
+        nxt = []
+        for h, m in enumerate(models):
+            gb = byd[0][f"gb{h}"] if 0 in byd else None
+            if m is None or gb is None:
+                nxt.append(None)
+                continue
+            w, b = m
+            nxt.append(
+                (
+                    [
+                        w[j] - _LR * (float(byd[j][f"g{h}"]) / n[h])
+                        for j in range(_DIM)
+                    ],
+                    b - _LR * (float(gb) / n[h]),
+                )
+            )
+        models = nxt
+    return models, n
+
+
+def _fit(spark, sf_dir, where: str = "TRUE"):
+    """``(model, n)`` of the one-vs-rest head trained on the rows
+    ``where`` holds (the held-out split's predicate lands on the scan as
+    a pushed filter)."""
+    (m,), (n,) = _gd(
+        T(spark, sf_dir, "embeddings").where(where),
+        [(f"label = {_POS_LABEL}", "TRUE")],
+    )
+    return m, n
+
+
+def _scored(spark, sf_dir, where: str, model):
+    """``(y, z)`` of the rows ``where`` holds, scored by ``model``."""
+    rows = T(spark, sf_dir, "embeddings").where(where).selectExpr(
+        "embedding", f"CAST(label = {_POS_LABEL} AS INT) AS y"
+    )
+    return _with_z(rows, [model]).selectExpr("y", "z0 AS z")
+
+
+def _weight_rows(model, n: int) -> list[tuple]:
+    """``(dim, weight)`` rows of one head, the bias as dim -1, as the
+    oracles' final weight table holds them: with no model, a NULL weight
+    per dim when the head had training rows and no dim row when it had
+    none (the bias row is the readout's to keep or drop)."""
+    w, b = model or ([None] * _DIM if n else [], None)
+    return list(enumerate(w)) + [(-1, b)]
 
 
 @register(
@@ -208,10 +352,11 @@ def _train(spark, sf_dir, where: str | None = None):
     description=f"Distributed logistic-regression training ({_ITERS} "
     f"full-batch GD iterations, lr={_LR}, label {_POS_LABEL} vs rest on "
     "the 64-dim embeddings): each iteration is ONE map-side-combined "
-    "65-column aggregate (decimal-exact per-dimension gradient sums over "
-    "fixed-order double sigmoid terms); the driver holds only the "
-    "dim-sized weight vector and rebuilds the next plan from literals "
-    "(flat lineage, IVF pattern). Output: final weights per dimension "
+    "aggregate of 65 decimal-exact gradient sums (the exploded embedding "
+    "grouped by dim, over fixed-order double sigmoid terms); the driver "
+    "holds only the dim-sized weight vector and rebuilds the next plan "
+    "from one array literal of the weights (flat lineage, IVF pattern). "
+    "Output: final weights per dimension "
     "(+ bias as dim -1), decimal-rounded. The oracle unrolls the same "
     "three iterations in SQL — weights match cross-engine EXACTLY "
     "because logits are identical left-associated double chains, row "
@@ -221,9 +366,8 @@ def _train(spark, sf_dir, where: str | None = None):
     tags=("ml", "training", "gradient-descent", "llm-pipeline"),
 )
 def logreg_gd_weights(spark, sf_dir):
-    _, w, b = _train(spark, sf_dir)
     model = spark.createDataFrame(
-        [(j, w[j]) for j in range(_DIM)] + [(-1, b)], "dim int, weight double"
+        _weight_rows(*_fit(spark, sf_dir)), "dim int, weight double"
     )
     return model.select(
         "dim",
@@ -231,63 +375,6 @@ def logreg_gd_weights(spark, sf_dir):
         .cast("double")
         .alias("weight"),
     )
-
-
-def _confusion_oracle() -> str:
-    """Reuse the full training unroll, then one scoring pass. The decision
-    boundary sigma(z) >= 0.5 is exactly z >= 0, so no transcendental sits
-    on the comparison — the predicate is a sign test on bit-identical
-    doubles."""
-    train = _logreg_oracle()
-    with_block = train[: train.rindex("SELECT dim")]
-    pivot_cols = ", ".join(
-        f"max(CASE WHEN dim = {j} THEN w END) AS w{j}" for j in range(_DIM)
-    )
-    return (
-        with_block
-        + f""", wrowF AS (
-      SELECT {pivot_cols}, any_value(b) AS b FROM w{_ITERS}
-    )
-    SELECT r.y AS label_true,
-           ({_oracle_z_chain("wrowF")}) >= 0.0 AS pred_pos,
-           count(*) AS n
-    FROM rows r CROSS JOIN wrowF
-    GROUP BY 1, 2
-    """
-    )
-
-
-@register(
-    "logreg_confusion",
-    oracle=_confusion_oracle(),
-    description="Training-set confusion matrix of the GD-trained logistic "
-    "model (label_true x pred_pos counts): the scoring pass applies the "
-    "learned weights as a literal logit chain, and the decision boundary "
-    "sigma(z)>=0.5 is evaluated as the sign test z>=0 — no transcendental "
-    "on the comparison, so predictions match cross-engine exactly. Scale "
-    "shape: one scan + a 4-cell map-side-combined aggregate; the model "
-    "rides into the executors as plan literals (nothing joins, nothing "
-    "shuffles but the 4 counts).",
-    tags=("ml", "evaluation", "llm-pipeline"),
-)
-def logreg_confusion(spark, sf_dir):
-    e, w, b = _train(spark, sf_dir)
-    return (
-        e.select(
-            F.col("y").alias("label_true"),
-            F.expr(f"({_spark_z_chain(w, b)}) >= 0.0D").alias("pred_pos"),
-        )
-        .groupBy("label_true", "pred_pos")
-        .agg(F.count("*").alias("n"))
-    )
-
-
-# ---------------------------------------------------------------------------
-# Held-out evaluation: the honest generalization number. Train on the
-# md5-hash 80% split of vec_id (the same deterministic splitter as
-# dataset_split_assignment — no rand(), stable on any cluster), score the
-# disjoint >=90% test split. Same exactness contract as logreg_confusion.
-# ---------------------------------------------------------------------------
 
 
 def _trained_with_block(train_pred: str | None = None) -> str:
@@ -314,6 +401,61 @@ def _trained_with_block(train_pred: str | None = None) -> str:
       SELECT {pivot_cols}, any_value(b) AS b FROM w{_ITERS}
     )"""
     )
+
+
+def _confusion_oracle() -> str:
+    """Reuse the full training unroll, then one scoring pass. The decision
+    boundary sigma(z) >= 0.5 is exactly z >= 0, so no transcendental sits
+    on the comparison — the predicate is a sign test on bit-identical
+    doubles."""
+    return (
+        _trained_with_block()
+        + f"""
+    SELECT r.y AS label_true,
+           ({_oracle_z_chain("wrowF")}) >= 0.0 AS pred_pos,
+           count(*) AS n
+    FROM rows r CROSS JOIN wrowF
+    GROUP BY 1, 2
+    """
+    )
+
+
+@register(
+    "logreg_confusion",
+    oracle=_confusion_oracle(),
+    description="Training-set confusion matrix of the GD-trained logistic "
+    "model (label_true x pred_pos counts): the scoring pass folds the "
+    "learned weights' array literal into the fixed-order logit chain, "
+    "and the decision boundary "
+    "sigma(z)>=0.5 is evaluated as the sign test z>=0 — no transcendental "
+    "on the comparison, so predictions match cross-engine exactly. Scale "
+    "shape: one scan + a 4-cell map-side-combined aggregate; the model "
+    "rides into the executors as one array literal (nothing joins, "
+    "nothing shuffles but the 4 counts).",
+    tags=("ml", "evaluation", "llm-pipeline"),
+)
+def logreg_confusion(spark, sf_dir):
+    return _confusion(spark, sf_dir, "TRUE", "TRUE")
+
+
+def _confusion(spark, sf_dir, train_pred: str, test_pred: str):
+    """Confusion counts of the rows ``test_pred`` holds under the model
+    trained on the rows ``train_pred`` holds."""
+    m, _ = _fit(spark, sf_dir, train_pred)
+    return (
+        _scored(spark, sf_dir, test_pred, m)
+        .selectExpr("y AS label_true", "z >= 0.0D AS pred_pos")
+        .groupBy("label_true", "pred_pos")
+        .agg(F.count("*").alias("n"))
+    )
+
+
+# ---------------------------------------------------------------------------
+# Held-out evaluation: the honest generalization number. Train on the
+# md5-hash 80% split of vec_id (the same deterministic splitter as
+# dataset_split_assignment — no rand(), stable on any cluster), score the
+# disjoint >=90% test split. Same exactness contract as logreg_confusion.
+# ---------------------------------------------------------------------------
 
 
 def _split_pred_duck() -> tuple[str, str]:
@@ -370,41 +512,18 @@ def _holdout_oracle() -> str:
     tags=("ml", "evaluation", "split", "llm-pipeline"),
 )
 def logreg_holdout_eval(spark, sf_dir):
-    train_pred, test_pred = _split_pred_spark()
-    e, w, b = _train(spark, sf_dir, where=train_pred)
-    test = T(spark, sf_dir, "embeddings").where(test_pred).select(
-        "embedding",
-        (F.col("label") == _POS_LABEL).cast("int").alias("y"),
-    )
-    return (
-        test.select(
-            F.col("y").alias("label_true"),
-            F.expr(f"({_spark_z_chain(w, b)}) >= 0.0D").alias("pred_pos"),
-        )
-        .groupBy("label_true", "pred_pos")
-        .agg(F.count("*").alias("n"))
-    )
+    return _confusion(spark, sf_dir, *_split_pred_spark())
 
 
 # ---------------------------------------------------------------------------
 # Multi-head training: all 10 one-vs-rest classifiers in ONE scan per
 # iteration. The scan-amortization story that matters at 100 TB — training
 # K models costs the same data movement as training one: the per-iteration
-# aggregate just grows to K*(dim+1) gradient columns (650+10 here), all
-# map-side-combined, and the driver update is a K x dim literal matrix.
+# aggregate just grows to K masked gradient sums per dim (10 heads x 65
+# here), all map-side-combined, and the driver update is a K x dim matrix.
 # ---------------------------------------------------------------------------
 
 _HEADS = 10
-
-
-def _spark_head_chain(w: list[list[float]], b: list[float], h: int) -> str:
-    return _assoc_chain(
-        f"{b[h]!r}D",
-        [
-            f"{w[h][j]!r}D * CAST(embedding[{j}] AS DOUBLE)"
-            for j in range(_DIM)
-        ],
-    )
 
 
 def _oracle_head_chain(wrow: str, h: int) -> str:
@@ -509,70 +628,30 @@ def _multihead_oracle() -> str:
     description=f"All {_HEADS} one-vs-rest logistic heads trained "
     f"simultaneously ({_ITERS} GD iterations, class weight "
     f"{_POS_WEIGHT}): ONE scan per iteration feeds one map-side-combined "
-    f"{_HEADS * (_DIM + 1)}-column gradient aggregate — training K "
+    f"aggregate of {_HEADS * (_DIM + 1)} gradient sums — training K "
     "models costs the data movement of one, the scan-amortization "
     "property a 100 TB corpus demands. The driver holds the K x dim "
-    "literal weight matrix; exactness contract identical to "
+    "weight matrix, one array literal per head in the plan; exactness "
+    "contract identical to "
     "logreg_gd_weights (fixed-order chains, decimal-SUM gradients, "
     "shared chunked-associativity generator), verified over all 650 "
     "final parameters against the fully-unrolled SQL oracle.",
     tags=("ml", "training", "multi-model", "llm-pipeline"),
 )
 def logreg_multihead_weights(spark, sf_dir):
-    e = T(spark, sf_dir, "embeddings")
-    n = e.count()  # scale-ok: 1 scalar (training-set size)
-    d = e.select(
-        "embedding",
-        "label",
-        *[
-            (F.col("label") == h).cast("int").alias(f"y{h}")
-            for h in range(_HEADS)
-        ],
+    models, n = _gd(
+        T(spark, sf_dir, "embeddings"),
+        [(f"label = {h}", "TRUE") for h in range(_HEADS)],
     )
-    w = [[0.0] * _DIM for _ in range(_HEADS)]
-    b = [0.0] * _HEADS
-    for _ in range(_ITERS):
-        sig = d.select(
-            "embedding",
-            *[F.col(f"y{h}") for h in range(_HEADS)],
-            *[
-                F.expr(
-                    f"1.0D / (1.0D + exp(-({_spark_head_chain(w, b, h)})))"
-                ).alias(f"sig{h}")
-                for h in range(_HEADS)
-            ],
-        )
-        grads = sig.agg(
-            *[
-                F.expr(
-                    f"sum(CAST(((CASE WHEN y{h} = 1 THEN {_POS_WEIGHT!r} "
-                    f"ELSE 1.0 END)"
-                    f" * (sig{h} - CAST(y{h} AS DOUBLE))) "
-                    f"* CAST(embedding[{j}] AS DOUBLE) AS DECIMAL(38,18)))"
-                ).alias(f"g{h}_{j}")
-                for h in range(_HEADS)
-                for j in range(_DIM)
-            ],
-            *[
-                F.expr(
-                    f"sum(CAST((CASE WHEN y{h} = 1 THEN {_POS_WEIGHT!r} "
-                    f"ELSE 1.0 END)"
-                    f" * (sig{h} - CAST(y{h} AS DOUBLE)) AS DECIMAL(38,18)))"
-                ).alias(f"gb{h}")
-                for h in range(_HEADS)
-            ],
-        ).collect()[0]  # scale-ok: one K x dim gradient row per iteration
-        w = [
-            [
-                w[h][j] - _LR * (float(grads[f"g{h}_{j}"]) / n)
-                for j in range(_DIM)
-            ]
-            for h in range(_HEADS)
-        ]
-        b = [b[h] - _LR * (float(grads[f"gb{h}"]) / n) for h in range(_HEADS)]
+    # a head with no training row has no row in the oracle's grouped
+    # weight table, bias included
     model = spark.createDataFrame(
-        [(h, j, w[h][j]) for h in range(_HEADS) for j in range(_DIM)]
-        + [(h, -1, b[h]) for h in range(_HEADS)],
+        [
+            (h, *r)
+            for h in range(_HEADS)
+            if n[h]
+            for r in _weight_rows(models[h], n[h])
+        ],
         "head int, dim int, weight double",
     )
     return model.select(
@@ -724,21 +803,16 @@ def logreg_roc_auc(spark, sf_dir):
     from pyspark.sql import Window
 
     train_pred, test_pred = _split_pred_spark()
-    _, w, b = _train(spark, sf_dir, where=train_pred)
-    scored = (
-        T(spark, sf_dir, "embeddings")
-        .where(test_pred)
-        .select(
-            (F.col("label") == _POS_LABEL).cast("int").alias("y"),
-            F.expr(_spark_z_chain(w, b)).alias("z"),
-        )
-        .persist()  # rank pass + bin pass share the scoring
-    )
+    m, _ = _fit(spark, sf_dir, train_pred)
+    scored = _scored(
+        spark, sf_dir, test_pred, m
+    ).persist()  # rank pass + bin pass share the scoring
     g = scored.groupBy("z").agg(
         F.count("*").cast("long").alias("cnt"),
         F.sum("y").cast("long").alias("pos"),
     )
-    wv = Window.orderBy("z").rowsBetween(Window.unboundedPreceding, -1)  # scale-ok: DISTINCT logit values (the exact-AUC leg; the binned leg below is the bounded-state scale path)
+    # NULL logits (NULL embeddings) sort last, as in the oracle's ORDER BY
+    wv = Window.orderBy(F.col("z").asc_nulls_last()).rowsBetween(Window.unboundedPreceding, -1)  # scale-ok: DISTINCT logit values (the exact-AUC leg; the binned leg below is the bounded-state scale path)
     rk = g.select(
         "cnt",
         "pos",
@@ -934,16 +1008,10 @@ def conformal_prediction_audit(spark, sf_dir):
 
     train_pred, test_pred = _split_pred_spark()
     calib_pred = _calib_pred_spark()
-    _, w, b = _train(spark, sf_dir, where=train_pred)
-    zx = _spark_z_chain(w, b)
+    m, _ = _fit(spark, sf_dir, train_pred)
     calib = (
-        T(spark, sf_dir, "embeddings")
-        .where(calib_pred)
-        .selectExpr(
-            f"CAST(label = {_POS_LABEL} AS INT) AS y",
-            f"CASE WHEN label = {_POS_LABEL} THEN -({zx}) ELSE ({zx}) END"
-            " AS s",
-        )
+        _scored(spark, sf_dir, calib_pred, m)
+        .selectExpr("y", "CASE WHEN y = 1 THEN -z ELSE z END AS s")
         .persist()  # count + distinct-score threshold share the scoring
     )
     n_cal = calib.count()  # scale-ok: 1 scalar (calibration-set size)
@@ -957,7 +1025,8 @@ def conformal_prediction_audit(spark, sf_dir):
         n_cal,
     )
     sg = calib.groupBy("s").agg(F.count("*").cast("long").alias("cnt"))
-    wv = Window.orderBy("s").rowsBetween(  # scale-ok: DISTINCT calibration scores (calibration split is the small sample by design)
+    # NULL scores (NULL embeddings) sort last, as in the oracle's ORDER BY
+    wv = Window.orderBy(F.col("s").asc_nulls_last()).rowsBetween(  # scale-ok: DISTINCT calibration scores (calibration split is the small sample by design)
         Window.unboundedPreceding, 0
     )
     thr = (
@@ -965,13 +1034,7 @@ def conformal_prediction_audit(spark, sf_dir):
         .where(F.col("cum") >= q_index)
         .agg(F.min("s").alias("q"))
     )
-    test = (
-        T(spark, sf_dir, "embeddings")
-        .where(test_pred)
-        .selectExpr(
-            f"CAST(label = {_POS_LABEL} AS INT) AS y", f"({zx}) AS z"
-        )
-    )
+    test = _scored(spark, sf_dir, test_pred, m)
     audit = test.crossJoin(F.broadcast(thr)).agg(  # scale-ok: 1-row threshold broadcast
         F.count("*").cast("long").alias("n_test"),
         F.sum(
@@ -1086,15 +1149,14 @@ def logreg_isotonic_calibration(spark, sf_dir):
     from pyspark.sql import Window
 
     train_pred, test_pred = _split_pred_spark()
-    _, w, b = _train(spark, sf_dir, where=train_pred)
-    z = F.expr(_spark_z_chain(w, b))
+    m, _ = _fit(spark, sf_dir, train_pred)
     bins = (
-        T(spark, sf_dir, "embeddings")
-        .where(test_pred)
+        _scored(spark, sf_dir, test_pred, m)
         .select(
-            (F.col("label") == _POS_LABEL).cast("int").alias("y"),
+            "y",
             F.greatest(
-                F.least(F.floor(F.lit(1000.0) * z), F.lit(7)), F.lit(-8)
+                F.least(F.floor(F.lit(1000.0) * F.col("z")), F.lit(7)),
+                F.lit(-8),
             )
             .cast("long")
             .alias("z_bin"),
@@ -1180,16 +1242,15 @@ def logreg_isotonic_calibration(spark, sf_dir):
 )
 def logreg_calibration_bins(spark, sf_dir):
     train_pred, test_pred = _split_pred_spark()
-    e, w, b = _train(spark, sf_dir, where=train_pred)
-    test = T(spark, sf_dir, "embeddings").where(test_pred).select(
-        "embedding",
-        (F.col("label") == _POS_LABEL).cast("int").alias("y"),
-    )
-    z = F.expr(_spark_z_chain(w, b))
+    m, _ = _fit(spark, sf_dir, train_pred)
     return (
-        test.select(
+        _scored(spark, sf_dir, test_pred, m)
+        .select(
             "y",
-            F.greatest(F.least(F.floor(F.lit(1000.0) * z), F.lit(7)), F.lit(-8))
+            F.greatest(
+                F.least(F.floor(F.lit(1000.0) * F.col("z")), F.lit(7)),
+                F.lit(-8),
+            )
             .cast("long")
             .alias("z_bin"),
         )
@@ -1242,16 +1303,6 @@ def _fold_sql_spark() -> str:
     return f"CAST({b} div 20 AS INT)"
 
 
-def _oracle_fold_chain(wrow: str, f: int) -> str:
-    return _assoc_chain(
-        f"{wrow}.b{f}",
-        [
-            f"{wrow}.w{f}_{j} * CAST(emb[{j + 1}] AS DOUBLE)"
-            for j in range(_DIM)
-        ],
-    )
-
-
 def _kfold_oracle() -> str:
     sig_case = (
         "(CASE h.fold "
@@ -1289,7 +1340,7 @@ def _kfold_oracle() -> str:
             for f in range(_FOLDS)
         )
         sig_cols = ", ".join(
-            f"1.0 / (1.0 + exp(-({_oracle_fold_chain(f'wrow{k}', f)}))) "
+            f"1.0 / (1.0 + exp(-({_oracle_head_chain(f'wrow{k}', f)}))) "
             f"AS sig{f}"
             for f in range(_FOLDS)
         )
@@ -1346,7 +1397,7 @@ def _kfold_oracle() -> str:
     pred_case = (
         "(CASE r.fold "
         + " ".join(
-            f"WHEN {f} THEN ({_oracle_fold_chain('wrowF', f)}) >= 0.0"
+            f"WHEN {f} THEN ({_oracle_head_chain('wrowF', f)}) >= 0.0"
             for f in range(_FOLDS)
         )
         + " END)"
@@ -1362,47 +1413,6 @@ def _kfold_oracle() -> str:
     GROUP BY 1, 2, 3
     """
     )
-
-
-_NCHUNKS = _DIM // _CHUNK
-# _hof_z folds exactly _NCHUNKS full chunks; a partial final chunk would
-# be silently DROPPED from z (ADVICE r9) — unlike _assoc_chain, which
-# handles a remainder. Fail loudly if either constant ever changes.
-assert _DIM % _CHUNK == 0, "_hof_z requires _DIM to be a multiple of _CHUNK"
-
-
-def _warr_sql(wf: list[float]) -> str:
-    """The fold's weight vector as ONE array literal expression."""
-    return "array(" + ", ".join(f"{v!r}D" for v in wf) + ")"
-
-
-def _hof_terms(warr: str) -> str:
-    """``w_j * x_j`` terms array — the same per-term double product as
-    the literal chain, with weights read from an array expression."""
-    return f"zip_with({warr}, embedding, (wt, x) -> wt * CAST(x AS DOUBLE))"
-
-
-def _hof_z(tcol: str, bias: str) -> str:
-    """Bit-identical higher-order twin of ``_assoc_chain`` over a terms
-    column: the same ``((b + c0) + c1) + ...`` two-level left fold,
-    where chunk ``c_i`` left-folds ``t[8i+1..]`` seeded from ``t[8i]``
-    (seeding from the first term, NOT from 0.0, reproduces the
-    parenthesized chunk exactly — no extra IEEE add).
-
-    Why this exists (OPTIMIZATION_r09.md, logreg_kfold_cv): inlining
-    5 x 64 weight literals regenerates ~60 KB of unique codegen source
-    per GD iteration, and Spark's codegen cache keys on source text
-    (fresh expr-ids => guaranteed miss), so every iteration of every run
-    paid a ~3.5 s Janino compile for a 0.6 s aggregation. The HOF form
-    keeps the per-iteration plan a few hundred bytes; measured
-    bit-identical to the literal chain on all fixtures (z, sigma(z), and
-    the decimal gradient sums)."""
-    chunks = (
-        f"transform(sequence(0, {_NCHUNKS - 1}), i -> "
-        f"aggregate(slice({tcol}, {_CHUNK} * i + 2, {_CHUNK - 1}), "
-        f"{tcol}[{_CHUNK} * i], (a, v) -> a + v))"
-    )
-    return f"aggregate({chunks}, {bias}, (acc, c) -> acc + c)"
 
 
 @register(
@@ -1425,138 +1435,27 @@ def _hof_z(tcol: str, bias: str) -> str:
     bench=True,  # round-9 second-session flagship: K models, one scan/iter
 )
 def logreg_kfold_cv(spark, sf_dir):
-    # Optimization round r09: same computation, restructured for plan
-    # overhead — the old form (5 x 64 weight literals inlined into the
-    # sigmoid chains + a 320-column decimal aggregate) generated ~60 KB
-    # of never-cache-hitting codegen source per iteration; Janino
-    # compile dominated (measured 3.5-4 s/iter on a 0.6 s aggregation,
-    # 15.6 s warm total). Now: (1) weights ride in ONE array literal
-    # per fold consumed by bit-identical HOF folds (_hof_z); (2) the
-    # gradient aggregate is posexplode(embedding) + groupBy(dim) with
-    # {_FOLDS} sums per row-grain — decimal SUM is exact and
-    # order-independent, so regrouping the identical addend multiset is
-    # bit-identical; (3) fold counts ride iteration 1's aggregate (one
-    # job saved). Every per-row double op (product order, sigmoid,
-    # decimal cast) is unchanged; the oracle is untouched.
-    # spread: the single-row-group local file scans as ONE partition, so
-    # without it the md5 fold hash, the 5 sigmoid folds, the explode and
-    # the partial aggregate all run on one core (measured ~1.0 s/iter
-    # serial vs ~0.2 s spread; no-op on a real cluster where the scan
-    # already has >= cores splits).
-    e = spread(
-        T(spark, sf_dir, "embeddings"), spark, by="vec_id"
-    ).selectExpr(
-        "vec_id",
-        "embedding",
-        f"CAST(label = {_POS_LABEL} AS INT) AS y",
-        f"{_fold_sql_spark()} AS fold",
-    ).persist()  # 3 GD iterations + scoring share the hashed scan
-    w = [[0.0] * _DIM for _ in range(_FOLDS)]
-    b = [0.0] * _FOLDS
-    n_train: list[int] | None = None
-    for it in range(_ITERS):
-        cf = e.selectExpr(
-            "y",
-            "fold",
-            "embedding",
-            *[f"{_hof_terms(_warr_sql(w[f]))} AS t{f}" for f in range(_FOLDS)],
-        ).selectExpr(
-            "y",
-            "fold",
-            "embedding",
-            *[
-                f"1.0D / (1.0D + exp(-({_hof_z(f't{f}', f'{b[f]!r}D')})))"
-                f" AS sig{f}"
-                for f in range(_FOLDS)
-            ],
-        ).selectExpr(
-            "fold",
-            "embedding",
-            *[
-                f"((CASE WHEN y = 1 THEN {_POS_WEIGHT!r} ELSE 1.0 END)"
-                f" * (sig{f} - CAST(y AS DOUBLE))) AS c{f}"
-                for f in range(_FOLDS)
-            ],
-        )
-        ex = cf.select(
-            "fold",
-            *[f"c{f}" for f in range(_FOLDS)],
-            F.posexplode("embedding").alias("dim", "x"),
-        )
-        rows = ex.groupBy("dim").agg(
-            *[
-                F.expr(
-                    f"sum(CASE WHEN fold <> {f} THEN "
-                    f"CAST(c{f} * CAST(x AS DOUBLE) "
-                    f"AS DECIMAL(38,18)) END)"
-                ).alias(f"g{f}")
-                for f in range(_FOLDS)
-            ],
-            # dim = 0 selects exactly one exploded row per input row
-            # (embeddings are fixed {_DIM}-wide), so these are the
-            # whole-table bias sums / fold counts of the old form.
-            *[
-                F.expr(
-                    f"sum(CASE WHEN dim = 0 AND fold <> {f} THEN "
-                    f"CAST(c{f} AS DECIMAL(38,18)) END)"
-                ).alias(f"gb{f}")
-                for f in range(_FOLDS)
-            ],
-            *(
-                [
-                    F.expr(
-                        f"sum(CASE WHEN dim = 0 AND fold = {f} "
-                        f"THEN 1 END)"
-                    ).alias(f"cnt{f}")
-                    for f in range(_FOLDS)
-                ]
-                if it == 0
-                else []
-            ),
-        ).collect()  # scale-ok: dim x fold gradient rows per iteration
-        byd = {r["dim"]: r for r in rows}
-        if not byd:  # empty/all-null embeddings: posexplode yields zero
-            # rows, so there is no gradient — weights stay at init and
-            # the scoring epilogue below degrades gracefully (ADVICE r9:
-            # byd[0] raised KeyError here where the old agg-row path
-            # returned a null row).
-            break
-        if n_train is None:
-            counts = [int(byd[0][f"cnt{f}"] or 0) for f in range(_FOLDS)]
-            total = sum(counts)
-            n_train = [max(total - counts[f], 1) for f in range(_FOLDS)]
-        w = [
-            [
-                w[f][j]
-                - _LR * (float(byd[j][f"g{f}"] or 0) / n_train[f])
-                for j in range(_DIM)
-            ]
-            for f in range(_FOLDS)
-        ]
-        b = [
-            b[f] - _LR * (float(byd[0][f"gb{f}"] or 0) / n_train[f])
-            for f in range(_FOLDS)
-        ]
+    e = T(spark, sf_dir, "embeddings").selectExpr(
+        "vec_id", "embedding", "label", f"{_fold_sql_spark()} AS fold"
+    )
+    models, _ = _gd(
+        e, [(f"label = {_POS_LABEL}", f"fold <> {f}") for f in range(_FOLDS)]
+    )
+    # a fold with no model keeps its zero weights, as the oracle's
+    # coalesce(sum, 0) / greatest(n, 1) does
+    models = [m or ([0.0] * _DIM, 0.0) for m in models]
     pred_case = (
         "(CASE fold "
         + " ".join(f"WHEN {f} THEN (z{f} >= 0.0D)" for f in range(_FOLDS))
         + " END)"
     )
     return (
-        e.selectExpr(
-            "fold",
-            "y",
-            *[f"{_hof_terms(_warr_sql(w[f]))} AS t{f}" for f in range(_FOLDS)],
-        )
+        _with_z(e, models)
         .selectExpr(
             "fold",
-            "y",
-            *[
-                f"{_hof_z(f't{f}', f'{b[f]!r}D')} AS z{f}"
-                for f in range(_FOLDS)
-            ],
+            f"CAST(label = {_POS_LABEL} AS INT) AS label_true",
+            f"{pred_case} AS pred_pos",
         )
-        .selectExpr("fold", "y AS label_true", f"{pred_case} AS pred_pos")
         .groupBy("fold", "label_true", "pred_pos")
         .agg(F.count("*").cast("long").alias("n"))
     )
@@ -1696,8 +1595,14 @@ def coreset_kcenter_selection(spark, sf_dir):
     first = head[0]
     picks = [(1, first.vec_id, 0)]
 
-    def _quant(emb) -> list[int]:
-        return [_m.floor(float(x) * 1e9) for x in emb]
+    def _quant(emb) -> list:
+        # a NULL coordinate (every coordinate of a NULL or empty pick)
+        # quantizes to NULL, so its distance terms are NULL, as the
+        # oracle's are
+        return [
+            "NULL" if x is None else _m.floor(float(x) * 1e9)
+            for x in (emb or [None] * _DIM)
+        ]
 
     q = _quant(first.embedding)
     chain = _assoc_chain(
@@ -1714,7 +1619,7 @@ def coreset_kcenter_selection(spark, sf_dir):
             .limit(1)
             .collect()[0]  # scale-ok: 1 selected exemplar row per greedy step
         )
-        picks.append((k, far.vec_id, int(far.dmin)))
+        picks.append((k, far.vec_id, far.dmin))
         q = _quant(far.embedding)
         chain = _assoc_chain(
             "CAST(0 AS BIGINT)",
@@ -2075,15 +1980,9 @@ def _brier_oracle() -> str:
 )
 def logreg_brier_decomposition(spark, sf_dir):
     train_pred, test_pred = _split_pred_spark()
-    e, w, b = _train(spark, sf_dir, where=train_pred)
-    z = _spark_z_chain(w, b)
+    m, _ = _fit(spark, sf_dir, train_pred)
     binned = (
-        T(spark, sf_dir, "embeddings")
-        .where(test_pred)
-        .select(
-            (F.col("label") == _POS_LABEL).cast("int").alias("y"),
-            F.expr(z).alias("z"),
-        )
+        _scored(spark, sf_dir, test_pred, m)
         .select(
             "y",
             F.expr("1.0 / (1.0 + exp(0.0 - z))").alias("p"),

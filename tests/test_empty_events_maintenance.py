@@ -4,8 +4,10 @@ three span-derived weekly maintenance queries — not an AttributeError
 from None.date() inside _weekly_bounds. Also holds the empty-input
 oracle pins of the batch queries whose ungrouped sums used to come out
 NULL where the oracle has 0, of the hybrid similarity kernels, which
-used to fail on a corpus with no chunk to scan, and of the ANN tier's
-trained queries, which used to fail with no training row."""
+used to fail on a corpus with no chunk to scan, of the ANN tier's
+trained queries, which used to fail with no training row, and of the
+ML tier's queries on degenerate embeddings (none, one row in one split
+bucket, all NULL or some NULL)."""
 
 from __future__ import annotations
 
@@ -191,4 +193,83 @@ def test_continuous_aggregate_on_empty_events_matches_oracle(spark, tmp_path):
     0 rows."""
     sf = _mk_empty_table(str(tmp_path), "events")
     ok, msg = _oracle_match(spark, "continuous_aggregate_daily", sf)
+    assert ok, msg
+
+
+def _mk_embeddings(tmpdir: str, fixture: str) -> str:
+    """sf0.001 ``embeddings`` cut down to one degenerate ``fixture``: no
+    row, the first row of one md5 split bucket (train [0,80), calibration
+    [80,90), test [90,100)), every row with a NULL embedding, or every
+    seventh."""
+    from __spark_entry__ import SMOKE_SF_DIR
+    from datalakes_and_data_integration_spark.plans.ml import (
+        _calib_pred_duck,
+        _split_pred_duck,
+    )
+
+    train, test = _split_pred_duck()
+    bucket = {"train_row": train, "calib_row": _calib_pred_duck(), "test_row": test}
+    if fixture == "empty":
+        rows = "SELECT * FROM e WHERE FALSE"
+    elif fixture == "null_embedding":
+        rows = "SELECT * REPLACE (CAST(NULL AS FLOAT[]) AS embedding) FROM e"
+    elif fixture == "some_null_embeddings":
+        rows = (
+            "SELECT * REPLACE (CASE WHEN vec_id % 7 = 3 THEN NULL"
+            " ELSE embedding END AS embedding) FROM e"
+        )
+    else:
+        rows = f"SELECT * FROM e WHERE {bucket[fixture]} ORDER BY vec_id LIMIT 1"
+    con = duckdb.connect()
+    con.execute(
+        f"""
+        COPY (
+          WITH e AS (
+            SELECT * FROM read_parquet('{SMOKE_SF_DIR}/embeddings.parquet')
+          )
+          {rows}
+        ) TO '{tmpdir}/embeddings.parquet' (FORMAT PARQUET)
+        """
+    )
+    con.close()
+    return tmpdir
+
+
+@pytest.mark.parametrize(
+    "fixture",
+    [
+        "empty",
+        "train_row",
+        "calib_row",
+        "test_row",
+        "null_embedding",
+        "some_null_embeddings",
+    ],
+)
+@pytest.mark.parametrize(
+    "name",
+    [
+        "logreg_gd_weights",
+        "logreg_confusion",
+        "logreg_holdout_eval",
+        "logreg_multihead_weights",
+        "logreg_roc_auc",
+        "conformal_prediction_audit",
+        "logreg_isotonic_calibration",
+        "logreg_calibration_bins",
+        "logreg_brier_decomposition",
+        "logreg_kfold_cv",
+        "coreset_kcenter_selection",
+    ],
+)
+def test_ml_tier_on_degenerate_embeddings_matches_oracle(
+    spark, tmp_path, name, fixture
+):
+    """A head with no training row, or only NULL embeddings, has no model:
+    the weights and logits are the oracles' NULLs (k-fold keeps its zero
+    weights, as its oracle's coalesce does), a k-center pick with a NULL
+    embedding is at a NULL distance, and a NULL logit or conformal score
+    sorts last in the rank windows, as in the oracles."""
+    sf = _mk_embeddings(str(tmp_path), fixture)
+    ok, msg = _oracle_match(spark, name, sf)
     assert ok, msg

@@ -1,13 +1,14 @@
 """Round-9 optimization round: internals changed for speed must stay
 bit-identical to the forms the oracles pin.
 
-logreg_kfold_cv's sigmoid chain moved from 5 x 64 inlined weight
-literals (unique ~60 KB codegen source per GD iteration -> a Janino
-compile per iteration per run) to higher-order folds over ONE weight
-array literal (_hof_z). The oracle gate proves end-to-end equality; this
-test pins the sharper claim the rewrite rests on: the HOF fold is
-BIT-identical to the _assoc_chain tree per row, so any future drift in
-chunking or seeding fails fast with a named culprit.
+The Spark logit moved from 64 inlined weight literals per model
+(unique codegen source per GD iteration -> a Janino compile per
+iteration per run) to higher-order folds over ONE weight array literal
+(_hof_z), now the one logit form of the trainer and of every scoring
+pass. The oracle gate proves end-to-end equality; this test pins the
+sharper claim the rewrite rests on: the HOF fold is BIT-identical to
+the _assoc_chain tree per row, so any future drift in chunking or
+seeding fails fast with a named culprit.
 """
 
 from __future__ import annotations
@@ -52,26 +53,26 @@ def test_hof_z_bitwise_equals_assoc_chain(spark):
 
 
 def test_kfold_counts_match_groupby(spark):
-    """The fold counts now ride iteration 1's exploded aggregate via the
-    dim = 0 slice; that equals groupBy(fold).count() exactly when every
-    embedding explodes to >= 1 element — pin that invariant and the
-    count equality."""
-    e = T(spark, SF, "embeddings").selectExpr(
-        "vec_id",
-        "embedding",
-        f"{ml._fold_sql_spark()} AS fold",
+    """The trainer's per-head row count rides its first exploded
+    aggregate (the posexplode_outer rows at dim 0 or at the NULL dim of
+    a NULL or empty embedding); it must equal groupBy(fold).count()
+    exactly, such embeddings included, as every oracle counts them."""
+    e = (
+        T(spark, SF, "embeddings")
+        .unionByName(
+            spark.createDataFrame(
+                [(-1, None, 0), (-2, [], 1)],
+                "vec_id long, embedding array<float>, label int",
+            )
+        )
+        .selectExpr("*", f"{ml._fold_sql_spark()} AS fold")
     )
-    assert e.filter(F.expr("size(embedding) < 1")).count() == 0
     direct = {
         r["fold"]: r["cnt"]
         for r in e.groupBy("fold").agg(F.count("*").alias("cnt")).collect()
     }
-    via_dim0 = {
-        r["fold"]: r["cnt"]
-        for r in e.select("fold", F.posexplode("embedding").alias("dim", "x"))
-        .filter("dim = 0")
-        .groupBy("fold")
-        .agg(F.count("*").alias("cnt"))
-        .collect()
-    }
-    assert direct == via_dim0
+    _, n = ml._gd(
+        e,
+        [(f"label = {ml._POS_LABEL}", f"fold = {f}") for f in range(ml._FOLDS)],
+    )
+    assert n == [direct.get(f, 0) for f in range(ml._FOLDS)]

@@ -22,34 +22,22 @@ SF = "/root/testdata/sf0.001"
 def trained(spark):
     """One GD run on the sf0.001 80% split, shared by the ML trio."""
     from datalakes_and_data_integration_spark.plans.ml import (
+        _fit,
         _split_pred_spark,
-        _train,
     )
 
     train_pred, test_pred = _split_pred_spark()
-    _, w, b = _train(spark, SF, where=train_pred)
-    return w, b, test_pred
+    model, _ = _fit(spark, SF, train_pred)
+    return model, test_pred
 
 
 def _test_scored(spark, trained):
-    from pyspark.sql import functions as F
+    from datalakes_and_data_integration_spark.plans.ml import _scored
 
-    from datalakes_and_data_integration_spark.plans.ml import (
-        _POS_LABEL,
-        _spark_z_chain,
-    )
-    from datalakes_and_data_integration_spark.plans._util import T
-
-    w, b, test_pred = trained
-    return (
-        T(spark, SF, "embeddings")
-        .where(test_pred)
-        .select(
-            (F.col("label") == _POS_LABEL).cast("int").alias("y"),
-            F.expr(_spark_z_chain(w, b)).alias("z"),
-        )
-        .collect()
-    )  # scale-ok: test fixture collect at sf0.001
+    model, test_pred = trained
+    return _scored(
+        spark, SF, test_pred, model
+    ).collect()  # scale-ok: test fixture collect at sf0.001
 
 
 def _midrank_auc(pairs):
@@ -151,25 +139,15 @@ def test_conformal_threshold_and_coverage_recompute(spark, trained):
         _CONF_ALPHA_DEN,
         _CONF_ALPHA_NUM,
         _calib_pred_spark,
-        _POS_LABEL,
-        _spark_z_chain,
+        _scored,
         conformal_prediction_audit,
     )
-    from pyspark.sql import functions as F
-
-    from datalakes_and_data_integration_spark.plans._util import T
 
     row = conformal_prediction_audit(spark, SF).collect()[0]
-    w, b, test_pred = trained
-    calib = (
-        T(spark, SF, "embeddings")
-        .where(_calib_pred_spark())
-        .select(
-            (F.col("label") == _POS_LABEL).cast("int").alias("y"),
-            F.expr(_spark_z_chain(w, b)).alias("z"),
-        )
-        .collect()
-    )  # scale-ok: test fixture collect at sf0.001
+    model, test_pred = trained
+    calib = _scored(
+        spark, SF, _calib_pred_spark(), model
+    ).collect()  # scale-ok: test fixture collect at sf0.001
     scores = sorted((-r.z if r.y == 1 else r.z) for r in calib)
     n_cal = len(scores)
     q_idx = min(

@@ -723,14 +723,10 @@ def test_brier_decomposition_matches_python_recompute(spark):
     identity Brier = REL - RES + UNC + within-bin-variance must hold."""
     import math
 
-    from pyspark.sql import functions as F
-
-    from datalakes_and_data_integration_spark.plans._util import T
     from datalakes_and_data_integration_spark.plans.ml import (
-        _POS_LABEL,
-        _spark_z_chain,
+        _fit,
+        _scored,
         _split_pred_spark,
-        _train,
         logreg_brier_decomposition,
     )
 
@@ -740,16 +736,8 @@ def test_brier_decomposition_matches_python_recompute(spark):
     got = {r.bin: r for r in out}
 
     train_pred, test_pred = _split_pred_spark()
-    _, w, b = _train(spark, SF01, where=train_pred)
-    rows = (
-        T(spark, SF01, "embeddings")
-        .where(test_pred)
-        .select(
-            (F.col("label") == _POS_LABEL).cast("int").alias("y"),
-            F.expr(_spark_z_chain(w, b)).alias("z"),
-        )
-        .collect()
-    )
+    model, _ = _fit(spark, SF01, train_pred)
+    rows = _scored(spark, SF01, test_pred, model).collect()
     from collections import defaultdict
 
     bins = defaultdict(list)
