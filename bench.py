@@ -163,6 +163,17 @@ def main() -> None:
 _CALIB_PAR_REF = 0.337
 
 
+def window_stamp(calib_par: float) -> dict:
+    """Window self-description (VERDICT r8 #1): the parallel anchor's
+    ratio to the healthy-host reference. ~1.0 = full multi-core
+    throughput; >1.5 = the capture window was core-throttled and every
+    Spark number taken in it under-measures the engine; -1.0 = the
+    anchor could not run. The one rule for bench.py and the ladder
+    probes (tools/_ladder_common.py)."""
+    ratio = round(calib_par / _CALIB_PAR_REF, 2) if calib_par > 0 else -1.0
+    return {"calib_par_ratio": ratio, "throttled_window": bool(ratio > 1.5)}
+
+
 def build_outputs(
     times: dict[str, float],
     cold: dict[str, float],
@@ -176,11 +187,7 @@ def build_outputs(
     bounded (~250 bytes) no matter how large the headline set grows —
     tests/test_plan_shapes.py pins it under 1 KB.
     """
-    # Window self-description (VERDICT r8 #1): the parallel anchor's
-    # ratio to the healthy-host reference. ~1.0 = full multi-core
-    # throughput; >1.5 = the capture window was core-throttled and every
-    # Spark number in this JSON under-measures the engine.
-    par_ratio = round(calib_par / _CALIB_PAR_REF, 2) if calib_par > 0 else -1.0
+    stamp = window_stamp(calib_par)
     detail = {
         "metric": "headline_queries_wall_clock",
         "value": round(sum(times.values()), 3),
@@ -191,8 +198,7 @@ def build_outputs(
         "sf": sf,
         "cpu_calib_sec": calib,
         "cpu_calib_par_sec": calib_par,
-        "calib_par_ratio": par_ratio,
-        "throttled_window": bool(par_ratio > 1.5),
+        **stamp,
         # Round-over-round comparison note (VERDICT r9 "what's wrong" #2):
         # the declared-query window rotates every round, so PERF's
         # per-query channel can go empty — the BENCH key set is the
@@ -210,8 +216,7 @@ def build_outputs(
         "sf": sf,
         "cpu_calib_sec": calib,
         "cpu_calib_par_sec": calib_par,
-        "calib_par_ratio": par_ratio,
-        "throttled_window": detail["throttled_window"],
+        **stamp,
         "detail": "BENCH_DETAIL.json",
     }
     return detail, summary

@@ -5,7 +5,7 @@ pipeline operators (dedup, similarity search, text analysis, multimodal).
 
 Layout:
     session     SparkSession factory tuned for local[N] testing / cluster scale
-    sources     readers & writers (CSV landing zone, parquet, JDBC-shaped sinks)
+    sources     readers & writers (CSV landing zone, staged parquet, Postgres COPY)
     operators   relational + time-series operators (dedup, windows, impute, ...)
     functions   scalar/column function libraries (text, similarity, hashing)
     plans       the declared query inventory + matching DuckDB oracle SQL

@@ -25,7 +25,6 @@ from datalakes_and_data_integration_spark.operators.impute import (
 )
 from datalakes_and_data_integration_spark.operators.convert import (
     horizontal_sum,
-    map_convert,
     unit_factor,
 )
 from datalakes_and_data_integration_spark.operators.windows import (
@@ -47,7 +46,6 @@ __all__ = [
     "impute_mean",
     "mean_exprs",
     "horizontal_sum",
-    "map_convert",
     "unit_factor",
     "bfill_rev",
     "ffill",

@@ -1,10 +1,10 @@
 """Value-map conversion and horizontal aggregation (reference F4/F5/A4).
 
-- ``map_convert``: the reference maps unit strings to factors through a dict
+- ``unit_factor``: the reference maps unit strings to factors through a dict
   where unmapped units become NaN, nulling the converted value
   (`/root/reference/src/process_to_curated.py:35-39,57-66`). Spark: a
-  ``CASE WHEN`` chain (or ``create_map``) — unmatched -> null, same
-  semantics, fully codegen'd.
+  ``CASE WHEN`` chain — unmatched -> null, same semantics, fully
+  codegen'd; gold multiplies each value by it.
 - ``horizontal_sum``: row-wise NaN-skipping sum across a column group; the
   reference uses a per-row Python loop (`process_to_curated.py:84-94`) or
   ``np.nansum`` with an all-null->NaN guard (`faster_process_to_curated.py:
@@ -17,13 +17,13 @@ from __future__ import annotations
 from collections.abc import Mapping, Sequence
 from functools import reduce
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
 def unit_factor(key_col: str, factors: Mapping[str, float]) -> Column:
     """``factors[key_col]`` as a column; unmapped key -> null (reference
-    F4). Shared by ``map_convert`` and the gold conversion projection."""
+    F4), used by the gold conversion projection."""
     factor: Column = F.lit(None).cast("double")
     # Build when-chain in deterministic (sorted) key order.
     chain = None
@@ -33,17 +33,6 @@ def unit_factor(key_col: str, factors: Mapping[str, float]) -> Column:
             cond, F.lit(factors[k])
         )
     return chain.otherwise(factor) if chain is not None else factor
-
-
-def map_convert(
-    df: DataFrame,
-    value_col: str,
-    key_col: str,
-    factors: Mapping[str, float],
-    out_col: str,
-) -> DataFrame:
-    """``out = value * factors[key]``; unmapped key -> null (reference F4)."""
-    return df.withColumn(out_col, F.col(value_col) * unit_factor(key_col, factors))
 
 
 def horizontal_sum(cols: Sequence[str | Column]) -> Column:

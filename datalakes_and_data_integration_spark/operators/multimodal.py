@@ -1,7 +1,7 @@
 """Multimodal columns: opaque binary payloads + typed metadata.
 
 Design (BASELINE.json north star): image/audio/video travel as ``binary``
-columns with a typed metadata struct; decode / feature-extract / resize /
+columns with a typed metadata struct; decode / feature-extract /
 frame-sample run as Arrow-batched pandas functions over ``mapInPandas`` —
 the only part of the engine where Python touches row data, because media
 codecs don't exist as Spark expressions.
@@ -152,45 +152,6 @@ def sample_frames(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
             yield pd.DataFrame(out)
 
     return df.select(id_col, "payload").mapInPandas(_sample, FRAME_SCHEMA)
-
-
-RESIZE_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("width", T.LongType()),
-        T.StructField("height", T.LongType()),
-        T.StructField("resized_width", T.LongType()),
-        T.StructField("resized_height", T.LongType()),
-        T.StructField("thumb_md5", T.StringType()),
-    ]
-)
-
-
-def resize_images(
-    df: DataFrame, id_col: str = "doc_id", max_dim: int = 128
-) -> DataFrame:
-    """Image resize, stubbed: halve the (fake-decoded) dimensions until both
-    fit ``max_dim`` and emit a thumbnail digest (md5 of the payload head —
-    a real codec emits re-encoded bytes; the batch shape is identical)."""
-
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k.name: [] for k in RESIZE_SCHEMA.fields}
-            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
-                b = bytes(payload)
-                w, h = decode_image(b, fake=True)
-                rw, rh = w, h
-                while rw > max_dim or rh > max_dim:
-                    rw, rh = rw // 2, rh // 2
-                rows["doc_id"].append(doc_id)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["resized_width"].append(rw)
-                rows["resized_height"].append(rh)
-                rows["thumb_md5"].append(hashlib.md5(b[:64]).hexdigest())
-            yield pd.DataFrame(rows)
-
-    return df.select(id_col, "payload").mapInPandas(_resize, RESIZE_SCHEMA)
 
 
 AUDIO_SCHEMA = T.StructType(

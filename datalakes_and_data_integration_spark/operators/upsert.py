@@ -12,12 +12,12 @@ Spark-native equivalents:
   INSERT`` on an engine without Delta's transaction log. The keys match
   with ``<=>``: a key cell that failed to parse (a NULL date) still names
   one row, so re-delivering it is a no-op, as in the LWT.
-- ``upsert_parquet``: the same, against a parquet directory, written
-  through ``sources.sinks.write_staged`` (stage, then swap into place).
-  On a Delta/Iceberg table the swap is replaced by a real MERGE; the
-  dataflow is identical. The silver zone (pipeline/silver.py) is this
-  MERGE over a pollutant-partitioned table: there is one build, and a
-  from-scratch rebuild is a MERGE into an empty dir.
+- against a parquet directory: ``read_table`` the live table, then
+  ``merge_new_only`` and ``sources.sinks.write_staged`` (stage, then swap
+  into place). On a Delta/Iceberg table the swap is replaced by a real
+  MERGE; the dataflow is identical. The silver zone (pipeline/silver.py)
+  is this MERGE over a pollutant-partitioned table: there is one build,
+  and a from-scratch rebuild is a MERGE into an empty dir.
 
 Tables kept under other merge rules commit through ``merge_state`` or
 the same staged write. An additive MERGE (measures that sum, min or max on key collision) is
@@ -44,10 +44,6 @@ from datalakes_and_data_integration_spark.operators.dedup import (
     dedup_keep_first,
 )
 from datalakes_and_data_integration_spark.operators.merge import keys_match
-from datalakes_and_data_integration_spark.sources.sinks import (  # noqa: F401
-    swap_dir,
-    write_staged,
-)
 
 
 def read_table(
@@ -87,19 +83,4 @@ def merge_new_only(
         old_keys, keys_match("n", "o", keys), "left_anti"
     )
     return existing.unionByName(fresh)
-
-
-def upsert_parquet(
-    spark: SparkSession,
-    table_dir: str,
-    updates: DataFrame,
-    keys: Sequence[str],
-    order_by: Sequence | None = None,
-) -> DataFrame:
-    """MERGE-new-only into a parquet directory, atomically (stage + swap)."""
-    existing = read_table(spark, table_dir, updates.schema)
-    write_staged(
-        merge_new_only(existing, updates, keys, order_by=order_by), table_dir
-    )
-    return spark.read.parquet(table_dir)
 

@@ -372,9 +372,9 @@ def _zorder_oracle() -> str:
     "bucket IS the code's top bits) so no global single-reducer sort "
     "exists in the plan; the oracle is the naive one-window ROW_NUMBER, "
     "and the driver hash match proves the two-pass form equal. At 100 TB "
-    "the physical rewrite is repartitionByRange(z) + sortWithinPartitions "
-    "(operators.layout.zorder_layout); this query is its planning/audit "
-    "half.",
+    "the physical rewrite is repartitionByRange(z) + "
+    "sortWithinPartitions(z) into the table format's OPTIMIZE; this query "
+    "is its planning/audit half.",
     tags=("layout", "maintenance", "zorder", "scale"),
 )
 def zorder_layout_plan(spark, sf_dir):

@@ -152,6 +152,25 @@ def _rho_case(v: str) -> str:
     return f"CASE {branches} ELSE {_HLL_VBITS + 1} END"
 
 
+def hll_regs(df, *groups: str):
+    """(groups..., reg, mrho) register file for distinct ``user_id`` per
+    ``groups`` (none: one sketch over ``df``) — THE single Spark copy of
+    the register build: md5-derived 60-bit hash -> register index + value
+    bits, distinct, rank, grouped max. Register files merge by per-register
+    max, the algebra ``merge_state`` maintains them under."""
+    h = hash60_sql_spark("CAST(user_id AS STRING)", seed=7)
+    hashed = df.select(
+        *groups,
+        F.expr(f"({h}) % {_HLL_M}").alias("reg"),
+        F.expr(f"(({h}) div {_HLL_M}) % {1 << _HLL_VBITS}").alias("val"),
+    ).distinct()
+    return (
+        hashed.select(*groups, "reg", F.expr(_rho_case("val")).alias("rho"))
+        .groupBy(*groups, "reg")
+        .agg(F.max("rho").alias("mrho"))
+    )
+
+
 def _hll_oracle() -> str:
     h = hash60_sql_duck("CAST(user_id AS VARCHAR)", seed=7)
     reg = f"({h}) % {_HLL_M}"
@@ -217,18 +236,9 @@ def _hll_oracle() -> str:
 )
 def distinct_count_hll(spark, sf_dir):
     ev = T(spark, sf_dir, "events")
-    h = hash60_sql_spark("CAST(user_id AS STRING)", seed=7)
-    reg = F.expr(f"({h}) % {_HLL_M}")
-    val = F.expr(f"(({h}) div {_HLL_M}) % {1 << _HLL_VBITS}")
-    hashed = ev.select(
-        "event_type", reg.alias("reg"), val.alias("val")
-    ).distinct()
-    ranked = hashed.select(
-        "event_type", "reg", F.expr(_rho_case("val")).alias("rho")
-    )
-    regs = ranked.groupBy("event_type", "reg").agg(F.max("rho").alias("mrho"))
     corrected = (
-        regs.groupBy("event_type")
+        hll_regs(ev, "event_type")
+        .groupBy("event_type")
         .agg(*hll_sum_aggs())
         .select("event_type", hll_corrected_col().alias("e"))
     )
@@ -475,29 +485,12 @@ def _hll_merge_oracle() -> str:
     """
 
 
-def _hll_regs_spark(ev, event_type: str):
-    h = hash60_sql_spark("CAST(user_id AS STRING)", seed=7)
-    hashed = (
-        ev.filter(F.col("event_type") == event_type)
-        .select(
-            F.expr(f"({h}) % {_HLL_M}").alias("reg"),
-            F.expr(f"(({h}) div {_HLL_M}) % {1 << _HLL_VBITS}").alias("val"),
-        )
-        .distinct()
-    )
-    return (
-        hashed.select("reg", F.expr(_rho_case("val")).alias("rho"))
-        .groupBy("reg")
-        .agg(F.max("rho").alias("mrho"))
-    )
-
-
 def hll_sum_aggs():
     """The register-file reduction of the HLL estimate: integer-exact
     harmonic sum + present-register count. THE single copy (with
     hll_corrected_col) of the estimator arithmetic — the SQL twin is
-    _hll_est_duck; the streaming maintenance module and every HLL query
-    route through these so the estimate can never fork."""
+    _hll_est_duck; every HLL query routes through these so the estimate
+    can never fork."""
     return [
         F.sum(
             F.expr("CAST(shiftleft(CAST(1 AS BIGINT), 55 - mrho) AS BIGINT)")
@@ -547,8 +540,8 @@ def hll_set_algebra(spark, sf_dir):
     ev = T(spark, sf_dir, "events").filter(
         F.col("event_type").isin(_HLL_A, _HLL_B)
     )
-    regs_a = _hll_regs_spark(ev, _HLL_A)
-    regs_b = _hll_regs_spark(ev, _HLL_B)
+    regs_a = hll_regs(ev.filter(F.col("event_type") == _HLL_A))
+    regs_b = hll_regs(ev.filter(F.col("event_type") == _HLL_B))
     regs_u = (
         regs_a.unionByName(regs_b).groupBy("reg").agg(
             F.max("mrho").alias("mrho")
@@ -679,19 +672,8 @@ def _rolling_hll_oracle() -> str:
 )
 def rolling_distinct_hll_7d(spark, sf_dir):
     ev = T(spark, sf_dir, "events")
-    h = hash60_sql_spark("CAST(user_id AS STRING)", seed=7)
     day = F.date_trunc("day", "ts").cast("date")
-    daily = (
-        ev.select(
-            day.alias("day"),
-            F.expr(f"({h}) % {_HLL_M}").alias("reg"),
-            F.expr(f"(({h}) div {_HLL_M}) % {1 << _HLL_VBITS}").alias("val"),
-        )
-        .distinct()
-        .select("day", "reg", F.expr(_rho_case("val")).alias("rho"))
-        .groupBy("day", "reg")
-        .agg(F.max("rho").alias("mrho"))
-    )
+    daily = hll_regs(ev.select(day.alias("day"), "user_id"), "day")
     anchors = daily.select(F.col("day").alias("aday")).distinct()
     win = (
         anchors.join(
@@ -866,9 +848,9 @@ def join_cardinality_estimate_audit(spark, sf_dir):
 def bitmap_word_rows(df, group_col: str, key_col: str, extra: tuple = ()):
     """(grp, w, bits) 63-bit bitmap word file for distinct ``key_col``
     per ``group_col`` — THE single copy of the word-building idiom
-    (bitmap_distinct_rollup, the rolling-window query, and the
-    streaming maintenance module all route through it, so the
-    maintained state can never fork from the query path). ``extra``
+    (bitmap_distinct_rollup, the rolling-window query and the
+    maintained bitmap state all route through it, so the maintained
+    state can never fork from the query path). ``extra``
     names pass-through grouping columns (the batched maintenance path
     labels rows with a batch id and builds every weekly word-file
     increment in one scan); the default path's plan is unchanged."""

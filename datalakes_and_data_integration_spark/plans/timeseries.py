@@ -225,9 +225,10 @@ def _convert_oracle():
 )
 def unit_convert_horizontal_total(spark, sf_dir):
     ev = T(spark, sf_dir, "events")
-    # Same shape as operators.convert.map_convert, but with decimal factor
-    # literals so per-type sums are exact (map_convert's double factors are
-    # the production path; the decimal form is the oracle-exact one).
+    # Same shape as gold's ``value * unit_factor(...)``, but with decimal
+    # factor literals so per-type sums are exact (unit_factor's double
+    # factors are the production path; the decimal form is the
+    # oracle-exact one).
     conv = ev.select(
         "user_id",
         "event_type",

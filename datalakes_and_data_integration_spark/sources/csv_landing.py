@@ -6,9 +6,9 @@ each with ``csv.reader(delimiter=';')`` after UTF-8 decode
 key ``{code}/polluant-{code}_{date}.csv``
 (`/root/reference/src/unpacked_to_raw.py:122-124`).
 
-Spark restatement: the read contract is stated once, in ``_landing``, and
-applied to ``spark.read`` (``read_landing_csv``, bronze's batch read) and to
-``spark.readStream`` (``stream_landing_csv``, incremental pickup). One
+Spark restatement: ``read_landing_csv`` is bronze's batch read. The
+reference is batch-only too: its 3-day re-fetch lands files again, and
+silver's MERGE keeps only the rows it has not seen. One
 explicit schema, ``sep=';'``, header, UTF-8; pollutant code and ingest date
 come from the file path via ``input_file_name()`` (S6's filename parser),
 and badly-named files are excluded by glob (P8). Reading a pollutant subset
@@ -82,14 +82,13 @@ BRONZE_SCHEMA = T.StructType(
     ]
 )
 
-# Oldest landing file the stream source still reads, relative to the newest
-# it has seen: wide enough to cover any landing history. The source's
-# default (7 days) silently skips a late file copied in with an old mtime.
-_MAX_FILE_AGE = "36500d"
 
-
-def _landing(reader, landing_dir: str, pollutant_code: str | None):
-    """Apply the landing read contract to a batch or a stream reader.
+def read_landing_csv(
+    spark: SparkSession,
+    landing_dir: str,
+    pollutant_code: str | None = None,
+) -> DataFrame:
+    """Read raw measurement CSVs with landing-path metadata columns.
 
     All 23 columns land as strings (typing happens in silver, mirroring the
     reference's parse-then-convert split). The read schema carries the raw
@@ -101,7 +100,7 @@ def _landing(reader, landing_dir: str, pollutant_code: str | None):
         f"polluant-{pollutant_code}_*.csv" if pollutant_code else _FILE_GLOB
     )
     df = (
-        reader.schema(
+        spark.read.schema(
             T.StructType(
                 [T.StructField(h, T.StringType(), True) for h in RAW_HEADERS]
             )
@@ -118,34 +117,3 @@ def _landing(reader, landing_dir: str, pollutant_code: str | None):
     return df.withColumn(
         "pollutant_code", F.regexp_extract(fname, _CODE_RE, 1)
     ).withColumn("ingest_date", F.regexp_extract(fname, _DATE_RE, 1))
-
-
-def read_landing_csv(
-    spark: SparkSession,
-    landing_dir: str,
-    pollutant_code: str | None = None,
-) -> DataFrame:
-    """Read raw measurement CSVs with landing-path metadata columns."""
-    return _landing(spark.read, landing_dir, pollutant_code)
-
-
-def stream_landing_csv(
-    spark: SparkSession,
-    landing_dir: str,
-    pollutant_code: str | None = None,
-) -> DataFrame:
-    """Stream the landing zone: each micro-batch reads the files not yet
-    processed, exactly once across checkpointed restarts.
-
-    Spark's file-stream source keys its checkpointed log by file name, so a
-    late file that sorts before processed ones (the reference's re-fetch of
-    the last 3 days) is new and gets read; ``Trigger.AvailableNow`` drains
-    what has landed and stops. The seen-file map and the source log grow
-    O(files): ``maxFileAge`` is pinned wide (``_MAX_FILE_AGE``) so no entry
-    ages out and no late file with an old mtime is skipped.
-    """
-    return _landing(
-        spark.readStream.option("maxFileAge", _MAX_FILE_AGE),
-        landing_dir,
-        pollutant_code,
-    )

@@ -2,9 +2,10 @@
 
 The reference replaces a single Postgres/TimescaleDB table wholesale each
 run (`/root/reference/src/process_to_curated.py:189-199`,
-``if_exists='replace'``). Spark-side: ``write.jdbc(mode='overwrite')`` when
-a JDBC URL is configured, else partitioned parquet (the lakehouse-native
-sink; the container has no database server).
+``if_exists='replace'``). Spark-side: the medallion zones are partitioned
+parquet (the lakehouse-native sink), committed by ``write_staged`` when the
+write reads the table it replaces; ``write_postgres_copy`` is the curated ->
+Postgres bulk load a deployment calls.
 """
 
 from __future__ import annotations
@@ -92,22 +93,6 @@ def write_staged(
         shutil.rmtree(staging, ignore_errors=True)
 
 
-def write_jdbc_overwrite(
-    df: DataFrame,
-    url: str,
-    table: str,
-    properties: dict[str, str] | None = None,
-    batchsize: int = 10_000,
-) -> None:
-    """JDBC overwrite sink (S18). ``batchsize`` replaces the reference's
-    hand-rolled batch-of-100 inserts (faster_preprocess_to_staging.py:
-    135-167) with the driver-native batching."""
-    props = {"batchsize": str(batchsize)}
-    if properties:
-        props.update(properties)
-    df.write.jdbc(url, table, mode="overwrite", properties=props)
-
-
 def write_postgres_copy(
     df: DataFrame,
     socket_dir: str,
@@ -124,13 +109,10 @@ def write_postgres_copy(
     re-expressed as the COPY bulk protocol (the fast path every Postgres
     loader converges on; row INSERTs are ~10-50x slower).
 
-    Why not ``write.jdbc('jdbc:postgresql:...')``: this container ships no
-    Postgres JDBC driver jar and no network to fetch one, so the
-    jdbc:postgresql route is untestable here; the JDBC writer contract is
-    pinned against embedded Derby instead (tests/test_jdbc_sink.py). This
-    sink covers the other half — a REAL Postgres server speaking the real
-    wire protocol (tests/test_postgres_sink.py starts one on a unix
-    socket). Connection is socket-based: ``psql -h <socket_dir>``.
+    Why not ``write.jdbc('jdbc:postgresql:...')``: the engine ships no
+    Postgres JDBC driver jar, and ``psql`` speaks the real wire protocol
+    to a REAL Postgres server (tests/test_postgres_sink.py starts one on a
+    unix socket). Connection is socket-based: ``psql -h <socket_dir>``.
 
     Scale shape: the curated mart the reference ships to Postgres is an
     AGGREGATE (thousands of rows, not the lake), so a single-stream COPY
@@ -212,105 +194,3 @@ def write_postgres_copy(
     )
     return len(pdf)
 
-
-def compact_parquet(
-    spark,
-    table_dir: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    sort_within: Sequence[str] = (),
-) -> int:
-    """Small-file compaction: rewrite a parquet directory into
-    ceil(total_bytes / target) files (the OPTIMIZE half of Delta's
-    OPTIMIZE/ZORDER; pair with operators.layout.zorder_layout for the
-    clustering half).
-
-    Small files are the silent killer of 100 TB scans — every file costs a
-    task, a footer read, and an object-store request; streaming and
-    incremental writers produce them constantly. Returns the new file
-    count. Crash-safe via ``write_staged``'s tombstone swap.
-    """
-    import math
-
-    total = sum(
-        os.path.getsize(os.path.join(root, f))
-        for root, _, files in os.walk(table_dir)
-        for f in files
-        if f.endswith(".parquet")
-    )
-    n_files = max(1, math.ceil(total / target_file_bytes))
-    out = spark.read.parquet(table_dir).repartition(n_files)
-    write_staged(out, table_dir, sort_within=sort_within)
-    return len(
-        [f for f in os.listdir(table_dir) if f.endswith(".parquet")]
-    )
-
-
-def plan_compaction(
-    sizes: dict[str, int],
-    target_file_bytes: int = 128 * 1024 * 1024,
-    small_ratio: float = 0.5,
-) -> list[list[str]]:
-    """Select and batch undersized files for selective compaction.
-
-    ``compact_parquet`` rewrites the whole table — right after a bulk
-    load, wrong as maintenance: at 100 TB you only want to touch the
-    files that are actually small (streaming commits, incremental
-    upserts), not rewrite healthy 128 MB files to fix a thousand 1 MB
-    ones. This is the planner half: files under ``small_ratio * target``
-    are packed first-fit-decreasing into batches of ~``target`` bytes;
-    every returned batch merges to one right-sized file and each batch is
-    an independent unit of work (parallelizable, resumable).
-
-    Pure function over a {path: bytes} listing — works the same against a
-    local directory walk or an object-store inventory. Files >= the small
-    threshold are never touched. A single undersized file still forms a
-    batch only when there is something to merge it with — a lone small
-    file is left in place (rewriting it buys nothing).
-    """
-    small = sorted(
-        (
-            (p, sz)
-            for p, sz in sizes.items()
-            if sz < small_ratio * target_file_bytes
-        ),
-        key=lambda kv: (-kv[1], kv[0]),
-    )
-    paths_of: list[list[str]] = []
-    size_of: list[int] = []
-    for path, sz in small:
-        for i, used in enumerate(size_of):
-            if used + sz <= target_file_bytes:
-                paths_of[i].append(path)
-                size_of[i] = used + sz
-                break
-        else:
-            paths_of.append([path])
-            size_of.append(sz)
-    return [paths for paths in paths_of if len(paths) > 1]
-
-
-def compact_selected(spark, table_dir: str, batch: list[str]) -> str:
-    """Merge one planned batch into a single right-sized file in place.
-
-    Write-then-delete ordering: the merged file lands under a unique name
-    first, the originals are removed after — a crash in between leaves
-    duplicate rows (visible, recoverable) rather than lost rows. True
-    isolation for concurrent readers needs a table format's snapshot
-    commit (Delta/Iceberg); this is the raw-parquet-directory best case,
-    same trade as the reference's raw zone.
-    """
-    import uuid
-
-    staging = os.path.join(table_dir, f".compact-{uuid.uuid4().hex}")
-    spark.read.parquet(*batch).coalesce(1).write.mode("overwrite").parquet(
-        staging
-    )
-    part = next(
-        f for f in os.listdir(staging) if f.endswith(".parquet")
-    )
-    final = os.path.join(table_dir, f"compacted-{uuid.uuid4().hex}.parquet")
-    os.replace(os.path.join(staging, part), final)
-    shutil.rmtree(staging)
-    for p in batch:
-        os.remove(p)
-    return final

@@ -33,13 +33,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from datalakes_and_data_integration_spark.operators.upsert import (
-    read_table,
-    write_staged,
-)
+from datalakes_and_data_integration_spark.operators.upsert import read_table
 from datalakes_and_data_integration_spark.plans.temporal import (
     scd2_versions,
 )
+from datalakes_and_data_integration_spark.sources.sinks import write_staged
 
 
 def scd2_apply_batch(

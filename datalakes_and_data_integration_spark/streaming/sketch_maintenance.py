@@ -2,10 +2,12 @@
 
 The point of a mergeable sketch (plans/sketches.py) is that INCREMENTAL
 maintenance is the same operation as distributed aggregation: each
-micro-batch produces a small increment (an HLL register file, CMS
-bucket totals, bitmap words, per-key metric rows), and folding it into
-the persisted state is one ``groupBy(keys).agg(merge)`` over state ∪
-increment — no rescan of history, state size bounded by the sketch.
+micro-batch produces a small increment (an HLL register file or bitmap
+words, made by the functions the queries use, ``plans.sketches.hll_regs``
+and ``bitmap_word_rows``; CMS bucket totals; per-key metric rows), and
+folding it into the persisted state is one ``groupBy(keys).agg(merge)``
+over state ∪ increment — no rescan of history, state size bounded by
+the sketch.
 
 Every family goes through ONE transition, ``merge_state``. Increments
 carry a batch label in the ``__bid`` column (a per-batch call is one
@@ -38,12 +40,6 @@ from pyspark.sql import functions as F
 from datalakes_and_data_integration_spark.functions.hashing import (
     hash60_sql_spark,
 )
-
-# plans.sketches is imported INSIDE the functions below, not at module
-# level: importing it registers every sketches.py query, and this module
-# is itself imported at decoration time by streaming_extra's oracle
-# builders — a module-level import here would reorder the registry tail
-# relative to the order plans/__init__.py declares (code-review r7 s6).
 
 BID = "__bid"  # batch-label column every increment frame carries
 
@@ -118,44 +114,6 @@ def merge_state(
     if cur_dir is not None:  # superseded generation, post-commit GC
         shutil.rmtree(cur_dir, ignore_errors=True)
     return spark.read.parquet(new_dir)
-
-
-def hll_registers(df: DataFrame, group_col: str, key_col: str) -> DataFrame:
-    """(group, reg, mrho) register file for distinct ``key_col`` per
-    ``group_col`` — same hash family as plans/sketches.distinct_count_hll."""
-    from datalakes_and_data_integration_spark.plans.sketches import (
-        _HLL_M,
-        _HLL_VBITS,
-        _rho_case,
-    )
-
-    h = hash60_sql_spark(f"CAST({key_col} AS STRING)", seed=7)
-    hashed = df.select(
-        F.col(group_col).alias("grp"),
-        F.expr(f"({h}) % {_HLL_M}").alias("reg"),
-        F.expr(f"(({h}) div {_HLL_M}) % {1 << _HLL_VBITS}").alias("val"),
-    ).distinct()
-    return (
-        hashed.select("grp", "reg", F.expr(_rho_case("val")).alias("rho"))
-        .groupBy("grp", "reg")
-        .agg(F.max("rho").alias("mrho"))
-    )
-
-
-def hll_estimate(regs: DataFrame) -> DataFrame:
-    """(grp, hll_est) corrected estimates from a register file — routed
-    through plans/sketches' hll_sum_aggs/hll_corrected_col so the
-    maintained estimate can never fork from the query-path one."""
-    from datalakes_and_data_integration_spark.plans.sketches import (
-        hll_corrected_col,
-        hll_sum_aggs,
-    )
-
-    return (
-        regs.groupBy("grp")
-        .agg(*hll_sum_aggs())
-        .select("grp", F.round(hll_corrected_col(), 4).alias("hll_est"))
-    )
 
 
 # --------------------------------------------------------------------------
@@ -250,20 +208,3 @@ def cms_lookup(keys: DataFrame, sketch: DataFrame, key_col: str) -> DataFrame:
         )
     )
 
-
-# --------------------------------------------------------------------------
-# Exact-distinct bitmap maintenance: bit_or is idempotent like HLL's max
-# and exact like CMS's sum — the third point of the merge-algebra
-# design space. State is O(groups x |key domain|/63) word rows.
-# --------------------------------------------------------------------------
-
-
-def bitmap_words(df: DataFrame, group_col: str, key_col: str) -> DataFrame:
-    """(grp, w, bits) word file — delegates to plans/sketches'
-    bitmap_word_rows (the single copy of the idiom) so maintained state
-    and query path are provably the same construction."""
-    from datalakes_and_data_integration_spark.plans.sketches import (
-        bitmap_word_rows,
-    )
-
-    return bitmap_word_rows(df, group_col, key_col)

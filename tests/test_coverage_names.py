@@ -26,8 +26,6 @@ def _is_package_callable(token: str) -> bool:
         "datalakes_and_data_integration_spark.operators.merge",
         "datalakes_and_data_integration_spark.pipeline.silver",
         "datalakes_and_data_integration_spark.operators.quality",
-        "datalakes_and_data_integration_spark.sources.formats",
-        "datalakes_and_data_integration_spark.sources.evolution",
     ):
         if hasattr(importlib.import_module(mod), token):
             return True

@@ -10,9 +10,13 @@ from pyspark.sql import functions as F
 
 from datalakes_and_data_integration_spark.operators.upsert import (
     merge_new_only,
-    upsert_parquet,
+    read_table,
 )
 from datalakes_and_data_integration_spark.sources.ingest_api import serve
+from datalakes_and_data_integration_spark.sources.sinks import (
+    swap_dir,
+    write_staged,
+)
 
 
 def _post(url: str, body: bytes, content_type: str):
@@ -101,17 +105,16 @@ def test_merge_new_only_first_writer_wins(spark):
 def test_upsert_parquet_roundtrip(spark, tmp_path):
     table = str(tmp_path / "t")
     b1 = spark.createDataFrame([("k1", "v1"), ("k2", "v2")], ["k", "v"])
-    upsert_parquet(spark, table, b1, keys=["k"])
     b2 = spark.createDataFrame([("k2", "CLOBBER"), ("k3", "v3")], ["k", "v"])
-    out = upsert_parquet(spark, table, b2, keys=["k"])
-    rows = {(r.k, r.v) for r in out.collect()}
+    for batch in (b1, b2):
+        existing = read_table(spark, table, batch.schema)
+        write_staged(merge_new_only(existing, batch, keys=["k"]), table)
+    rows = {(r.k, r.v) for r in spark.read.parquet(table).collect()}
     assert rows == {("k1", "v1"), ("k2", "v2"), ("k3", "v3")}
 
 
 def test_swap_dir_tombstone_rollback(spark, tmp_path):
     import os
-
-    from datalakes_and_data_integration_spark.operators.upsert import swap_dir
 
     table = tmp_path / "t"
     table.mkdir()

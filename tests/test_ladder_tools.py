@@ -66,3 +66,26 @@ def test_probe_ladders_name_registered_queries():
         m = importlib.import_module(mod)
         missing = [n for n in m.LADDER if n not in QUERIES]
         assert not missing, f"{mod}: unregistered ladder names {missing}"
+
+
+def test_result_line_carries_cores_and_window_stamp():
+    """Every probe's JSON line says at what core count and in what window
+    its numbers were taken, by the same rule as bench.py's summary."""
+    import bench
+    from _ladder_common import result_line
+
+    healthy = result_line("m", {"q": {"sec": 1.0}}, 4, bench._CALIB_PAR_REF)
+    assert healthy["cpus"] == 4
+    assert healthy["calib_par_ratio"] == 1.0
+    assert healthy["throttled_window"] is False
+    assert healthy["results"] == {"q": {"sec": 1.0}}
+
+    slow = 2 * bench._CALIB_PAR_REF
+    throttled = result_line("m", {}, 4, slow)
+    assert throttled["calib_par_ratio"] == 2.0
+    assert throttled["throttled_window"] is True
+    _, summary = bench.build_outputs({}, {}, 0.1, 0.5, slow)
+    for key in ("calib_par_ratio", "throttled_window"):
+        assert summary[key] == throttled[key]
+
+    assert result_line("m", {}, 4, -1.0)["calib_par_ratio"] == -1.0

@@ -48,20 +48,6 @@ def test_sample_frames_expands_rows(spark):
     assert rows[1].frame_md5 == expect
 
 
-def test_resize_images_halves_until_fit(spark):
-    from datalakes_and_data_integration_spark.operators.multimodal import (
-        resize_images,
-    )
-
-    text = "x" * 500  # fake dims (500, 140)
-    df = spark.createDataFrame([(1, text)], ["doc_id", "text"])
-    r = resize_images(attach_payload(df), max_dim=128).collect()[0]
-    assert (r.width, r.height) == (500, 500 * 7 % 480)
-    assert r.resized_width <= 128 and r.resized_height <= 128
-    assert r.resized_width == 125  # 500 -> 250 -> 125
-    assert r.thumb_md5 == hashlib.md5(b"x" * 64).hexdigest()
-
-
 def test_audio_features_levels(spark):
     from datalakes_and_data_integration_spark.operators.multimodal import (
         audio_features,

@@ -16,9 +16,9 @@ from datalakes_and_data_integration_spark.operators import (
     impute_mean,
     lag_diff,
     lag_pct_change,
-    map_convert,
     normalize_column_name,
     prefix_columns,
+    unit_factor,
 )
 from datalakes_and_data_integration_spark.operators.windows import ordered_window
 
@@ -86,7 +86,8 @@ class TestConvert:
         df = spark.createDataFrame(
             [(1.0, "mg-m3"), (2.0, "µg/m3")], ["v", "unit"]
         )
-        out = map_convert(df, "v", "unit", {"mg-m3": 1e-3}, "g").collect()
+        factor = unit_factor("unit", {"mg-m3": 1e-3})
+        out = df.select("unit", (F.col("v") * factor).alias("g")).collect()
         got = {r.unit: r.g for r in out}
         assert got["mg-m3"] == 1e-3
         assert got["µg/m3"] is None

@@ -95,57 +95,3 @@ def test_last_n_days_contiguous(n, today):
         (parsed[i] - parsed[i + 1]).days == 1 for i in range(len(parsed) - 1)
     )
 
-
-# --- schema evolution: widening algebra ------------------------------------
-
-from pyspark.sql import types as t  # noqa: E402
-
-from datalakes_and_data_integration_spark.sources.evolution import (  # noqa: E402
-    _widens,
-    schema_diff,
-)
-
-_SIMPLE_TYPES = [
-    t.ByteType(),
-    t.ShortType(),
-    t.IntegerType(),
-    t.LongType(),
-    t.FloatType(),
-    t.DoubleType(),
-    t.StringType(),
-    t.DateType(),
-    t.TimestampType(),
-    t.BooleanType(),
-    t.DecimalType(12, 2),
-    t.DecimalType(27, 6),
-]
-
-
-@settings(max_examples=300, deadline=None)
-@given(
-    st.sampled_from(_SIMPLE_TYPES),
-    st.sampled_from(_SIMPLE_TYPES),
-    st.sampled_from(_SIMPLE_TYPES),
-)
-def test_widening_is_a_partial_order(a, b, c):
-    # Irreflexive on distinct equal types is moot; what matters:
-    # never symmetric (no type pair widens both ways) and transitive
-    # (a->b and b->c widening implies a->c) — so chained generations
-    # can always conform straight to the newest schema.
-    if a != b:
-        assert not (_widens(a, b) and _widens(b, a)), (a, b)
-    if _widens(a, b) and _widens(b, c):
-        assert _widens(a, c), (a, b, c)
-
-
-@settings(max_examples=200, deadline=None)
-@given(st.sampled_from(_SIMPLE_TYPES), st.sampled_from(_SIMPLE_TYPES))
-def test_schema_diff_widening_flag_matches(a, b):
-    old = t.StructType([t.StructField("x", a)])
-    new = t.StructType([t.StructField("x", b)])
-    diff = schema_diff(old, new)
-    if a == b:
-        assert diff == []
-    else:
-        (d,) = diff
-        assert d["change"] == "retyped" and d["widening"] == _widens(a, b)

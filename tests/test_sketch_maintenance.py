@@ -12,7 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 # (key_cols, aggs) of each family's state
-HLL = dict(key_cols=["grp", "reg"], aggs={"mrho": "max"})
+HLL = dict(key_cols=["event_type", "reg"], aggs={"mrho": "max"})
 CMS = dict(key_cols=["seed", "bucket"], aggs={"total": "sum"})
 BITMAP = dict(key_cols=["grp", "w"], aggs={"bits": "bit_or"})
 MINMAX = dict(
@@ -34,6 +34,23 @@ def _merge1(spark, state, batch, batch_id, spec):
     )
 
 
+def _hll_est(regs):
+    """(event_type, hll_est) from a register file, through the query-side
+    estimator (``hll_sum_aggs``/``hll_corrected_col``)."""
+    from datalakes_and_data_integration_spark.plans.sketches import (
+        hll_corrected_col,
+        hll_sum_aggs,
+    )
+
+    return (
+        regs.groupBy("event_type")
+        .agg(*hll_sum_aggs())
+        .select(
+            "event_type", F.round(hll_corrected_col(), 4).alias("hll_est")
+        )
+    )
+
+
 def _events(spark, sf="/root/testdata/sf0.001"):
     from datalakes_and_data_integration_spark.plans._util import T
 
@@ -41,42 +58,38 @@ def _events(spark, sf="/root/testdata/sf0.001"):
 
 
 def test_incremental_merge_equals_batch(spark):
-    from datalakes_and_data_integration_spark.streaming.sketch_maintenance import (
-        hll_registers,
-    )
+    from datalakes_and_data_integration_spark.plans.sketches import hll_regs
 
     ev = _events(spark)
     b1 = ev.filter(F.col("event_id") % 2 == 0)
     b2 = ev.filter(F.col("event_id") % 2 == 1)
 
     state = tempfile.mkdtemp(prefix="hllstate_") + "/regs"
-    _merge1(spark, state, hll_registers(b1, "event_type", "user_id"), 0, HLL)
+    _merge1(spark, state, hll_regs(b1, "event_type"), 0, HLL)
     merged = _merge1(
-        spark, state, hll_registers(b2, "event_type", "user_id"), 1, HLL
+        spark, state, hll_regs(b2, "event_type"), 1, HLL
     )
 
-    batch = hll_registers(ev, "event_type", "user_id")
-    m = {(r.grp, r.reg): r.mrho for r in merged.collect()}
-    b = {(r.grp, r.reg): r.mrho for r in batch.collect()}
+    batch = hll_regs(ev, "event_type")
+    m = {(r.event_type, r.reg): r.mrho for r in merged.collect()}
+    b = {(r.event_type, r.reg): r.mrho for r in batch.collect()}
     assert m == b
 
 
 def test_redelivery_is_noop(spark):
     """Redelivery under a FRESH batch id gets past the ledger, so only
     max idempotence keeps the registers unchanged."""
-    from datalakes_and_data_integration_spark.streaming.sketch_maintenance import (
-        hll_registers,
-    )
+    from datalakes_and_data_integration_spark.plans.sketches import hll_regs
 
     ev = _events(spark)
     state = tempfile.mkdtemp(prefix="hllstate_") + "/regs"
-    regs = hll_registers(ev, "event_type", "user_id")
+    regs = hll_regs(ev, "event_type")
     first = {
-        (r.grp, r.reg): r.mrho
+        (r.event_type, r.reg): r.mrho
         for r in _merge1(spark, state, regs, 0, HLL).collect()
     }
     again = {
-        (r.grp, r.reg): r.mrho
+        (r.event_type, r.reg): r.mrho
         for r in _merge1(spark, state, regs, 1, HLL).collect()
     }
     assert first == again
@@ -86,17 +99,14 @@ def test_estimate_matches_query_path(spark):
     """The maintained-state estimate equals distinct_count_hll's estimate
     for the same data (same hash family, same correction)."""
     from datalakes_and_data_integration_spark.plans import all_queries
-    from datalakes_and_data_integration_spark.streaming.sketch_maintenance import (
-        hll_estimate,
-        hll_registers,
-    )
+    from datalakes_and_data_integration_spark.plans.sketches import hll_regs
 
     sf = "/root/testdata/sf0.001"
     ev = _events(spark, sf)
     est = {
-        r.grp: r.hll_est
-        for r in hll_estimate(
-            hll_registers(ev, "event_type", "user_id")
+        r.event_type: r.hll_est
+        for r in _hll_est(
+            hll_regs(ev, "event_type")
         ).collect()
     }
     ref = {
@@ -154,8 +164,8 @@ def test_bitmap_merge_is_idempotent_without_a_ledger(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from datalakes_and_data_integration_spark.plans._util import T
-    from datalakes_and_data_integration_spark.streaming.sketch_maintenance import (
-        bitmap_words,
+    from datalakes_and_data_integration_spark.plans.sketches import (
+        bitmap_word_rows,
     )
 
     ev = T(spark, "/root/testdata/sf0.001", "events").select(
@@ -165,23 +175,27 @@ def test_bitmap_merge_is_idempotent_without_a_ledger(spark, tmp_path):
     b2 = ev.filter(F.col("ts") >= "2024-01-15")
     state = str(tmp_path / "words")
 
-    _merge1(spark, state, bitmap_words(b1, "event_type", "user_id"), 0, BITMAP)
+    _merge1(
+        spark, state, bitmap_word_rows(b1, "event_type", "user_id"), 0,
+        BITMAP,
+    )
     merged = _merge1(
-        spark, state, bitmap_words(b2, "event_type", "user_id"), 1, BITMAP
+        spark, state, bitmap_word_rows(b2, "event_type", "user_id"), 1,
+        BITMAP,
     )
     snapshot = {(r.grp, r.w): r.bits for r in merged.collect()}
 
     # replay both, in any order, each under a fresh id
     for bid, b in ((2, b1), (3, b2), (4, b1)):
         replay = _merge1(
-            spark, state, bitmap_words(b, "event_type", "user_id"), bid,
+            spark, state, bitmap_word_rows(b, "event_type", "user_id"), bid,
             BITMAP,
         )
         assert {(r.grp, r.w): r.bits for r in replay.collect()} == snapshot
 
     full = {
         (r.grp, r.w): r.bits
-        for r in bitmap_words(ev, "event_type", "user_id").collect()
+        for r in bitmap_word_rows(ev, "event_type", "user_id").collect()
     }
     assert snapshot == full
 
@@ -197,13 +211,12 @@ def test_triptych_reports_share_one_maintained_state_root(spark, tmp_path):
     report equals its batch-built-from-scratch twin."""
     from datalakes_and_data_integration_spark.plans.sketches import (
         bitmap_popcount_report,
+        bitmap_word_rows,
+        hll_regs,
     )
     from datalakes_and_data_integration_spark.streaming.sketch_maintenance import (
-        bitmap_words,
         cms_lookup,
         cms_rows,
-        hll_estimate,
-        hll_registers,
     )
 
     root = tmp_path / "state"
@@ -218,10 +231,11 @@ def test_triptych_reports_share_one_maintained_state_root(spark, tmp_path):
     for i, b in enumerate((b1, b2)):
         sk = _merge1(spark, cms_dir, cms_rows(b, "user_id"), i, CMS)
         wd = _merge1(
-            spark, bm_dir, bitmap_words(b, "event_type", "user_id"), i, BITMAP
+            spark, bm_dir, bitmap_word_rows(b, "event_type", "user_id"), i,
+            BITMAP,
         )
         hl = _merge1(
-            spark, hll_dir, hll_registers(b, "event_type", "user_id"), i, HLL
+            spark, hll_dir, hll_regs(b, "event_type"), i, HLL
         )
 
     top = (
@@ -241,7 +255,7 @@ def test_triptych_reports_share_one_maintained_state_root(spark, tmp_path):
             for r in bitmap_popcount_report(wd, "event_type").collect()
         )
         est = sorted(
-            (r.grp, r.hll_est) for r in hll_estimate(hl).collect()
+            (r.event_type, r.hll_est) for r in _hll_est(hl).collect()
         )
         return cms, bm, est
 
@@ -250,10 +264,11 @@ def test_triptych_reports_share_one_maintained_state_root(spark, tmp_path):
     # replay batch 0 against the same root: all three must be no-ops
     sk2 = _merge1(spark, cms_dir, cms_rows(b1, "user_id"), 0, CMS)
     wd2 = _merge1(
-        spark, bm_dir, bitmap_words(b1, "event_type", "user_id"), 2, BITMAP
+        spark, bm_dir, bitmap_word_rows(b1, "event_type", "user_id"), 2,
+        BITMAP,
     )
     hl2 = _merge1(
-        spark, hll_dir, hll_registers(b1, "event_type", "user_id"), 2, HLL
+        spark, hll_dir, hll_regs(b1, "event_type"), 2, HLL
     )
     assert reports(sk2, wd2, hl2) == first
 
@@ -262,13 +277,13 @@ def test_triptych_reports_share_one_maintained_state_root(spark, tmp_path):
     m = {(r.seed, r.bucket): r.total for r in sk2.collect()}
     b = {(r.seed, r.bucket): r.total for r in batch_sk.collect()}
     assert m == b
-    batch_wd = bitmap_words(ev, "event_type", "user_id")
+    batch_wd = bitmap_word_rows(ev, "event_type", "user_id")
     mw = {(r.grp, r.w): r.bits for r in wd2.collect()}
     bw = {(r.grp, r.w): r.bits for r in batch_wd.collect()}
     assert mw == bw
-    batch_hll = hll_registers(ev, "event_type", "user_id")
-    mh = {(r.grp, r.reg): r.mrho for r in hl2.collect()}
-    bh = {(r.grp, r.reg): r.mrho for r in batch_hll.collect()}
+    batch_hll = hll_regs(ev, "event_type")
+    mh = {(r.event_type, r.reg): r.mrho for r in hl2.collect()}
+    bh = {(r.event_type, r.reg): r.mrho for r in batch_hll.collect()}
     assert mh == bh
 
 
@@ -411,27 +426,23 @@ def _minmax(spark):
 
 
 def _max_hll(spark):
-    from datalakes_and_data_integration_spark.streaming.sketch_maintenance import (
-        hll_registers,
-    )
+    from datalakes_and_data_integration_spark.plans.sketches import hll_regs
 
     ev = _events(spark)
     return HLL, [
-        hll_registers(
-            ev.filter(F.col("event_id") % 3 == i), "event_type", "user_id"
-        )
+        hll_regs(ev.filter(F.col("event_id") % 3 == i), "event_type")
         for i in range(3)
     ]
 
 
 def _bit_or(spark):
-    from datalakes_and_data_integration_spark.streaming.sketch_maintenance import (
-        bitmap_words,
+    from datalakes_and_data_integration_spark.plans.sketches import (
+        bitmap_word_rows,
     )
 
     ev = _events(spark)
     return BITMAP, [
-        bitmap_words(
+        bitmap_word_rows(
             ev.filter(F.col("event_id") % 3 == i), "event_type", "user_id"
         )
         for i in range(3)

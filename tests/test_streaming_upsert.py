@@ -9,7 +9,11 @@ import tempfile
 
 def test_foreach_batch_upsert_is_idempotent(spark):
     from datalakes_and_data_integration_spark.operators.upsert import (
-        upsert_parquet,
+        merge_new_only,
+        read_table,
+    )
+    from datalakes_and_data_integration_spark.sources.sinks import (
+        write_staged,
     )
 
     src = tempfile.mkdtemp(prefix="fbu_src_")
@@ -32,9 +36,8 @@ def test_foreach_batch_upsert_is_idempotent(spark):
     )
 
     def sink(batch_df, batch_id):
-        upsert_parquet(
-            batch_df.sparkSession, table, batch_df, keys=["k"]
-        )
+        existing = read_table(batch_df.sparkSession, table, batch_df.schema)
+        write_staged(merge_new_only(existing, batch_df, keys=["k"]), table)
 
     ckpt = tempfile.mkdtemp(prefix="fbu_ckpt_")
     q = (

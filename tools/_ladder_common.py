@@ -3,7 +3,9 @@
 Every family probe (documents/dedup, events/temporal, relational,
 streaming, ML/embedding) measures the same way: build a 10x tiled
 corpus, run each query at both decades through the noop sink, print a
-BASELINE.md-format markdown table plus one JSON line. This module holds
+BASELINE.md-format markdown table plus one JSON line (``result_line``:
+the timings with the session's core count and bench.py's window stamp,
+``calib_par_ratio`` and ``throttled_window``). This module holds
 the one copy of that machinery; each probe supplies its family's
 LADDER, decade labels, and tiled-corpus builder. (The ANN probe stays
 separate — it measures recall against an exact anchor, not just wall.)
@@ -22,6 +24,8 @@ import json
 import tempfile
 import time
 from collections.abc import Callable
+
+import bench
 
 TILE = 10
 
@@ -47,6 +51,28 @@ def run_one(spark, name: str, sf_dir: str, runs: int) -> tuple[float, int]:
             times.append(dt)
     rows = fn(spark, sf_dir).count()
     return min(times), rows
+
+
+def result_line(
+    metric: str, results: dict, cpus: int, calib_par: float
+) -> dict:
+    """The probe's JSON line: per-query timings stamped with the core
+    count they were taken at and the capture window's throttle state,
+    by the same rule as bench.py's summary (``bench.window_stamp``)."""
+    return {
+        "metric": metric,
+        "cpus": cpus,
+        **bench.window_stamp(calib_par),
+        "results": results,
+    }
+
+
+def print_result_line(spark, metric: str, results: dict) -> None:
+    """Print ``result_line`` for ``spark``'s core count and this window;
+    the parallel anchor runs after the sweep, as in bench.py."""
+    cpus = spark.sparkContext.defaultParallelism
+    calib_par = bench._cpu_calibration_parallel()
+    print(json.dumps(result_line(metric, results, cpus, calib_par)))
 
 
 def probe_main(
@@ -137,4 +163,4 @@ def probe_main(
             f"{cell(r10, 'sec')} | {cell(r10, 'rows')} | "
             f"{ratio if ratio is not None else '—'}x |"
         )
-    print(json.dumps({"metric": metric, "results": out}))
+    print_result_line(spark, metric, out)

@@ -25,7 +25,6 @@ Prints a markdown table (BASELINE.md format) plus one JSON line.
 from __future__ import annotations
 
 import argparse
-import json
 import os
 import sys
 import tempfile
@@ -34,6 +33,8 @@ import time
 sys.path.insert(
     0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 )
+
+from _ladder_common import print_result_line  # noqa: E402
 
 import numpy as np
 import pyarrow as pa
@@ -189,7 +190,7 @@ def main() -> None:
             f"{cell(r2, 'recall_at_5')} | {cell(r20, 'sec')} | "
             f"{cell(r20, 'recall_at_5')} |"
         )
-    print(json.dumps({"metric": "ann_ladder_probe", "results": out}))
+    print_result_line(spark, "ann_ladder_probe", out)
 
 
 if __name__ == "__main__":

@@ -30,7 +30,6 @@ Prints a markdown table (BASELINE.md format) plus one JSON line.
 from __future__ import annotations
 
 import argparse
-import json
 import os
 import shutil
 import sys
@@ -40,6 +39,8 @@ import time
 sys.path.insert(
     0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 )
+
+from _ladder_common import print_result_line  # noqa: E402
 
 HEADER = (
     "﻿Date de début;Date de fin;Organisme;code zas;Zas;code site;"
@@ -184,7 +185,7 @@ def main() -> None:
         else:
             print(f"| {stage[:-2]} | {b} | — | — |")
     print()
-    print(json.dumps({"metric": "pipeline_ladder_probe", "results": results}))
+    print_result_line(spark, "pipeline_ladder_probe", results)
 
 
 if __name__ == "__main__":
