@@ -89,3 +89,21 @@ def test_result_line_carries_cores_and_window_stamp():
         assert summary[key] == throttled[key]
 
     assert result_line("m", {}, 4, -1.0)["calib_par_ratio"] == -1.0
+
+
+def test_window_stamp_throttles_strictly_above_one_and_a_half():
+    """The throttle rule on the ratio as reported (rounded to 2 places):
+    1.5 is still a healthy window, 1.51 is a throttled one; an anchor
+    that could not run reports -1.0 and is not called throttled."""
+    import bench
+
+    ref = bench._CALIB_PAR_REF
+    assert bench.window_stamp(1.5 * ref) == {
+        "calib_par_ratio": 1.5, "throttled_window": False
+    }
+    assert bench.window_stamp(1.51 * ref) == {
+        "calib_par_ratio": 1.51, "throttled_window": True
+    }
+    assert bench.window_stamp(0.0) == {
+        "calib_par_ratio": -1.0, "throttled_window": False
+    }

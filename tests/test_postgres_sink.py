@@ -1,8 +1,7 @@
 """Real-Postgres round-trip for the COPY sink (VERDICT r2 "next round" #5).
 
 This container has no Postgres JDBC driver jar (so jdbc:postgresql is
-untestable — the JDBC writer contract is pinned against embedded Derby in
-test_jdbc_sink.py), but it DOES ship a full PostgreSQL 15 server. Postgres
+untestable), but it DOES ship a full PostgreSQL 15 server. Postgres
 refuses to run as root, so the fixture initdb's and runs the server as the
 ``nobody`` user on a unix socket under /tmp, then write_postgres_copy
 loads a Spark aggregate through psql COPY and the test reads it back via

@@ -46,12 +46,14 @@ def _is_query(d: ast.AST) -> bool:
     )
 
 
-def _scan() -> tuple[dict[str, ast.AST], set[str]]:
+def _scan(
+    pkg: Path = PKG, outside: list[Path] | None = None
+) -> tuple[dict[str, ast.AST], set[str]]:
     """(top-level defs by "module.name", names the roots reference)."""
     defs: dict[str, ast.AST] = {}
     live: set[str] = set()
-    for f in sorted(PKG.rglob("*.py")):
-        mod = ".".join(f.relative_to(PKG).with_suffix("").parts)
+    for f in sorted(pkg.rglob("*.py")):
+        mod = ".".join(f.relative_to(pkg).with_suffix("").parts)
         for st in ast.parse(f.read_text()).body:
             if not isinstance(
                 st, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
@@ -63,12 +65,13 @@ def _scan() -> tuple[dict[str, ast.AST], set[str]]:
                 defs[f"{mod}.{st.name}"] = st
                 for d in st.decorator_list:
                     live |= _names(d)
-    outside = [
-        *(ROOT / "tools").rglob("*.py"),
-        *(ROOT / "perfbench").rglob("*.py"),
-        ROOT / "bench.py",
-        ROOT / "__spark_entry__.py",
-    ]
+    if outside is None:
+        outside = [
+            *(ROOT / "tools").rglob("*.py"),
+            *(ROOT / "perfbench").rglob("*.py"),
+            ROOT / "bench.py",
+            ROOT / "__spark_entry__.py",
+        ]
     for f in outside:
         if not f.name.startswith("test_"):
             live |= _names(ast.parse(f.read_text()))
@@ -104,3 +107,90 @@ def test_allow_list_names_live_unreached_defs():
         "allow-list entry is reached without it; drop the entry"
     )
     assert all(reason.strip() for reason in ALLOWED.values())
+
+
+# --- the rule itself, on small synthetic packages --------------------------
+
+
+def _dead(tmp_path: Path, modules: dict[str, str], outside=()) -> set[str]:
+    """Unreached defs of a package made of ``modules`` (name -> source),
+    with ``outside`` (file name -> source) as the code outside it."""
+    pkg = tmp_path / "pkg"
+    pkg.mkdir()
+    for name, src in modules.items():
+        (pkg / f"{name}.py").write_text(src)
+    files = []
+    for name, src in outside:
+        f = tmp_path / name
+        f.write_text(src)
+        files.append(f)
+    return _unreached(*_scan(pkg, files))
+
+
+def test_rule_flags_a_def_nothing_names(tmp_path):
+    dead = _dead(tmp_path, {"m": "def used():\n    pass\n\n"
+                                 "def unused():\n    pass\n\n"
+                                 "used()\n"})
+    assert dead == {"m.unused"}
+
+
+def test_rule_is_transitive(tmp_path):
+    """A def named only by a reached def is reached; a def named only by
+    an unreached def is not."""
+    src = (
+        "def a():\n    return b()\n\n"
+        "def b():\n    return 1\n\n"
+        "def dead():\n    return helper()\n\n"
+        "def helper():\n    return 2\n\n"
+        "RESULT = a()\n"
+    )
+    assert _dead(tmp_path, {"m": src}) == {"m.dead", "m.helper"}
+
+
+def test_rule_recursion_alone_keeps_nothing_alive(tmp_path):
+    src = (
+        "def loop(n):\n    return loop(n - 1) if n else 0\n\n"
+        "def ping(n):\n    return pong(n)\n\n"
+        "def pong(n):\n    return ping(n)\n"
+    )
+    assert _dead(tmp_path, {"m": src}) == {"m.loop", "m.ping", "m.pong"}
+
+
+def test_rule_reexports_are_not_callers(tmp_path):
+    """An import or an ``__all__`` string names a def without calling it;
+    an attribute access (``mod.f``) does call it."""
+    dead = _dead(
+        tmp_path,
+        {
+            "a": "def exported():\n    pass\n\n"
+            "def by_attr():\n    pass\n",
+            "b": "from a import exported\n"
+            "import a\n"
+            '__all__ = ["exported"]\n'
+            "a.by_attr()\n",
+        },
+    )
+    assert dead == {"a.exported"}
+
+
+def test_rule_roots_are_queries_decorators_and_outside_code(tmp_path):
+    """A ``@register`` body, the decorator of any def and the code outside
+    the package are roots; a ``test_*`` file outside it is not."""
+    dead = _dead(
+        tmp_path,
+        {
+            "m": "def for_query():\n    pass\n\n"
+            "def deco(f):\n    return f\n\n"
+            "def for_tool():\n    pass\n\n"
+            "def for_test():\n    pass\n\n"
+            '@register("q")\n'
+            "def q(spark):\n    return for_query()\n\n"
+            "@deco\n"
+            "def decorated():\n    pass\n",
+        },
+        outside=[
+            ("tool.py", "m.for_tool()\n"),
+            ("test_tool.py", "m.for_test()\n"),
+        ],
+    )
+    assert dead == {"m.for_test", "m.decorated"}
