@@ -28,7 +28,6 @@ from datalakes_and_data_integration_spark.operators.convert import (
     unit_factor,
 )
 from datalakes_and_data_integration_spark.operators.windows import (
-    bfill_rev,
     ffill,
     lag_diff,
     lag_pct_change,
@@ -47,7 +46,6 @@ __all__ = [
     "mean_exprs",
     "horizontal_sum",
     "unit_factor",
-    "bfill_rev",
     "ffill",
     "lag_diff",
     "lag_pct_change",

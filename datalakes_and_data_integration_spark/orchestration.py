@@ -5,9 +5,11 @@
 
 Airflow is not installed in this container, so ``build_dag`` is
 import-gated: it returns None without airflow and a real DAG with it. The
-three task callables are plain functions over the pipeline modules — an
-external scheduler (cron, CI, Dagster, ...) can call them directly; the
-CLI's ``run-pipeline`` runs all three in order.
+three task callables are plain functions over the pipeline modules,
+reached through ``build_dag`` or called directly by an external scheduler
+(cron, CI, Dagster, ...). The CLI's ``run-pipeline`` calls none of them:
+it runs ``pipeline.gold.run_pipeline`` (bronze -> silver -> gold) over an
+already-filled landing zone, without the fetch step.
 
 The reference has TWO dags (regular + "faster" scripts); here there is one
 — Spark's engine IS the faster variant (SURVEY.md §2.10), so the split

@@ -2,7 +2,7 @@
 
 Operator order is FIXED and observable in outputs (reference
 `process_to_curated.py:245-260`, SURVEY.md §7.4): outer-merge -> mean-impute
-(in RAW units, before conversion) -> unit ffill/bfill_rev + convert -> horizontal
+(in RAW units, before conversion) -> unit ffill/bfill + convert -> horizontal
 total -> lag diff -> lag pct-change. The lag features use per-site
 time-ordered windows — the reference's *intended* semantics; its positional
 shift over an unspecified global order (and the np.roll wrap-around bug in
@@ -13,8 +13,8 @@ union+regroup alternative, operators.merge.outer_merge_pivot, trades those
 for a very wide hash aggregation — measured slower at N=5, better for
 large N / network-bound clusters), one aggregate pass for the means (tiny
 result to the driver), and ONE window hash-exchange on code_site shared by
-ffill/bfill_rev/lag/pct. The forward spec (ffill/lag/pct) and the reversed
-bfill_rev spec share that exchange but sort separately — the reversed-order
+ffill/bfill/lag/pct. The forward spec (ffill/lag/pct) and the reversed
+bfill spec share that exchange but sort separately — the reversed-order
 rewrite (round 6) trades a second in-partition sort for killing the
 per-row partition-tail rescan of the unbounded-following frame (108 s ->
 11.7 s at the decade scale). Gold is written partitioned-free
@@ -41,7 +41,6 @@ from datalakes_and_data_integration_spark.operators import (
     unit_factor,
 )
 from datalakes_and_data_integration_spark.operators.windows import (
-    bfill_rev,
     ffill,
     ordered_window,
 )
@@ -127,15 +126,13 @@ def build_gold(
     # order below is total, and the forward and reversed specs walk the
     # same rows in opposite directions.
     w = ordered_window(["code_site"], [F.col("date_de_debut").asc_nulls_last()])
-    # bfill_rev takes the exact reverse spec (desc_nulls_first) so it runs as
-    # a running accumulator, not Spark's per-row-rescan unbounded-
-    # following frame.
+    # backward fill: ffill over the exact reverse spec (see ffill)
     w_rev = ordered_window(
         ["code_site"], [F.col("date_de_debut").desc_nulls_first()]
     )
     unit_cols = [c for c in wide.columns if c.endswith("_unite_de_mesure")]
     filled_units = {
-        c: F.coalesce(ffill(c, w), bfill_rev(c, w_rev)).alias(c) for c in unit_cols
+        c: F.coalesce(ffill(c, w), ffill(c, w_rev)).alias(c) for c in unit_cols
     }
     wide = wide.select(
         *[filled_units.get(c, F.col(c)) for c in wide.columns]

@@ -16,7 +16,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 
@@ -153,6 +153,41 @@ def msum(e: str, name: str):
         .cast("double")
         .alias(name)
     )
+
+
+def r6_sql(expr: str) -> str:
+    """SQL text of the display rounding: ``expr`` rounded to 6 places
+    through DECIMAL(27,12) — the NOTES.md half-boundary recipe. The
+    (bit-identical) double is cast to decimal first, so the tie-round
+    decision happens in decimal arithmetic, identically in both engines."""
+    return f"CAST(ROUND(CAST({expr} AS DECIMAL(27,12)), 6) AS DOUBLE)"
+
+
+def r6(c):
+    """Column form of :func:`r6_sql` (the same expression tree)."""
+    return F.round(c.cast("decimal(27,12)"), 6).cast("double")
+
+
+def doubled_midranks(
+    df: DataFrame,
+    value: str,
+    *,
+    by: tuple[str, ...] = (),
+    nulls_last: bool = False,
+) -> DataFrame:
+    """``df`` (one row per distinct ``value`` within ``by``, with its row
+    count ``cnt``) plus ``dm``, the doubled midrank of that value.
+
+    The tied rows hold ranks cb+1 .. cb+cnt, where cb counts the rows
+    with a smaller value; their mean doubled, 2*cb + cnt + 1, is an
+    exact BIGINT. NULL values sort first unless ``nulls_last`` (the
+    DuckDB default, which an oracle's ``ORDER BY`` follows).
+    """
+    order = F.col(value).asc_nulls_last() if nulls_last else F.col(value)
+    # scale-ok: one row per DISTINCT value, a bounded sort
+    w = Window.partitionBy(*by).orderBy(order)
+    cb = F.sum("cnt").over(w) - F.col("cnt")
+    return df.withColumn("dm", 2 * cb + F.col("cnt") + 1)
 
 
 PRICE = (12, 2)  # covers 999,999,999.99

@@ -32,7 +32,7 @@ from datalakes_and_data_integration_spark.functions.hashing import (
     hash60_sql_duck,
     hash60_sql_spark,
 )
-from datalakes_and_data_integration_spark.plans._util import T, dec, spread
+from datalakes_and_data_integration_spark.plans._util import T, dec, r6, spread
 from datalakes_and_data_integration_spark.plans.registry import register
 
 _TOK_SPARK = tokens_sql_spark("text")
@@ -529,20 +529,8 @@ def quality_vs_duplication(spark, sf_dir):
             F.count("*").alias("n_docs"),
             n_dup.alias("n_dup"),
             n_dropped.alias("n_dropped"),
-            F.round(
-                (n_dup.cast("double") / F.count("*")).cast("decimal(27,12)"),
-                6,
-            )
-            .cast("double")
-            .alias("dup_rate"),
-            F.round(
-                (n_dropped.cast("double") / F.count("*")).cast(
-                    "decimal(27,12)"
-                ),
-                6,
-            )
-            .cast("double")
-            .alias("drop_rate"),
+            r6(n_dup.cast("double") / F.count("*")).alias("dup_rate"),
+            r6(n_dropped.cast("double") / F.count("*")).alias("drop_rate"),
         )
     )
 
@@ -943,18 +931,13 @@ def sketch_agreement_audit(spark, sf_dir):
             "n_minhash",
             "n_simhash",
             "n_both",
-            F.round(
-                (
-                    F.col("n_both").cast("double")
-                    / (
-                        F.col("n_minhash")
-                        + F.col("n_simhash")
-                        - F.col("n_both")
-                    )
-                ).cast("decimal(27,12)"),
-                6,
-            )
-            .cast("double")
-            .alias("pair_set_jaccard"),
+            r6(
+                F.col("n_both").cast("double")
+                / (
+                    F.col("n_minhash")
+                    + F.col("n_simhash")
+                    - F.col("n_both")
+                )
+            ).alias("pair_set_jaccard"),
         )
     )

@@ -41,7 +41,7 @@ from datalakes_and_data_integration_spark.functions.text import (
     tokens,
     tokens_sql_duck,
 )
-from datalakes_and_data_integration_spark.plans._util import T, spread
+from datalakes_and_data_integration_spark.plans._util import T, r6, spread
 from datalakes_and_data_integration_spark.plans.registry import register
 
 _TOK_DUCK = tokens_sql_duck("text")
@@ -183,12 +183,8 @@ def doc_rarity_score(spark, sf_dir):
         "doc_id",
         "n_types",
         "sum_df",
-        F.round(ratio.cast("decimal(27,12)"), 6)
-        .cast("double")
-        .alias("mean_doc_freq"),
-        F.round((F.lit(1.0) - ratio).cast("decimal(27,12)"), 6)
-        .cast("double")
-        .alias("rarity"),
+        r6(ratio).alias("mean_doc_freq"),
+        r6(F.lit(1.0) - ratio).alias("rarity"),
     )
 
 
@@ -461,12 +457,7 @@ def quality_quantile_normalization(spark, sf_dir):
     )
     pct = F.when(
         F.col("n_source") > 1,
-        F.round(
-            (F.col("n_below").cast("double") / (F.col("n_source") - 1)).cast(
-                "decimal(27,12)"
-            ),
-            6,
-        ).cast("double"),
+        r6(F.col("n_below").cast("double") / (F.col("n_source") - 1)),
     ).otherwise(F.lit(0.0))
     return q.join(ranked, ["source", "quality"]).select(
         "doc_id", "source", "quality", pct.alias("pct_rank")

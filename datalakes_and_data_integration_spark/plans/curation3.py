@@ -40,7 +40,7 @@ from datalakes_and_data_integration_spark.functions.text import (
     tokens_sql_duck,
     tokens_sql_spark,
 )
-from datalakes_and_data_integration_spark.plans._util import T, spread
+from datalakes_and_data_integration_spark.plans._util import T, r6, spread
 from datalakes_and_data_integration_spark.plans.registry import register
 
 _TOK_SPARK = tokens_sql_spark("text")
@@ -474,15 +474,10 @@ def embedding_random_projection(spark, sf_dir):
         "label",
         F.round(F.col("orig_sq"), 6).cast("double").alias("orig_sq_norm"),
         F.round(F.col("proj_sq"), 6).cast("double").alias("proj_sq_norm"),
-        F.round(
-            (
-                F.col("proj_sq").cast("double")
-                / (F.lit(_RP_K) * F.col("orig_sq").cast("double"))
-            ).cast("decimal(27,12)"),
-            6,
-        )
-        .cast("double")
-        .alias("jl_ratio"),
+        r6(
+            F.col("proj_sq").cast("double")
+            / (F.lit(_RP_K) * F.col("orig_sq").cast("double"))
+        ).alias("jl_ratio"),
     )
 
 
@@ -1180,15 +1175,9 @@ def label_cov_power_iteration(spark, sf_dir):
         .select(
             "label",
             "n_vectors",
-            F.round(lam.cast("decimal(27,12)"), 6)
-            .cast("double")
-            .alias("top_eigenvalue"),
-            F.round(trv.cast("decimal(27,12)"), 6)
-            .cast("double")
-            .alias("trace"),
-            F.round((lam / trv).cast("decimal(27,12)"), 6)
-            .cast("double")
-            .alias("top_share"),
+            r6(lam).alias("top_eigenvalue"),
+            r6(trv).alias("trace"),
+            r6(lam / trv).alias("top_share"),
         )
     )
 
@@ -1342,15 +1331,10 @@ def ann_label_mrr(spark, sf_dir):
         F.sum(F.when(F.col("fr").isNotNull(), 1).otherwise(0))
         .cast("long")
         .alias("n_hits"),
-        F.round(
-            (
-                F.sum(rr.cast("decimal(27,12)")).cast("double")
-                / F.count("*")
-            ).cast("decimal(27,12)"),
-            6,
-        )
-        .cast("double")
-        .alias("mean_rr"),
+        r6(
+            F.sum(rr.cast("decimal(27,12)")).cast("double")
+            / F.count("*")
+        ).alias("mean_rr"),
     )
 
 
@@ -1580,18 +1564,8 @@ def corpus_snapshot_stats(spark, sf_dir):
         F.countDistinct("lang").alias("n_langs"),
         F.countDistinct("source").alias("n_sources"),
         dup.cast("long").alias("n_exact_dup_docs"),
-        F.round(
-            (dup.cast("double") / F.count("*")).cast("decimal(27,12)"), 6
-        )
-        .cast("double")
-        .alias("exact_dup_rate"),
-        F.round(
-            (F.sum("n_tok").cast("double") / F.count("*")).cast(
-                "decimal(27,12)"
-            ),
-            6,
-        )
-        .cast("double")
+        r6(dup.cast("double") / F.count("*")).alias("exact_dup_rate"),
+        r6(F.sum("n_tok").cast("double") / F.count("*"))
         .alias("mean_doc_tokens"),
     )
 
@@ -2126,15 +2100,10 @@ def inclusion_dependency_profile(spark, sf_dir):
                 "n_src",
                 "n_dst",
                 "n_shared",
-                F.round(
-                    (
-                        F.col("n_shared").cast("double")
-                        / F.col("n_src").cast("double")
-                    ).cast("decimal(27,12)"),
-                    6,
-                )
-                .cast("double")
-                .alias("inclusion"),
+                r6(
+                    F.col("n_shared").cast("double")
+                    / F.col("n_src").cast("double")
+                ).alias("inclusion"),
             )
         )
         out = row if out is None else out.unionByName(row)

@@ -32,7 +32,12 @@ from datalakes_and_data_integration_spark.functions.text import (
     tokens_sql_duck,
     tokens_sql_spark,
 )
-from datalakes_and_data_integration_spark.plans._util import T, spread
+from datalakes_and_data_integration_spark.plans._util import (
+    T,
+    doubled_midranks,
+    r6,
+    spread,
+)
 from datalakes_and_data_integration_spark.plans.ml import (
     _split_pred_duck,
     _split_pred_spark,
@@ -268,12 +273,7 @@ def temperature_mixture_plan(spark, sf_dir):
         "n_docs",
         "w_fixed",
         quota.alias("quota_docs"),
-        F.round(
-            (quota.cast("double") / F.col("n_docs")).cast("decimal(27,12)"),
-            6,
-        )
-        .cast("double")
-        .alias("effective_epochs"),
+        r6(quota.cast("double") / F.col("n_docs")).alias("effective_epochs"),
     )
 
 
@@ -369,13 +369,7 @@ def bpe_encode_token_stats(spark, sf_dir):
         (F.sum(F.length("word")) - F.sum("n_sym"))
         .cast("long")
         .alias("tokens_saved"),
-        F.round(
-            (F.sum(F.length("word")).cast("double") / F.sum("n_sym")).cast(
-                "decimal(27,12)"
-            ),
-            6,
-        )
-        .cast("double")
+        r6(F.sum(F.length("word")).cast("double") / F.sum("n_sym"))
         .alias("compression_ratio"),
     )
 
@@ -593,9 +587,7 @@ def term_domain_signature(spark, sf_dir):
             F.col("a").cast("long").alias("n_in_source"),
             F.col("b").cast("long").alias("n_elsewhere"),
             "rk",
-            F.round(F.col("odds").cast("decimal(27,12)"), 6)
-            .cast("double")
-            .alias("odds_ratio"),
+            r6(F.col("odds")).alias("odds_ratio"),
         )
     )
 
@@ -681,14 +673,7 @@ def vocab_coverage_curve(spark, sf_dir):
         )
         .agg(
             F.max("cum").alias("covered_tokens"),
-            F.round(
-                (F.max("cum").cast("double") / F.col("total")).cast(
-                    "decimal(27,12)"
-                ),
-                6,
-            )
-            .cast("double")
-            .alias("coverage"),
+            r6(F.max("cum").cast("double") / F.col("total")).alias("coverage"),
         )
         .select(
             "vocab_budget",
@@ -782,15 +767,6 @@ def split_balance_audit(spark, sf_dir):
     lang_tot = cell.groupBy("lang").agg(F.sum("n").cast("long").alias("nl"))
     grand = cell.agg(F.sum("n").cast("long").alias("g"))
 
-    def share(num, den, name):
-        return (
-            F.round(
-                (num.cast("double") / den).cast("decimal(27,12)"), 6
-            )
-            .cast("double")
-            .alias(name)
-        )
-
     return (
         cell.join(F.broadcast(split_tot), "split")
         .join(F.broadcast(lang_tot), "lang")
@@ -799,17 +775,12 @@ def split_balance_audit(spark, sf_dir):
             "split",
             "lang",
             F.col("n").cast("long").alias("n_docs"),
-            share(F.col("n"), F.col("ns"), "split_share"),
-            share(F.col("nl"), F.col("g"), "global_share"),
-            F.round(
-                (
-                    F.col("n").cast("double") / F.col("ns")
-                    - F.col("nl").cast("double") / F.col("g")
-                ).cast("decimal(27,12)"),
-                6,
-            )
-            .cast("double")
-            .alias("deviation"),
+            r6(F.col("n").cast("double") / F.col("ns")).alias("split_share"),
+            r6(F.col("nl").cast("double") / F.col("g")).alias("global_share"),
+            r6(
+                F.col("n").cast("double") / F.col("ns")
+                - F.col("nl").cast("double") / F.col("g")
+            ).alias("deviation"),
         )
     )
 
@@ -910,24 +881,12 @@ def mannwhitney_quality_en_vs_rest(spark, sf_dir):
         )
     )
     grp = scored.groupBy("quality").agg(
-        F.count("*").alias("c"), F.sum("in_a").cast("long").alias("a")
+        F.count("*").alias("cnt"), F.sum("in_a").cast("long").alias("a")
     )
-    # scale-ok: window over distinct quality values (bounded cardinality)
-    wo = Window.orderBy("quality")
-    win = grp.select(
-        "quality",
-        "c",
-        "a",
-        (F.sum("c").over(wo) - F.col("c")).cast("long").alias("smaller"),
-    )
-    agg = win.agg(
+    agg = doubled_midranks(grp, "quality").agg(
         F.sum("a").cast("long").alias("n_a"),
-        F.sum(F.col("c") - F.col("a")).cast("long").alias("n_b"),
-        F.sum(
-            F.col("a") * (2 * F.col("smaller") + F.col("c") + 1)
-        )
-        .cast("long")
-        .alias("r2_a"),
+        F.sum(F.col("cnt") - F.col("a")).cast("long").alias("n_b"),
+        F.sum(F.col("a") * F.col("dm")).cast("long").alias("r2_a"),
     )
     u2_a = F.col("r2_a") - F.col("n_a") * (F.col("n_a") + 1)
     return agg.select(
@@ -935,15 +894,10 @@ def mannwhitney_quality_en_vs_rest(spark, sf_dir):
         "n_b",
         u2_a.alias("u2_a"),
         (2 * F.col("n_a") * F.col("n_b") - u2_a).alias("u2_b"),
-        F.round(
-            (
-                u2_a.cast("double") / (F.col("n_a") * F.col("n_b"))
-                - F.lit(1.0)
-            ).cast("decimal(27,12)"),
-            6,
-        )
-        .cast("double")
-        .alias("rank_biserial"),
+        r6(
+            u2_a.cast("double") / (F.col("n_a") * F.col("n_b"))
+            - F.lit(1.0)
+        ).alias("rank_biserial"),
     )
 
 
@@ -1049,28 +1003,14 @@ def spearman_quality_length(spark, sf_dir):
         )
     )
 
-    def rank_table(col):
-        grp = scored.groupBy("lang", F.col(col).alias("v")).agg(
-            F.count("*").alias("c")
-        )
-        # scale-ok: window over distinct per-lang metric values (bounded)
-        wo = Window.partitionBy("lang").orderBy("v")
-        return grp.select(
-            "lang",
-            "v",
-            (
-                2 * (F.sum("c").over(wo).cast("long") - F.col("c"))
-                + F.col("c")
-                + 1
-            ).alias("r2"),
+    def rank_table(col, name):
+        grp = scored.groupBy("lang", col).agg(F.count("*").alias("cnt"))
+        return doubled_midranks(grp, col, by=("lang",)).select(
+            "lang", col, F.col("dm").alias(name)
         )
 
-    qr = rank_table("quality").select(
-        "lang", F.col("v").alias("quality"), F.col("r2").alias("x")
-    )
-    lr = rank_table("n_chars").select(
-        "lang", F.col("v").alias("n_chars"), F.col("r2").alias("y")
-    )
+    qr = rank_table("quality", "x")
+    lr = rank_table("n_chars", "y")
     joined = scored.join(qr, ["lang", "quality"]).join(
         lr, ["lang", "n_chars"]
     )
@@ -1091,9 +1031,7 @@ def spearman_quality_length(spark, sf_dir):
     return mom.select(
         "lang",
         "n",
-        F.round(rho.cast("decimal(27,12)"), 6)
-        .cast("double")
-        .alias("spearman_rho"),
+        r6(rho).alias("spearman_rho"),
     )
 
 

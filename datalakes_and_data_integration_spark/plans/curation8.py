@@ -32,7 +32,11 @@ from datalakes_and_data_integration_spark.functions.text import (
     tokens_sql_duck,
     tokens_sql_spark,
 )
-from datalakes_and_data_integration_spark.plans._util import T, spread
+from datalakes_and_data_integration_spark.plans._util import (
+    T,
+    doubled_midranks,
+    spread,
+)
 from datalakes_and_data_integration_spark.plans.registry import register
 
 _TOK_SPARK = tokens_sql_spark("text")
@@ -411,8 +415,6 @@ def _qsa_oracle() -> str:
     tags=("quality", "audit", "statistics", "llm-pipeline"),
 )
 def quality_scorer_agreement(spark, sf_dir):
-    from pyspark.sql import Window
-
     from datalakes_and_data_integration_spark.plans.curation2 import (
         doc_rarity_score,
     )
@@ -425,16 +427,9 @@ def quality_scorer_agreement(spark, sf_dir):
 
     def ranks(df, col):
         g = df.groupBy(F.col(col).alias("sc")).agg(F.count("*").alias("cnt"))
-        wv = Window.orderBy("sc").rowsBetween(Window.unboundedPreceding, -1)  # scale-ok: DISTINCT score values (bounded sort; see description)
-        w = g.withColumn(
-            "cb", F.coalesce(F.sum("cnt").over(wv), F.lit(0)).cast("long")
-        )
         return df.select("doc_id", F.col(col).alias("sc")).join(
-            w, "sc"
-        ).select(
-            "doc_id",
-            (2 * F.col("cb") + F.col("cnt") + 1).cast("long").alias("dm"),
-        )
+            doubled_midranks(g, "sc"), "sc"
+        ).select("doc_id", "dm")
 
     d1 = ranks(text_quality_score(spark, sf_dir), "quality")
     d2 = ranks(ngram_lm_perplexity(spark, sf_dir), "cross_entropy")

@@ -33,7 +33,7 @@ from datalakes_and_data_integration_spark.functions.text import (
     tokens_sql_duck,
     tokens_sql_spark,
 )
-from datalakes_and_data_integration_spark.plans._util import T, spread
+from datalakes_and_data_integration_spark.plans._util import T, r6, spread
 from datalakes_and_data_integration_spark.plans.registry import register
 
 _TOK_SPARK = tokens_sql_spark("text")
@@ -876,21 +876,9 @@ def cross_source_duplication(spark, sf_dir):
             "source_a",
             "source_b",
             "n_shared",
-            F.round(
-                (F.col("n_shared").cast("double") / F.col("__na")).cast(
-                    "decimal(27,12)"
-                ),
-                6,
-            )
-            .cast("double")
+            r6(F.col("n_shared").cast("double") / F.col("__na"))
             .alias("frac_of_a"),
-            F.round(
-                (F.col("n_shared").cast("double") / F.col("__nb")).cast(
-                    "decimal(27,12)"
-                ),
-                6,
-            )
-            .cast("double")
+            r6(F.col("n_shared").cast("double") / F.col("__nb"))
             .alias("frac_of_b"),
         )
     )

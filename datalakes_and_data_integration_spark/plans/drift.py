@@ -21,7 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from datalakes_and_data_integration_spark.plans._util import T
+from datalakes_and_data_integration_spark.plans._util import T, r6_sql
 from datalakes_and_data_integration_spark.plans.registry import register
 
 _KS_A = "src0"
@@ -389,10 +389,6 @@ def source_lang_entropy(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def _mi_r6(expr: str) -> str:
-    return f"CAST(ROUND(CAST({expr} AS DECIMAL(27,12)), 6) AS DOUBLE)"
-
-
 # Shared texts: per-cell MI term over (o, rl, cs, n); per-margin
 # entropy term over (m, n).
 _MI_TERM = (
@@ -437,10 +433,10 @@ def _mi_oracle() -> str:
       FROM (SELECT cs AS m FROM cs) CROSS JOIN nt
     )
     SELECT nt.n AS n_docs,
-           {_mi_r6("mi.mi")} AS mi_nats,
-           {_mi_r6("hl.h_lang")} AS h_lang,
-           {_mi_r6("hs.h_source")} AS h_source,
-           {_mi_r6(_nmi("mi.mi", "hl.h_lang", "hs.h_source"))} AS nmi
+           {r6_sql("mi.mi")} AS mi_nats,
+           {r6_sql("hl.h_lang")} AS h_lang,
+           {r6_sql("hs.h_source")} AS h_source,
+           {r6_sql(_nmi("mi.mi", "hl.h_lang", "hs.h_source"))} AS nmi
     FROM nt CROSS JOIN mi CROSS JOIN hl CROSS JOIN hs
     """
 
@@ -504,9 +500,9 @@ def lang_source_mutual_information(spark, sf_dir):
         .crossJoin(F.broadcast(hs))
         .selectExpr(
             "n AS n_docs",
-            f"{_mi_r6('mi')} AS mi_nats",
-            f"{_mi_r6('h_lang')} AS h_lang",
-            f"{_mi_r6('h_source')} AS h_source",
-            f"{_mi_r6(_NMI)} AS nmi",
+            f"{r6_sql('mi')} AS mi_nats",
+            f"{r6_sql('h_lang')} AS h_lang",
+            f"{r6_sql('h_source')} AS h_source",
+            f"{r6_sql(_NMI)} AS nmi",
         )
     )

@@ -28,7 +28,11 @@ from datalakes_and_data_integration_spark.functions.hashing import (
     hash60_seeded,
     hash60_sql_duck,
 )
-from datalakes_and_data_integration_spark.plans._util import T
+from datalakes_and_data_integration_spark.plans._util import (
+    T,
+    doubled_midranks,
+    r6_sql,
+)
 from datalakes_and_data_integration_spark.plans.registry import register
 
 _AB_SEED = 33
@@ -716,22 +720,11 @@ def _mwu_oracle() -> str:
     tags=("experiment", "ab-test", "stats", "nonparametric"),
 )
 def ab_mann_whitney_u(spark, sf_dir):
-    from pyspark.sql import Window
-
     ev = T(spark, sf_dir, "events")
     per_user = _ab_per_user_y(ev, _exp_start(ev)).persist()  # value-grouping pass + midrank join
     g = per_user.groupBy("y").agg(F.count("*").cast("long").alias("cnt"))
-    wv = Window.orderBy("y").rowsBetween(Window.unboundedPreceding, -1)  # scale-ok: DISTINCT metric values (bounded sort; see description)
-    w = g.select(
-        "y",
-        "cnt",
-        F.coalesce(F.sum("cnt").over(wv), F.lit(0))
-        .cast("long")
-        .alias("cb"),
-    )
-    d = per_user.join(F.broadcast(w), "y").select(
-        "arm", (2 * F.col("cb") + F.col("cnt") + 1).alias("dm")
-    )
+    w = doubled_midranks(g, "y")
+    d = per_user.join(F.broadcast(w), "y").select("arm", "dm")
     agg = d.agg(
         F.sum(F.when(F.col("arm") == "control", 1).otherwise(0))
         .cast("long")
@@ -2279,14 +2272,6 @@ def ab_segment_fdr_bh(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def _r6(expr: str) -> str:
-    """ROUND-at-6 through DECIMAL(27,12) — the NOTES.md half-boundary
-    recipe: cast the (bit-identical) double to decimal first so the
-    tie-round decision happens in decimal arithmetic, identically in
-    both engines."""
-    return f"CAST(ROUND(CAST({expr} AS DECIMAL(27,12)), 6) AS DOUBLE)"
-
-
 # Shared scalar texts over the grand-row columns (k, nn, s_all, ss_all,
 # ssb_raw). ssb_raw = sum_g sy_g^2/n_g; SSB = ssb_raw - S^2/N;
 # SSW = SS - ssb_raw; SST = SS - S^2/N.
@@ -2336,12 +2321,12 @@ def _anova_oracle() -> str:
     )
     SELECT c.segment,
            c.n AS n_users,
-           {_r6("c.sy / CAST(c.n AS DOUBLE)")} AS mean_y,
-           {_r6(_ANOVA_F)} AS f_stat,
+           {r6_sql("c.sy / CAST(c.n AS DOUBLE)")} AS mean_y,
+           {r6_sql(_ANOVA_F)} AS f_stat,
            CAST(greatest(g.k - 1, 0) AS BIGINT) AS df_between,
            CAST(greatest(CAST(g.nn AS BIGINT) - g.k, 0) AS BIGINT)
              AS df_within,
-           {_r6(_ANOVA_ETA)} AS eta_squared
+           {r6_sql(_ANOVA_ETA)} AS eta_squared
     FROM cells c CROSS JOIN grand g
     """
 
@@ -2427,12 +2412,12 @@ def ab_anova_oneway(spark, sf_dir):
         .selectExpr(
             "segment",
             "n AS n_users",
-            f"{_r6('sy / CAST(n AS DOUBLE)')} AS mean_y",
-            f"{_r6(_ANOVA_F)} AS f_stat",
+            f"{r6_sql('sy / CAST(n AS DOUBLE)')} AS mean_y",
+            f"{r6_sql(_ANOVA_F)} AS f_stat",
             "CAST(greatest(k - 1, 0) AS BIGINT) AS df_between",
             "CAST(greatest(CAST(nn AS BIGINT) - k, 0) AS BIGINT)"
             " AS df_within",
-            f"{_r6(_ANOVA_ETA)} AS eta_squared",
+            f"{r6_sql(_ANOVA_ETA)} AS eta_squared",
         )
     )
 
@@ -2648,9 +2633,9 @@ def ab_logrank_test(spark, sf_dir):
             "n_control",
             "n_treatment",
             "o1 AS observed_treatment",
-            f"{_r6('e1')} AS expected_treatment",
-            f"{_r6('v')} AS variance",
-            f"""{_r6("CASE WHEN v <= 0.0 THEN 0.0"
+            f"{r6_sql('e1')} AS expected_treatment",
+            f"{r6_sql('v')} AS variance",
+            f"""{r6_sql("CASE WHEN v <= 0.0 THEN 0.0"
                 " ELSE (CAST(o1 AS DOUBLE) - e1) / sqrt(v) END")}
               AS z_score""",
             f"""CASE WHEN v <= 0.0 THEN FALSE

@@ -26,7 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from datalakes_and_data_integration_spark.plans._util import T
+from datalakes_and_data_integration_spark.plans._util import T, r6_sql
 from datalakes_and_data_integration_spark.plans.dedup import (
     _cluster_oracle,
     _simhash_pairs_oracle,
@@ -554,10 +554,6 @@ def tri_frame(e):
     )
 
 
-def _cc_r6(expr: str) -> str:
-    return f"CAST(ROUND(CAST({expr} AS DECIMAL(27,12)), 6) AS DOUBLE)"
-
-
 # Shared texts over (n_triangles, degree) and (tri_total, wedges).
 _CC_LOCAL = """CASE WHEN degree < 2 THEN 0.0
               ELSE 2.0 * CAST(n_triangles AS DOUBLE)
@@ -595,10 +591,10 @@ def _clustering_oracle() -> str:
     )
     SELECT d.node, d.degree,
            CAST(coalesce(t.n_triangles, 0) AS BIGINT) AS n_triangles,
-           {_cc_r6(_CC_LOCAL.replace("n_triangles", "coalesce(t.n_triangles, 0)")
+           {r6_sql(_CC_LOCAL.replace("n_triangles", "coalesce(t.n_triangles, 0)")
                             .replace("degree", "d.degree"))} AS clustering_coeff,
            g.tri_total, g.wedges,
-           {_cc_r6(_CC_GLOBAL.replace("tri_total", "g.tri_total")
+           {r6_sql(_CC_GLOBAL.replace("tri_total", "g.tri_total")
                              .replace("wedges", "g.wedges"))} AS transitivity
     FROM deg d LEFT JOIN pertri t ON t.node = d.node CROSS JOIN gstats g
     """
@@ -674,9 +670,9 @@ def graph_clustering_coefficient(spark, sf_dir):
             "node",
             "degree",
             "n_triangles",
-            f"{_cc_r6(_CC_LOCAL)} AS clustering_coeff",
+            f"{r6_sql(_CC_LOCAL)} AS clustering_coeff",
             "tri_total",
             "wedges",
-            f"{_cc_r6(_CC_GLOBAL)} AS transitivity",
+            f"{r6_sql(_CC_GLOBAL)} AS transitivity",
         )
     )

@@ -23,7 +23,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from datalakes_and_data_integration_spark.plans._util import T, spread
+from datalakes_and_data_integration_spark.plans._util import T, r6, spread
 from datalakes_and_data_integration_spark.plans.registry import register
 
 # Both engines compute the identical double expression per bigram type:
@@ -121,14 +121,9 @@ def ngram_lm_perplexity(spark, sf_dir):
         .groupBy("doc_id")
         .agg(
             F.count("*").alias("n_bigrams"),
-            F.round(
-                (
-                    F.sum(F.col("nll").cast("decimal(27,12)")).cast("double")
-                    / F.count("*")
-                ).cast("decimal(27,12)"),
-                6,
-            )
-            .cast("double")
-            .alias("cross_entropy"),
+            r6(
+                F.sum(F.col("nll").cast("decimal(27,12)")).cast("double")
+                / F.count("*")
+            ).alias("cross_entropy"),
         )
     )

@@ -15,7 +15,12 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from datalakes_and_data_integration_spark.plans._util import T, dec, state_tmp
+from datalakes_and_data_integration_spark.plans._util import (
+    T,
+    dec,
+    r6_sql,
+    state_tmp,
+)
 from datalakes_and_data_integration_spark.plans.registry import register
 
 # Daily-rollup maintenance scenario over the 2024-01-01..30 events table:
@@ -1287,10 +1292,6 @@ _ENC_COLS = (
 )
 
 
-def _enc_r6(expr: str) -> str:
-    return f"CAST(ROUND(CAST({expr} AS DECIMAL(27,12)), 6) AS DOUBLE)"
-
-
 def _enc_oracle() -> str:
     runs = ",\n             ".join(
         f"""CAST(sum(CASE WHEN prev_{c} IS NULL
@@ -1330,11 +1331,11 @@ def _enc_oracle() -> str:
     ),
     cells AS ({cells})
     SELECT column_name, n_rows, n_distinct, n_runs,
-           {_enc_r6("CAST(n_rows AS DOUBLE) / CAST(n_runs AS DOUBLE)")}
+           {r6_sql("CAST(n_rows AS DOUBLE) / CAST(n_runs AS DOUBLE)")}
              AS avg_run_len,
-           {_enc_r6("CAST(n_distinct AS DOUBLE) / CAST(n_rows AS DOUBLE)")}
+           {r6_sql("CAST(n_distinct AS DOUBLE) / CAST(n_rows AS DOUBLE)")}
              AS distinct_ratio,
-           {_enc_r6("CAST(n_runs AS DOUBLE) / CAST(n_distinct AS DOUBLE)")}
+           {r6_sql("CAST(n_runs AS DOUBLE) / CAST(n_distinct AS DOUBLE)")}
              AS resort_gain_bound
     FROM cells
     """
@@ -1413,10 +1414,10 @@ def encoding_efficiency_audit(spark, sf_dir):
         "n_rows",
         "n_distinct",
         "n_runs",
-        f"{_enc_r6('CAST(n_rows AS DOUBLE) / CAST(n_runs AS DOUBLE)')}"
+        f"{r6_sql('CAST(n_rows AS DOUBLE) / CAST(n_runs AS DOUBLE)')}"
         " AS avg_run_len",
-        f"{_enc_r6('CAST(n_distinct AS DOUBLE) / CAST(n_rows AS DOUBLE)')}"
+        f"{r6_sql('CAST(n_distinct AS DOUBLE) / CAST(n_rows AS DOUBLE)')}"
         " AS distinct_ratio",
-        f"{_enc_r6('CAST(n_runs AS DOUBLE) / CAST(n_distinct AS DOUBLE)')}"
+        f"{r6_sql('CAST(n_runs AS DOUBLE) / CAST(n_distinct AS DOUBLE)')}"
         " AS resort_gain_bound",
     )

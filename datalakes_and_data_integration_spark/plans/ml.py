@@ -43,7 +43,13 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from datalakes_and_data_integration_spark.plans._util import T, spread
+from datalakes_and_data_integration_spark.plans._util import (
+    T,
+    doubled_midranks,
+    r6,
+    r6_sql,
+    spread,
+)
 from datalakes_and_data_integration_spark.plans.registry import register
 from datalakes_and_data_integration_spark.plans.similarity import _fx_term
 
@@ -371,9 +377,7 @@ def logreg_gd_weights(spark, sf_dir):
     )
     return model.select(
         "dim",
-        F.round(F.col("weight").cast("decimal(27,12)"), 6)
-        .cast("double")
-        .alias("weight"),
+        r6(F.col("weight")).alias("weight"),
     )
 
 
@@ -657,9 +661,7 @@ def logreg_multihead_weights(spark, sf_dir):
     return model.select(
         "head",
         "dim",
-        F.round(F.col("weight").cast("decimal(27,12)"), 6)
-        .cast("double")
-        .alias("weight"),
+        r6(F.col("weight")).alias("weight"),
     )
 
 
@@ -811,21 +813,13 @@ def logreg_roc_auc(spark, sf_dir):
         F.count("*").cast("long").alias("cnt"),
         F.sum("y").cast("long").alias("pos"),
     )
-    # NULL logits (NULL embeddings) sort last, as in the oracle's ORDER BY
-    wv = Window.orderBy(F.col("z").asc_nulls_last()).rowsBetween(Window.unboundedPreceding, -1)  # scale-ok: DISTINCT logit values (the exact-AUC leg; the binned leg below is the bounded-state scale path)
-    rk = g.select(
-        "cnt",
-        "pos",
-        F.coalesce(F.sum("cnt").over(wv), F.lit(0)).cast("long").alias("cb"),
-    )
-    rank_agg = rk.agg(
+    # NULL logits (NULL embeddings) sort last, as in the oracle's ORDER
+    # BY. This exact-AUC leg sorts the DISTINCT logits; the binned leg
+    # below is the bounded-state scale path.
+    rank_agg = doubled_midranks(g, "z", nulls_last=True).agg(
         F.sum("pos").cast("long").alias("np"),
         F.sum(F.col("cnt") - F.col("pos")).cast("long").alias("nn"),
-        F.sum(
-            F.col("pos") * (2 * F.col("cb") + F.col("cnt") + 1)
-        )
-        .cast("long")
-        .alias("r2p"),
+        F.sum(F.col("pos") * F.col("dm")).cast("long").alias("r2p"),
     )
     bins = scored.groupBy(
         F.greatest(
@@ -1212,17 +1206,8 @@ def logreg_isotonic_calibration(spark, sf_dir):
         "z_bin",
         "n",
         "n_pos",
-        F.round(
-            (F.col("n_pos").cast("double") / F.col("n")).cast(
-                "decimal(27,12)"
-            ),
-            6,
-        )
-        .cast("double")
-        .alias("raw_rate"),
-        F.round(F.col("iso").cast("decimal(27,12)"), 6)
-        .cast("double")
-        .alias("iso_rate"),
+        r6(F.col("n_pos").cast("double") / F.col("n")).alias("raw_rate"),
+        r6(F.col("iso")).alias("iso_rate"),
     )
 
 
@@ -1258,14 +1243,7 @@ def logreg_calibration_bins(spark, sf_dir):
         .agg(
             F.count("*").alias("n"),
             F.sum("y").cast("long").alias("n_pos"),
-            F.round(
-                (F.sum("y").cast("double") / F.count("*")).cast(
-                    "decimal(27,12)"
-                ),
-                6,
-            )
-            .cast("double")
-            .alias("pos_rate"),
+            r6(F.sum("y").cast("double") / F.count("*")).alias("pos_rate"),
         )
     )
 
@@ -1651,12 +1629,6 @@ def coreset_kcenter_selection(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def _ols_r6(expr: str) -> str:
-    """ROUND-at-6 through DECIMAL(27,12) — the NOTES.md half-boundary
-    recipe, shared text both engines."""
-    return f"CAST(ROUND(CAST({expr} AS DECIMAL(27,12)), 6) AS DOUBLE)"
-
-
 # Stage 2: cofactor determinants over the moment row (shared text).
 # A = [[nn,s1,s2],[s1,s11,s12],[s2,s12,s22]], rhs = [sy,s1y,s2y].
 _OLS_DETS = [
@@ -1740,11 +1712,11 @@ def _ols_oracle() -> str:
       FROM dets
     )
     SELECT n_rows,
-           {_ols_r6("b0")} AS beta0,
-           {_ols_r6("b1")} AS beta_qty,
-           {_ols_r6("b2")} AS beta_disc,
-           {_ols_r6(_OLS_R2)} AS r_squared,
-           {_ols_r6(_OLS_RMSE)} AS rmse
+           {r6_sql("b0")} AS beta0,
+           {r6_sql("b1")} AS beta_qty,
+           {r6_sql("b2")} AS beta_disc,
+           {r6_sql(_OLS_R2)} AS r_squared,
+           {r6_sql(_OLS_RMSE)} AS rmse
     FROM betas
     """
 
@@ -1851,11 +1823,11 @@ def ols_two_factor_regression(spark, sf_dir):
     )
     return betas.selectExpr(
         "n_rows",
-        f"{_ols_r6('b0')} AS beta0",
-        f"{_ols_r6('b1')} AS beta_qty",
-        f"{_ols_r6('b2')} AS beta_disc",
-        f"{_ols_r6(_OLS_R2)} AS r_squared",
-        f"{_ols_r6(_OLS_RMSE)} AS rmse",
+        f"{r6_sql('b0')} AS beta0",
+        f"{r6_sql('b1')} AS beta_qty",
+        f"{r6_sql('b2')} AS beta_disc",
+        f"{r6_sql(_OLS_R2)} AS r_squared",
+        f"{r6_sql(_OLS_RMSE)} AS rmse",
     )
 
 
@@ -1869,9 +1841,6 @@ def ols_two_factor_regression(spark, sf_dir):
 # bins actually separate outcomes (what calibration CANNOT add), and
 # uncertainty is the outcome base rate's own entropy-like floor.
 # ---------------------------------------------------------------------------
-
-def _br_r6(expr: str) -> str:
-    return f"CAST(ROUND(CAST({expr} AS DECIMAL(27,12)), 6) AS DOUBLE)"
 
 
 # Shared per-bin texts over (n, n_pos, sp) and the global obar; ``p``
@@ -1944,12 +1913,12 @@ def _brier_oracle() -> str:
       FROM bins CROSS JOIN tot
     )
     SELECT b.bin, b.n, b.n_pos,
-           {_br_r6(_br_pb("b."))} AS mean_pred,
-           {_br_r6(_br_ob("b."))} AS obs_rate,
-           {_br_r6("t.brier")} AS brier,
-           {_br_r6("d.reliability")} AS reliability,
-           {_br_r6("d.resolution")} AS resolution,
-           {_br_r6("t.obar * (1.0 - t.obar)")} AS uncertainty
+           {r6_sql(_br_pb("b."))} AS mean_pred,
+           {r6_sql(_br_ob("b."))} AS obs_rate,
+           {r6_sql("t.brier")} AS brier,
+           {r6_sql("d.reliability")} AS reliability,
+           {r6_sql("d.resolution")} AS resolution,
+           {r6_sql("t.obar * (1.0 - t.obar)")} AS uncertainty
     FROM bins b CROSS JOIN tot t CROSS JOIN decomp d
     """
     )
@@ -2038,11 +2007,11 @@ def logreg_brier_decomposition(spark, sf_dir):
             "bin",
             "n",
             "n_pos",
-            f"{_br_r6(_BR_PB)} AS mean_pred",
-            f"{_br_r6(_BR_OB)} AS obs_rate",
-            f"{_br_r6('brier')} AS brier",
-            f"{_br_r6('reliability')} AS reliability",
-            f"{_br_r6('resolution')} AS resolution",
-            f"{_br_r6('obar * (1.0 - obar)')} AS uncertainty",
+            f"{r6_sql(_BR_PB)} AS mean_pred",
+            f"{r6_sql(_BR_OB)} AS obs_rate",
+            f"{r6_sql('brier')} AS brier",
+            f"{r6_sql('reliability')} AS reliability",
+            f"{r6_sql('resolution')} AS resolution",
+            f"{r6_sql('obar * (1.0 - obar)')} AS uncertainty",
         )
     )

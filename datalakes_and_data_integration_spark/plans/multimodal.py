@@ -8,7 +8,7 @@ from datalakes_and_data_integration_spark.operators.multimodal import (
     attach_payload,
     extract_features,
 )
-from datalakes_and_data_integration_spark.plans._util import T
+from datalakes_and_data_integration_spark.plans._util import T, r6
 from datalakes_and_data_integration_spark.plans.registry import register
 
 
@@ -448,15 +448,10 @@ def multimodal_cdc_chunking(spark, sf_dir):
         "n_chunks",
         "n_unique",
         "total_bytes",
-        F.round(
-            (
-                (F.col("n_chunks") - F.col("n_unique")).cast("double")
-                / F.col("n_chunks")
-            ).cast("decimal(27,12)"),
-            6,
-        )
-        .cast("double")
-        .alias("dup_chunk_rate"),
+        r6(
+            (F.col("n_chunks") - F.col("n_unique")).cast("double")
+            / F.col("n_chunks")
+        ).alias("dup_chunk_rate"),
     )
 
 

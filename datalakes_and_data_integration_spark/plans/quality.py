@@ -22,7 +22,7 @@ from datalakes_and_data_integration_spark.operators.quality import (
     ExpectationSuite,
     union_reports,
 )
-from datalakes_and_data_integration_spark.plans._util import T, state_tmp
+from datalakes_and_data_integration_spark.plans._util import T, r6, state_tmp
 from datalakes_and_data_integration_spark.plans.registry import register
 
 _EVENT_TYPES = ("click", "error", "purchase", "signup", "view")
@@ -354,15 +354,10 @@ def k_anonymity_audit(spark, sf_dir):
             F.coalesce(
                 F.sum(F.when(F.col("sz") < F.col("k_threshold"), 1)), F.lit(0)
             ).alias("classes_at_risk"),
-            F.round(
-                (
-                    F.coalesce(F.sum(risk), F.lit(0)).cast("double")
-                    / F.sum("sz")
-                ).cast("decimal(27,12)"),
-                6,
-            )
-            .cast("double")
-            .alias("pct_rows_at_risk"),
+            r6(
+                F.coalesce(F.sum(risk), F.lit(0)).cast("double")
+                / F.sum("sz")
+            ).alias("pct_rows_at_risk"),
         )
     )
 
@@ -432,17 +427,12 @@ def l_diversity_audit(spark, sf_dir):
             F.coalesce(F.sum(F.when(at_risk, F.col("sz"))), F.lit(0))
             .cast("long")
             .alias("rows_at_risk"),
-            F.round(
-                (
-                    F.coalesce(
-                        F.sum(F.when(at_risk, F.col("sz"))), F.lit(0)
-                    ).cast("double")
-                    / F.sum("sz")
-                ).cast("decimal(27,12)"),
-                6,
-            )
-            .cast("double")
-            .alias("pct_rows_at_risk"),
+            r6(
+                F.coalesce(
+                    F.sum(F.when(at_risk, F.col("sz"))), F.lit(0)
+                ).cast("double")
+                / F.sum("sz")
+            ).alias("pct_rows_at_risk"),
         )
     )
 
@@ -563,17 +553,12 @@ def t_closeness_audit(spark, sf_dir):
             F.coalesce(F.sum(F.when(at_risk, F.col("sz"))), F.lit(0))
             .cast("long")
             .alias("rows_at_risk"),
-            F.round(
-                (
-                    F.coalesce(
-                        F.sum(F.when(at_risk, F.col("sz"))), F.lit(0)
-                    ).cast("double")
-                    / F.sum("sz")
-                ).cast("decimal(27,12)"),
-                6,
-            )
-            .cast("double")
-            .alias("pct_rows_at_risk"),
+            r6(
+                F.coalesce(
+                    F.sum(F.when(at_risk, F.col("sz"))), F.lit(0)
+                ).cast("double")
+                / F.sum("sz")
+            ).alias("pct_rows_at_risk"),
         )
     )
 

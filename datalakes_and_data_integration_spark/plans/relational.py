@@ -21,6 +21,8 @@ from datalakes_and_data_integration_spark.plans._util import (
     T,
     dec,
     msum,
+    r6,
+    r6_sql,
 )
 from datalakes_and_data_integration_spark.plans.registry import register
 
@@ -1028,24 +1030,13 @@ def join_key_skew_report(spark, sf_dir):
             "n_keys",
             "n_rows",
             "max_freq",
-            F.round(
-                (F.col("max_freq").cast("double") / F.col("n_rows")).cast(
-                    "decimal(27,12)"
-                ),
-                6,
-            )
-            .cast("double")
+            r6(F.col("max_freq").cast("double") / F.col("n_rows"))
             .alias("top1_share"),
-            F.round(
-                (
-                    F.col("max_freq").cast("double")
-                    * F.col("n_keys")
-                    / F.col("n_rows")
-                ).cast("decimal(27,12)"),
-                6,
-            )
-            .cast("double")
-            .alias("skew_ratio"),
+            r6(
+                F.col("max_freq").cast("double")
+                * F.col("n_keys")
+                / F.col("n_rows")
+            ).alias("skew_ratio"),
             "herfindahl",
         )
     )
@@ -1193,14 +1184,7 @@ def benford_first_digit(spark, sf_dir):
         .select(
             F.col("d").alias("first_digit"),
             "n",
-            F.round(
-                (F.col("n").cast("double") / F.col("total")).cast(
-                    "decimal(27,12)"
-                ),
-                6,
-            )
-            .cast("double")
-            .alias("observed"),
+            r6(F.col("n").cast("double") / F.col("total")).alias("observed"),
             expected[F.col("d")].alias("expected"),
         )
     )
@@ -1298,9 +1282,7 @@ def catalog_null_audit(spark, sf_dir):
         "col_name",
         "n_rows",
         "n_null",
-        F.round(frac.cast("decimal(27,12)"), 6)
-        .cast("double")
-        .alias("null_frac"),
+        r6(frac).alias("null_frac"),
     )
 
 
@@ -1418,14 +1400,7 @@ def market_basket_brand_pairs(spark, sf_dir):
         "brand_a",
         "brand_b",
         "n_orders",
-        F.round(
-            (F.col("n_orders").cast("double") / F.col("n")).cast(
-                "decimal(27,12)"
-            ),
-            6,
-        )
-        .cast("double")
-        .alias("support"),
+        r6(F.col("n_orders").cast("double") / F.col("n")).alias("support"),
     )
 
 
@@ -1555,7 +1530,7 @@ def discount_quantity_correlation(spark, sf_dir):
     return sums.select(
         "brand",
         "n",
-        F.round(r.cast("decimal(27,12)"), 6).cast("double").alias("pearson_r"),
+        r6(r).alias("pearson_r"),
     )
 
 
@@ -1989,25 +1964,14 @@ def market_basket_lift(spark, sf_dir):
             F.col("nab").cast("long").alias("n_both"),
             F.col("n_antecedent").cast("long").alias("n_antecedent"),
             F.col("n_consequent").cast("long").alias("n_consequent"),
-            F.round(
-                (F.col("nab").cast("double") / F.col("n_antecedent")).cast(
-                    "decimal(27,12)"
-                ),
-                6,
-            )
-            .cast("double")
+            r6(F.col("nab").cast("double") / F.col("n_antecedent"))
             .alias("confidence"),
-            F.round(
-                (
-                    F.col("nab").cast("double")
-                    * F.col("n")
-                    / F.col("n_antecedent")
-                    / F.col("n_consequent")
-                ).cast("decimal(27,12)"),
-                6,
-            )
-            .cast("double")
-            .alias("lift"),
+            r6(
+                F.col("nab").cast("double")
+                * F.col("n")
+                / F.col("n_antecedent")
+                / F.col("n_consequent")
+            ).alias("lift"),
         )
     )
 
@@ -2382,9 +2346,7 @@ def item_item_cosine_topk(spark, sf_dir):
             "item_a",
             F.col("item_b").alias("neighbor"),
             "co_orders",
-            F.round(F.col("cos_raw").cast("decimal(27,12)"), 6)
-            .cast("double")
-            .alias("cosine"),
+            r6(F.col("cos_raw")).alias("cosine"),
             F.col("rnk").cast("int").alias("rank"),
         )
     )
@@ -2401,10 +2363,6 @@ def item_item_cosine_topk(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 _ER_SWEEP_TS = (-10, 0, 10, 25, 30, 40, 55, 65)
-
-
-def _er_sweep_r6(expr: str) -> str:
-    return f"CAST(ROUND(CAST({expr} AS DECIMAL(27,12)), 6) AS DOUBLE)"
 
 
 # Shared epilogue over (tp, n_links, n_true): counts are exact BIGINTs,
@@ -2443,9 +2401,9 @@ def _er_sweep_oracle() -> str:
     SELECT c.threshold, c.n_links, c.tp,
            c.n_links - c.tp AS fp,
            t.n_true - c.tp AS fn,
-           {_er_sweep_r6(_ER_P)} AS precision,
-           {_er_sweep_r6(_ER_R)} AS recall,
-           {_er_sweep_r6(_ER_F1)} AS f1
+           {r6_sql(_ER_P)} AS precision,
+           {r6_sql(_ER_R)} AS recall,
+           {r6_sql(_ER_F1)} AS f1
     FROM cells c CROSS JOIN total t
     """
 
@@ -2518,8 +2476,8 @@ def er_quality_threshold_sweep(spark, sf_dir):
             "tp",
             "n_links - tp AS fp",
             "n_true - tp AS fn",
-            f"{_er_sweep_r6(_ER_P)} AS precision",
-            f"{_er_sweep_r6(_ER_R)} AS recall",
-            f"{_er_sweep_r6(_ER_F1)} AS f1",
+            f"{r6_sql(_ER_P)} AS precision",
+            f"{r6_sql(_ER_R)} AS recall",
+            f"{r6_sql(_ER_F1)} AS f1",
         )
     )

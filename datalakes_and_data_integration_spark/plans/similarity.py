@@ -85,11 +85,8 @@ def train_sample(df, n: int):
 # operation order is identical to the oracle's sequential list_reduce fold.
 
 
-def _norm2_spark(col: str) -> str:
-    return " + ".join(
-        f"CAST({col}[{i}] AS DOUBLE) * CAST({col}[{i}] AS DOUBLE)"
-        for i in range(_DIM)
-    )
+def _norm2_spark(col: str, d: int = _DIM) -> str:
+    return _dot_spark(col, col, d)
 
 
 def _norm2_duck(col: str) -> str:
@@ -99,16 +96,17 @@ def _norm2_duck(col: str) -> str:
     )
 
 
-def _dot_spark(a: str, b: str) -> str:
+def _dot_spark(a: str, b: str, d: int = _DIM) -> str:
+    """The first ``d`` dimensions' dot product (all of them by default)."""
     return " + ".join(
         f"CAST({a}[{i}] AS DOUBLE) * CAST({b}[{i}] AS DOUBLE)"
-        for i in range(_DIM)
+        for i in range(d)
     )
 
 
-def _dot_duck(a: str, b: str) -> str:
+def _dot_duck(a: str, b: str, d: int = _DIM) -> str:
     return (
-        f"list_reduce(list_transform(range(1, {_DIM} + 1), "
+        f"list_reduce(list_transform(range(1, {d} + 1), "
         f"i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)), (acc, v) -> acc + v)"
     )
 

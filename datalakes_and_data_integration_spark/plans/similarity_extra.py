@@ -4,18 +4,21 @@ window; this module registers last on purpose)."""
 
 from __future__ import annotations
 
-from datalakes_and_data_integration_spark.plans._util import T
+from datalakes_and_data_integration_spark.plans._util import T, r6
 from datalakes_and_data_integration_spark.plans.registry import register
 from datalakes_and_data_integration_spark.plans.similarity import (
     _FX_C,
     TRAIN_SAMPLE_PRED,
     _chunk_broadcasts,
+    _dot_duck,
+    _dot_spark,
     _fx_assign,
     _fx_kmeans,
     _fx_term,
     _ivf_lists,
     _margin_keep,
     _n_chunks,
+    _norm2_spark,
     _scan,
     _seq_dot,
     _subspace_rows,
@@ -157,13 +160,7 @@ def ann_lsh_recall_audit(spark, sf_dir):
         .select(
             "n_hits",
             "n_vecs",
-            F.round(
-                (F.col("n_vecs").cast("double") / F.col("n_queries")).cast(
-                    "decimal(27,12)"
-                ),
-                6,
-            )
-            .cast("double")
+            r6(F.col("n_vecs").cast("double") / F.col("n_queries"))
             .alias("share"),
         )
     )
@@ -310,9 +307,7 @@ def label_centroid_distances(spark, sf_dir):
     return pairs.select(
         "label_a",
         "label_b",
-        F.round(cos.cast("decimal(27,12)"), 6)
-        .cast("double")
-        .alias("centroid_cosine"),
+        r6(cos).alias("centroid_cosine"),
     )
 
 
@@ -833,9 +828,7 @@ def _exact_rerank(unit, shortlist, topk: int):
             "q_id",
             "n_id",
             "rnk",
-            F.round(F.col("cos_sim").cast("decimal(27,12)"), 6)
-            .cast("double")
-            .alias("cos_sim"),
+            r6(F.col("cos_sim")).alias("cos_sim"),
         )
     )
 
@@ -1964,33 +1957,14 @@ def _recall_permille(hits: int, n_q: int):
     return (1000 * hits) // (5 * n_q) if n_q else None
 
 
-def _dot_spark_d(a: str, b: str, d: int) -> str:
-    return " + ".join(
-        f"CAST({a}[{i}] AS DOUBLE) * CAST({b}[{i}] AS DOUBLE)"
-        for i in range(d)
-    )
-
-
-def _norm2_spark_d(col: str, d: int) -> str:
-    return _dot_spark_d(col, col, d)
-
-
-def _dot_duck_d(a: str, b: str, d: int) -> str:
-    return (
-        f"list_reduce(list_transform(range(1, {d} + 1), "
-        f"i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)), "
-        f"(acc, v) -> acc + v)"
-    )
-
-
 def _mrl_oracle() -> str:
     tiers = list(_MRL_DIMS) + [64]
     norm_cols = ", ".join(
-        f"sqrt({_dot_duck_d('embedding', 'embedding', d)}) AS nrm{d}"
+        f"sqrt({_dot_duck('embedding', 'embedding', d)}) AS nrm{d}"
         for d in tiers
     )
     cos_cols = ", ".join(
-        f"round({_dot_duck_d('a.embedding', 'b.embedding', d)} "
+        f"round({_dot_duck('a.embedding', 'b.embedding', d)} "
         f"/ a.nrm{d} / b.nrm{d}, 6) AS cos{d}"
         for d in tiers
     )
@@ -2065,7 +2039,7 @@ def ann_dim_truncation_report(spark, sf_dir):
         "vec_id",
         "embedding",
         *[
-            F.expr(f"sqrt({_norm2_spark_d('embedding', d)})").alias(
+            F.expr(f"sqrt({_norm2_spark('embedding', d)})").alias(
                 f"nrm{d}"
             )
             for d in tiers
@@ -2084,7 +2058,7 @@ def ann_dim_truncation_report(spark, sf_dir):
         F.col("b.vec_id").alias("neighbor_id"),
         *[
             F.expr(
-                f"round(({_dot_spark_d('a.embedding', 'b.embedding', d)}) "
+                f"round(({_dot_spark('a.embedding', 'b.embedding', d)}) "
                 f"/ a.nrm{d} / b.nrm{d}, 6)"
             ).alias(f"cos{d}")
             for d in tiers

@@ -11,7 +11,11 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from datalakes_and_data_integration_spark.plans._util import state_tmp
+from datalakes_and_data_integration_spark.plans._util import (
+    r6,
+    r6_sql,
+    state_tmp,
+)
 from datalakes_and_data_integration_spark.plans.registry import register
 
 
@@ -259,14 +263,7 @@ def tokenizer_fertility_by_lang(spark, sf_dir):
 
     def ratio(num, den, name):
         return (
-            F.round(
-                (F.sum(num).cast("double") / F.sum(den)).cast(
-                    "decimal(27,12)"
-                ),
-                6,
-            )
-            .cast("double")
-            .alias(name)
+            r6(F.sum(num).cast("double") / F.sum(den)).alias(name)
         )
 
     return tok.groupBy("lang").agg(
@@ -1056,10 +1053,6 @@ _SQM_BUCKET = (
 )
 
 
-def _sqm_r6(expr: str) -> str:
-    return f"CAST(ROUND(CAST({expr} AS DECIMAL(27,12)), 6) AS DOUBLE)"
-
-
 def _sqm_oracle() -> str:
     qs = ", ".join(f"({q})" for q in _SQM_QS)
     return f"""
@@ -1086,7 +1079,7 @@ def _sqm_oracle() -> str:
         AND p.q * t.n <= c.cum_before + c.cnt
       GROUP BY p.q, t.n
     )
-    SELECT q, n, {_sqm_r6("est_raw")} AS est_value FROM est
+    SELECT q, n, {r6_sql("est_raw")} AS est_value FROM est
     """
 
 
@@ -1174,4 +1167,4 @@ def _sqm_readout(spark, hist):
         .groupBy("q", "n")
         .agg(F.min(F.expr(_SQM_EST)).alias("est_raw"))
     )
-    return est.selectExpr("q", "n", f"{_sqm_r6('est_raw')} AS est_value")
+    return est.selectExpr("q", "n", f"{r6_sql('est_raw')} AS est_value")

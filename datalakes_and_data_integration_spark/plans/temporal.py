@@ -31,6 +31,7 @@ from datalakes_and_data_integration_spark.plans._util import (
     VALUE,
     dec,
     msum,
+    r6,
 )
 from datalakes_and_data_integration_spark.plans.registry import register
 
@@ -590,13 +591,9 @@ def rolling_zscore_anomaly(spark, sf_dir):
         "ts",
         "value",
         "n_24h",
-        F.round(F.col("mean_24h_raw").cast("decimal(27,12)"), 6)
-        .cast("double")
-        .alias("mean_24h"),
-        F.round(F.col("std_24h_raw").cast("decimal(27,12)"), 6)
-        .cast("double")
-        .alias("std_24h"),
-        F.round(z.cast("decimal(27,12)"), 6).cast("double").alias("zscore"),
+        r6(F.col("mean_24h_raw")).alias("mean_24h"),
+        r6(F.col("std_24h_raw")).alias("std_24h"),
+        r6(z).alias("zscore"),
         F.coalesce(
             F.when(
                 F.col("std_24h_raw") > 0, F.abs(z) > 3
@@ -768,15 +765,10 @@ def event_transition_matrix(spark, sf_dir):
         "prev_type",
         "event_type",
         "n_transitions",
-        F.round(
-            (
-                F.col("n_transitions").cast("double")
-                / F.sum("n_transitions").over(wp)
-            ).cast("decimal(27,12)"),
-            6,
-        )
-        .cast("double")
-        .alias("p"),
+        r6(
+            F.col("n_transitions").cast("double")
+            / F.sum("n_transitions").over(wp)
+        ).alias("p"),
     )
 
 
@@ -994,13 +986,7 @@ def seasonality_profile(spark, sf_dir):
         .agg(
             F.count("*").alias("n_slots"),
             F.sum("n").alias("n_events"),
-            F.round(
-                (F.sum("n").cast("double") / F.count("*")).cast(
-                    "decimal(27,12)"
-                ),
-                6,
-            )
-            .cast("double")
+            r6(F.sum("n").cast("double") / F.count("*"))
             .alias("mean_per_slot"),
         )
     )
@@ -1092,15 +1078,10 @@ def revenue_pareto(spark, sf_dir):
             "decile",
             "n_customers",
             F.round(F.col("rev"), 2).cast("double").alias("revenue"),
-            F.round(
-                (
-                    F.sum("rev").over(wc).cast("double")
-                    / F.col("total").cast("double")
-                ).cast("decimal(27,12)"),
-                6,
-            )
-            .cast("double")
-            .alias("cum_share"),
+            r6(
+                F.sum("rev").over(wc).cast("double")
+                / F.col("total").cast("double")
+            ).alias("cum_share"),
         )
     )
 
@@ -1161,13 +1142,7 @@ def interevent_gap_stats(spark, sf_dir):
         F.count("gap_s").alias("n_gaps"),
         F.min("gap_s").alias("min_gap_s"),
         F.max("gap_s").alias("max_gap_s"),
-        F.round(
-            (F.sum("gap_s").cast("double") / F.count("gap_s")).cast(
-                "decimal(27,12)"
-            ),
-            6,
-        )
-        .cast("double")
+        r6(F.sum("gap_s").cast("double") / F.count("gap_s"))
         .alias("mean_gap_s"),
     )
 
@@ -1231,12 +1206,8 @@ def event_burstiness_fano(spark, sf_dir):
     return sums.select(
         "event_type",
         F.col("k").alias("n_minutes"),
-        F.round(mean.cast("decimal(27,12)"), 6)
-        .cast("double")
-        .alias("mean_per_min"),
-        F.round(fano.cast("decimal(27,12)"), 6)
-        .cast("double")
-        .alias("fano_factor"),
+        r6(mean).alias("mean_per_min"),
+        r6(fano).alias("fano_factor"),
     )
 
 
@@ -1313,7 +1284,7 @@ def value_autocorrelation_lag1(spark, sf_dir):
     return sums.select(
         "event_type",
         F.col("n").alias("n_pairs"),
-        F.round(r.cast("decimal(27,12)"), 6).cast("double").alias("acf1"),
+        r6(r).alias("acf1"),
     )
 
 
@@ -1661,14 +1632,7 @@ def seasonal_adjusted_anomaly(spark, sf_dir):
             F.hour("h").cast("int").alias("hod"),
         )
         .agg(
-            F.round(
-                (F.sum("n").cast("double") / F.count("*")).cast(
-                    "decimal(27,12)"
-                ),
-                6,
-            )
-            .cast("double")
-            .alias("expected")
+            r6(F.sum("n").cast("double") / F.count("*")).alias("expected")
         )
     )
     # base derives from hourly — rename its key columns so the rejoin is
@@ -1712,9 +1676,7 @@ def seasonal_adjusted_anomaly(spark, sf_dir):
         F.col("h").alias("hour"),
         F.col("n").cast("long").alias("n_events"),
         "expected",
-        F.round(F.col("r").cast("decimal(27,12)"), 6)
-        .cast("double")
-        .alias("residual"),
+        r6(F.col("r")).alias("residual"),
         (F.abs(F.col("r") - mu) > 3 * sig).alias("is_anomaly"),
     )
 
@@ -1810,13 +1772,7 @@ def conversion_latency_quantiles(spark, sf_dir):
         .groupBy("pct", F.col("n").alias("n_conversions"))
         .agg(
             F.min("lat_us").alias("latency_us"),
-            F.round(
-                (F.min("lat_us").cast("double") / 1000000.0).cast(
-                    "decimal(27,12)"
-                ),
-                6,
-            )
-            .cast("double")
+            r6(F.min("lat_us").cast("double") / 1000000.0)
             .alias("latency_seconds"),
         )
     )
@@ -2078,17 +2034,12 @@ def session_bounce_rate_daily(spark, sf_dir):
         F.sum(F.when(F.col("n_events") == 1, 1).otherwise(0))
         .cast("long")
         .alias("n_bounces"),
-        F.round(
-            (
-                F.sum(
-                    F.when(F.col("n_events") == 1, 1).otherwise(0)
-                ).cast("double")
-                / F.count("*")
-            ).cast("decimal(27,12)"),
-            6,
-        )
-        .cast("double")
-        .alias("bounce_rate"),
+        r6(
+            F.sum(
+                F.when(F.col("n_events") == 1, 1).otherwise(0)
+            ).cast("double")
+            / F.count("*")
+        ).alias("bounce_rate"),
     )
 
 
@@ -2162,17 +2113,12 @@ def twap_hourly(spark, sf_dir):
     return seg.groupBy("event_type", "hour").agg(
         F.count("*").alias("n_events"),
         F.sum("dur_us").cast("long").alias("covered_us"),
-        F.round(
-            (
-                F.sum(
-                    F.expr("CAST(value * dur_us AS DECIMAL(27,6))")
-                ).cast("double")
-                / F.sum("dur_us")
-            ).cast("decimal(27,12)"),
-            6,
-        )
-        .cast("double")
-        .alias("twap"),
+        r6(
+            F.sum(
+                F.expr("CAST(value * dur_us AS DECIMAL(27,6))")
+            ).cast("double")
+            / F.sum("dur_us")
+        ).alias("twap"),
     )
 
 
@@ -2314,22 +2260,14 @@ def value_dod_wow_report(spark, sf_dir):
         F.lag("total", 7).over(wo).alias("prev_week"),
     )
 
-    def pct(cur, prev, name):
-        return (
-            F.round(
-                ((cur - prev) / prev).cast("decimal(27,12)"), 6
-            )
-            .cast("double")
-            .alias(name)
-        )
-
+    total = F.col("total")
     return lagged.select(
         "day",
         "total",
         "prev_day",
         "prev_week",
-        pct(F.col("total"), F.col("prev_day"), "dod_pct"),
-        pct(F.col("total"), F.col("prev_week"), "wow_pct"),
+        r6((total - F.col("prev_day")) / F.col("prev_day")).alias("dod_pct"),
+        r6((total - F.col("prev_week")) / F.col("prev_week")).alias("wow_pct"),
     )
 
 
@@ -2405,14 +2343,7 @@ def top_user_journeys(spark, sf_dir):
             "journey",
             F.col("n_users").cast("long").alias("n_users"),
             "rk",
-            F.round(
-                (F.col("n_users").cast("double") / F.col("n")).cast(
-                    "decimal(27,12)"
-                ),
-                6,
-            )
-            .cast("double")
-            .alias("share"),
+            r6(F.col("n_users").cast("double") / F.col("n")).alias("share"),
         )
     )
 

@@ -28,7 +28,7 @@ from datalakes_and_data_integration_spark.functions.hashing import (
     hash60_sql_duck,
     hash60_sql_spark,
 )
-from datalakes_and_data_integration_spark.plans._util import T, spread
+from datalakes_and_data_integration_spark.plans._util import T, r6, spread
 from datalakes_and_data_integration_spark.plans.registry import register
 
 _TOK_DUCK = tokens_sql_duck("text")
@@ -922,13 +922,7 @@ def vocab_zipf_stats(spark, sf_dir):
             "freq",
             F.round(F.log("rank"), 6).alias("ln_rank"),
             F.round(F.log("freq"), 6).alias("ln_freq"),
-            F.round(
-                (F.sum("freq").over(wc) / F.col("total_tokens")).cast(
-                    "decimal(27,12)"
-                ),
-                6,
-            )
-            .cast("double")
+            r6(F.sum("freq").over(wc) / F.col("total_tokens"))
             .alias("cum_share"),
             "vocab_size",
             "hapax_count",

@@ -17,7 +17,6 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from datalakes_and_data_integration_spark.operators import (
-    bfill_rev,
     ffill,
     horizontal_sum,
     impute_mean,
@@ -25,7 +24,13 @@ from datalakes_and_data_integration_spark.operators import (
     lag_pct_change,
 )
 from datalakes_and_data_integration_spark.operators.windows import ordered_window
-from datalakes_and_data_integration_spark.plans._util import PRICE, T, dec
+from datalakes_and_data_integration_spark.plans._util import (
+    PRICE,
+    T,
+    dec,
+    r6,
+    r6_sql,
+)
 from datalakes_and_data_integration_spark.plans.registry import register
 
 _W_SQL = "PARTITION BY user_id ORDER BY ts, event_id"
@@ -127,9 +132,8 @@ def ffill_bfill(spark, sf_dir):
         .alias("v"),
     )
     w = _w()
-    # bfill_rev takes the exact reverse of the ffill order (total: event_id
-    # breaks ts ties) so it runs as an O(rows) running accumulator
-    # instead of Spark's per-row-rescan unbounded-following frame.
+    # backward fill: ffill over the exact reverse of the forward order
+    # (total: event_id breaks ts ties; see ffill)
     w_rev = ordered_window(
         ["user_id"], [F.col("ts").desc(), F.col("event_id").desc()]
     )
@@ -138,7 +142,7 @@ def ffill_bfill(spark, sf_dir):
         "user_id",
         "ts",
         "v",
-        F.coalesce(ffill("v", w), bfill_rev("v", w_rev)).alias("v_filled"),
+        F.coalesce(ffill("v", w), ffill("v", w_rev)).alias("v_filled"),
     )
 
 
@@ -671,9 +675,7 @@ def gapfill_hourly_interpolate(spark, sf_dir):
         "user_id",
         "hour",
         "v_raw",
-        F.round(interp.cast("decimal(27,12)"), 6)
-        .cast("double")
-        .alias("v_interp"),
+        r6(interp).alias("v_interp"),
     )
 
 
@@ -1026,10 +1028,6 @@ def interval_overlap_join_sessions(spark, sf_dir):
 _MK_Z_CRIT = "1.959964"
 
 
-def _mk_r6(expr: str) -> str:
-    return f"CAST(ROUND(CAST({expr} AS DECIMAL(27,12)), 6) AS DOUBLE)"
-
-
 # Shared texts over (s_stat, var_s) and the pair sign.
 _MK_Z = """CASE WHEN var_s <= 0.0 THEN 0.0
            WHEN s_stat > 0 THEN (CAST(s_stat AS DOUBLE) - 1.0) / sqrt(var_s)
@@ -1081,12 +1079,12 @@ def _mk_oracle() -> str:
       WHERE rk IN ((mm.m + 1) // 2, (mm.m + 2) // 2)
     )
     SELECT nn.n AS n_days, s.s_stat,
-           {_mk_r6("vs.var_s")} AS var_s,
-           {_mk_r6(z)} AS z_score,
+           {r6_sql("vs.var_s")} AS var_s,
+           {r6_sql(z)} AS z_score,
            CASE WHEN {z} > {_MK_Z_CRIT} THEN 'increasing'
                 WHEN {z} < -{_MK_Z_CRIT} THEN 'decreasing'
                 ELSE 'no_trend' END AS trend,
-           {_mk_r6("med.sen_slope")} AS sen_slope
+           {r6_sql("med.sen_slope")} AS sen_slope
     FROM nn CROSS JOIN s CROSS JOIN vs CROSS JOIN med
     """
 
@@ -1177,12 +1175,12 @@ def mann_kendall_theil_sen(spark, sf_dir):
         .selectExpr(
             "n AS n_days",
             "s_stat",
-            f"{_mk_r6('var_s')} AS var_s",
-            f"{_mk_r6(_MK_Z)} AS z_score",
+            f"{r6_sql('var_s')} AS var_s",
+            f"{r6_sql(_MK_Z)} AS z_score",
             f"""CASE WHEN {_MK_Z} > {_MK_Z_CRIT} THEN 'increasing'
                 WHEN {_MK_Z} < -{_MK_Z_CRIT} THEN 'decreasing'
                 ELSE 'no_trend' END AS trend""",
-            f"{_mk_r6('sen_slope')} AS sen_slope",
+            f"{r6_sql('sen_slope')} AS sen_slope",
         )
     )
 
@@ -1198,10 +1196,6 @@ def mann_kendall_theil_sen(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 _CCF_MAX_LAG = 7
-
-
-def _ccf_r6(expr: str) -> str:
-    return f"CAST(ROUND(CAST({expr} AS DECIMAL(27,12)), 6) AS DOUBLE)"
 
 
 # Shared Pearson text over per-lag moments (nn, sx, sy, sxx, syy, sxy).
@@ -1244,7 +1238,7 @@ def _ccf_oracle() -> str:
       FROM pairs GROUP BY lag
     )
     SELECT CAST(lag AS BIGINT) AS lag, n_days,
-           {_ccf_r6(_CCF_R)} AS ccf_r
+           {r6_sql(_CCF_R)} AS ccf_r
     FROM mom
     """
 
@@ -1350,7 +1344,7 @@ def _ccf_readout(spark, daily_dec):
         .alias("sxy"),
     )
     return mom.selectExpr(
-        "lag", "n_days", f"{_ccf_r6(_CCF_R)} AS ccf_r"
+        "lag", "n_days", f"{r6_sql(_CCF_R)} AS ccf_r"
     )
 
 

@@ -8,7 +8,6 @@ import datetime as dt
 from pyspark.sql import functions as F
 
 from datalakes_and_data_integration_spark.operators import (
-    bfill_rev,
     dedup_keep_first,
     ffill,
     full_outer_merge,
@@ -147,14 +146,14 @@ class TestWindows:
         ]
         df = spark.createDataFrame(rows, ["site", "ts", "v"])
         w = ordered_window(["site"], [F.col("ts")])
-        # bfill_rev takes the REVERSED spec (runs as a running accumulator
-        # over the reverse order; see operators/windows.py).
+        # backward fill is ffill over the REVERSED spec (a running
+        # accumulator over the reverse order; see operators/windows.py).
         w_rev = ordered_window(["site"], [F.col("ts").desc()])
         out = (
             df.select(
                 "ts",
                 ffill("v", w).alias("f"),
-                bfill_rev("v", w_rev).alias("b"),
+                ffill("v", w_rev).alias("b"),
             )
             .orderBy("ts")
             .collect()

@@ -9,6 +9,8 @@ streaming joins.
 
 from __future__ import annotations
 
+import pytest
+
 SF = "/root/testdata/sf0.001"
 
 
@@ -245,6 +247,43 @@ def test_spearman_bounds_and_self_correlation(spark):
     for r in rows:
         if r.spearman_rho is not None:
             assert -1.0 <= r.spearman_rho <= 1.0
+
+
+@pytest.mark.parametrize("nulls_last", [False, True])
+def test_doubled_midranks_match_plain_python(spark, nulls_last):
+    """The shared builder the five rank queries use: per partition, a
+    value's doubled midrank is 2 * |smaller| + ties + 1, with NULL the
+    smallest value (NULLs first) or the largest (NULLs last)."""
+    from pyspark.sql import functions as F
+
+    from datalakes_and_data_integration_spark.plans._util import (
+        doubled_midranks,
+    )
+
+    raw = {
+        "a": [3.0, 1.0, 3.0, None, 2.0, 3.0, None, 1.0],
+        "b": [5.0, None, 5.0, 4.0],
+    }
+    df = spark.createDataFrame(
+        [(p, v) for p, vs in raw.items() for v in vs], "p string, v double"
+    )
+    g = df.groupBy("p", "v").agg(F.count("*").alias("cnt"))
+    got = {
+        (r.p, r.v): r.dm
+        for r in doubled_midranks(g, "v", by=("p",), nulls_last=nulls_last)
+        .collect()
+    }
+
+    def key(v):  # sort position of v: NULL first or last
+        return (v is None) == nulls_last, v if v is not None else 0.0
+
+    want = {
+        (p, v): 2 * sum(key(u) < key(v) for u in vs) + vs.count(v) + 1
+        for p, vs in raw.items()
+        for v in vs
+    }
+    assert got == want
+    assert want[("a", None)] == (15 if nulls_last else 3)
 
 
 def test_rfm_segments_cover_all_customers(spark):

@@ -9,12 +9,17 @@ a collision can only keep a def alive, never flag a live one.
 Imports and ``__all__`` strings do not count: a re-export is not a
 caller. Tests are not roots, so code only a test reaches fails here.
 
+A second rule keeps one implementation per mechanism: no two package
+functions (at any nesting depth) may have the same body once the
+docstring is dropped and the parameters are renamed by position.
+
 Runs without Spark: it parses the sources, it imports nothing.
 """
 
 from __future__ import annotations
 
 import ast
+from collections import defaultdict
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parents[1]
@@ -109,6 +114,74 @@ def test_allow_list_names_live_unreached_defs():
     assert all(reason.strip() for reason in ALLOWED.values())
 
 
+# Groups of functions allowed to share a body: names -> reason. Expected
+# to stay empty: a shared body is one mechanism written twice.
+SAME_BODY_ALLOWED: dict[frozenset[str], str] = {}
+
+
+class _Rename(ast.NodeTransformer):
+    def __init__(self, names: dict[str, str]):
+        self.names = names
+
+    def visit_Name(self, node: ast.Name) -> ast.Name:
+        if node.id in self.names:
+            return ast.Name(id=self.names[node.id], ctx=node.ctx)
+        return node
+
+
+def _body_key(fn: ast.FunctionDef | ast.AsyncFunctionDef) -> str:
+    """``fn``'s body without its docstring, parameters renamed by position."""
+    body = fn.body
+    if (
+        isinstance(body[0], ast.Expr)
+        and isinstance(body[0].value, ast.Constant)
+        and isinstance(body[0].value.value, str)
+    ):
+        body = body[1:]
+    a = fn.args
+    params = [p.arg for p in a.posonlyargs + a.args + a.kwonlyargs]
+    params += [p.arg for p in (a.vararg, a.kwarg) if p]
+    rename = _Rename({p: f"_{i}" for i, p in enumerate(params)})
+    # re-parse a copy: the transformer must not touch the scanned tree
+    copy = ast.parse(ast.unparse(ast.Module(body=body, type_ignores=[])))
+    return ast.dump(rename.visit(copy))
+
+
+def _same_bodies(pkg: Path = PKG) -> list[frozenset[str]]:
+    """Groups of package functions ("module.outer.name") sharing a body."""
+    groups: dict[str, set[str]] = defaultdict(set)
+
+    def visit(node: ast.AST, prefix: str) -> None:
+        for child in ast.iter_child_nodes(node):
+            name = prefix
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                name = f"{prefix}.{child.name}"
+                groups[_body_key(child)].add(name)
+            elif isinstance(child, ast.ClassDef):
+                name = f"{prefix}.{child.name}"
+            visit(child, name)
+
+    for f in sorted(pkg.rglob("*.py")):
+        mod = ".".join(f.relative_to(pkg).with_suffix("").parts)
+        visit(ast.parse(f.read_text()), mod)
+    return [frozenset(g) for g in groups.values() if len(g) > 1]
+
+
+def test_no_two_package_functions_share_a_body():
+    shared = set(_same_bodies()) - set(SAME_BODY_ALLOWED)
+    assert not shared, (
+        "package functions with the same body modulo parameter names "
+        f"and docstring: {sorted(sorted(g) for g in shared)}"
+    )
+
+
+def test_same_body_allow_list_names_live_groups():
+    assert set(SAME_BODY_ALLOWED) <= set(_same_bodies()), (
+        "same-body allow-list entry no longer shared; drop the entry"
+    )
+    assert all(reason.strip() for reason in SAME_BODY_ALLOWED.values())
+
+
 # --- the rule itself, on small synthetic packages --------------------------
 
 
@@ -194,3 +267,25 @@ def test_rule_roots_are_queries_decorators_and_outside_code(tmp_path):
         ],
     )
     assert dead == {"m.for_test", "m.decorated"}
+
+
+def test_same_body_rule_ignores_parameter_names_and_docstrings(tmp_path):
+    """Bodies equal up to parameter names and docstring are one group, a
+    nested def included; a different constant, or a free name where the
+    others use a parameter, is a different body."""
+    pkg = tmp_path / "pkg"
+    pkg.mkdir()
+    (pkg / "a.py").write_text(
+        "def r6(expr):\n    return f'ROUND({expr})'\n\n"
+        "def r4(expr):\n    return f'ROUND({expr}, 4)'\n"
+    )
+    (pkg / "b.py").write_text(
+        "def _b_r6(e):\n    \"\"\"Round.\"\"\"\n    return f'ROUND({e})'\n\n"
+        "def outer(x):\n"
+        "    def inner(y):\n        return f'ROUND({y})'\n"
+        "    return inner(x)\n\n"
+        "def free(e):\n    return f'ROUND({expr})'\n"
+    )
+    assert _same_bodies(pkg) == [
+        frozenset({"a.r6", "b._b_r6", "b.outer.inner"})
+    ]
